@@ -75,45 +75,6 @@ def engine_upsert_scan(spark, sf_dir):
 
 
 @query(
-    "engine_bloom_scan",
-    oracle="""
-    SELECT c_custkey, c_name, c_nationkey,
-           CASE WHEN c_custkey % 9 = 0 THEN c_acctbal * 3 ELSE c_acctbal END AS c_acctbal,
-           c_mktsegment
-    FROM customer WHERE NOT c_custkey % 13 = 0
-    """,
-    gated=False,  # merge-on-read family gated via engine_upsert_scan; pytest-oracled
-)
-def engine_bloom_scan(spark, sf_dir):
-    """The bloom-split merge plan end-to-end (plans/delta_bloom.py):
-    delta_scan_plan=bloom builds the commit-time key sidecar at upsert/
-    delete time (floor lowered for the small gate corpus) and the scan
-    splits the base on the native might_contain probe — clean rows
-    stream, bloom positives resolve via the exact anti join, tombstones
-    drop. The plan is asserted to actually engage (probe present, no
-    base sort-merge)."""
-    eng = _engine(spark)
-    t = eng.create_table("bl", CUSTOMER_SCHEMA, pk=["c_custkey"],
-                         hash_partitions=[{"columns": ["c_custkey"], "buckets": 4}])
-    eng.alter_table("bl").set_property("delta_scan_plan", "bloom") \
-        .set_property("delta_bloom_min_rows", "1") \
-        .set_property("auto_compact", "false").apply()
-    t = eng.table("bl")
-    c = load(spark, sf_dir, "customer")
-    t.insert(c.select(*CUSTOMER_COLS))
-    t.upsert(c.where(F.col("c_custkey") % 9 == 0).select(
-        "c_custkey", "c_name", "c_nationkey",
-        (F.col("c_acctbal") * 3).alias("c_acctbal"), "c_mktsegment",
-    ))
-    t.delete(c.where(F.col("c_custkey") % 13 == 0).select("c_custkey"))
-    df = t.scan()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "might_contain" in plan, "bloom plan did not engage"
-    assert "SortMergeJoin" not in plan, "base was sort-merge shuffled"
-    return df
-
-
-@query(
     "engine_delete_scan",
     oracle="SELECT * FROM customer WHERE NOT (c_custkey % 7 = 0)",
 )

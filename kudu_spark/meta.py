@@ -329,12 +329,11 @@ class FileEntry:
     kind: str = "base"  # "base" | "delta"
     min_pk: list | None = None  # min/max of first PK column (JSON-able)
     max_pk: list | None = None
-    # delta-key bloom sidecar (kind == "delta" only): path of a
-    # serialized bloom filter over the FULL delta key set of the commit
-    # that wrote this file, built once at flush like Kudu's bloomfiles
-    # (cfile/bloomfile.cc, tablet/deltafile.cc) so scans filter base
-    # rows without rebuilding O(delta) state per query. Shared by every
-    # delta file of the commit; GC'd by vacuum when unreferenced.
+    # key sidecar of the commit that wrote this file: the presence
+    # index's ``.pidx`` directory (plans/presence.py) on pk_bloom_cols
+    # tables. Logs written before the delta-key bloom scan plan was
+    # removed may still point at a ``.bloom`` file; such entries replay
+    # unchanged and vacuum reclaims the file once unreferenced.
     bloom: str | None = None
     # delete-mark classification derived from the file's own parquet
     # __deleted footer stats at flush (kind == "delta" only): "L" =

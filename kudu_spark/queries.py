@@ -16,6 +16,7 @@ live in kudu_spark.engine and are exercised by the mutation queries.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,8 +62,19 @@ def query(name: str, oracle: str | None = None, gated: bool = True):
 # schema skips that job (12-25 ms). This caches ONLY the inferred
 # StructType per parquet path — exactly what a metastore/catalog holds.
 # No data, no query results, and no plan state are cached: every
-# execution still scans the parquet files.
-_SCHEMA_CACHE: dict[str, object] = {}
+# execution still scans the parquet files. Entries are keyed by path
+# and checked against one os.stat fingerprint (inode, mtime), so a
+# dataset rewritten at the same path is re-inferred, not read through
+# its old schema.
+_SCHEMA_CACHE: dict[str, tuple] = {}
+
+
+def _stat_fingerprint(path: str):
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_ino, st.st_mtime_ns)
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -72,11 +84,12 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         # reader rejects; read as long and truncate to micros (lossless
         # here — the generator emits whole-microsecond values).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
+    fp = _stat_fingerprint(path)
+    cached_fp, schema = _SCHEMA_CACHE.get(path, (None, None))
+    if schema is None or cached_fp != fp:
         df = spark.read.parquet(path)
         schema = df.schema
-        _SCHEMA_CACHE[path] = schema
+        _SCHEMA_CACHE[path] = (fp, schema)
     else:
         df = spark.read.schema(schema).parquet(path)
     if table == "events" and any(

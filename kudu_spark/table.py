@@ -933,18 +933,10 @@ class Table:
             # files of a hash/range partition hold the same key space
             # — Kudu's rowset locality): G groups = G broadcast anti
             # joins over disjoint slices of the base, still zero base
-            # shuffle. (An earlier bloom-split variant shipped the
-            # bitset as an array literal; py4j literal construction is
-            # O(seconds) past ~100k words, so it could never scale
-            # past the broadcast threshold it was meant to relieve.)
-            # delta_scan_plan: "auto" (groups -> bloom -> shuffle),
-            # "bloom" / "shuffle" force the respective past-cap plan
-            plan_pref = str(st.props.get("delta_scan_plan", "auto")).lower()
-            groups = (
-                None if plan_pref in ("bloom", "shuffle")
-                else self._group_dirty_by_broadcast(
-                    dirty_base, dirty_delta, 64 * max(1, len(pk)), max(bcast, 0)
-                )
+            # shuffle. Past DELTA_MAX_GROUPS the plan falls back to
+            # the shuffled anti join.
+            groups = self._group_dirty_by_broadcast(
+                dirty_base, dirty_delta, 64 * max(1, len(pk)), max(bcast, 0)
             )
             if groups is not None:
                 parts = []
@@ -978,44 +970,21 @@ class Table:
                 for p in parts[1:]:
                     df_dirty = df_dirty.unionByName(p)
             else:
-                # past the broadcast budget. `delta_scan_plan=bloom`
-                # opts into the commit-time sidecar split
-                # (plans/delta_bloom.py): base rows failing the native
-                # membership probe are PROVABLY untouched and stream
-                # straight from parquet; only the ~|delta|-sized
-                # positive slice pays an exact anti join, and the base
-                # is never shuffled at any delta size — the right
-                # SHAPE for a multi-executor cluster, where base
-                # shuffle means network. It is NOT the local default:
-                # the round-6 ×400 A/B (SCALE.md) measured its
-                # fixed costs (probe-literal deserialization per task,
-                # two base scans) above the shuffled anti's on one
-                # shared JVM.
+                # past the broadcast budget: plain anti join — the
+                # planner shuffles base + keys, predicates still push
+                # below the join. Write-proportional maintenance is
+                # the real remedy in this regime; this plan only
+                # serves tables that disabled it.
+                df_base = self._read_files(st, dirty_base, per_file=per_file)
+                df_delta = self._read_files(st, dirty_delta, per_file=per_file)
+                # SHUFFLE_HASH on the key (build) side: hashing the
+                # O(delta) keys beats sort-merge, which would also
+                # SORT the full base stream
+                keys = df_delta.select(*pk).hint("SHUFFLE_HASH")
                 df_dirty = (
-                    self._bloom_split_plan(st, dirty_base, dirty_delta,
-                                           merge_delta_files, pk,
-                                           per_file=per_file)
-                    if plan_pref == "bloom" else None
+                    df_base.join(keys, on=pk, how="left_anti")
+                    .unionByName(merge_delta_files(dirty_delta, df_delta))
                 )
-                if df_dirty is None:
-                    # default past-cap plan (measured fastest locally):
-                    # plain anti join — the planner shuffles base +
-                    # keys, predicates still push below the join.
-                    # Write-proportional maintenance is the real remedy
-                    # in this regime; this plan only serves tables
-                    # that disabled it.
-                    df_base = self._read_files(st, dirty_base,
-                                               per_file=per_file)
-                    df_delta = self._read_files(st, dirty_delta,
-                                                per_file=per_file)
-                    # SHUFFLE_HASH on the key (build) side: hashing the
-                    # O(delta) keys beats sort-merge, which would also
-                    # SORT the full base stream
-                    keys = df_delta.select(*pk).hint("SHUFFLE_HASH")
-                    df_dirty = (
-                        df_base.join(keys, on=pk, how="left_anti")
-                        .unionByName(merge_delta_files(dirty_delta, df_delta))
-                    )
         elif (dirty_base and dirty_delta
               and delta_rows * 4 <= base_rows and 0 < key_bytes <= max(bcast, 0)):
             # reinsert-after-delete present: a base row may outrank
@@ -1100,9 +1069,6 @@ class Table:
             df = df.drop(SEQ_COL, DEL_COL)
         return df
 
-    # bloom-split anti join: key sets past this bound skip the bloom
-    # (its word-array literal would bloat every task's plan) and take
-    # the plain sort-merge anti join instead
     # grouped-broadcast merge knobs: a group's delta keys must fit one
     # broadcast (>= this floor even under a tiny configured threshold);
     # past DELTA_MAX_GROUPS the plan falls back to the shuffled anti
@@ -1166,60 +1132,6 @@ class Table:
         if len(bins) > self.DELTA_MAX_GROUPS:
             return None
         return [(b, d) for _, b, d in bins]
-
-    # more distinct per-commit blooms than this and the probe
-    # expression (k hashes each) stops being cheap — maintenance keeps
-    # the live delta-commit count far below it in steady state
-    DELTA_BLOOM_MAX_EXPRS = 6
-
-    def _bloom_split_plan(self, st: TableState, dirty_base: list["FileEntry"],
-                          dirty_delta: list["FileEntry"], merge_delta_files, pk,
-                          per_file=None):
-        """Merge plan over the commit-time delta-key bloom sidecars
-        (plans/delta_bloom.py; ≈ Kudu consulting rowset bloomfiles,
-        tablet/tablet.cc:116-124):
-
-            clean     = base WHERE NOT might_contain(xxhash64(pk))
-            contested = base WHERE might_contain ANTI JOIN delta keys
-            out       = clean UNION contested UNION dedup(deltas)
-
-        No false negatives -> `clean` is exact; false positives ride
-        the anti join, both of whose sides are O(delta). The base
-        parquet is read twice (once per split side) but shuffled
-        NEVER — 2x scan IO on dirty partitions beats a full sort-merge
-        shuffle by a widening margin as the base grows. Requires every
-        delta file to carry a sidecar and few distinct commits (ORed
-        probes); returns None otherwise — callers fall back."""
-        from functools import reduce
-        from operator import or_
-
-        from kudu_spark.plans import delta_bloom
-
-        paths = {f.bloom for f in dirty_delta}
-        if None in paths or len(paths) > self.DELTA_BLOOM_MAX_EXPRS:
-            return None
-        h = F.xxhash64(*[F.col(c) for c in pk])
-        probes = []
-        for rel in sorted(paths):
-            c = delta_bloom.might_contain_sidecar(
-                self.spark, self.root, rel, h, tuple(pk)
-            )
-            if c is None:
-                return None
-            probes.append(c)
-        contested = reduce(or_, probes)
-        df_base = self._read_files(st, dirty_base, per_file=per_file)
-        df_delta = self._read_files(st, dirty_delta, per_file=per_file)
-        # SHUFFLE_HASH on the key (build) side: both anti-join inputs
-        # are O(delta), and hashing beats sorting them (measured ~1.5x
-        # on the 6M-key shape); a sort-merge's per-partition sorts are
-        # pure overhead for a build set this shape
-        keys = df_delta.select(*pk).hint("SHUFFLE_HASH")
-        return (
-            df_base.where(~contested)
-            .unionByName(df_base.where(contested).join(keys, on=pk, how="left_anti"))
-            .unionByName(merge_delta_files(dirty_delta, df_delta))
-        )
 
     def _split_disjoint_bases(self, st: TableState, clean: list[FileEntry],
                               dirty: list[FileEntry]):
@@ -2742,76 +2654,13 @@ class Table:
                 )
             )
         senv.rmtree(staging)
-        # sidecar precedence: pk_bloom_cols tables index EVERY commit —
-        # base and delta alike, so mutating tables keep their O(batch)
-        # key probe (Kudu's per-rowset presence covers deltas too,
-        # tablet/tablet.cc:116-124) — and the fenced delta-key bloom is
-        # only built for tables without a presence index
+        # pk_bloom_cols tables index EVERY commit — base and delta
+        # alike, so mutating tables keep their O(batch) key probe
+        # (Kudu's per-rowset presence covers deltas too,
+        # tablet/tablet.cc:116-124)
         if st.props.get("pk_bloom_cols"):
             self._attach_presence_index(st, entries, tombstones=has_tombstones)
-        elif kind == "delta":
-            self._attach_delta_bloom(st, entries)
         return entries
-
-    # deltas below this many rows skip the sidecar: the grouped
-    # broadcast plan handles small key sets in one 64 MB build, and
-    # the sidecar's extra Spark job (~0.3 s) would tax every tiny
-    # mutation commit for nothing
-    DELTA_BLOOM_MIN_ROWS = 65536
-
-    def _attach_delta_bloom(self, st: TableState, entries: list[FileEntry]) -> None:
-        """Build + persist the commit's delta-key bloom sidecar
-        (plans/delta_bloom.py; ≈ Kudu building bloomfiles once at
-        delta flush, cfile/bloomfile.cc). One bloom covers the FULL
-        key set of this commit across partitions — scans OR together
-        the (few, maintenance-bounded) per-commit blooms. Failure is
-        never fatal: scans without a sidecar take the broadcast or
-        shuffled plan."""
-        from kudu_spark.plans import delta_bloom
-
-        total = sum(e.rows for e in entries)
-        floor = int(st.props.get("delta_bloom_min_rows", self.DELTA_BLOOM_MIN_ROWS))
-        if not entries or total < floor:
-            return
-        # build only for tables that will USE the bloom plan
-        # (delta_scan_plan=bloom, or delta_bloom=true explicitly):
-        # the build is a real per-commit Spark job, wasted on tables
-        # whose scans take the broadcast/shuffle plans
-        pref = str(st.props.get("delta_bloom", "auto")).lower()
-        if pref in ("false", "0", "no"):
-            return
-        if pref == "auto" and str(
-            st.props.get("delta_scan_plan", "auto")
-        ).lower() != "bloom":
-            return
-        try:
-            pk = st.schema.pk
-            keys = self.spark.read.parquet(
-                *[self._data_path(e.path) for e in entries]
-            ).select(F.xxhash64(*[F.col(c) for c in pk]).alias("h"))
-            fpp = float(st.props.get("delta_bloom_fpp", delta_bloom.DEFAULT_FPP))
-            data = delta_bloom.build_bloom(keys, total, fpp)
-            if data is None:
-                # opted-in table silently losing its bloom plan would
-                # be invisible until scan times regress — say so
-                import logging
-
-                logging.getLogger("kudu_spark.bloom").warning(
-                    "delta bloom sidecar for %s commit seq=%s unavailable "
-                    "(Spark internals missing?): bloom-split scans fall "
-                    "back to broadcast/shuffle plans", self.name,
-                    entries[0].seq,
-                )
-                return
-            rel = delta_bloom.write_sidecar(self.root, DATA_DIR, entries[0].seq, data)
-            for e in entries:
-                e.bloom = rel
-        except Exception as ex:
-            import logging
-
-            logging.getLogger("kudu_spark.bloom").warning(
-                "delta bloom sidecar for %s skipped: %s", self.name, ex
-            )
 
     def _attach_presence_index(self, st: TableState, entries: list[FileEntry],
                                tombstones: bool = False) -> None:
@@ -3496,15 +3345,18 @@ class Table:
             checks = [F.sum(F.when(null_pk, 1).otherwise(0)).alias("nulls")]
             if nn is not None:
                 checks.append(F.sum(F.when(nn, 1).otherwise(0)).alias("nn"))
-            val_src = batch  # kept for the rare failed-observation path
             obs = Observation()
             batch = batch.observe(obs, *checks)
             entries = self._write_files(batch, st, seq_for(st.version + 1), "base")
             vals = observed_metrics(obs)
             if vals is None:
                 # unusable observation (failed/pruned execution):
-                # re-validate explicitly — one extra job, rare path
-                vals = val_src.agg(*checks).collect()[0].asDict()
+                # validate the STAGED rows — one extra job, rare path;
+                # re-running a nondeterministic batch plan could
+                # validate rows other than the ones written
+                staged = self._read_files(st, entries, with_seq=False)
+                vals = ({} if staged is None
+                        else staged.agg(*checks).collect()[0].asDict())
             if vals.get("nulls"):
                 self._discard(entries)
                 raise SchemaError(
@@ -4302,7 +4154,8 @@ class Table:
                 removed += 1
                 removed_rel.add(rel)
             elif name.endswith(".bloom") and rel not in blooms:
-                # delta-key sidecars GC with their manifests
+                # delta-key bloom sidecars written before that scan
+                # plan was removed GC with their manifests
                 self._env.unlink(os.path.join(data_dir, name), missing_ok=True)
                 removed += 1
                 removed_rel.add(rel)

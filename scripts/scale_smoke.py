@@ -72,11 +72,7 @@ def main() -> None:
     )
     # disable inline maintenance so the "mutated" stage measures the
     # pure merge-on-read plan; the "auto" stage re-enables it.
-    # delta_bloom=true builds the sidecar at upsert time (its cost is
-    # inside upsert_10pct_sec) so the mutated_bloom stage measures the
-    # real bloom plan, not a silent fallback
-    eng.alter_table("lineitem").set_property("auto_compact", "false") \
-        .set_property("delta_bloom", "true").apply()
+    eng.alter_table("lineitem").set_property("auto_compact", "false").apply()
     if args.cluster_by:
         eng.alter_table("lineitem").set_property("cluster_by", args.cluster_by).apply()
     t0 = time.perf_counter()
@@ -118,13 +114,6 @@ def main() -> None:
     t.upsert(tenth)
     upsert_sec = round(time.perf_counter() - t0, 2)
     mutated = stage()
-    # same dirty state through the commit-time bloom sidecar plan
-    # (plans/delta_bloom.py): base filtered by the native
-    # might_contain probe, never shuffled, no per-query broadcast
-    # builds — the regime-independent alternative measured side by side
-    eng.alter_table("lineitem").set_property("delta_scan_plan", "bloom").apply()
-    mutated_bloom = stage()
-    eng.alter_table("lineitem").set_property("delta_scan_plan", "auto").apply()
     t0 = time.perf_counter()
     t.compact()
     compact_sec = round(time.perf_counter() - t0, 2)
@@ -190,7 +179,6 @@ def main() -> None:
         "maintenance_drain_sec": maintenance_drain_sec,
         "clean": clean,
         "mutated": mutated,
-        "mutated_bloom": mutated_bloom,
         "compacted": compacted,
         "auto_compacted": auto,
         "maintenance_drained": drained,

@@ -415,6 +415,45 @@ def test_vacuum_ancient_history_mark(engine, spark):
     assert t.ancient_history_mark() == head
 
 
+def test_legacy_bloom_sidecar_replays_and_vacuums(engine, spark):
+    """Logs written before the delta-key bloom scan plan was removed may
+    point delta files at a ``.bloom`` sidecar: they still replay and scan
+    exactly, fsck accepts them, and vacuum reclaims the file once
+    compaction drops its last reference."""
+    import os
+
+    from kudu_spark.meta import FileEntry
+
+    engine.create_table("lb", [("k", "bigint", False), ("v", "bigint", True)],
+                        pk=["k"], hash_partitions=[{"columns": ["k"], "buckets": 2}])
+    engine.alter_table("lb").set_property("auto_compact", "false").apply()
+    t = engine.table("lb")
+    t.insert(spark.range(100).select(F.col("id").alias("k"), F.col("id").alias("v")))
+    t.upsert(spark.range(0, 100, 10).select(
+        F.col("id").alias("k"), F.lit(-1).cast("bigint").alias("v")))
+    st = t.state()
+    deltas = [f for f in st.files if f.kind == "delta"]
+    rel = os.path.join("data", f"{deltas[0].seq:012d}-legacy.bloom")
+    with open(os.path.join(t.root, rel), "wb") as fh:
+        fh.write(b"legacy")
+    entries = []
+    for f in deltas:
+        nf = FileEntry.from_json(f.to_json())
+        nf.bloom = rel
+        entries.append(nf)
+    t._commit(st, "legacy_bloom", entries, removes=[e.path for e in entries],
+              retries=1, restamp_seq=False)
+    t = engine.table("lb")
+    assert {f.bloom for f in t.state().files if f.kind == "delta"} == {rel}
+    assert engine.fsck("lb")["lb"]["ok"]
+    got = {r.k: r.v for r in t.scan().collect()}
+    assert got == {k: -1 if k % 10 == 0 else k for k in range(100)}
+    t.compact()
+    t.vacuum(force=True)
+    assert not os.path.exists(os.path.join(t.root, rel))
+    assert {r.k: r.v for r in engine.table("lb").scan().collect()} == got
+
+
 def test_vacuum_keep_versions(engine, spark):
     t = engine.create_table("vac", SIMPLE, pk=["key"])
     t.insert(simple_rows(spark, range(50)))

@@ -4,6 +4,8 @@ merge-on-read correctness, diff scans, auto-increment PK."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +17,7 @@ from kudu_spark.errors import (
 )
 
 SIMPLE = [("key", "int", False), ("int_val", "int", False), ("string_val", "string", True)]
+SCHEMA = [("k", "bigint", False), ("v", "double", True), ("s", "string", True)]
 
 
 @pytest.fixture()
@@ -317,6 +320,45 @@ def test_write_validation_fallback_when_observation_unusable(engine, spark, monk
     assert got == {1: 10, 2: 22}
 
 
+def test_insert_fallback_validates_written_rows(engine, spark, monkeypatch, tmp_path):
+    """When the observation is unusable, insert validates the rows it
+    actually staged, not a re-execution of the caller's batch plan: a
+    nondeterministic batch that wrote a NULL key is rejected even though
+    recomputing it would yield none, and its staged files are removed."""
+    import kudu_spark.table as tbl
+    from kudu_spark.errors import SchemaError
+
+    monkeypatch.setattr(tbl, "observed_metrics", lambda obs, timeout_s=10.0: None)
+    t = engine.create_table("obs_ins", SIMPLE, pk=["key"])
+    t.insert(rows(spark, [(1, 10)]))
+
+    def flaky_batch(marker):
+        def null_on_first_eval(k):
+            # NULL exactly once per marker, across every Python worker
+            try:
+                os.close(os.open(marker, os.O_CREAT | os.O_EXCL))
+            except FileExistsError:
+                return k
+            return None
+
+        key = F.udf(null_on_first_eval, "int").asNondeterministic()
+        return spark.range(2, 6).select(
+            key(F.col("id").cast("int")).alias("key"),
+            F.col("id").cast("int").alias("int_val"),
+            F.lit("n").alias("string_val"),
+        )
+
+    data_dir = os.path.join(t.root, "data")
+    before = set(os.listdir(data_dir))
+    for i, write in enumerate((t.insert_ignore, t.insert)):
+        marker = str(tmp_path / f"first_eval_{i}")
+        with pytest.raises(SchemaError, match="NULL primary key"):
+            write(flaky_batch(marker))
+        assert os.path.exists(marker)
+        assert set(os.listdir(data_dir)) == before
+    assert [r.key for r in t.scan().collect()] == [1]
+
+
 def test_delete_key_frame_cache_reuse_and_eviction(engine, spark):
     """Merge-on-read scans persist the delta/delete key relation once
     per immutable file set and reuse it across scans and handles — a
@@ -386,3 +428,24 @@ def test_key_frame_root_lru_eviction(engine, spark, monkeypatch):
     # the evicted root's table still answers correctly (recompute)
     got = {r.key: r.int_val for r in tables[0].scan().collect()}
     assert got == {k: (k + 1 if k % 5 == 0 else k) for k in range(50)}
+
+
+def test_write_proportional_budget_drains_inline(engine, spark):
+    """A large delta commit folds its own backlog inline (budget scales
+    with the commit's delta bytes) instead of leaving dozens of
+    fixed-budget sweeps behind."""
+    t = engine.create_table(
+        "wp", SCHEMA, pk=["k"], hash_partitions=[{"columns": ["k"], "buckets": 4}]
+    )
+    # tiny fixed budget that could never cover the table; the
+    # write-proportional factor must override it
+    engine.alter_table("wp").set_property("auto_compact_budget_bytes", "1") \
+        .set_property("auto_compact_min_delta_bytes", "0").apply()
+    t = engine.table("wp")
+    t.insert(spark.range(30_000).select(
+        F.col("id").alias("k"), F.lit(1.0).alias("v"), F.lit("x").alias("s")))
+    t.upsert(spark.range(0, 30_000, 2).select(
+        F.col("id").alias("k"), F.lit(2.0).alias("v"), F.lit("y").alias("s")))
+    st = t.state()
+    assert all(f.kind == "base" for f in st.files), "inline fold did not drain"
+    assert t.scan().where(F.col("s") == "y").count() == 15_000

@@ -503,12 +503,20 @@ def test_grouped_broadcast_anti_join_over_threshold(engine, spark):
 def test_grouped_broadcast_falls_back_when_everything_dirty(engine, spark):
     """Past DELTA_MAX_GROUPS broadcast groups the plan degrades to the
     shuffled anti join (not the global window): predicates still push
-    below the join and results stay exact."""
+    below the join and results stay exact across upserts and deletes,
+    time travel and scan tokens."""
     t = engine.create_table("bl2", SCHEMA, pk=["k"],
                            hash_partitions=[{"columns": ["k"], "buckets": 8}])
+    # keep the deltas live: an inline fold would leave nothing to merge
+    engine.alter_table("bl2").set_property("auto_compact", "false").apply()
+    t = engine.table("bl2")
     ddl = "k bigint, v int, s string"
     t.insert(spark.createDataFrame([(k, k * 10, f"s{k}") for k in range(400)], ddl))
+    v_pre = t.version
     t.upsert(spark.createDataFrame([(k, 7, "u") for k in range(0, 400, 2)], ddl))
+    v_up = t.version
+    t.delete(spark.createDataFrame([(k,) for k in range(40)], "k bigint"))
+    assert any(f.kind == "delta" and f.dmark == "D" for f in t.state().files)
     orig_floor = type(t).DELTA_BROADCAST_FLOOR_BYTES
     orig_groups = type(t).DELTA_MAX_GROUPS
     type(t).DELTA_BROADCAST_FLOOR_BYTES = 64
@@ -516,12 +524,23 @@ def test_grouped_broadcast_falls_back_when_everything_dirty(engine, spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64")
     try:
-        got = {r.k: r.v for r in t.scan().collect()}
+        df = t.scan()
+        plan = plan_of(df)
+        got = {r.k: r.v for r in df.collect()}
+        pre = {r.k: r.v for r in t.scan(version=v_pre).collect()}
+        up = {r.k: r.v for r in t.scan(version=v_up).collect()}
+        tok_rows = sum(t.token_to_df(tok).count() for tok in t.scan_tokens())
     finally:
         type(t).DELTA_BROADCAST_FLOOR_BYTES = orig_floor
         type(t).DELTA_MAX_GROUPS = orig_groups
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert len(got) == 400 and got[2] == 7 and got[3] == 30
+    assert "LeftAnti" in plan and "BroadcastHashJoin" not in plan, (
+        "expected the shuffled anti join:\n" + plan)
+    assert len(got) == 360 and got[42] == 7 and got[43] == 430
+    assert not set(range(40)) & set(got)
+    assert pre == {k: k * 10 for k in range(400)}
+    assert up == {k: 7 if k % 2 == 0 else k * 10 for k in range(400)}
+    assert tok_rows == 360
 
 
 def test_group_dirty_bin_packing_unit(engine, spark):

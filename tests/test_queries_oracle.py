@@ -74,3 +74,23 @@ def test_readme_registry_count_matches():
     assert int(m.group(1)) == len(REGISTRY), (
         f"README says {m.group(1)} registered queries; "
         f"REGISTRY has {len(REGISTRY)} — update README.md")
+
+
+def test_load_schema_cache_invalidates_on_rewrite(spark, tmp_path):
+    """A dataset rewritten at the same path with a different schema is
+    read with its new schema, not the cached one (which would return the
+    new file's columns as NULLs under the old names)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kudu_spark.queries import load
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    path = str(sf / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "b": [10, 20]}), path)
+    assert load(spark, str(sf), "t").columns == ["a", "b"]
+    pq.write_table(pa.table({"a": [3, 4], "c": ["x", "y"]}), path)
+    df = load(spark, str(sf), "t")
+    assert df.columns == ["a", "c"]
+    assert sorted(tuple(r) for r in df.collect()) == [(3, "x"), (4, "y")]

@@ -40,6 +40,37 @@ def _engine(args):
     return Engine(get_spark(app_name="pyskudu-cli"), args.warehouse)
 
 
+def _typed_pk(eng, table: str, pk: dict) -> dict:
+    """``--pk`` JSON values as the typed literals locate_row hashes: a
+    timestamp is an ISO-8601 string (naive = the session time zone),
+    a decimal a JSON number or numeric string, a float/double any JSON
+    number, and binary a hex string. Other values pass unchanged."""
+    import datetime
+    import decimal
+    from zoneinfo import ZoneInfo
+
+    st = eng.table(table).state()
+    hashed = {c for dim in st.partition_spec.hash_dims for c in dim.columns}
+    out = dict(pk)
+    for c in hashed & out.keys():
+        v, t = out[c], st.schema.col(c).type.strip().lower()
+        if v is None or isinstance(v, bool):
+            continue
+        if t == "timestamp" and isinstance(v, str):
+            v = datetime.datetime.fromisoformat(v)
+            if v.tzinfo is None:
+                tz = eng.spark.conf.get("spark.sql.session.timeZone")
+                v = v.replace(tzinfo=ZoneInfo(tz))
+        elif t.startswith("decimal") and isinstance(v, (int, float)):
+            v = decimal.Decimal(str(v))
+        elif t in ("double", "float", "real") and isinstance(v, (int, str)):
+            v = float(v)
+        elif t == "binary" and isinstance(v, str):
+            v = bytes.fromhex(v)
+        out[c] = v
+    return out
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="pyskudu")
     p.add_argument("--warehouse", required=True)
@@ -70,7 +101,9 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument("--as", dest="new_name", default=None)
     sp = sub.add_parser("locate-row")
     sp.add_argument("table")
-    sp.add_argument("--pk", required=True, help='JSON dict, e.g. {"k": 5}')
+    sp.add_argument("--pk", required=True, help=(
+        'JSON dict, e.g. {"k": 5}; timestamps as ISO-8601 strings '
+        '(naive = session time zone), binary as hex strings'))
     sp = sub.add_parser("loadgen", help="synthetic write benchmark "
                         "(= `kudu perf loadgen`, tools/tool_action_perf.cc)")
     sp.add_argument("table")
@@ -230,7 +263,8 @@ def main(argv: list[str] | None = None) -> int:
         t = restore(eng, args.dir, args.table, new_name=args.new_name)
         print(f"restored {args.table} as {t.name} ({t.scan().count()} rows)")
     elif args.cmd == "locate-row":
-        print(json.dumps(eng.locate_row(args.table, json.loads(args.pk))))
+        pk = _typed_pk(eng, args.table, json.loads(args.pk))
+        print(json.dumps(eng.locate_row(args.table, pk)))
     elif args.cmd == "log-dump":
         from kudu_spark.meta import read_log
 

@@ -1172,7 +1172,9 @@ class Engine:
 
     def locate_row(self, name: str, pk_values: dict) -> dict:
         """Partition-function evaluation for a row (≈ `kudu table
-        locate_row`, tools/tool_action_table.cc:1380-1431)."""
+        locate_row`, tools/tool_action_table.cc:1380-1431), on the
+        driver (plans/keyhash.py). Raises KuduSparkError for a key
+        value the driver cannot coerce to its column type exactly."""
         t = self.table(name)
         st = t.state()
         rid = None

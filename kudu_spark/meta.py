@@ -185,9 +185,13 @@ class Schema:
 @dataclass
 class HashDimension:
     """≈ PartitionSchema::HashDimension (partition.h:285-288).
-    Bucket assignment uses Spark's xxhash64 (JVM-side, codegen'd)
-    rather than Kudu's Murmur2-64 — we are not binary-compatible and
-    xxhash64 keeps bucketing entirely inside WholeStageCodegen."""
+    Bucket = pmod(xxhash64(write-cast columns, lit(seed)), buckets),
+    Spark's xxhash64 rather than Kudu's Murmur2-64 — we are not
+    binary-compatible. The writer computes it in the JVM (codegen'd,
+    inside WholeStageCodegen); the scan planner and locate_row compute
+    it on the driver with plans/keyhash.py, bit for bit, so pruning a
+    point read runs no Spark job. tests/test_keyhash.py keeps the two
+    identical."""
 
     columns: list[str]
     buckets: int

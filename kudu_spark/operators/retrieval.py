@@ -20,7 +20,8 @@ Scale shape (the part that matters at 100 TB):
   broadcasts;
 - the final top-k is an ``orderBy(...).limit(k)`` — Spark's
   TakeOrdered, a per-partition heap + driver merge, never a global
-  sort.
+  sort — collected eagerly, so the tf cache is released before the
+  call returns; the result is a k-row literal frame.
 
 Scores are rounded before ranking and ties break by doc id, so the
 top-k is deterministic across engines, cluster sizes and
@@ -50,9 +51,23 @@ def bm25_topk(docs: DataFrame, query: str, k: int = 10,
     """Top-``k`` documents for ``query`` by BM25. Returns
     (id_col, score) with ``score`` rounded to 4 decimals; ranking is
     (score desc, id asc) — deterministic under float jitter."""
+    from kudu_spark.table import _inline_frame
+
     terms = _terms_of(query)
-    if not terms:
+    rows = _bm25_rows(docs, terms, k, k1, b, text_col, id_col) if terms else []
+    if not rows:
         return docs.select(F.col(id_col), F.lit(0.0).alias("score")).limit(0)
+    id_type = docs.schema[id_col].dataType.simpleString()
+    return _inline_frame(docs.sparkSession, [
+        F.struct(F.lit(i).cast(id_type).alias(id_col),
+                 F.lit(score).cast("double").alias("score"))
+        for i, score in rows])
+
+
+def _bm25_rows(docs: DataFrame, terms: list[str], k: int, k1: float, b: float,
+               text_col: str, id_col: str) -> list:
+    """bm25_topk's (id, score) rows, collected; the tf cache is
+    released before returning."""
     qarr = F.array(*[F.lit(t) for t in terms])
     toks = F.split(F.lower(F.col(text_col)), " ")
     base = docs.select(F.col(id_col), toks.alias("__t"))
@@ -99,12 +114,19 @@ def bm25_topk(docs: DataFrame, query: str, k: int = 10,
              ).alias("__s"),
         )
     )
-    return (
+    topk = (
         per_term.groupBy(id_col)
         .agg(F.round(F.sum("__s"), 4).alias("score"))
         .orderBy(F.desc("score"), F.col(id_col))
         .limit(k)
     )
+    # materialise the (k-row) result, then drop the cache: a persisted
+    # frame outlives the call, and a later bm25_topk over the same
+    # corpus would read the stale cache entry instead of its sources
+    try:
+        return topk.collect()
+    finally:
+        tf.unpersist()
 
 
 def bm25_sql(query: str, k: int = 10, k1: float = BM25_K1,

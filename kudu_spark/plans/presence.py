@@ -21,7 +21,11 @@ bloom: each base commit persists the sorted ``xxhash64`` of its rows'
 key tuple, sharded by ``hash % nshards`` into bounded files. A probe
 
   - computes the same hash JVM-side (``F.xxhash64`` over write-cast
-    columns — identical expression at build and probe time),
+    columns — identical expression at build and probe time; the
+    driver-side twin in plans/keyhash.py, which the scan planner and
+    locate_row use for partition buckets, computes it bit for bit
+    too — tests/test_keyhash.py and test_presence pin it — but the
+    probe itself stays in the JVM),
   - for large indexes first repartitions the (small) probe batch by
     shard id, so each task touches one shard per sidecar,
   - and runs an Arrow-batched pandas UDF that binary-searches the

@@ -57,6 +57,7 @@ from kudu_spark.meta import (
     replay,
     version_at_timestamp,
 )
+from kudu_spark.plans import keyhash
 
 SEQ_COL = "__seq"
 DEL_COL = "__deleted"
@@ -288,7 +289,6 @@ class Table:
         # place (the 100 TB path) or through the driver-local mirror
         self._env = fs.env_for_root(root)
         fs.bind_spark(self._env, spark)
-        self._bucket_cache: dict = {}
         import threading
 
         # one async maintenance run per TABLE (process-wide, keyed by
@@ -413,66 +413,19 @@ class Table:
         return names, exprs
 
     def _bucket_of(self, dim_idx: int, values: dict, buckets: int | None = None) -> int:
-        """Planner-side hash-bucket for a fully-bound hash dimension:
-        evaluated by Spark itself so it is exactly the write-path
-        function (no Python reimplementation to drift). ``buckets``
-        overrides the dimension default (per-range custom hash
-        schemas)."""
+        """Planner-side hash bucket for a fully-bound hash dimension,
+        computed on the driver by plans/keyhash.py — the write path's
+        ``pmod(xxhash64(write_cast(cols), lit(seed)), buckets)`` bit
+        for bit (the writer and the presence build still hash in the
+        JVM; tests/test_keyhash.py keeps the two identical).
+        ``buckets`` overrides the dimension default (per-range custom
+        hash schemas). Raises LiteralNotHashable (a KuduSparkError)
+        for a literal the driver cannot coerce exactly."""
         st = self.state()
         dim = st.partition_spec.hash_dims[dim_idx]
         n = dim.buckets if buckets is None else int(buckets)
-        return self._buckets_of(st, dim_idx, [values], n)[0]
-
-    def _buckets_of(self, st: TableState, dim_idx: int, values_list: list[dict],
-                    buckets: int) -> list[int]:
-        """Hash buckets for a BATCH of fully-bound value tuples in one
-        Spark job (the IN-list analogue of _bucket_of; ≈ the per-value
-        pruning of scan_spec.cc:170 PruneInlistValuesIfPossible).
-        Results are cached per (dim, modulus, values)."""
-        import re
-
-        dim = st.partition_spec.hash_dims[dim_idx]
-        keys = [
-            (dim_idx, buckets, tuple(sorted((k, repr(v)) for k, v in vals.items())))
-            for vals in values_list
-        ]
-        missing = [
-            (key, vals) for key, vals in zip(keys, values_list)
-            if key not in self._bucket_cache
-        ]
-        if missing:
-            rows = [
-                tuple(vals[c] for c in dim.columns) + (j,)
-                for j, (_key, vals) in enumerate(missing)
-            ]
-            try:
-                # untyped frame + per-column write-path cast: coercible
-                # literals (a string against a date/decimal hash column)
-                # plan and prune exactly like F.lit(v).cast(t) on the
-                # write path, instead of raising in a strictly typed
-                # createDataFrame
-                probe = self.spark.createDataFrame(rows, [*dim.columns, "__i"])
-            except Exception:
-                # inference needs a non-None value per column; fall back
-                # to the declared types (frame-safe: Spark 4 forbids
-                # char/varchar in DataFrame schemas — store as string)
-                ddl = ", ".join(
-                    "`%s` %s" % (c, re.sub(r"(?:var)?char\s*\(\s*\d+\s*\)", "string",
-                                           st.schema.col(c).type.strip(), flags=re.I))
-                    for c in dim.columns
-                ) + ", `__i` int"
-                probe = self.spark.createDataFrame(rows, ddl)
-            cols = [
-                _write_cast(F.col(c), st.schema.col(c).type) for c in dim.columns
-            ] + [F.lit(dim.seed)]
-            got = (
-                probe
-                .select("__i", F.pmod(F.xxhash64(*cols), F.lit(buckets)).cast("int").alias("b"))
-                .collect()
-            )
-            for r in got:
-                self._bucket_cache[missing[r["__i"]][0]] = int(r["b"])
-        return [self._bucket_cache[key] for key in keys]
+        row = [keyhash.column(st.schema.col(c).type, [values[c]])[0] for c in dim.columns]
+        return keyhash.xxhash64(row, dim.seed) % n
 
     # -- pruning ---------------------------------------------------------------
 
@@ -487,7 +440,8 @@ class Table:
         # (≈ scan_spec.cc:170 PruneInlistValuesIfPossible +
         # partition_pruner.cc:478). With per-range custom hash schemas
         # each file's range decides its modulus, so the set is computed
-        # per distinct modulus.
+        # per distinct modulus. Buckets are hashed on the driver
+        # (plans/keyhash.py): planning runs no Spark job.
         ps = st.partition_spec
         for i, dim in enumerate(ps.hash_dims):
             if not all(c in eqs or c in ins for c in dim.columns):
@@ -502,12 +456,17 @@ class Table:
                 return []  # IN () matches nothing
             if n_combos > 8192:
                 continue  # cap planner work; the scan-side filter still applies
-            combos = [dict(zip(dim.columns, t)) for t in itertools.product(*choices)]
+            try:
+                cols = [keyhash.column(st.schema.col(c).type, ch)
+                        for c, ch in zip(dim.columns, choices)]
+            except keyhash.LiteralNotHashable:
+                continue  # no exact bucket; the scan-side filter still applies
+            h = [keyhash.xxhash64(row, dim.seed) for row in itertools.product(*cols)]
             moduli = (
                 {ps.buckets_for(f.partition.get("range"), i) for f in files}
                 if ps.hash_overrides else {dim.buckets}
             )
-            allowed = {n: set(self._buckets_of(st, i, combos, n)) for n in moduli}
+            allowed = {n: {x % n for x in h} for n in moduli}
             if ps.hash_overrides:
                 files = [
                     f for f in files
@@ -1733,7 +1692,9 @@ class Table:
         float32-rounded FIRST (struct.pack '<f', IEEE round-to-
         nearest — the same conversion the replaced array<float>
         createDataFrame applied) so norms/scores match the old
-        stored-column arithmetic bit-for-bit."""
+        stored-column arithmetic bit-for-bit. An array<double> column
+        keeps the query at full precision and casts the literal to
+        array<double>."""
         import struct as _struct
 
         from kudu_spark.operators.similarity import (
@@ -1751,9 +1712,11 @@ class Table:
         nb_type = st.schema.col(pk0).type
         out_schema = (f"query_id {qid_type}, neighbor_id {nb_type}, "
                       "rank int, cosine double")
+        double = re.sub(r"\s+", "", st.schema.col(column).type.lower()) == "array<double>"
+        vec_type, conv = ("array<double>", float) if double else ("array<float>", _f32)
         rows = [
             (q, None if v is None
-             else [None if x is None else _f32(x) for x in v])
+             else [None if x is None else conv(x) for x in v])
             for q, v in qv_rows
         ]
         # NULL vectors never probed and never scored (the old frame
@@ -1774,7 +1737,7 @@ class Table:
         qv = F.broadcast(_inline_frame(self.spark, [
             F.struct(
                 F.lit(q).cast(qid_type).alias("query_id"),
-                F.lit(v).cast("array<float>").alias("qv"),
+                F.lit(v).cast(vec_type).alias("qv"),
                 (F.lit(norm_py(v)) if all(x is not None for x in v)
                  else F.lit(None)).cast("double").alias("__qn"))
             for q, v in rows]))

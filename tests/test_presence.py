@@ -1119,3 +1119,36 @@ def test_sidecar_merge_declines_on_bloomless_live_file(engine, spark):
     t = engine.table("blm")
     assert any(not f.bloom for f in t.state().files)
     assert t.merge_presence_sidecars(max_live=2) is None
+
+
+@pytest.mark.parametrize("schema,bloom,rows", [
+    ([("k", "bigint", False), ("v", "int", True)], "k",
+     [(k * 7919 - 10**12, k) for k in range(60)]),
+    ([("s", "string", False), ("v", "int", True)], "s",
+     [(f"key-{k}-日本", k) for k in range(60)]),
+    ([("a", "int", False), ("b", "varchar(6)", False), ("v", "int", True)], "a,b",
+     [(k % 3, f"tail{k}-untruncated", k) for k in range(60)]),
+])
+def test_driver_keyhash_finds_keys_in_sidecar(engine, spark, schema, bloom, rows):
+    """The presence build hashes keys in the JVM, unseeded, over the
+    write-cast columns. plans/keyhash.py computes the same hash on the
+    driver: every key written in one commit lands in its sidecar's
+    ``shard-<h % nshards>`` array."""
+    from kudu_spark.plans import keyhash
+
+    cols = bloom.split(",")
+    t = engine.create_table("kp", schema, pk=cols)
+    engine.alter_table("kp").set_property("pk_bloom_cols", bloom).apply()
+    t = engine.table("kp")
+    t.insert(spark.createDataFrame(
+        rows, ", ".join(f"{n} {'string' if ty.startswith('varchar') else ty}"
+                        for n, ty, _ in schema)))
+    st = t.state()
+    (rel,) = {f.bloom for f in st.files}
+    d = os.path.join(t.root, rel)
+    ns = presence.read_meta(d)["nshards"]
+    types = {n: ty for n, ty, _ in schema}
+    hashed = zip(*[keyhash.column(types[c], [r[i] for r in rows]) for i, c in enumerate(cols)])
+    for v in map(keyhash.xxhash64, hashed):
+        shard = presence._load_shard(d, v % ns)
+        assert shard[np.searchsorted(shard, v)] == v

@@ -89,6 +89,23 @@ def test_planner_prunes_inlist(table):
     assert got == sorted(vals)
 
 
+def test_point_scan_plans_without_spark_jobs(table, spark):
+    """Hash-bucket pruning runs on the driver (plans/keyhash.py):
+    building a point scan, or a 1,000-value IN-list scan, starts no
+    Spark job; only the collect does."""
+    sc = spark.sparkContext
+    group = "test-point-scan-plan"
+    sc.setJobGroup(group, "scan planning only")
+    try:
+        point = table.scan(filters=[("k", "=", 123)])
+        inlist = table.scan(filters=[("k", "in", list(range(0, 3000, 3)))])
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r.v for r in point.collect()] == [1230]
+    assert sorted(r.k for r in inlist.collect()) == list(range(0, 1000, 3))
+
+
 def test_inlist_predicate_pushed_to_parquet(table):
     """IN-lists (well past the 10-value Spark default — session raises
     spark.sql.parquet.pushdown.inFilterThreshold) must reach the

@@ -83,6 +83,29 @@ def test_bm25_topk_ranking_properties(spark):
     assert RET.bm25_topk(docs, "warthog", k=3).count() == 0
 
 
+def test_bm25_topk_releases_its_cache(spark):
+    """bm25_topk persists its (doc, term, tf) frame for the two
+    references inside one call and unpersists it once the top-k is
+    materialised: repeated calls leave no cached RDD behind, and a
+    fresh call plans from the source, not from a stale cache entry."""
+    from kudu_spark.operators import retrieval as RET
+
+    docs = spark.createDataFrame([
+        (1, "zebra zebra apple pear"), (2, "zebra apple plum"),
+        (3, "apple apple fig"), (4, "kiwi date mango"),
+    ], "doc_id bigint, text string")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    first = [tuple(r) for r in RET.bm25_topk(docs, "zebra apple", k=3).collect()]
+    second_df = RET.bm25_topk(docs, "zebra apple", k=3)
+    assert [tuple(r) for r in second_df.collect()] == first
+    assert [r[0] for r in first] == [1, 2, 3]
+    assert jsc.getPersistentRDDs().size() <= before
+    plan = second_df._sc._jvm.PythonSQLUtils.explainString(
+        second_df._jdf.queryExecution(), "formatted")
+    assert "InMemoryTableScan" not in plan, plan
+
+
 def test_rrf_fusion_properties(spark):
     """RRF: a doc in both lists outranks single-list docs of similar
     rank; scores are 1/(60+r) sums; n_lists counts memberships."""
@@ -999,3 +1022,35 @@ def test_zero_norm_vectors_are_ansi_safe_everywhere(spark, tmp_path):
     pairs = SIM.cosine_pairs(emb, threshold=0.9)
     ids = {x for r in pairs.collect() for x in (r["vec_a"], r["vec_b"])}
     assert ids == {1, 2}
+
+
+def test_ann_topk_double_column_keeps_query_precision(spark, tmp_path):
+    """ANN serving over an array<double> column scores the query at
+    full precision: rounding it through float32 (right for array<float>
+    columns only) flips the top-1 here, where two candidates sit 1e-9
+    rad apart in angle around a query whose 0.1 component float32
+    rounds by 1.5e-9."""
+    import math
+
+    from kudu_spark.engine import Engine
+
+    a0 = math.atan(0.1)
+
+    def unit(angle):
+        return [math.cos(angle), math.sin(angle)]
+
+    rows = [(1, [1.0, 0.1]),  # the query row
+            (2, unit(a0 - 0.5)),  # nearest at full precision
+            (3, unit(a0 + 0.5 + 1e-9)),  # nearest after float32 rounding
+            (4, unit(a0 + 3.0)), (5, unit(a0 - 3.0)), (6, unit(a0 + 2.5))]
+    eng = Engine(spark, str(tmp_path / "wh"))
+    t = eng.create_table("ad", [("vec_id", "bigint", False),
+                                ("embedding", "array<double>", True)], pk=["vec_id"])
+    t.insert(spark.createDataFrame(rows, "vec_id bigint, embedding array<double>"))
+    t = eng.table("ad")
+    t.train_vector_cells("embedding", n_cells=2, n_iters=2)
+    t = eng.table("ad")
+    top = t.ann_topk("embedding", [1], k=1, n_probes=2).collect()
+    assert [r.neighbor_id for r in top] == [2]
+    ext = t.ann_topk_vectors("embedding", [(900, [1.0, 0.1])], k=2, n_probes=2).collect()
+    assert [r.neighbor_id for r in sorted(ext, key=lambda r: r.rank)] == [1, 2]

@@ -703,7 +703,7 @@ class Engine:
         _evict_maint_lock(root)
         # release the dropped root's persisted frames too (SCALE.md's
         # evict-on-drop contract): without this, up to GBs of resident
-        # dirty/key frames per dropped table would linger in Spark
+        # merged-dirty frames per dropped table would linger in Spark
         # storage memory until 32 other roots churn the LRU
         _evict_key_frames(root)
 

@@ -345,9 +345,13 @@ def duplicate_components(pairs: DataFrame, iters: int = 4) -> DataFrame:
     executor loss (or a dynamic-allocation scale-down) after the
     checkpoint fails the job unrecoverably at cluster scale; the
     reliable checkpoint lands in the checkpoint-dir filesystem (set
-    spark.checkpoint.dir to the warehouse FS in production — a local
-    temp dir is auto-provisioned here otherwise), surviving any
-    executor loss (VERDICT r14 #2 / ADVICE r14). Two alternatives
+    spark.checkpoint.dir to the warehouse FS in production), surviving
+    any executor loss (VERDICT r14 #2 / ADVICE r14). With no
+    checkpoint dir set, a driver-local temp dir is auto-provisioned
+    only under a ``local[...]`` master, where the executors share the
+    driver's filesystem; any other master falls back to
+    ``localCheckpoint(eager=True)`` rather than hand executors a path
+    they cannot reach. Two alternatives
     were measured and rejected: persist()-only (the propagation
     rounds reference the edge set ~9x and the per-reference columnar
     cache decode + 9-copy plan re-optimization ran 3-6x slower than
@@ -366,10 +370,12 @@ def duplicate_components(pairs: DataFrame, iters: int = 4) -> DataFrame:
     instead of recomputing its input); it is released immediately."""
     e = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     sc = pairs.sparkSession.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isEmpty():
+    reliable = not sc._jsc.sc().getCheckpointDir().isEmpty()
+    if not reliable and sc.master.startswith("local"):
         import tempfile
 
         sc.setCheckpointDir(tempfile.mkdtemp(prefix="pyskudu-ckpt-"))
+        reliable = True
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -378,7 +384,8 @@ def duplicate_components(pairs: DataFrame, iters: int = 4) -> DataFrame:
     # join (which is what doubled the plan)
     nodes = edges.select("src").distinct()
     src = edges.unionByName(nodes.withColumn("dst", F.col("src"))).persist()
-    looped = src.checkpoint(eager=True)
+    looped = (src.checkpoint(eager=True) if reliable
+              else src.localCheckpoint(eager=True))
     src.unpersist()
     labels = (
         looped.where(F.col("src") == F.col("dst"))

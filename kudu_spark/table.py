@@ -29,6 +29,7 @@ java/kudu-spark/.../KuduWriteOptions.scala:31-46).
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import re
@@ -158,20 +159,20 @@ import threading as _threading
 _MAINT_LOCKS: dict = {}  # canonical table root -> Lock (async-maintenance mutex)
 _MAINT_LOCKS_GUARD = _threading.Lock()
 
-# Process-wide cache of PERSISTED delta/delete key relations, keyed by
-# canonical table root -> OrderedDict[(file paths, pk cols) -> DataFrame].
-# The merge-on-read plan broadcasts an O(deltas) key set per scan; a
-# resident Kudu tserver amortizes exactly that state across scans, but a
-# stateless library rebuilt it from parquet per query — the fixed cost
-# behind the deleted-state bench cell (VERDICT r11 #1). Data files are
-# immutable, so a key frame identified by its file-path set never goes
-# stale; eviction (commit bump, vacuum, LRU cap) is purely memory
+# Process-wide cache of PERSISTED merged-dirty frames: canonical table
+# root -> {(file paths, schema identity) -> DataFrame | None}, both
+# levels in LRU order. A resident Kudu tserver keeps its delta state in
+# memory across scans; a stateless library would rebuild it from
+# parquet per query. None marks a snapshot seen once
+# (Table._cached_frame persists on the second encounter). Data files
+# are immutable, so an entry identified by its file-path set never
+# goes stale; eviction (commit bump, vacuum, LRU cap) is purely memory
 # hygiene — an unpersisted frame silently recomputes.
 _KEY_FRAMES: dict = {}
 _KEY_FRAMES_GUARD = _threading.Lock()
 # per-root entry cap: distinct predicate shapes prune distinct file
-# sets, and one snapshot can hold a key frame + a resolved-delta frame
-# per shape — 4 was measured to thrash under two alternating queries
+# sets, and one snapshot can hold a frame per shape — 4 was measured
+# to thrash under two alternating queries
 KEY_FRAME_CACHE_MAX = 12
 # root-level LRU cap: a long-lived process touching many tables (or a
 # test session creating thousands of temp roots) must not pin every
@@ -179,25 +180,21 @@ KEY_FRAME_CACHE_MAX = 12
 KEY_FRAME_ROOTS_MAX = 32
 
 
-# merged-dirty snapshots observed ONCE per root: the big dirty frame
-# only persists on its SECOND encounter, so a one-shot scan (fresh
-# table, selective ad-hoc query) never pays materializing all columns
-# into memory for a reuse that never comes
-_DIRTY_SEEN: dict = {}
-DIRTY_SEEN_MAX = 64
+def _unpersist(df: DataFrame | None) -> None:
+    try:
+        if df is not None:  # None: a seen-once placeholder holds nothing
+            df.unpersist()
+    except Exception:
+        pass  # stopped session: nothing to release
 
 
 def _evict_key_frames(root: str) -> None:
-    """Unpersist every cached key frame of a table root (called on
-    commit — the file set changed — and on vacuum/drop)."""
+    """Unpersist every cached frame of a table root (called on commit
+    — the file set changed — and on vacuum/drop)."""
     with _KEY_FRAMES_GUARD:
         ent = _KEY_FRAMES.pop(_canonical_root(root), None)
-        _DIRTY_SEEN.pop(_canonical_root(root), None)
     for df in (ent or {}).values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # stopped session: nothing to release
+        _unpersist(df)
 
 
 def _canonical_root(root: str) -> str:
@@ -269,10 +266,10 @@ def _inline_frame(spark: SparkSession, structs: list) -> DataFrame:
 
 def partition_key(f: "FileEntry"):
     """Partition identity of a manifest entry — THE grouping key for
-    merge planning, delta relevancy, broadcast bin packing and
-    compaction. One definition so a future change to the partition
-    shape (e.g. per-range hash overrides entering the identity) cannot
-    silently diverge the planners."""
+    merge planning, diff scans, scan tokens and compaction. One
+    definition so a future change to the partition shape (e.g.
+    per-range hash overrides entering the identity) cannot silently
+    diverge the planners."""
     return (tuple(f.partition.get("hash", [])), f.partition.get("range"))
 
 
@@ -351,9 +348,10 @@ class Table:
     # -- partition expressions -------------------------------------------------
 
     def _lex_bound_expr(self, st: TableState, cols: list[str], bound, op: str):
-        """Lexicographic (cols...) >= bound ('ge') or < bound ('lt') as
-        a Column expression; a bound shorter than cols leaves trailing
-        columns unbounded (Kudu's partial compound range bounds)."""
+        """Lexicographic (cols...) >= bound ('ge'), > bound ('gt') or
+        < bound ('lt') as a Column expression; a bound shorter than
+        cols leaves trailing columns unbounded (Kudu's partial compound
+        range bounds)."""
         vals = list(bound) if isinstance(bound, (list, tuple)) else [bound]
 
         def lit(i):
@@ -462,19 +460,12 @@ class Table:
             except keyhash.LiteralNotHashable:
                 continue  # no exact bucket; the scan-side filter still applies
             h = [keyhash.xxhash64(row, dim.seed) for row in itertools.product(*cols)]
-            moduli = (
-                {ps.buckets_for(f.partition.get("range"), i) for f in files}
-                if ps.hash_overrides else {dim.buckets}
-            )
-            allowed = {n: {x % n for x in h} for n in moduli}
-            if ps.hash_overrides:
-                files = [
-                    f for f in files
-                    if f.partition["hash"][i]
-                    in allowed[ps.buckets_for(f.partition.get("range"), i)]
-                ]
-            else:
-                files = [f for f in files if f.partition["hash"][i] in allowed[dim.buckets]]
+
+            def modulus(f, i=i):
+                return ps.buckets_for(f.partition.get("range"), i)
+
+            allowed = {n: {x % n for x in h} for n in {modulus(f) for f in files}}
+            files = [f for f in files if f.partition["hash"][i] in allowed[modulus(f)]]
         # range pruning
         rs = st.partition_spec.range_spec
         if rs.enabled:
@@ -665,84 +656,57 @@ class Table:
         return out
 
     def _cached_frame(self, ck: tuple, build) -> DataFrame:
-        """persist()-cached DataFrame keyed by an immutable identity
-        (file-path sets + the schema identity of the projected
-        columns), process-wide so every handle of a table shares it.
-        LRU-capped per root AND across roots; evicted frames just
-        recompute, so the cache can never affect correctness — only
-        whether a snapshot's O(delta) state is materialized once or
-        per query."""
-        from collections import OrderedDict
-
-        def touch_root(root):
-            # roots are themselves LRU-managed (plain dicts iterate in
-            # insertion order; re-inserting = move-to-end)
-            ent = _KEY_FRAMES.pop(root, None)
-            if ent is None:
-                ent = OrderedDict()
-            _KEY_FRAMES[root] = ent
-            return ent
-
+        """Seen-twice persist() cache for merged-dirty frames, keyed by
+        an immutable identity (file-path set + the schema identity of
+        the projected columns) and process-wide, so every handle of a
+        table shares it. ``build()`` makes the frame; a hit never calls
+        it, so a hot scan skips planning the merge. The FIRST encounter
+        of ``ck`` only records a placeholder (None) and returns
+        ``build()`` as is: a one-shot scan (fresh snapshot, selective
+        ad-hoc query) keeps the streaming plan and never pays
+        materializing every column for a reuse that never comes. The
+        second encounter proves the snapshot hot and persists.
+        Placeholders and frames share one LRU per root
+        (KEY_FRAME_CACHE_MAX) and one LRU across roots
+        (KEY_FRAME_ROOTS_MAX); an evicted frame just recomputes, so
+        the cache can never affect correctness."""
         root = _canonical_root(self.root)
-        with _KEY_FRAMES_GUARD:
-            ent = touch_root(root)
-            df = ent.get(ck)
-            if df is not None and df.sparkSession is self.spark:
-                ent.move_to_end(ck)
-                return df
-        fresh = build().persist()
-        evicted: list[DataFrame] = []
-        with _KEY_FRAMES_GUARD:
-            ent = touch_root(root)
-            cur = ent.get(ck)
-            if cur is not None and cur.sparkSession is self.spark:
-                evicted.append(fresh)  # lost a race; keep the incumbent
-                fresh = cur
-            else:
-                ent[ck] = fresh
-            ent.move_to_end(ck)
+
+        def admit(value) -> list:
+            # under the guard: store ``value`` as the newest entry of the
+            # newest root (plain dicts iterate in insertion order;
+            # re-inserting = move-to-end), trim both LRUs, and return
+            # the frames that fell out
+            ent = _KEY_FRAMES.pop(root, None) or {}
+            _KEY_FRAMES[root] = ent
+            old = ent.pop(ck, None)
+            ent[ck] = value
+            out = [old] if old is not value else []
             while len(ent) > KEY_FRAME_CACHE_MAX:
-                _, old = ent.popitem(last=False)
-                if old is not fresh:
-                    evicted.append(old)
+                out.append(ent.pop(next(iter(ent))))
             while len(_KEY_FRAMES) > KEY_FRAME_ROOTS_MAX:
                 stale_root = next(iter(_KEY_FRAMES))
                 if stale_root == root:
                     break  # never evict the root we just served
-                evicted.extend(_KEY_FRAMES.pop(stale_root).values())
-                # the seen-once markers ride the same lifetime — a
-                # leaked marker dict per stale root would grow without
-                # bound across table roots
-                _DIRTY_SEEN.pop(stale_root, None)
-        for old in evicted:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        return fresh
+                out.extend(_KEY_FRAMES.pop(stale_root).values())
+            return out
 
-    def _cached_key_frame(self, st: TableState, files: list[FileEntry],
-                          pk: list[str]) -> DataFrame:
-        """PK-column relation over ``files``, persist()-cached so
-        repeated scans of one snapshot materialize the delta / delete
-        key set once instead of re-scanning parquet per query (≈ a
-        tserver's resident delta state, tablet/deltamemstore.h). Keyed
-        by the immutable file-path set + the pk columns' (name, type)
-        identity — an ALTER that renames/retypes a key column misses
-        cleanly instead of serving stale columns."""
-        pk_ident = tuple((c.name, c.type) for c in st.schema.columns
-                         if c.name in set(pk))
-        ck = ("keys", tuple(sorted(f.path for f in files)), pk_ident)
-        # compact the cached blocks: a later broadcast build over the
-        # frame launches one task per cached partition, so a small key
-        # set kept as N tiny file-partitions pays N task round-trips
-        # per query for nothing. (A driver-LOCAL relation was tried
-        # and rejected: pyspark createDataFrame(list) builds an
-        # RDD-backed frame, so every broadcast re-serializes the keys
-        # Python->JVM — measured 3-4x WORSE than the persisted frame.)
-        nparts = max(1, sum(f.rows for f in files) // 4_000_000)
-        return self._cached_frame(
-            ck, lambda: self._read_files(st, files).select(*pk).coalesce(nparts))
+        with _KEY_FRAMES_GUARD:
+            ent = _KEY_FRAMES.get(root) or {}
+            seen, cur = ck in ent, ent.get(ck)
+            evicted = admit(cur)
+        if cur is not None and cur.sparkSession is self.spark:
+            out = cur
+        elif not seen:
+            out = build()
+        else:
+            # planned outside the guard, so other scans never wait on it
+            out = build().persist()
+            with _KEY_FRAMES_GUARD:
+                evicted += admit(out)
+        for old in evicted:
+            _unpersist(old)
+        return out
 
     # NOTE (measured, round 12): compiling a pure-delete key set into
     # an `isin` InSet filter instead of the broadcast anti join is NOT
@@ -750,19 +714,38 @@ class Table:
     # Column construction once and ~350 ms of Catalyst analysis PER
     # QUERY (12k expression nodes walked by every rule), dwarfing the
     # ~40 ms broadcast build it replaces. The anti join against the
-    # persisted key frame is the right shape at every size.
+    # delta key relation is the right shape at every size.
 
     def _snapshot_df(
         self,
         st: TableState,
         filters: list[Predicate] | None = None,
-        keep_meta: bool = False,
         include_deleted: bool = False,
         per_file=None,
         per_file_tag: tuple | None = None,
     ) -> DataFrame:
-        """Merge-on-read snapshot: clean partitions stream straight from
-        parquet; delta-affected partitions get last-write-wins dedup.
+        """Merge-on-read snapshot under Kudu's one rule: the newest
+        version of a key wins (tablet/delta_applier.h). Clean
+        partitions (no delta file) stream straight from parquet. In the
+        delta-affected (dirty) partitions, with ``K`` the PK set of
+        every dirty delta file:
+
+        - uncontested rows: dirty base rows anti-joined with ``K``. Keys
+          no delta touches are base-unique by the insert dup-check, and
+          predicates and projection push below the join into the scan;
+        - contested rows: the deltas merged among themselves
+          (``merge_delta_files``) — a base file older than every delta
+          can never win, so it is not read for these keys;
+        - base files NOT older than the oldest dirty delta (a reinsert
+          after delete, or a fresh insert into a dirty partition) can
+          win, so only their rows in ``K`` (semi join) enter one
+          last-write-wins window with the deltas.
+
+        ``K`` is broadcast when its estimated hashed size fits
+        ``spark.sql.autoBroadcastJoinThreshold`` and hinted
+        SHUFFLE_HASH otherwise. A small merged-dirty result stays
+        resident from its second encounter on (``_cached_frame``).
+
         ``include_deleted`` keeps ghost rows and exposes the IS_DELETED
         virtual column (common.proto:60, generic_iterators.h:42-51).
 
@@ -775,15 +758,13 @@ class Table:
         ``per_file`` set but no tag, caching is skipped."""
         files = self._prune(st, filters)
         pk = st.schema.pk
-        pkey = partition_key
-        delta_parts = {pkey(f) for f in files if f.kind == "delta"}
-        clean = [f for f in files if pkey(f) not in delta_parts]
-        dirty = [f for f in files if pkey(f) in delta_parts]
-        if delta_parts:
-            clean, dirty = self._split_disjoint_bases(st, clean, dirty)
+        delta_parts = {partition_key(f) for f in files if f.kind == "delta"}
+        clean = [f for f in files if partition_key(f) not in delta_parts]
+        dirty = [f for f in files if partition_key(f) in delta_parts]
+        df_clean = self._read_files(st, clean, with_seq=False, per_file=per_file)
 
-        df_clean = self._read_files(st, clean, with_seq=keep_meta,
-                                    per_file=per_file)
+        def read(fs):
+            return self._read_files(st, fs, per_file=per_file)
 
         w = Window.partitionBy(*pk).orderBy(F.desc(SEQ_COL))
         keep = F.col("__rn") == 1
@@ -798,25 +779,37 @@ class Table:
             # max_by(struct) hash aggregate, which lacks codegen.)
             return df.withColumn("__rn", F.row_number().over(w)).where(keep).drop("__rn")
 
-        dirty_base = [f for f in dirty if f.kind == "base"]
-        dirty_delta = [f for f in dirty if f.kind == "delta"]
-        delta_seqs = {f.seq for f in dirty_delta}
+        def merge_deltas(fs):
+            # Last-write-wins over DELTA rows only. When every file
+            # shares one manifest seq (a single mutation commit — the
+            # steady state under inline compaction), keys are already
+            # unique across the set (the write path dedups each batch
+            # by PK), so dedup collapses to a tombstone filter: no
+            # window, no shuffle, and scan predicates keep pushing into
+            # the delta parquet scan (a Window blocks non-key filter
+            # pushdown).
+            if len({f.seq for f in fs}) == 1:
+                return read(fs) if include_deleted else read(fs).where(~F.col(DEL_COL))
+            return merge(read(fs))
 
-        def merge_deltas(df, seqs=None):
-            # Last-write-wins over DELTA rows only. When every delta
-            # file shares one manifest seq (a single mutation commit —
-            # the steady state under inline compaction), keys are
-            # already unique across the set (the write path dedups each
-            # batch by PK), so dedup collapses to a tombstone filter:
-            # no window, no shuffle, and scan predicates keep pushing
-            # into the delta parquet scan (a Window blocks non-key
-            # filter pushdown). ``seqs`` narrows the check to a
-            # bin-packed group's own delta files.
-            if len(delta_seqs if seqs is None else seqs) == 1:
-                return df if include_deleted else df.where(~F.col(DEL_COL))
-            return merge(df)
+        def key_frame(fs):
+            # PK relation of delta files as a join build side. A
+            # broadcast HashedRelation costs far more than the raw key
+            # width (~64 B per key of object + hash-table overhead), and
+            # building / shipping an over-threshold relation regresses
+            # badly — size with that realistic constant. Past the
+            # threshold, SHUFFLE_HASH on the O(delta) keys beats
+            # sort-merge, which would also SORT the full base stream.
+            try:
+                bcast = int(self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+            except Exception:
+                bcast = 10 << 20
+            keys = self._read_files(st, fs).select(*pk)
+            key_bytes = sum(f.rows for f in fs) * 64 * max(1, len(pk))
+            return (F.broadcast(keys) if 0 < key_bytes <= bcast
+                    else keys.hint("SHUFFLE_HASH"))
 
-        def merge_delta_files(files, df=None):
+        def merge_delta_files(fs):
             # Delete-aware delta materialization (≈ Kudu separating
             # DELETE application from row projection,
             # tablet/delta_relevancy.h, tablet/delta_applier.h:52).
@@ -825,327 +818,82 @@ class Table:
             # contributes no OUTPUT rows — only a key set. When every
             # pure-delete commit outranks every live delta (the steady
             # state: deletes land after the mutations they shadow),
-            # subtract the delete keys with a broadcast anti join and
-            # keep the LIVE deltas on the single-seq tombstone-filter
-            # fast path — predicates keep pushing into the live delta
-            # scan, which the global row_number fallback blocks.
-            live = [f for f in files if f.dmark == "L"]
-            dels = [f for f in files if f.dmark == "D"]
+            # subtract the delete keys with an anti join and keep the
+            # LIVE deltas on the single-seq tombstone-filter fast path
+            # — predicates keep pushing into the live delta scan,
+            # which the row_number window blocks.
+            live = [f for f in fs if f.dmark == "L"]
+            dels = [f for f in fs if f.dmark == "D"]
             if (include_deleted                      # ghosts must survive
-                    or len(live) + len(dels) != len(files)  # mixed/unmarked
+                    or len(live) + len(dels) != len(fs)  # mixed/unmarked
                     or not dels
                     or (live and min(f.seq for f in dels)
                         <= max(f.seq for f in live))):  # delete predates a live delta
-                d = (self._read_files(st, files, per_file=per_file)
-                     if df is None else df)
-                return merge_deltas(d, {f.seq for f in files})
+                return merge_deltas(fs)
             if not live:
                 # every delta row is a tombstone: zero output rows
                 # (Catalyst folds the false filter to an empty
-                # relation — the delete files are never scanned here;
-                # their keys still ride the caller's base anti join)
-                return self._read_files(st, dels,
-                                        per_file=per_file).where(F.lit(False))
-            merged_live = merge_deltas(
-                self._read_files(st, live, per_file=per_file),
-                {f.seq for f in live})
-            keys = self._cached_key_frame(st, dels, pk)
-            del_key_bytes = sum(f.rows for f in dels) * 64 * max(1, len(pk))
-            keys = (F.broadcast(keys) if 0 < del_key_bytes <= max(bcast, 0)
-                    else keys.hint("SHUFFLE_HASH"))
-            return merged_live.join(keys, on=pk, how="left_anti")
-        base_rows = sum(f.rows for f in dirty_base)
-        delta_rows = sum(f.rows for f in dirty_delta)
-        # broadcastability estimate for the delta-key set: a broadcast
-        # HashedRelation costs far more than the raw key width (~64 B
-        # per key of object + hash-table overhead), and building /
-        # shipping an over-threshold relation regresses badly — size
-        # with that realistic constant, not the 8-byte column width
-        key_bytes = delta_rows * (64 * max(1, len(pk)))
-        try:
-            bcast = int(self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-        except Exception:
-            bcast = 10 << 20
-        # do ALL deltas outrank ALL base rows (manifest seqs)? True in
-        # the steady state (bases come from inserts/compactions, deltas
-        # from later mutations); false only after a reinsert-after-
-        # delete landed a base file NEWER than some delta.
-        deltas_newer = (
-            bool(dirty_base) and bool(dirty_delta)
-            and min(f.seq for f in dirty_delta) > max(f.seq for f in dirty_base)
-        )
-        if dirty_base and dirty_delta and deltas_newer:
-            # cost-based merge plan (manifest row counts decide, like
-            # Kudu's delta-relevancy checks). Every delta outranks
-            # every base row, so a contested key's winner is simply
-            # its newest DELTA: base rows of contested keys never win
-            # and need not be read at all. Base rows whose PK no delta
-            # touches stream from parquet behind a BROADCAST anti join
-            # against the delta keys — predicates and projection push
-            # below the join into the scan (which a global window can
-            # never allow) and the base never shuffles. Keys absent
-            # from every delta are unique in the base by the insert
-            # dup-check, so streaming them is exact.
-            #
-            # Key sets past one broadcast's budget are split by
-            # PARTITION into groups that each fit (base and delta
-            # files of a hash/range partition hold the same key space
-            # — Kudu's rowset locality): G groups = G broadcast anti
-            # joins over disjoint slices of the base, still zero base
-            # shuffle. Past DELTA_MAX_GROUPS the plan falls back to
-            # the shuffled anti join.
-            groups = self._group_dirty_by_broadcast(
-                dirty_base, dirty_delta, 64 * max(1, len(pk)), max(bcast, 0)
-            )
-            if groups is not None:
-                parts = []
-                for base_g, delta_g in groups:
-                    df_base_g = self._read_files(st, base_g,
-                                                 per_file=per_file)
-                    keys_g = F.broadcast(self._cached_key_frame(st, delta_g, pk))
-                    if (df_base_g is not None and not include_deleted
-                            and all(f.dmark == "D" for f in delta_g)):
-                        # every delta in the group is a pure-delete
-                        # commit: the group reduces to base rows whose
-                        # key misses the tombstone set — ONE broadcast
-                        # anti join against the cached key frame, no
-                        # union, and the delete files never enter the
-                        # plan at all (≈ Kudu applying a delete bitmap
-                        # during the rowset scan, tablet/delta_applier.h)
-                        parts.append(df_base_g.join(keys_g, on=pk,
-                                                    how="left_anti"))
-                        continue
-                    merged_g = merge_delta_files(delta_g)
-                    if df_base_g is None:
-                        parts.append(merged_g)
-                        continue
-                    # no distinct: anti joins tolerate duplicate build
-                    # keys, and dropping it saves a whole shuffle stage
-                    parts.append(
-                        df_base_g.join(keys_g, on=pk, how="left_anti")
-                        .unionByName(merged_g)
-                    )
-                df_dirty = parts[0]
-                for p in parts[1:]:
-                    df_dirty = df_dirty.unionByName(p)
-            else:
-                # past the broadcast budget: plain anti join — the
-                # planner shuffles base + keys, predicates still push
-                # below the join. Write-proportional maintenance is
-                # the real remedy in this regime; this plan only
-                # serves tables that disabled it.
-                df_base = self._read_files(st, dirty_base, per_file=per_file)
-                df_delta = self._read_files(st, dirty_delta, per_file=per_file)
-                # SHUFFLE_HASH on the key (build) side: hashing the
-                # O(delta) keys beats sort-merge, which would also
-                # SORT the full base stream
-                keys = df_delta.select(*pk).hint("SHUFFLE_HASH")
-                df_dirty = (
-                    df_base.join(keys, on=pk, how="left_anti")
-                    .unionByName(merge_delta_files(dirty_delta, df_delta))
-                )
-        elif (dirty_base and dirty_delta
-              and delta_rows * 4 <= base_rows and 0 < key_bytes <= max(bcast, 0)):
-            # reinsert-after-delete present: a base row may outrank
-            # a delta, so contested keys window over base + delta
-            # (second base scan via the reused broadcast; this arm
-            # keeps the broadcastability requirement).
-            df_base = self._read_files(st, dirty_base, per_file=per_file)
-            df_delta = self._read_files(st, dirty_delta, per_file=per_file)
-            # cached+persisted: this arm probes the key set twice
-            # (anti + semi), so even a cold query reads it once
-            keys = self._cached_key_frame(st, dirty_delta, pk)
-            uncontested = df_base.join(keys, on=pk, how="left_anti")
-            contested = df_base.join(keys, on=pk, how="left_semi").unionByName(df_delta)
-            df_dirty = uncontested.unionByName(merge(contested))
-        else:
-            # delta-heavy partitions (or delta-only): one global window
-            df_dirty = self._read_files(st, dirty, per_file=per_file)
-            if df_dirty is not None:
-                df_dirty = (merge_delta_files(dirty, df_dirty)
-                            if not dirty_base else merge(df_dirty))
-        if df_dirty is not None and not include_deleted:
-            # Keep a SMALL merged-dirty result resident (persist keyed
-            # by the immutable dirty file set + schema identity): the
-            # repeat-scan plan then has no anti join and no broadcast
-            # stage at all — an in-memory columnar scan unioned with
-            # the clean parquet stream. This is the bounded analogue
-            # of a tserver keeping its MRS/delta stores resident
-            # (tablet/memrowset.h); measured round 12, the per-query
-            # AQE broadcast-stage barrier (~50-70 ms) was the entire
-            # deleted-state bench gap. Budgeted by the dirty files'
-            # actual parquet bytes; past the budget the pushdown-
-            # friendly join plans above serve the query directly, so
-            # a 100 TB dirty backlog never tries to materialize here.
-            dirty_bytes = sum(f.bytes for f in dirty)
-            cache_on = str(st.props.get("dirty_cache", "true")).lower() not in (
-                "false", "0", "no")
-            if per_file is not None and per_file_tag is None:
-                cache_on = False  # unidentified derivation: never cache
-            if cache_on and 0 < dirty_bytes <= self.DIRTY_CACHE_MAX_BYTES:
-                sch_ident = tuple((c.name, c.type) for c in st.schema.columns)
-                ck = ("dirty", tuple(sorted(f.path for f in dirty)), sch_ident,
-                      per_file_tag)
-                # persist only on the SECOND encounter of this exact
-                # snapshot: a one-shot scan keeps the streaming plan
-                # (pushdown intact, no materialize-all-columns cost);
-                # the first REPEAT proves the snapshot is hot
-                root = _canonical_root(self.root)
-                with _KEY_FRAMES_GUARD:
-                    seen = _DIRTY_SEEN.setdefault(root, {})
-                    hot = ck in seen
-                    if not hot:
-                        seen[ck] = None
-                        while len(seen) > DIRTY_SEEN_MAX:
-                            seen.pop(next(iter(seen)))
-                    # bound the ROOT count here too: a root scanned
-                    # once and never again gets a marker dict but no
-                    # _KEY_FRAMES entry, so the frame LRU would never
-                    # prune it
-                    while len(_DIRTY_SEEN) > KEY_FRAME_ROOTS_MAX:
-                        stale = next(iter(_DIRTY_SEEN))
-                        if stale == root:
-                            break
-                        _DIRTY_SEEN.pop(stale)
-                if hot:
-                    built = df_dirty
-                    df_dirty = self._cached_frame(ck, lambda: built)
-        if df_clean is None and df_dirty is None:
+                # relation and the union around it away — the delete
+                # files are never scanned here; their keys still ride
+                # the base anti join)
+                return read(dels).where(F.lit(False))
+            return merge_deltas(live).join(key_frame(dels), on=pk, how="left_anti")
+
+        base = [f for f in dirty if f.kind == "base"]
+        deltas = [f for f in dirty if f.kind == "delta"]
+
+        def merge_dirty():
+            oldest = min(f.seq for f in deltas)
+            newer = [f for f in base if f.seq >= oldest]
+            keys = key_frame(deltas) if base else None
+            df = (merge(read(newer).join(keys, on=pk, how="left_semi")
+                        .unionByName(read(deltas)))
+                  if newer else merge_delta_files(deltas))
+            if not base:
+                return df
+            # no distinct on K: anti joins tolerate duplicate build keys,
+            # and dropping it saves a whole shuffle stage
+            return read(base).join(keys, on=pk, how="left_anti").unionByName(df)
+
+        # Keep a SMALL merged-dirty result resident (persist keyed by the
+        # immutable dirty file set + schema identity): the repeat-scan
+        # plan then has no anti join and no broadcast stage at all — an
+        # in-memory columnar scan unioned with the clean parquet
+        # stream. This is the bounded analogue of a tserver keeping its
+        # MRS/delta stores resident (tablet/memrowset.h); measured
+        # round 12, the per-query AQE broadcast-stage barrier
+        # (~50-70 ms) was the entire deleted-state bench gap. Budgeted
+        # by the dirty files' actual parquet bytes; past the budget the
+        # streaming plan above serves the query directly, so a 100 TB
+        # dirty backlog never tries to materialize here. An
+        # unidentified per_file derivation is never cached.
+        df_dirty = None
+        if (deltas and not include_deleted
+                and (per_file is None or per_file_tag is not None)
+                and sum(f.bytes for f in dirty) <= self.DIRTY_CACHE_MAX_BYTES):
+            sch_ident = tuple((c.name, c.type) for c in st.schema.columns)
+            ck = ("dirty", tuple(sorted(f.path for f in dirty)), sch_ident,
+                  per_file_tag)
+            df_dirty = self._cached_frame(ck, merge_dirty)
+        elif deltas:
+            df_dirty = merge_dirty()
+        parts = [d for d in (df_clean, df_dirty) if d is not None]
+        if not parts:
             # empty table: zero-row frame with the right schema
             ddl = st.schema.frame_ddl() + f", {SEQ_COL} bigint, {DEL_COL} boolean"
-            df = self.spark.createDataFrame([], ddl)
-        elif df_clean is None:
-            df = df_dirty
-        elif df_dirty is None:
-            df = df_clean
-        else:
-            df = df_clean.unionByName(df_dirty)
+            parts = [self.spark.createDataFrame([], ddl)]
+        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         if filters:
             df = df.where(self._filters_to_column(st, filters))
-        if include_deleted and not keep_meta:
+        if include_deleted:
             df = df.withColumn("_is_deleted", F.col(DEL_COL))
-        if not keep_meta:
-            df = df.drop(SEQ_COL, DEL_COL)
-        return df
+        return df.drop(SEQ_COL, DEL_COL)
 
-    # grouped-broadcast merge knobs: a group's delta keys must fit one
-    # broadcast (>= this floor even under a tiny configured threshold);
-    # past DELTA_MAX_GROUPS the plan falls back to the shuffled anti
-    # join. The cap is MEASURED, not a memory guess: a round-6 A/B at
-    # 24M delta keys (SCALE.md ×400) put ~24 broadcast groups at
-    # 14.5/10.3 s (q1/q6) vs the shuffled anti's 10.8/2.2 s — the
-    # grouped plan degrades superlinearly past ~16 groups (resident
-    # HashedRelations + sequential builds), so that much dirty data
-    # belongs to maintenance (now write-proportional), not plan tricks.
-    DELTA_BROADCAST_FLOOR_BYTES = 4 << 20
-    DELTA_MAX_GROUPS = 16
     # merged-dirty results whose source files total at most this many
-    # parquet bytes stay resident after first use (see _snapshot_df);
-    # the in-memory columnar footprint is bounded at roughly 2-4x this
+    # parquet bytes stay resident after their second use (see
+    # _snapshot_df); the in-memory columnar footprint is bounded at
+    # roughly 2-4x this
     DIRTY_CACHE_MAX_BYTES = 256 << 20
-
-    def _group_dirty_by_broadcast(
-        self,
-        dirty_base: list["FileEntry"],
-        dirty_delta: list["FileEntry"],
-        per_key_bytes: int,
-        bcast_bytes: int,
-    ):
-        """Bin-pack dirty PARTITIONS so each group's delta-key set
-        fits one broadcast build (sized with the realistic ~64 B/key
-        HashedRelation constant). A partition is atomic — its base and
-        delta files share a key space, so grouping by partition keeps
-        each broadcast anti join exact over its slice of the base.
-        Returns a list of (base_files, delta_files) groups, or None
-        when broadcasting is disabled outright (threshold <= 0), the
-        plan would need more than DELTA_MAX_GROUPS broadcasts (delta
-        is a huge fraction of the table — compaction territory), or a
-        single partition's deltas alone overflow double the budget
-        (unbroadcastable either way)."""
-        if bcast_bytes <= 0:
-            return None
-        target = max(bcast_bytes, self.DELTA_BROADCAST_FLOOR_BYTES)
-        pkey = partition_key
-        by_part: dict = {}
-        for f in dirty_delta:
-            by_part.setdefault(pkey(f), ([], []))[1].append(f)
-        for f in dirty_base:
-            by_part.setdefault(pkey(f), ([], []))[0].append(f)
-        sizes = {
-            p: sum(f.rows for f in d) * per_key_bytes for p, (_, d) in by_part.items()
-        }
-        if sizes and max(sizes.values()) > 2 * target:
-            return None
-        # first-fit decreasing
-        bins: list[list] = []  # [remaining, base_files, delta_files]
-        for p in sorted(by_part, key=lambda p: -sizes[p]):
-            b, d = by_part[p]
-            for bin_ in bins:
-                if bin_[0] >= sizes[p]:
-                    bin_[0] -= sizes[p]
-                    bin_[1] += b
-                    bin_[2] += d
-                    break
-            else:
-                bins.append([target - sizes[p], list(b), list(d)])
-        if len(bins) > self.DELTA_MAX_GROUPS:
-            return None
-        return [(b, d) for _, b, d in bins]
-
-    def _split_disjoint_bases(self, st: TableState, clean: list[FileEntry],
-                              dirty: list[FileEntry]):
-        """PK-range delta relevancy (≈ Kudu's delta relevancy checks,
-        tablet/delta_relevancy.h): a base file inside a delta-bearing
-        partition whose leading-PK interval overlaps NO delta file's
-        interval in that partition cannot hold any key a delta touches —
-        its rows stream clean, skipping the merge window/anti-join
-        entirely. Sound because disjoint leading-column intervals imply
-        no shared composite key, and untouched keys are base-unique by
-        the insert dup-check. Pure manifest arithmetic, no Spark job.
-        Pays off when mutations are key-range-localized (recent ranges
-        of a time-ordered PK, one tenant of a compound key); uniform
-        random mutations keep every file overlapping, and the cost-based
-        merge plan below carries those."""
-        lead = st.schema.pk[0]
-        is_dec = st.schema.col(lead).type.strip().lower().startswith("decimal")
-
-        def norm(v):
-            if v is None:
-                return None
-            if is_dec:
-                import decimal
-
-                return decimal.Decimal(str(v))
-            return v
-
-        def ival(f: FileEntry):
-            if not f.min_pk or not f.max_pk:
-                return None
-            lo, hi = norm(f.min_pk[0]), norm(f.max_pk[0])
-            return None if lo is None or hi is None else (lo, hi)
-
-        pkey = partition_key
-
-        deltas_by_part: dict = {}
-        for f in dirty:
-            if f.kind == "delta":
-                deltas_by_part.setdefault(pkey(f), []).append(ival(f))
-        still = []
-        for f in dirty:
-            if f.kind == "base":
-                iv = ival(f)
-                divs = deltas_by_part.get(pkey(f), [])
-                try:
-                    if iv is not None and all(
-                        d is not None and (iv[1] < d[0] or iv[0] > d[1])
-                        for d in divs
-                    ):
-                        clean.append(f)
-                        continue
-                except TypeError:
-                    pass  # incomparable bound encodings: assume overlap
-            still.append(f)
-        return clean, still
 
     def _filters_to_column(self, st: TableState, filters: list[Predicate]):
         expr = F.lit(True)
@@ -1195,17 +943,7 @@ class Table:
             raise KuduSparkError(
                 f"start_after_pk must hold 1..{len(pk)} leading PK values"
             )
-
-        def lit(i):
-            return F.lit(vals[i]).cast(st.schema.col(pk[i]).type)
-
-        expr = F.lit(False)
-        for i in range(len(vals)):
-            t = F.col(pk[i]) > lit(i)
-            for j in range(i):
-                t = (F.col(pk[j]) == lit(j)) & t
-            expr = expr | t
-        return expr
+        return self._lex_bound_expr(st, pk, vals, "gt")
 
     def scan(
         self,
@@ -1272,7 +1010,6 @@ class Table:
         merge windows, anti joins — projects stored physical columns
         (e.g. __q8_*) without special cases. Files lacking the column
         read as NULL via the explicit read schema."""
-        import dataclasses
 
         def aug(sch):
             cols = list(sch.columns) + [
@@ -1540,9 +1277,7 @@ class Table:
             rng = (f.cellr or {}).get(column)
             return rng is None or any(rng[0] <= c <= rng[1] for c in cset)
 
-        sub = TableState(**{**st.__dict__})
-        sub.files = [f for f in st.files if _keep(f)]
-        return sub
+        return dataclasses.replace(st, files=[f for f in st.files if _keep(f)])
 
     def _snapshot_cells_q8(self, st: TableState, art: dict, column: str,
                            cells: list) -> DataFrame:
@@ -2043,17 +1778,12 @@ class Table:
         touched = self._touched_partitions(from_version, st2.version)
 
         def restrict(st):
-            if st is None:
-                ddl = st2.schema.frame_ddl() + f", {SEQ_COL} bigint, {DEL_COL} boolean"
-                return self.spark.createDataFrame([], ddl).drop(SEQ_COL, DEL_COL)
-            sub = TableState(**{**st.__dict__})
+            if st is None:  # no table at from_version: empty, st2's schema
+                return self._snapshot_df(dataclasses.replace(st2, files=[]))
             if touched is not None:
-                sub.files = [
-                    f
-                    for f in st.files
-                    if (tuple(f.partition.get("hash", [])), f.partition.get("range")) in touched
-                ]
-            return self._snapshot_df(sub)
+                st = dataclasses.replace(
+                    st, files=[f for f in st.files if partition_key(f) in touched])
+            return self._snapshot_df(st)
 
         a = restrict(st1).select(*cols)
         b = restrict(st2).select(*cols)
@@ -2135,8 +1865,7 @@ class Table:
         files = self._prune(st, filters)
         groups: dict = {}
         for f in files:
-            key = (tuple(f.partition.get("hash", [])), f.partition.get("range"))
-            groups.setdefault(key, []).append(f)
+            groups.setdefault(partition_key(f), []).append(f)
         out = []
         for k, g in sorted(groups.items()):
             # splitSizeBytes sub-splitting (KuduRDD.scala:85-87,
@@ -2182,8 +1911,7 @@ class Table:
         (tserver.proto:344-346)."""
         st = self.state(token["version"])
         wanted = set(token["files"])
-        sub = TableState(**{**st.__dict__})
-        sub.files = [f for f in st.files if f.path in wanted]
+        sub = dataclasses.replace(st, files=[f for f in st.files if f.path in wanted])
         filters = [tuple(p) for p in token.get("filters", [])] or None
         df = self._snapshot_df(sub, filters)
         resume = token.get("last_primary_key")
@@ -3081,7 +2809,7 @@ class Table:
                 payload["partition_spec"] = partition_spec.to_json()
             try:
                 out = append_commit(self.root, version, payload)
-                # the file set changed: cached key frames for the old
+                # the file set changed: cached frames for the old
                 # snapshot are dead weight (still CORRECT — files are
                 # immutable — but no future HEAD scan will hit them)
                 _evict_key_frames(self.root)
@@ -3705,11 +3433,9 @@ class Table:
         ``partition`` values to ``compact(partitions=...)``."""
         st = self.state()
 
-        pkey = partition_key
-
         groups: dict = {}
         for f in st.files:
-            groups.setdefault(pkey(f), []).append(f)
+            groups.setdefault(partition_key(f), []).append(f)
         cands = []
         for key, fs in groups.items():
             delta_bytes = sum(f.bytes for f in fs if f.kind == "delta")
@@ -3840,7 +3566,7 @@ class Table:
             smalls: dict = {}
             small_thresh = int(props.get("auto_compact_small_file_bytes", 32 << 20))
             for f in st.files:
-                key = (tuple(f.partition.get("hash", [])), f.partition.get("range"))
+                key = partition_key(f)
                 tot[key] = tot.get(key, 0) + f.bytes
                 if f.kind == "delta":
                     dl[key] = dl.get(key, 0) + f.bytes
@@ -3913,20 +3639,17 @@ class Table:
         deleted."""
         st = self.state()
 
-        pkey = partition_key
-
         if full:
-            chosen = {pkey(f) for f in st.files}
+            chosen = {partition_key(f) for f in st.files}
         elif partitions is None:
             plan = self.compaction_plan(small_file_bytes, min_small_files, io_budget_bytes)
             chosen = {c["partition"] for c in plan}
         else:
             chosen = {(tuple(p[0]), p[1]) for p in partitions}
-        rewrite: list[FileEntry] = [f for f in st.files if pkey(f) in chosen]
+        rewrite: list[FileEntry] = [f for f in st.files if partition_key(f) in chosen]
         if not rewrite:
             return None
-        sub = TableState(**{**st.__dict__})
-        sub.files = rewrite
+        sub = dataclasses.replace(st, files=rewrite)
         merged = self._snapshot_df(sub)  # dedup + tombstones dropped
         entries = self._write_files(
             merged, st, seq_for(st.version + 1), "base",
@@ -4163,8 +3886,8 @@ class Table:
             # until a vacuum actually pruned history" contract
             self._publish_ahm(horizon)
         if removed:
-            # persisted key frames may reference just-unlinked delta
-            # files; a memory-pressure recompute would then fail
+            # persisted merged-dirty frames may reference
+            # just-unlinked delta files; a memory-pressure recompute would then fail
             _evict_key_frames(self.root)
         return removed
 
@@ -4174,16 +3897,12 @@ class Table:
         all); only delta-bearing partitions pay a merge + count."""
         st = self.state(version)
 
-        pkey = partition_key
-
-        delta_parts = {pkey(f) for f in st.files if f.kind == "delta"}
-        clean_rows = sum(f.rows for f in st.files if pkey(f) not in delta_parts)
-        dirty = [f for f in st.files if pkey(f) in delta_parts]
+        delta_parts = {partition_key(f) for f in st.files if f.kind == "delta"}
+        clean_rows = sum(f.rows for f in st.files if partition_key(f) not in delta_parts)
+        dirty = [f for f in st.files if partition_key(f) in delta_parts]
         if not dirty:
             return clean_rows
-        sub = TableState(**{**st.__dict__})
-        sub.files = dirty
-        return clean_rows + self._snapshot_df(sub).count()
+        return clean_rows + self._snapshot_df(dataclasses.replace(st, files=dirty)).count()
 
     # -- schema drift on write (KuduWriteOptions.scala:37-46) --------------------
 

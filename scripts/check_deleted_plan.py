@@ -47,10 +47,6 @@ ndel = t.scan().where(F.col("l_rowid") % 50 == 3).count()
 t.delete(t.scan(columns=["l_rowid"]).where(F.col("l_rowid") % 50 == 3))
 t = eng.table("lineitem")
 
-# correctness: count and a value spot-check
-got = t.scan().count()
-assert got == expected_before - ndel, (got, expected_before, ndel)
-assert t.scan().where(F.col("l_rowid") % 50 == 3).count() == 0
 
 def q6(df):
     return df.where(
@@ -60,9 +56,28 @@ def q6(df):
         & (F.col("l_quantity") < 24)
     ).agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("rev"))
 
-# default mode: the merged dirty state is under the resident budget,
+
+# the FIRST scan of a snapshot streams: the anti-join plan with
+# predicates pushed into the parquet scans, which every snapshot past
+# the resident budget keeps
+stream_plan = q6(t.scan())._jdf.queryExecution().executedPlan().toString()
+stream_windows = stream_plan.count("WindowGroupLimit") + stream_plan.count("Window ")
+print("windows in deleted-state q6 plan (streaming):", stream_windows)
+pushed = "PushedFilters: [IsNotNull(l_shipdate)" in stream_plan
+print("pushed filters present (streaming):", pushed)
+if "row_number" in stream_plan or not pushed:
+    print("!! streaming deleted plan regressed")
+    print(stream_plan[:4000])
+    sys.exit(1)
+
+# correctness: count and a value spot-check
+got = t.scan().count()
+assert got == expected_before - ndel, (got, expected_before, ndel)
+assert t.scan().where(F.col("l_rowid") % 50 == 3).count() == 0
+
+# repeat scans: the merged dirty state is under the resident budget,
 # so the plan serves it from an InMemoryRelation (no window, no
-# per-query broadcast stage — round 12)
+# per-query broadcast stage)
 plan = q6(t.scan())._jdf.queryExecution().executedPlan().toString()
 n_windows = plan.count("WindowGroupLimit") + plan.count("Window ")
 print("windows in deleted-state q6 plan (resident):", n_windows)
@@ -71,22 +86,6 @@ if "row_number" in plan:
     print("!! row_number window still present")
     print(plan[:4000])
     sys.exit(1)
-
-# at-scale mode (dirty_cache=false ~ past the resident budget): the
-# anti-join plan with predicates pushed into the parquet scans
-eng.alter_table("lineitem").set_property("dirty_cache", "false").apply()
-t = eng.table("lineitem")
-plan2 = q6(t.scan())._jdf.queryExecution().executedPlan().toString()
-n_windows2 = plan2.count("WindowGroupLimit") + plan2.count("Window ")
-print("windows in deleted-state q6 plan (at-scale):", n_windows2)
-pushed = "PushedFilters: [IsNotNull(l_shipdate)" in plan2
-print("pushed filters present (at-scale):", pushed)
-if "row_number" in plan2 or not pushed:
-    print("!! at-scale deleted plan regressed")
-    print(plan2[:4000])
-    sys.exit(1)
-eng.alter_table("lineitem").set_property("dirty_cache", "true").apply()
-t = eng.table("lineitem")
 
 # engine q6 value must match a duckdb-free oracle: parquet source with
 # the same mutations applied via plain DataFrame ops

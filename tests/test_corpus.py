@@ -529,3 +529,46 @@ def test_simhash_pairs_match_reference_banding(spark):
     got = {(r.doc_a, r.doc_b): r.hamming
            for r in simhash_pairs(docs, max_hamming=max_h).collect()}
     assert got == expected
+
+
+def test_duplicate_components_checkpoint_dir_only_for_local_masters(spark, monkeypatch):
+    """duplicate_components provisions a driver-local reliable
+    checkpoint dir only under a ``local[...]`` master. On any other
+    master a driver-local path is not shared with the executors, so
+    with no checkpoint dir configured the edge set falls back to
+    ``localCheckpoint(eager=True)``."""
+    from kudu_spark.operators import dedup as DD
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    saved = jsc.getCheckpointDir()
+    set_ckpt_dir = getattr(jsc, "checkpointDir_$eq")
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "doc_a bigint, doc_b bigint")
+    frame = type(pairs)
+    calls = []
+    orig_local, orig_reliable = frame.localCheckpoint, frame.checkpoint
+
+    def spy(kind, orig):
+        def run(self, eager=True):
+            calls.append(kind)
+            return orig(self, eager)
+        return run
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy("local", orig_local))
+    monkeypatch.setattr(frame, "checkpoint", spy("reliable", orig_reliable))
+    want = {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
+    try:
+        set_ckpt_dir(sc._jvm.scala.Option.empty())  # no checkpoint dir configured
+        monkeypatch.setattr(sc, "master", "spark://cluster:7077")
+        got = {r.doc_id: r.component_id for r in DD.duplicate_components(pairs).collect()}
+        assert got == want
+        assert calls == ["local"]
+        assert jsc.getCheckpointDir().isEmpty(), "no driver-local dir on a cluster master"
+
+        monkeypatch.setattr(sc, "master", "local[2]")
+        got = {r.doc_id: r.component_id for r in DD.duplicate_components(pairs).collect()}
+        assert got == want
+        assert calls == ["local", "reliable"]
+        assert not jsc.getCheckpointDir().isEmpty()
+    finally:
+        set_ckpt_dir(saved)

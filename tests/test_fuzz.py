@@ -109,9 +109,9 @@ def test_fuzz_mutations_match_model(spark, tmp_path, seed, presence, memroot):
         if step % 10 == 9:
             got = {r.key: (r.int_val, r.string_val) for r in t.scan().collect()}
             assert got == model, f"step {step} op {op}: {got} != {model}"
-            # second scan of the SAME snapshot: the repeat may serve
-            # from the resident dirty/key-frame caches (r12) — a stale
-            # or mis-keyed cache would diverge from the model here
+            # second scan of the SAME snapshot: the repeat may serve the
+            # resident merged-dirty frame (r12) — a stale or mis-keyed
+            # cache would diverge from the model here
             got2 = {r.key: (r.int_val, r.string_val) for r in t.scan().collect()}
             assert got2 == model, f"step {step} resident rescan: {got2} != {model}"
             if presence:

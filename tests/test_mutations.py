@@ -360,11 +360,12 @@ def test_insert_fallback_validates_written_rows(engine, spark, monkeypatch, tmp_
 
 
 def test_delete_key_frame_cache_reuse_and_eviction(engine, spark):
-    """Merge-on-read scans persist the delta/delete key relation once
-    per immutable file set and reuse it across scans and handles — a
+    """The merged-dirty frame of a snapshot is persisted on its SECOND
+    scan (the first leaves only a seen-once placeholder in the same
+    per-root LRU) and then reused across scans and handles — a
     stateless library's version of the resident delta state a Kudu
-    tserver amortizes (VERDICT r11 #1). A commit evicts the table's
-    cached frames; results stay identical either way."""
+    tserver amortizes. A commit evicts and unpersists the table's
+    entries; results stay identical either way."""
     import kudu_spark.table as tbl
 
     t = engine.create_table(
@@ -377,29 +378,30 @@ def test_delete_key_frame_cache_reuse_and_eviction(engine, spark):
     t = engine.table("kfc")
     t.upsert(rows(spark, [(k, k * 10 + 1) for k in range(0, 200, 10)]))
     t.delete(spark.createDataFrame([(k,) for k in range(0, 200, 50)], "key int"))
+    want = {k: (k * 10 + 1 if k % 10 == 0 else k * 10)
+            for k in range(200) if k % 50 != 0}
 
     root = tbl._canonical_root(t.root)
     tbl._KEY_FRAMES.pop(root, None)
     got1 = {r.key: r.int_val for r in t.scan().collect()}
-    ent = dict(tbl._KEY_FRAMES.get(root) or {})
-    assert ent, "deleted-state scan should populate the key-frame cache"
-    assert len(ent) <= tbl.KEY_FRAME_CACHE_MAX
-    # a FRESH handle (Engine.table returns new objects) hits the same
-    # process-wide entries: same DataFrame objects, no rebuild
-    t2 = engine.table("kfc")
-    got2 = {r.key: r.int_val for r in t2.scan().collect()}
-    assert got2 == got1
-    for k, v in ent.items():
-        assert tbl._KEY_FRAMES[root].get(k) is v
-    want = {k: (k * 10 + 1 if k % 10 == 0 else k * 10)
-            for k in range(200) if k % 50 != 0}
-    assert got1 == want
-    # any commit invalidates: the old snapshot's frames are gone
-    t2.insert(rows(spark, [(1000, 1)]))
-    assert all(k not in (tbl._KEY_FRAMES.get(root) or {}) for k in ent)
+    # seen once: a placeholder, nothing persisted
+    assert list(tbl._KEY_FRAMES[root].values()) == [None]
+    # a FRESH handle (Engine.table returns new objects) shares the
+    # process-wide entry: the second encounter persists the frame
+    got2 = {r.key: r.int_val for r in engine.table("kfc").scan().collect()}
+    ((ck, frame),) = tbl._KEY_FRAMES[root].items()
+    assert frame is not None and frame.is_cached
+    # later scans reuse the same DataFrame object, no rebuild
     got3 = {r.key: r.int_val for r in engine.table("kfc").scan().collect()}
+    assert tbl._KEY_FRAMES[root][ck] is frame
+    assert got1 == got2 == got3 == want
+    # any commit invalidates: the old snapshot's frame is released
+    t.insert(rows(spark, [(1000, 1)]))
+    assert ck not in (tbl._KEY_FRAMES.get(root) or {})
+    assert not frame.is_cached
+    got4 = {r.key: r.int_val for r in engine.table("kfc").scan().collect()}
     want[1000] = 1
-    assert got3 == want
+    assert got4 == want
 
 
 def test_key_frame_root_lru_eviction(engine, spark, monkeypatch):

@@ -458,67 +458,8 @@ def test_single_delta_commit_scan_has_no_window(table, spark):
     assert len(got) == 1000 and got[5] == 51 and got[500] == 5000
 
 
-def test_pk_disjoint_base_files_stream_clean(engine, spark):
-    """Delta relevancy by PK file bounds: a base file in a dirty
-    partition whose leading-PK interval overlaps no delta interval
-    streams clean (skips the merge) — Kudu's delta_relevancy.h
-    property, key for time-ordered PKs where mutations hit recent
-    ranges only."""
-    t = engine.create_table("dj", SCHEMA, pk=["k"])
-    ddl = "k bigint, v int, s string"
-    t.insert(spark.createDataFrame([(k, k * 10, f"s{k}") for k in range(100)], ddl))
-    t.insert(spark.createDataFrame(
-        [(k, k * 10, f"s{k}") for k in range(1000, 1100)], ddl))
-    t.upsert(spark.createDataFrame(
-        [(k, k * 10 + 1, "u") for k in range(1000, 1020)], ddl))
-    st = t.state()
-
-    def pkey(f):
-        return (tuple(f.partition.get("hash", [])), f.partition.get("range"))
-
-    delta_parts = {pkey(f) for f in st.files if f.kind == "delta"}
-    clean0 = [f for f in st.files if pkey(f) not in delta_parts]
-    dirty0 = [f for f in st.files if pkey(f) in delta_parts]
-    assert not clean0  # one partition: everything dirty before the split
-    clean, dirty = t._split_disjoint_bases(st, list(clean0), dirty0)
-    assert any(f.max_pk and f.max_pk[0] == 99 for f in clean), "early file not rescued"
-    assert all(f.kind == "delta" or (f.min_pk and f.min_pk[0] >= 1000) for f in dirty)
-    got = {r.k: r.v for r in t.scan().collect()}
-    assert len(got) == 200 and got[5] == 50 and got[1005] == 10051 and got[1050] == 10500
-
-
-def test_grouped_broadcast_anti_join_over_threshold(engine, spark):
-    """Delta key sets too large for ONE broadcast must NOT shuffle the
-    whole base for a sort-merge anti join: dirty partitions are
-    bin-packed into groups whose key sets each fit a broadcast, and
-    each group's base slice anti-joins its own broadcast keys — zero
-    base shuffle, G small broadcasts."""
-    t = engine.create_table("bl", SCHEMA, pk=["k"],
-                           hash_partitions=[{"columns": ["k"], "buckets": 8}])
-    ddl = "k bigint, v int, s string"
-    t.insert(spark.createDataFrame([(k, k * 10, f"s{k}") for k in range(1000)], ddl))
-    t.upsert(spark.createDataFrame(
-        [(k, k * 10 + 1, "u") for k in range(100)], ddl))
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-    orig_floor = type(t).DELTA_BROADCAST_FLOOR_BYTES
-    type(t).DELTA_BROADCAST_FLOOR_BYTES = 2048  # force multi-group packing
-    try:
-        df = t.scan()
-        plan = plan_of(df)
-        assert "SortMergeJoin" not in plan, "base must not shuffle for the anti join"
-        assert plan.count("BroadcastHashJoin") >= 2, (
-            "expected multiple grouped broadcast anti joins:\n" + plan
-        )
-        got = {r.k: r.v for r in df.collect()}
-    finally:
-        type(t).DELTA_BROADCAST_FLOOR_BYTES = orig_floor
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert len(got) == 1000 and got[5] == 51 and got[999] == 9990
-
-
 def test_grouped_broadcast_falls_back_when_everything_dirty(engine, spark):
-    """Past DELTA_MAX_GROUPS broadcast groups the plan degrades to the
+    """A delta key set past autoBroadcastJoinThreshold takes the
     shuffled anti join (not the global window): predicates still push
     below the join and results stay exact across upserts and deletes,
     time travel and scan tokens."""
@@ -534,10 +475,6 @@ def test_grouped_broadcast_falls_back_when_everything_dirty(engine, spark):
     v_up = t.version
     t.delete(spark.createDataFrame([(k,) for k in range(40)], "k bigint"))
     assert any(f.kind == "delta" and f.dmark == "D" for f in t.state().files)
-    orig_floor = type(t).DELTA_BROADCAST_FLOOR_BYTES
-    orig_groups = type(t).DELTA_MAX_GROUPS
-    type(t).DELTA_BROADCAST_FLOOR_BYTES = 64
-    type(t).DELTA_MAX_GROUPS = 1
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64")
     try:
@@ -548,8 +485,6 @@ def test_grouped_broadcast_falls_back_when_everything_dirty(engine, spark):
         up = {r.k: r.v for r in t.scan(version=v_up).collect()}
         tok_rows = sum(t.token_to_df(tok).count() for tok in t.scan_tokens())
     finally:
-        type(t).DELTA_BROADCAST_FLOOR_BYTES = orig_floor
-        type(t).DELTA_MAX_GROUPS = orig_groups
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "LeftAnti" in plan and "BroadcastHashJoin" not in plan, (
         "expected the shuffled anti join:\n" + plan)
@@ -558,52 +493,6 @@ def test_grouped_broadcast_falls_back_when_everything_dirty(engine, spark):
     assert pre == {k: k * 10 for k in range(400)}
     assert up == {k: 7 if k % 2 == 0 else k * 10 for k in range(400)}
     assert tok_rows == 360
-
-
-def test_group_dirty_bin_packing_unit(engine, spark):
-    """Pure-manifest unit checks of the broadcast bin packer:
-    partition atomicity, capacity packing, and both bail-out rules."""
-    t = engine.create_table("bp", SCHEMA, pk=["k"])
-
-    class _F:
-        def __init__(self, part, rows, kind):
-            self.partition = part
-            self.rows = rows
-            self.kind = kind
-            self.path = f"{part}/{kind}/{rows}"
-
-    def part(i):
-        return {"hash": [i], "range": None}
-
-    deltas = [_F(part(i), 10, "delta") for i in range(4)]
-    bases = [_F(part(i), 100, "base") for i in range(4)]
-    # per-partition key bytes = 10 rows * 64 = 640; target 1280 -> 2 per bin
-    groups = t._group_dirty_by_broadcast(bases, deltas, 64, 1280)
-    orig_floor = type(t).DELTA_BROADCAST_FLOOR_BYTES
-    type(t).DELTA_BROADCAST_FLOOR_BYTES = 0
-    try:
-        groups = t._group_dirty_by_broadcast(bases, deltas, 64, 1280)
-        assert groups is not None and len(groups) == 2
-        for base_g, delta_g in groups:
-            # a partition's base and delta files travel together
-            dparts = {tuple(f.partition["hash"]) for f in delta_g}
-            bparts = {tuple(f.partition["hash"]) for f in base_g}
-            assert bparts <= dparts
-            assert sum(f.rows for f in delta_g) * 64 <= 1280
-        # single partition overflowing 2x the budget -> unbroadcastable
-        fat = [_F(part(0), 1000, "delta")]
-        assert t._group_dirty_by_broadcast(bases[:1], fat, 64, 1280) is None
-        # more bins than DELTA_MAX_GROUPS -> None
-        orig = type(t).DELTA_MAX_GROUPS
-        type(t).DELTA_MAX_GROUPS = 1
-        try:
-            assert t._group_dirty_by_broadcast(bases, deltas, 64, 640) is None
-        finally:
-            type(t).DELTA_MAX_GROUPS = orig
-        # broadcasting disabled -> None
-        assert t._group_dirty_by_broadcast(bases, deltas, 64, 0) is None
-    finally:
-        type(t).DELTA_BROADCAST_FLOOR_BYTES = orig_floor
 
 
 def test_cluster_by_reorders_files_probes_stay_exact(engine, spark, tmp_path):
@@ -701,15 +590,15 @@ def test_pure_delete_deltas_keep_pushdown(engine, spark):
     a live-delta commit followed by a newer pure-delete commit must
     NOT fall back to the global row_number window — non-key predicates
     keep pushing into both the base and the live-delta parquet scans,
-    and the delete keys ride an anti join. ``dirty_cache = false``
-    pins the AT-SCALE plan (past the resident-dirty budget); the
-    under-budget cached shape is pinned separately."""
+    and the delete keys ride an anti join. The first scan of a
+    snapshot is the streaming plan every snapshot past the
+    resident-dirty budget keeps; the cached repeat-scan shape is
+    pinned separately."""
     t = engine.create_table(
         "pdel", SCHEMA, pk=["k"],
         hash_partitions=[{"columns": ["k"], "buckets": 4}],
     )
-    engine.alter_table("pdel").set_property("auto_compact", "false") \
-        .set_property("dirty_cache", "false").apply()
+    engine.alter_table("pdel").set_property("auto_compact", "false").apply()
     t = engine.table("pdel")  # keep the deltas live
     t.insert(spark.createDataFrame(
         [(k, k * 10, f"s{k}") for k in range(1000)], "k bigint, v int, s string"
@@ -831,9 +720,10 @@ def test_zorder_clustering_tightens_both_dimensions(engine, spark):
 
 def test_dirty_cache_resident_scan(engine, spark):
     """Under the resident-dirty budget (DIRTY_CACHE_MAX_BYTES), the
-    merged dirty state of a snapshot is persisted once and repeat
-    scans read it as an InMemoryRelation — no per-query broadcast
-    stage — with rows identical to the at-scale join plan."""
+    merged dirty state of a snapshot is persisted on its second scan
+    and repeat scans read it as an InMemoryRelation — no per-query
+    broadcast stage — with rows identical to the first scan's
+    streaming join plan."""
     t = engine.create_table(
         "pdelc", SCHEMA, pk=["k"],
         hash_partitions=[{"columns": ["k"], "buckets": 4}],
@@ -853,22 +743,14 @@ def test_dirty_cache_resident_scan(engine, spark):
     plan1 = plan_of(df1)
     # FIRST encounter streams (pushdown intact, nothing materialized):
     # a one-shot scan must never pay the resident materialization
-    assert "GreaterThanOrEqual(v,100)" in plan1, plan1
+    assert "PushedFilters" in plan1 and "GreaterThanOrEqual(v,100)" in plan1, plan1
+    assert "InMemoryRelation" not in plan1 and "InMemoryTableScan" not in plan1
     # the SECOND encounter of the same snapshot goes resident — and a
     # fresh handle (Engine.table returns new objects) shares it
     df2 = engine.table("pdelc").scan(filters=[("v", ">=", 100)])
     plan = plan_of(df2)
     assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan, plan
     assert "row_number" not in plan and "Window" not in plan
+    # the resident rows equal the streaming plan's
     rows2 = sorted((r["k"], r["v"], r["s"]) for r in df2.collect())
     assert rows2 == rows1
-    # reference: the uncached at-scale plan returns identical rows
-    # (the ALTER commit also evicts the cached frames)
-    engine.alter_table("pdelc").set_property("dirty_cache", "false").apply()
-    df3 = engine.table("pdelc").scan(filters=[("v", ">=", 100)])
-    plan3 = plan_of(df3)
-    # the predicate reaches parquet again (the persisted KEY frame may
-    # still appear as an InMemoryRelation — that one is intended)
-    assert "PushedFilters" in plan3 and "GreaterThanOrEqual(v,100)" in plan3
-    rows3 = sorted((r["k"], r["v"], r["s"]) for r in df3.collect())
-    assert rows3 == rows1

@@ -14,14 +14,20 @@ last-write-wins within a batch matches Kudu's apply order exactly
 
 from __future__ import annotations
 
+import dataclasses
 import os
 from enum import Enum
 
 from pyspark.sql import functions as F
 
-from kudu_spark.errors import FlushFailedError, KuduSparkError
+from kudu_spark.errors import (
+    ConcurrentCommitError,
+    DuplicateKeyError,
+    FlushFailedError,
+    KuduSparkError,
+)
 from kudu_spark.meta import head_version as _head_version
-from kudu_spark.table import AUTO_INC_COL, Table
+from kudu_spark.table import AUTO_INC_COL, Table, seq_for
 
 
 class FlushMode(Enum):
@@ -246,15 +252,10 @@ class Session:
         data = [tuple(r.get(c) for c in cols) + (i,) for i, r in enumerate(rows)]
         ddl = ", ".join(f"`{c}` {st.schema.col(c).type}" for c in cols)
         df = spark.createDataFrame(data, ddl + ", __row_idx bigint")
-        if op not in ("upsert", "upsert_ignore"):
+        if op.startswith("insert"):
+            # _split_failed already dropped in-run duplicate keys; upsert
+            # and update keep the apply order so the last mention wins
             df = df.drop("__row_idx")
-            if op.startswith("insert"):
-                df = df.dropDuplicates(st.schema.pk) if op == "insert_ignore" else df
-            if op.startswith(("update", "delete")):
-                # last mention wins inside one run
-                df = df.dropDuplicates(
-                    [c for c in cols if c in st.schema.pk]
-                )
         versions.append(method(df))
 
     def _split_failed(self, st, op: str,
@@ -350,25 +351,16 @@ class Session:
 
     def _present_key_set(self, st, keys: list[tuple]) -> set[tuple]:
         """Which of ``keys`` (PK tuples, apply-order) exist in the
-        table right now. One bounded probe per run: the presence-index
-        short circuit answers append-only tables with zero data IO;
-        otherwise the overlapping-scan key probe. Matching is by row
-        index, so caller-supplied values never need normalizing
-        against Spark's types."""
+        table right now: one ``Table._present_keys`` probe per run.
+        Matching is by row index, so caller-supplied values never need
+        normalizing against Spark's types."""
         if not st.files or not keys:
             return set()
-        pk = st.schema.pk
-        spark = self.table.spark
-        ddl = ", ".join(f"`{c}` {st.schema.col(c).type}" for c in pk)
-        kdf = spark.createDataFrame(
+        ddl = ", ".join(f"`{c}` {st.schema.col(c).type}" for c in st.schema.pk)
+        kdf = self.table.spark.createDataFrame(
             [k + (i,) for i, k in enumerate(keys)], ddl + ", __i bigint"
         )
-        keys_only = kdf.select(*pk)
-        cand = self.table.present_key_probe(keys_only, pk, st)
-        if cand is not None and not cand.limit(1).collect():
-            return set()
-        existing = self.table._existing_pks(st, keys_only if cand is None else cand)
-        hit = kdf.join(existing, on=pk, how="left_semi").select("__i").collect()
+        hit = self.table._present_keys(st, kdf).select("__i").collect()
         return {keys[r["__i"]] for r in hit}
 
     def _cols_for(self, st, op: str, rows: list[dict]) -> list[str]:
@@ -393,137 +385,73 @@ class Session:
 class Transaction:
     """Accumulates DataFrame-level ops; commit() publishes them as ONE
     atomic log entry (all-or-nothing visibility). Rollback discards
-    staged files. Mirrors KuduTransaction::Commit/Rollback."""
+    staged files. Mirrors KuduTransaction::Commit/Rollback.
+
+    INSERT and UPSERT stage through the same validation and file writes
+    as ``Table.insert``/``Table.upsert``: Kudu checks a row the same way
+    alone, in a session or in a transaction (row_operations.cc,
+    tablet/tablet.cc:836). The transaction adds only its own checks: an
+    INSERT key must not be staged by an earlier insert of the same
+    transaction, and staged inserts are re-probed at commit when other
+    writers committed since they were staged. DELETE is blind: it writes
+    tombstones without ``Table.delete``'s absent-key check, because a
+    key inserted earlier in the same transaction is not in the snapshot
+    that check reads; a tombstone for an absent key deletes nothing."""
 
     def __init__(self, table: Table):
         self.table = table
         self._staged: list[tuple] = []  # (op, entries)
         self._insert_entries: list = []  # base files staged by insert()
-        self._stage_version: int | None = None  # state version validations saw
+        self._props: dict = {}  # auto_inc_next reserved by staged inserts
+        self._stage_version: int | None = None  # state the first op saw
         self._open = True
 
-    def _stage(self, op: str, df, kind: str, prepare) -> None:
+    def _stage(self, op: str, stage) -> list:
+        """Run ``stage(st, seq)`` against fresh state at this op's
+        sub-seq of the coming commit; record and return its entries."""
         if not self._open:
             raise KuduSparkError("transaction is closed")
         st = self.table.state()
-        self._stage_version = st.version
-        batch = prepare(st, df)
-        from kudu_spark.table import seq_for
-
-        entries = self.table._write_files(
-            batch, st, seq_for(st.version + 1, sub=len(self._staged)), kind
-        )
+        if self._stage_version is None:
+            self._stage_version = st.version
+        if self._props:
+            # a later insert continues past the ids earlier ones reserved
+            st = dataclasses.replace(
+                st, props={**st.props, **_reserved_props(st, self._props)})
+        entries = stage(st, seq_for(st.version + 1, sub=len(self._staged)))
         self._staged.append((op, entries))
-
-    def _staged_insert_keys(self, st):
-        import os
-
-        paths = [self.table._data_path(e.path) for e in self._insert_entries]
-        return self.table.spark.read.parquet(*paths).select(*st.schema.pk)
+        return entries
 
     def insert(self, df) -> None:
-        """Txn INSERT. Like Table.insert, errors on a PK that already
-        exists — in the snapshot OR staged by an earlier insert in this
-        transaction (row_operations.proto:36 semantics; Kudu txn writes
-        revalidate per row at apply, tablet/tablet.cc:836). This is
-        also the invariant the merge-on-read broadcast fast path relies
-        on: keys untouched by deltas are unique across base files."""
-        holder = {}
+        """Txn INSERT: the checks of ``Table.insert``, and a PK staged
+        by an earlier insert of this transaction is a duplicate too
+        (the base-uniqueness invariant merge-on-read relies on)."""
 
-        def prep(st, d):
-            from kudu_spark.errors import DuplicateKeyError, SchemaError
-
-            b = holder["b"] = self.table._validate_batch(st, d).persist()
-            pk = st.schema.pk
-            null_pk = None
-            for c in pk:
-                cond = F.col(c).isNull()
-                null_pk = cond if null_pk is None else (null_pk | cond)
-            nn = self.table._null_violation_cond(
-                st, [c for c in st.schema.names if c not in pk]
-            )
-            checks = [
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct(*[F.col(c) for c in pk]).alias("nd"),
-                F.sum(F.when(null_pk, 1).otherwise(0)).alias("nulls"),
-            ]
-            if nn is not None:
-                checks.append(F.sum(F.when(nn, 1).otherwise(0)).alias("nn"))
-            agg = b.agg(*checks).collect()[0]
-            if agg.nulls:
-                raise SchemaError(f"batch holds {agg.nulls} row(s) with NULL primary key")
-            if nn is not None and agg.nn:
-                raise SchemaError(
-                    "NULL value not allowed for non-nullable column "
-                    f"({agg.nn} row(s))"
-                )
-            if agg.n != agg.nd:
-                raise DuplicateKeyError(
-                    f"batch contains {agg.n - agg.nd} duplicate primary key(s)"
-                )
-            if st.files:
-                # presence-sidecar short circuit (tables with
-                # pk_bloom_cols == pk): keys failing every commit
-                # bloom are PROVABLY absent — the common case for
-                # append-only ingest — so the exact probe scan is
-                # skipped entirely (Kudu's per-rowset bloom check
-                # before the B-tree seek, tablet/tablet.cc:116-124);
-                # bloom-positives narrow the exact probe to themselves
-                cand = self.table.present_key_probe(b.select(*pk), pk, st)
-                if cand is not None and not cand.limit(1).collect():
-                    hit = []
-                else:
-                    src = b if cand is None else cand
-                    hit = (
-                        src.join(self.table._existing_pks(st, src), on=pk,
-                                 how="left_semi")
-                        .limit(1).collect()
-                    )
-                if hit:
-                    raise DuplicateKeyError(f"key already present: {hit[0].asDict()}")
-            if self._insert_entries:
+        def stage(st, seq):
+            entries, props = self.table._stage_insert(st, df, "error", seq)
+            if self._insert_entries and entries:
                 hit = (
-                    b.join(self._staged_insert_keys(st), on=pk, how="left_semi")
+                    _staged_keys(self.table, st, entries)
+                    .join(_staged_keys(self.table, st, self._insert_entries),
+                          on=st.schema.pk, how="left_semi")
                     .limit(1).collect()
                 )
                 if hit:
+                    self.table._discard(entries)
                     raise DuplicateKeyError(
                         f"key already inserted in this transaction: {hit[0].asDict()}"
                     )
-            return b
+            self._props.update(props)
+            return entries
 
-        try:
-            self._stage("insert", df, "base", prep)
-        finally:
-            if "b" in holder:
-                try:
-                    holder["b"].unpersist()
-                except Exception:
-                    pass
-        self._insert_entries.extend(self._staged[-1][1])
+        self._insert_entries += self._stage("insert", stage)
 
     def upsert(self, df) -> None:
-        def prep(st, d):
-            b = self.table._validate_batch(st, d)
-            return b.dropDuplicates(st.schema.pk)
-
-        self._stage("upsert", df, "delta", prep)
+        self._stage("upsert", lambda st, seq: self.table._stage_upsert(st, df, "error", seq))
 
     def delete(self, df) -> None:
-        def prep(st, d):
-            pk = st.schema.pk
-            keys = d.select(
-                *[F.col(c).cast(st.schema.col(c).type).alias(c) for c in pk]
-            ).dropDuplicates(pk)
-            return keys.select(
-                *pk,
-                *[
-                    F.lit(None).cast(st.schema.col(c).type).alias(c)
-                    for c in st.schema.non_pk_names
-                ],
-            ).withColumn("__deleted", F.lit(True))
-
-        self._stage("delete", df, "delta", prep)
+        self._stage("delete", lambda st, seq: self.table._write_files(
+            self.table._tombstones(st, df), st, seq, "delta"))
 
     def commit(self) -> int:
         if not self._open:
@@ -543,8 +471,6 @@ class Transaction:
         single-table commit body; EngineTransaction drives one call
         per participant, tagging each with the coordinator's id)."""
         entries = [e for _, es in self._staged for e in es]
-        from kudu_spark.errors import ConcurrentCommitError, DuplicateKeyError
-
         attempts = 5
         while True:
             st = self.table.state()
@@ -552,12 +478,9 @@ class Transaction:
             # other writers committed since, re-probe before publishing
             # (Kudu txns likewise fail at commit on conflicting rows)
             if self._insert_entries and st.version != self._stage_version:
-                pk = st.schema.pk
-                keys = self._staged_insert_keys(st)
-                hit = (
-                    keys.join(self.table._existing_pks(st, keys), on=pk, how="left_semi")
-                    .limit(1).collect()
-                )
+                hit = self.table._present_keys(
+                    st, _staged_keys(self.table, st, self._insert_entries)
+                ).limit(1).collect()
                 if hit:
                     self.rollback()  # reclaim the staged files
                     raise DuplicateKeyError(
@@ -567,6 +490,7 @@ class Transaction:
             try:
                 return self.table._commit(
                     st, "txn", entries, retries=1,
+                    props=_reserved_props(st, self._props),
                     extra={"txn_id": txn_id} if txn_id else None,
                 )
             except ConcurrentCommitError:
@@ -579,6 +503,20 @@ class Transaction:
         for _, entries in self._staged:
             self.table._discard(entries)  # data files + bloom sidecars
         self._staged = []
+
+
+def _staged_keys(table: Table, st, entries):
+    """The primary keys in staged (unpublished) files."""
+    return table._read_files(st, entries, with_seq=False).select(*st.schema.pk)
+
+
+def _reserved_props(st, reserved: dict | None) -> dict | None:
+    """The ``auto_inc_next`` a txn commit publishes: past every id the
+    table and the txn's staged inserts reserved, never moved back."""
+    if not reserved:
+        return None
+    return {"auto_inc_next": max(int(st.props.get("auto_inc_next", 1)),
+                                 reserved["auto_inc_next"])}
 
 
 def _txn_ops(root: str, txn_id: str) -> set:
@@ -602,15 +540,13 @@ def _write_cdc_repair(table: Table, paths: list[str], txn_id: str) -> list[str]:
     import uuid as _uuid
 
     from kudu_spark import fs as _fs
-    from kudu_spark.meta import TableState
 
     env = table._env
     st = table.state()
     removed = set(paths)
-    sub = TableState(**{**st.__dict__})
     # the txn's files are still in the manifest when this runs (the
     # txn_abort commit lands after): exclude them = the post-abort view
-    sub.files = [f for f in st.files if f.path not in removed]
+    sub = dataclasses.replace(st, files=[f for f in st.files if f.path not in removed])
     pk = st.schema.pk
     live = [p for p in paths if env.exists(os.path.join(table.root, p))]
     if not live:
@@ -622,17 +558,7 @@ def _write_cdc_repair(table: Table, paths: list[str], txn_id: str) -> list[str]:
     restored = snap.join(keys, on=pk, how="left_semi").withColumn(
         "__deleted", F.lit(False)
     )
-    gone = (
-        keys.join(snap.select(*pk), on=pk, how="left_anti")
-        .select(
-            *pk,
-            *[
-                F.lit(None).cast(st.schema.col(c).type).alias(c)
-                for c in st.schema.non_pk_names
-            ],
-        )
-        .withColumn("__deleted", F.lit(True))
-    )
+    gone = table._tombstones(st, keys.join(snap.select(*pk), on=pk, how="left_anti"))
     if env.spark_native:
         staging = os.path.join(table.root, "_cdc", f"_staging-{_uuid.uuid4().hex}")
         senv = env
@@ -744,14 +670,11 @@ class EngineTransaction:
         self._txn(table_name).delete(df)
 
     def _marker_dir(self) -> str:
-        import os
-
         return os.path.join(self.engine.root, "_txns")
 
     def commit(self) -> dict[str, int]:
         """Publish every participant; returns {table: commit_version}."""
         import json
-        import os
         import uuid
 
         if not self._open:
@@ -777,6 +700,7 @@ class EngineTransaction:
                     # commits), never O(history)
                     "staged_at": _head_version(t.table.root) or 0,
                     "entries": [e.to_json() for _, es in t._staged for e in es],
+                    "props": t._props,
                 }
                 for n, t in parts.items()
             },
@@ -905,7 +829,9 @@ class EngineTransaction:
                     try:
                         entries = [FileEntry.from_json(e) for e in part["entries"]]
                         t = engine.table(tname)
-                        t._commit(t.state(), "txn", entries, extra={"txn_id": txn_id})
+                        st = t.state()
+                        t._commit(st, "txn", entries, extra={"txn_id": txn_id},
+                                  props=_reserved_props(st, part.get("props")))
                     except Exception:
                         ok = False
                 if ok:
@@ -919,12 +845,5 @@ class EngineTransaction:
         exists in the table? The commit-time duplicate re-probe, re-run
         at recovery because the crash window let other writers in."""
         st = table.state()
-        if not st.files:
-            return False
-        pk = st.schema.pk
-        paths = [table._data_path(e.path) for e in base_entries]
-        keys = table.spark.read.parquet(*paths).select(*pk)
-        return bool(
-            keys.join(table._existing_pks(st, keys), on=pk, how="left_semi")
-            .limit(1).collect()
-        )
+        keys = _staged_keys(table, st, base_entries)
+        return bool(table._present_keys(st, keys).limit(1).collect())

@@ -6,8 +6,9 @@ from __future__ import annotations
 import pytest
 
 from kudu_spark.engine import Engine
-from kudu_spark.errors import KuduSparkError, SchemaError
+from kudu_spark.errors import ImmutableColumnError, KuduSparkError, SchemaError
 from kudu_spark.plans.predicates import parse_predicates
+from kudu_spark.table import Table
 from kudu_spark.writer import FlushMode, Session, Transaction
 
 SIMPLE = [("key", "int", False), ("int_val", "int", False), ("string_val", "string", True)]
@@ -314,6 +315,34 @@ def test_fuzz_session_error_collector_vs_model(t):
     assert s.get_write_op_metrics() == metrics
 
 
+def test_session_update_last_mention_wins(t):
+    """Two UPDATEs of one key in one buffered run: the later op's value
+    is the one that lands (Kudu applies ops in order)."""
+    with Session(t) as s:
+        for k in range(5):
+            s.update({"key": k, "int_val": 1000 + k})
+        for k in range(5):
+            s.update({"key": k, "int_val": 2000 + k})
+    assert {k: v[0] for k, v in snap(t).items()} == {k: 2000 + k for k in range(5)}
+
+
+def test_plain_table_writes_record_no_presence_decline(t, spark):
+    """A table without pk_bloom_cols has no presence index to ask, so
+    its key probes never log a declined presence lookup."""
+    Table._presence_decline_seen -= {d for d in Table._presence_decline_seen
+                                     if d[0] == t.name}
+    t.insert(spark.createDataFrame([(90, 1, "a")], "key int, int_val int, string_val string"))
+    with Session(t) as s:
+        s.insert({"key": 91, "int_val": 1, "string_val": "b"})
+        s.update({"key": 90, "int_val": 2})
+        s.delete({"key": 0})
+    txn = Transaction(t)
+    txn.insert(spark.createDataFrame([(92, 1, "c")], "key int, int_val int, string_val string"))
+    txn.commit()
+    assert not {d for d in Table._presence_decline_seen if d[0] == t.name}
+    assert {90, 91, 92} <= set(snap(t)) and 0 not in snap(t)
+
+
 def test_session_sync_mode_raises_from_apply(t):
     """AUTO_FLUSH_SYNC surfaces the row error synchronously from
     apply(), like the reference client's Apply() in sync mode."""
@@ -394,6 +423,60 @@ def test_transaction_insert_commit_revalidates(t, spark):
     assert got[70] == (2, "racer")
     keys = [r.key for r in t.scan().select("key").collect()]
     assert len(keys) == len(set(keys))
+
+
+TXN_DDL = "key int, int_val int, string_val string"
+
+
+@pytest.mark.parametrize("case", [
+    "upsert_null_pk", "upsert_null_non_nullable", "upsert_immutable",
+    "insert_non_unique_pk",
+])
+def test_transaction_ops_validate_like_table_ops(engine, spark, case):
+    """A Transaction op accepts and rejects exactly what the matching
+    Table op does: both stage through the same validation."""
+    if case == "insert_non_unique_pk":
+        tb = engine.create_table("txn_nu", SIMPLE, pk=["key"], non_unique_pk=True)
+        batch = spark.createDataFrame([(1, 10, "a"), (1, 11, "b")], TXN_DDL)
+        tb.insert(batch)
+        txn = Transaction(tb)
+        txn.insert(batch)
+        txn.insert(batch)
+        txn.commit()
+        tb.insert(batch)  # the counter moved past the txn's ids
+        out = tb.scan().collect()
+        assert sorted(r.int_val for r in out) == [10] * 4 + [11] * 4
+        assert len({r.auto_incrementing_id for r in out}) == 8
+        return
+    imm = ["string_val"] if case == "upsert_immutable" else None
+    tb = engine.create_table("txn_v", SIMPLE, pk=["key"], immutable_cols=imm)
+    tb.insert(spark.createDataFrame([(1, 10, "s1")], TXN_DDL))
+    row, err = {
+        "upsert_null_pk": ((None, 1, "x"), SchemaError),
+        "upsert_null_non_nullable": ((2, None, "x"), SchemaError),
+        "upsert_immutable": ((1, 11, "changed"), ImmutableColumnError),
+    }[case]
+    batch = spark.createDataFrame([row], TXN_DDL)
+    with pytest.raises(err):
+        tb.upsert(batch)
+    txn = Transaction(tb)
+    with pytest.raises(err):
+        txn.upsert(batch)
+        txn.commit()
+    txn.rollback()
+    assert {r.key: (r.int_val, r.string_val) for r in tb.scan().collect()} == {1: (10, "s1")}
+
+
+def test_transaction_delete_is_blind(t, spark):
+    """Txn DELETE writes tombstones without an absent-key check: a key
+    inserted earlier in the same txn is deleted at commit, and a key
+    that exists nowhere commits without error."""
+    txn = Transaction(t)
+    txn.insert(spark.createDataFrame([(80, 1, "a")], TXN_DDL))
+    txn.delete(spark.createDataFrame([(80,)], "key int"))
+    txn.delete(spark.createDataFrame([(99,)], "key int"))
+    txn.commit()
+    assert snap(t) == {k: (k * 10, f"s{k}") for k in range(5)}
 
 
 def test_transaction_rollback(t, spark):

@@ -1925,11 +1925,17 @@ class Table:
 
     # -- write plumbing ---------------------------------------------------------
 
-    def _validate_batch(self, st: TableState, df: DataFrame, require_all: bool = True) -> DataFrame:
-        sch = st.schema
-        extra = [c for c in df.columns if c not in sch.names and c not in RESERVED]
+    @staticmethod
+    def _reject_unknown(sch, cols: list[str]) -> None:
+        """A write naming a column the table lacks is rejected, never
+        silently dropped."""
+        extra = [c for c in cols if c not in sch.names and c not in RESERVED]
         if extra:
             raise SchemaError(f"unknown columns in batch: {extra}")
+
+    def _validate_batch(self, st: TableState, df: DataFrame, require_all: bool = True) -> DataFrame:
+        sch = st.schema
+        self._reject_unknown(sch, df.columns)
         missing = [c for c in sch.names if c not in df.columns]
         if require_all:
             hard = [m for m in missing if not sch.col(m).nullable and sch.col(m).default is None
@@ -3050,6 +3056,7 @@ class Table:
         ``handle_schema_drift`` auto-adds unknown batch columns first
         (KuduWriteOptions.handleSchemaDrift)."""
         assert mode in ("error", "ignore")
+        self._reject_auto_inc(df)  # before the drift ALTER commits
         st = self._auto_add_columns(df) if handle_schema_drift else self.state()
         entries, props = self._stage_insert(st, df, mode, seq_for(st.version + 1))
         return self._commit_revalidated(
@@ -3074,12 +3081,7 @@ class Table:
         violation discards the staged files and raises; INSERT_IGNORE
         with duplicates or collisions rewrites the survivors from the
         staged files, so the caller's batch plan still runs once."""
-        if AUTO_INC_COL in df.columns:
-            # row_operations.cc:528-529 — the counter is server-assigned
-            raise SchemaError(
-                "auto-incrementing column should not be set for "
-                "INSERT/INSERT_IGNORE operations"
-            )
+        self._reject_auto_inc(df)
         from pyspark.sql import Observation
 
         batch = self._validate_batch(st, df)
@@ -3129,6 +3131,15 @@ class Table:
         self._discard(entries)
         return rewritten, props
 
+    @staticmethod
+    def _reject_auto_inc(df: DataFrame) -> None:
+        if AUTO_INC_COL in df.columns:
+            # row_operations.cc:528-529 — the counter is server-assigned
+            raise SchemaError(
+                "auto-incrementing column should not be set for "
+                "INSERT/INSERT_IGNORE operations"
+            )
+
     def insert_ignore(self, df: DataFrame) -> int:
         return self.insert(df, mode="ignore")
 
@@ -3174,6 +3185,7 @@ class Table:
                 "UPSERT on a table with an auto-incrementing column must "
                 "target full primary keys"
             )
+        self._reject_unknown(st.schema, [c for c in df.columns if c != "__row_idx"])
         batch = df.select(
             *[
                 _write_cast(
@@ -3272,9 +3284,10 @@ class Table:
         if mode != "error":
             from pyspark.sql import Observation
 
+            # key columns are non-nullable too: one "nn" count covers both
+            checks = [F.sum(F.when(bad_null, 1).otherwise(0)).alias("nn")]
             obs = Observation()
-            batch = batch.observe(
-                obs, F.sum(F.when(bad_null, 1).otherwise(0)).alias("bad"))
+            batch = batch.observe(obs, *checks)
         current = self._snapshot_overlapping(st, batch).withColumn("__exists", F.lit(True))
         joined = batch.join(current, on=pk, how="left")
         if mode == "error":
@@ -3305,20 +3318,9 @@ class Table:
         )
         entries = self._write_files(rows, st, seq_for(st.version + 1), "delta")
         if obs is not None:
-            # completed by the probe agg or the write job, never by a
-            # short-circuiting action (no limit sits below the metric)
-            vals = observed_metrics(obs)
-            if vals is None:
-                vals = val_src.agg(
-                    F.sum(F.when(bad_null, 1).otherwise(0)).alias("bad")
-                ).collect()[0].asDict()
-            bad = vals.get("bad")
-            if bad:
-                self._discard(entries)
-                raise SchemaError(
-                    "NULL value not allowed for key or non-nullable "
-                    f"column ({bad} row(s))"
-                )
+            # completed by the write job, never by a short-circuiting
+            # action (no limit sits below the metric)
+            self._raise_observed(obs, checks, val_src, entries)
         v = self._commit_revalidated(
             st, "update", entries,
             lambda a: self.update(df, mode, _attempts=a),

@@ -392,8 +392,10 @@ class Transaction:
     alone, in a session or in a transaction (row_operations.cc,
     tablet/tablet.cc:836). The transaction adds only its own checks: an
     INSERT key must not be staged by an earlier insert of the same
-    transaction, and staged inserts are re-probed at commit when other
-    writers committed since they were staged. DELETE is blind: it writes
+    transaction, and staged inserts are rechecked at commit when other
+    writers committed since they were staged: a key now present raises
+    DuplicateKeyError; on a non-unique-PK table, ids another writer
+    reserved meanwhile raise ConcurrentCommitError. DELETE is blind: it writes
     tombstones without ``Table.delete``'s absent-key check, because a
     key inserted earlier in the same transaction is not in the snapshot
     that check reads; a tombstone for an absent key deletes nothing."""
@@ -402,7 +404,9 @@ class Transaction:
         self.table = table
         self._staged: list[tuple] = []  # (op, entries)
         self._insert_entries: list = []  # base files staged by insert()
-        self._props: dict = {}  # auto_inc_next reserved by staged inserts
+        # non-unique-PK tables: (the table's auto_inc_next when this txn
+        # first reserved ids, the next id past its reservations)
+        self._ids: tuple[int, int] | None = None
         self._stage_version: int | None = None  # state the first op saw
         self._open = True
 
@@ -414,10 +418,10 @@ class Transaction:
         st = self.table.state()
         if self._stage_version is None:
             self._stage_version = st.version
-        if self._props:
+        if self._ids:
             # a later insert continues past the ids earlier ones reserved
             st = dataclasses.replace(
-                st, props={**st.props, **_reserved_props(st, self._props)})
+                st, props={**st.props, **_reserved_props(st, self._ids)})
         entries = stage(st, seq_for(st.version + 1, sub=len(self._staged)))
         self._staged.append((op, entries))
         return entries
@@ -429,7 +433,10 @@ class Transaction:
 
         def stage(st, seq):
             entries, props = self.table._stage_insert(st, df, "error", seq)
-            if self._insert_entries and entries:
+            if props:  # non-unique PK: fresh ids never collide
+                base = self._ids[0] if self._ids else int(st.props.get("auto_inc_next", 1))
+                self._ids = (base, props["auto_inc_next"])
+            elif self._insert_entries and entries:
                 hit = (
                     _staged_keys(self.table, st, entries)
                     .join(_staged_keys(self.table, st, self._insert_entries),
@@ -441,7 +448,6 @@ class Transaction:
                     raise DuplicateKeyError(
                         f"key already inserted in this transaction: {hit[0].asDict()}"
                     )
-            self._props.update(props)
             return entries
 
         self._insert_entries += self._stage("insert", stage)
@@ -474,23 +480,20 @@ class Transaction:
         attempts = 5
         while True:
             st = self.table.state()
-            # inserts were probed against the snapshot at stage time; if
-            # other writers committed since, re-probe before publishing
-            # (Kudu txns likewise fail at commit on conflicting rows)
+            # inserts were validated against the snapshot at stage
+            # time; if other writers committed since, recheck before
+            # publishing (Kudu txns likewise fail at commit on
+            # conflicting rows)
             if self._insert_entries and st.version != self._stage_version:
-                hit = self.table._present_keys(
-                    st, _staged_keys(self.table, st, self._insert_entries)
-                ).limit(1).collect()
-                if hit:
+                err = _publish_conflict(self.table, st, self._insert_entries, self._ids)
+                if err:
                     self.rollback()  # reclaim the staged files
-                    raise DuplicateKeyError(
-                        f"key inserted concurrently during transaction: {hit[0].asDict()}"
-                    )
+                    raise err
                 self._stage_version = st.version
             try:
                 return self.table._commit(
                     st, "txn", entries, retries=1,
-                    props=_reserved_props(st, self._props),
+                    props=_reserved_props(st, self._ids),
                     extra={"txn_id": txn_id} if txn_id else None,
                 )
             except ConcurrentCommitError:
@@ -510,13 +513,33 @@ def _staged_keys(table: Table, st, entries):
     return table._read_files(st, entries, with_seq=False).select(*st.schema.pk)
 
 
-def _reserved_props(st, reserved: dict | None) -> dict | None:
+def _reserved_props(st, ids) -> dict | None:
     """The ``auto_inc_next`` a txn commit publishes: past every id the
-    table and the txn's staged inserts reserved, never moved back."""
-    if not reserved:
+    table and the txn's staged inserts (``Transaction._ids``) reserved,
+    never moved back."""
+    if not ids:
         return None
-    return {"auto_inc_next": max(int(st.props.get("auto_inc_next", 1)),
-                                 reserved["auto_inc_next"])}
+    return {"auto_inc_next": max(int(st.props.get("auto_inc_next", 1)), ids[1])}
+
+
+def _publish_conflict(table: Table, st, base_entries, ids) -> Exception | None:
+    """The error that stops staged inserts (base-kind files) from
+    publishing at ``st``, or None. On a non-unique-PK table: another
+    writer moved ``auto_inc_next`` since the txn reserved its ids, so
+    its rows may hold the same ids. Otherwise: a staged key that another
+    writer committed since (the base-uniqueness invariant merge-on-read
+    relies on). The commit-time recheck, re-run at recovery because the
+    crash window let other writers in."""
+    if ids and int(st.props.get("auto_inc_next", 1)) != ids[0]:
+        return ConcurrentCommitError(
+            "auto-increment ids reserved concurrently during transaction")
+    if AUTO_INC_COL in st.schema.pk:
+        return None  # ids reserved from an unmoved counter never collide
+    hit = table._present_keys(st, _staged_keys(table, st, base_entries)).limit(1).collect()
+    if hit:
+        return DuplicateKeyError(
+            f"key inserted concurrently during transaction: {hit[0].asDict()}")
+    return None
 
 
 def _txn_ops(root: str, txn_id: str) -> set:
@@ -700,7 +723,7 @@ class EngineTransaction:
                     # commits), never O(history)
                     "staged_at": _head_version(t.table.root) or 0,
                     "entries": [e.to_json() for _, es in t._staged for e in es],
-                    "props": t._props,
+                    "ids": t._ids,
                 }
                 for n, t in parts.items()
             },
@@ -791,10 +814,9 @@ class EngineTransaction:
                         abort = True  # staged files lost: cannot complete
                         break
                     bases = [e for e in entries if e.kind == "base"]
-                    if bases and EngineTransaction._insert_conflict(
-                        engine.table(tname), bases
-                    ):
-                        abort = True  # dup PK raced in during the crash window
+                    t = engine.table(tname)
+                    if bases and _publish_conflict(t, t.state(), bases, part.get("ids")):
+                        abort = True  # dup PK or ids raced in during the crash window
                         break
                 if abort:
                     m["state"] = "aborting"
@@ -831,19 +853,10 @@ class EngineTransaction:
                         t = engine.table(tname)
                         st = t.state()
                         t._commit(st, "txn", entries, extra={"txn_id": txn_id},
-                                  props=_reserved_props(st, part.get("props")))
+                                  props=_reserved_props(st, part.get("ids")))
                     except Exception:
                         ok = False
                 if ok:
                     env.unlink(path, missing_ok=True)
                     done.append(txn_id)
         return done
-
-    @staticmethod
-    def _insert_conflict(table: Table, base_entries) -> bool:
-        """Do the staged insert (base-kind) files hold a PK that now
-        exists in the table? The commit-time duplicate re-probe, re-run
-        at recovery because the crash window let other writers in."""
-        st = table.state()
-        keys = _staged_keys(table, st, base_entries)
-        return bool(table._present_keys(st, keys).limit(1).collect())

@@ -430,7 +430,7 @@ TXN_DDL = "key int, int_val int, string_val string"
 
 @pytest.mark.parametrize("case", [
     "upsert_null_pk", "upsert_null_non_nullable", "upsert_immutable",
-    "insert_non_unique_pk",
+    "upsert_unknown_column", "insert_non_unique_pk",
 ])
 def test_transaction_ops_validate_like_table_ops(engine, spark, case):
     """A Transaction op accepts and rejects exactly what the matching
@@ -451,12 +451,13 @@ def test_transaction_ops_validate_like_table_ops(engine, spark, case):
     imm = ["string_val"] if case == "upsert_immutable" else None
     tb = engine.create_table("txn_v", SIMPLE, pk=["key"], immutable_cols=imm)
     tb.insert(spark.createDataFrame([(1, 10, "s1")], TXN_DDL))
-    row, err = {
-        "upsert_null_pk": ((None, 1, "x"), SchemaError),
-        "upsert_null_non_nullable": ((2, None, "x"), SchemaError),
-        "upsert_immutable": ((1, 11, "changed"), ImmutableColumnError),
+    row, ddl, err = {
+        "upsert_null_pk": ((None, 1, "x"), TXN_DDL, SchemaError),
+        "upsert_null_non_nullable": ((2, None, "x"), TXN_DDL, SchemaError),
+        "upsert_immutable": ((1, 11, "changed"), TXN_DDL, ImmutableColumnError),
+        "upsert_unknown_column": ((2, 1, "x", 5), TXN_DDL + ", intval int", SchemaError),
     }[case]
-    batch = spark.createDataFrame([row], TXN_DDL)
+    batch = spark.createDataFrame([row], ddl)
     with pytest.raises(err):
         tb.upsert(batch)
     txn = Transaction(tb)
@@ -465,6 +466,43 @@ def test_transaction_ops_validate_like_table_ops(engine, spark, case):
         txn.commit()
     txn.rollback()
     assert {r.key: (r.int_val, r.string_val) for r in tb.scan().collect()} == {1: (10, "s1")}
+
+
+@pytest.mark.parametrize("racer_key", [1, 2])
+def test_transaction_insert_non_unique_pk_concurrent_insert(engine, spark, racer_key):
+    """A Table.insert committing between a txn INSERT's staging and its
+    commit reserved ids from the same counter value: the txn fails at
+    commit instead of publishing overlapping ids (racer_key=2) or
+    reporting a duplicate key inserts cannot produce (racer_key=1), and
+    the table keeps only the other writer's rows."""
+    from kudu_spark.errors import ConcurrentCommitError
+
+    tb = engine.create_table("txn_nu_race", SIMPLE, pk=["key"], non_unique_pk=True)
+    txn = Transaction(tb)
+    txn.insert(spark.createDataFrame([(1, 10, "a")], TXN_DDL))
+    tb.insert(spark.createDataFrame([(racer_key, 20, "b")], TXN_DDL))
+    with pytest.raises(ConcurrentCommitError):
+        txn.commit()
+    assert [(r.key, r.int_val) for r in tb.scan().collect()] == [(racer_key, 20)]
+    tb.insert(spark.createDataFrame([(1, 10, "a")], TXN_DDL))
+    ids = [r.auto_incrementing_id for r in tb.scan().collect()]
+    assert len(ids) == len(set(ids)) == 2
+
+
+@pytest.mark.parametrize("non_unique", [False, True])
+def test_insert_auto_inc_column_rejected_before_drift_alter(engine, spark, non_unique):
+    """An INSERT batch that sets auto_incrementing_id is rejected before
+    handle_schema_drift's ALTER commits: a rejected write leaves the
+    schema as it was."""
+    tb = engine.create_table("drift_ai", SIMPLE, pk=["key"], non_unique_pk=non_unique)
+    before = tb.state()
+    batch = spark.createDataFrame(
+        [(1, 10, "a", 7, 3)], TXN_DDL + ", auto_incrementing_id bigint, extra int")
+    with pytest.raises(SchemaError, match="auto-incrementing"):
+        tb.insert(batch, handle_schema_drift=True)
+    after = tb.state()
+    assert after.version == before.version
+    assert after.schema.names == before.schema.names
 
 
 def test_transaction_delete_is_blind(t, spark):
@@ -760,7 +798,8 @@ def _marker_for(engine, txn, txn_id, state):
             "state": state,
             "participants": {
                 n: {"root": t.table.root,
-                    "entries": [e.to_json() for _, es in t._staged for e in es]}
+                    "entries": [e.to_json() for _, es in t._staged for e in es],
+                    "ids": t._ids}
                 for n, t in txn._parts.items()
             },
         }, f)
@@ -827,6 +866,27 @@ def test_recover_reprobes_staged_inserts(engine, spark):
     assert {r.key for r in a.scan().collect()} == {1}  # published part compensated
     got_b = {r.key: r.int_val for r in b.scan().collect()}
     assert got_b == {1: 1, 9: 90}  # racer's row intact, txn row absent
+    assert not os.listdir(os.path.join(engine.root, "_txns"))
+
+
+def test_recover_aborts_on_concurrent_auto_inc_ids(engine, spark):
+    """'committing' marker with a non-unique-PK participant unpublished;
+    during the crash window a Table.insert reserved ids from the same
+    counter value. recover() aborts instead of publishing overlapping
+    ids."""
+    import os
+    import uuid
+
+    ddl = "key int, int_val int, string_val string"
+    nu = engine.create_table("nu_rec", SIMPLE, pk=["key"], non_unique_pk=True)
+    txn = engine.transaction()
+    txn.insert("nu_rec", spark.createDataFrame([(9, 9, "mine")], ddl))
+    txn_id = uuid.uuid4().hex
+    _marker_for(engine, txn, txn_id, "committing")
+    nu.insert(spark.createDataFrame([(8, 80, "racer")], ddl))
+
+    assert engine.recover_transactions() == [txn_id]
+    assert [(r.key, r.int_val) for r in nu.scan().collect()] == [(8, 80)]
     assert not os.listdir(os.path.join(engine.root, "_txns"))
 
 

@@ -132,9 +132,10 @@ def main(argv: list[str] | None = None) -> int:
                     help="print the budgeted compaction plan, do nothing")
     sp = sub.add_parser(
         "maintenance",
-        help="run budget-bounded maintenance sweeps until the delta "
-             "backlog drains (MaintenanceManager model); each sweep "
-             "applies every table's auto-compaction policy once",
+        help="run budget-bounded maintenance sweeps until no table "
+             "has work left (MaintenanceManager model); each sweep "
+             "gives every table one maintenance pass. Prints the "
+             "sweep count and per-table errors; exits 1 on any error",
     )
     sp.add_argument("--max-sweeps", type=int, default=64)
     sp = sub.add_parser(
@@ -311,13 +312,15 @@ def main(argv: list[str] | None = None) -> int:
             "sec": round(sec, 2), "rows_per_sec": round(per * args.batches / sec),
         }))
     elif args.cmd == "maintenance":
-        sweeps = 0
+        sweeps, errors = 0, {}
         while sweeps < args.max_sweeps:
-            did = eng.run_maintenance()
+            did = eng.maintenance_sweep()
+            errors.update(did.pop("__errors__", {}))
             sweeps += 1
             if not any(did.values()):
                 break
-        print(json.dumps({"sweeps": sweeps}))
+        print(json.dumps({"sweeps": sweeps, "errors": errors}))
+        return 1 if errors else 0
     elif args.cmd == "fsck":
         report = eng.fsck(args.table, repair=args.repair)
         print(json.dumps(report))

@@ -791,28 +791,6 @@ class Engine:
 
         return EngineTransaction(self)
 
-    def run_maintenance(self) -> dict:
-        """Explicit maintenance sweep (≈ one MaintenanceManager pass,
-        tablet/maintenance_manager.h): apply each live table's
-        auto-compaction policy now, draining the delta backlog of
-        tables configured with ``auto_compact_mode='deferred'`` (or
-        ``'async'`` runs that were skipped). Tables with
-        ``auto_compact=false`` stay untouched. Returns
-        {table: did_compact}."""
-        out = {}
-        for name in self.list_tables():
-            t = self.table(name)
-            st = t.state()
-            if str(st.props.get("auto_compact", "true")).lower() in (
-                "false", "0", "no"
-            ):
-                out[name] = False
-                continue
-            before = st.version
-            t._auto_compact_once(st)
-            out[name] = t.state().version != before
-        return out
-
     def recover_transactions(self) -> list[str]:
         """Complete cross-table transactions a crash left mid-commit."""
         from kudu_spark.writer import EngineTransaction
@@ -834,11 +812,13 @@ class Engine:
         removing the tail-latency spikes the inline fold causes
         (scripts/ingest_scale.py --daemon measures exactly this).
 
-        Per-table overlap with writer-triggered async folds is already
-        excluded by the table maintenance mutex; the daemon skips any
-        table whose mutex is held rather than queueing behind it.
-        Sweep failures are logged, never raised — a maintenance daemon
-        must not die because one table had a transient conflict."""
+        Each sweep is one ``maintenance_sweep``: it runs the same
+        policy as the writer-triggered folds (inline or async), under
+        the same per-table-root maintenance mutex, and skips any table
+        whose mutex is held rather than queueing behind it. Sweep
+        failures are logged and counted in the daemon's ``errors``,
+        never raised — a maintenance daemon must not die because one
+        table had a transient conflict."""
         import threading
 
         if getattr(self, "_maint_daemon", None) is not None:

@@ -275,6 +275,36 @@ def partition_key(f: "FileEntry"):
     return (tuple(f.partition.get("hash", [])), f.partition.get("range"))
 
 
+def rank_partitions(files: list, benefit, budget: int | None = None) -> tuple[list, int]:
+    """THE compaction policy (≈ the budgeted knapsack of
+    tablet/compaction_policy.h:74-129), shared by explicit compaction,
+    auto-compaction and IVF convergence. Groups ``files`` by
+    partition_key, scores each group with ``benefit(group_files)``
+    (groups scoring 0 need no work), costs it at its total bytes (a
+    partition is rewritten whole) and ranks by benefit per cost byte,
+    ties broken by partition key. Returns ``(ranked, n)``: every
+    candidate as (key, cost_bytes, benefit, files) in rank order, and
+    how many of them the ``budget`` walk takes — always at least one,
+    stopping at the first that does not fit; all of them when budget
+    is None."""
+    groups: dict = {}
+    for f in files:
+        groups.setdefault(partition_key(f), []).append(f)
+    ranked = []
+    for key, fs in groups.items():
+        b = benefit(fs)
+        if b > 0:
+            ranked.append((key, sum(f.bytes for f in fs), b, fs))
+    ranked.sort(key=lambda c: (-(c[2] / max(c[1], 1)), c[0]))
+    n, spent = 0, 0
+    for _key, cost, _b, _fs in ranked:
+        if budget is not None and n and spent + cost > budget:
+            break
+        n += 1
+        spent += cost
+    return ranked, n
+
+
 class Table:
     def __init__(self, spark: SparkSession, name: str, root: str):
         from kudu_spark import fs
@@ -1649,9 +1679,8 @@ class Table:
     def converge_vector_cells(self, io_budget_bytes: int | None = None) -> dict:
         """ONE budgeted convergence step for stale cell-model stamps
         (and missing q8 pairs on quantized columns): rank partitions
-        holding stale-stamped bytes by stale-bytes-per-rewrite-byte —
-        the same benefit/IO discipline as compaction_plan
-        (≈ tablet/compaction_policy.h:74-129's knapsack) — and compact
+        holding stale-stamped bytes by stale-bytes-per-rewrite-byte
+        with the shared compaction policy (rank_partitions) and compact
         the best set that fits the budget. Repeated sweeps drain the
         backlog; per-file hybrid serving (scan_cells/_ann_serve) keeps
         every already-converged file pruning meanwhile, so a retrain
@@ -1678,27 +1707,12 @@ class Table:
         if not cur and not vq_cols:
             return {"partitions": 0, "spent_bytes": 0,
                     "stale_partitions_left": 0}
-        groups: dict = {}
-        for f in st.files:
-            groups.setdefault(partition_key(f), []).append(f)
-        cands = []
-        for key, fs in groups.items():
-            stale_bytes = sum(f.bytes for f in fs if stale_file(f))
-            if not stale_bytes:
-                continue
-            cost = sum(f.bytes for f in fs)  # partition rewrites whole
-            cands.append((stale_bytes / max(cost, 1), key, cost, stale_bytes))
-        cands.sort(key=lambda c: (-c[0], c[1]))
-        chosen, spent = [], 0
-        for _, key, cost, _sb in cands:
-            if spent + cost > budget and chosen:
-                break
-            chosen.append(key)
-            spent += cost
-        if chosen:
-            self.compact(partitions=[(list(k[0]), k[1]) for k in chosen])
-        return {"partitions": len(chosen), "spent_bytes": spent,
-                "stale_partitions_left": len(cands) - len(chosen)}
+        ranked, n = rank_partitions(
+            st.files, lambda fs: sum(f.bytes for f in fs if stale_file(f)), budget)
+        if n:
+            self.compact(partitions=[c[0] for c in ranked[:n]])
+        return {"partitions": n, "spent_bytes": sum(c[1] for c in ranked[:n]),
+                "stale_partitions_left": len(ranked) - n}
 
     def maybe_retrain_vector_cells(self) -> dict:
         """Maintenance-path care of IVF cell models, in two independent
@@ -3367,49 +3381,19 @@ class Table:
 
     # -- maintenance ---------------------------------------------------------------
 
-    def compaction_plan(self, small_file_bytes: int = 32 << 20, min_small_files: int = 4,
-                        io_budget_bytes: int | None = None) -> list[dict]:
-        """Budgeted compaction policy (≈ the knapsack of
-        tablet/compaction_policy.h:74-129): score every partition that
-        needs work by benefit (delta bytes to fold — weighted, since
-        deltas tax every scan — plus small-file bytes to bin-pack) per
-        unit of rewrite IO, and return the best set that fits the IO
-        budget. Pure manifest arithmetic — no Spark job. Feed the
-        ``partition`` values to ``compact(partitions=...)``."""
-        st = self.state()
-
-        groups: dict = {}
-        for f in st.files:
-            groups.setdefault(partition_key(f), []).append(f)
-        cands = []
-        for key, fs in groups.items():
-            delta_bytes = sum(f.bytes for f in fs if f.kind == "delta")
-            smalls = [f for f in fs if f.kind == "base" and f.bytes < small_file_bytes]
-            if not delta_bytes and len(smalls) < min_small_files:
-                continue
-            cost = sum(f.bytes for f in fs)  # partition is rewritten whole
-            benefit = 4 * delta_bytes + sum(f.bytes for f in smalls)
-            cands.append({
-                "partition": key,
-                "cost_bytes": cost,
-                "benefit": benefit,
-                "delta_bytes": delta_bytes,
-                "n_small_files": len(smalls),
-            })
-        cands.sort(key=lambda c: (-(c["benefit"] / max(c["cost_bytes"], 1)), c["partition"]))
-        if io_budget_bytes is None:
-            return cands
-        out, spent = [], 0
-        for c in cands:
-            if spent + c["cost_bytes"] <= io_budget_bytes or not out:
-                out.append(c)
-                spent += c["cost_bytes"]
-        return out
-
-    # auto-compaction defaults (overridable per table via props)
+    # compaction policy constants. A base file under SMALL_FILE_BYTES
+    # is small; explicit compaction packs a partition holding
+    # COMPACT_MIN_SMALL_FILES of them, auto-compaction (opt-in) one
+    # holding AUTO_COMPACT_MIN_SMALL_FILES, so each byte is rewritten
+    # at most once per that many commits until its file outgrows the
+    # threshold. The first three AUTO_COMPACT_* defaults are
+    # overridable per table via props.
+    SMALL_FILE_BYTES = 32 << 20
+    COMPACT_MIN_SMALL_FILES = 4
     AUTO_COMPACT_MIN_RATIO = 0.05
     AUTO_COMPACT_MIN_DELTA_BYTES = 1 << 20
     AUTO_COMPACT_BUDGET_BYTES = 256 << 20
+    AUTO_COMPACT_MIN_SMALL_FILES = 8
     # write-proportional budget: an inline/async fold may spend up to
     # this many bytes of rewrite IO per byte of delta the triggering
     # commit wrote (≈ the fold amplification of a ~10%-dirty uniform
@@ -3419,6 +3403,30 @@ class Table:
     # MaintenanceManager achieves the same by prioritizing ops by
     # perf-improvement score as writes land (tablet/maintenance_manager.h).
     AUTO_COMPACT_WRITE_FACTOR = 16
+
+    def _small_files(self, fs: list[FileEntry]) -> list[FileEntry]:
+        return [f for f in fs if f.kind == "base" and f.bytes < self.SMALL_FILE_BYTES]
+
+    def compaction_plan(self, io_budget_bytes: int | None = None) -> list[dict]:
+        """Explicit compaction plan: every partition with delta files
+        or at least COMPACT_MIN_SMALL_FILES small base files, scored by
+        benefit (delta bytes to fold — weighted 4×, since deltas tax
+        every scan — plus small-file bytes to bin-pack) per unit of
+        rewrite IO, best first, cut to ``io_budget_bytes`` by
+        rank_partitions. Pure manifest arithmetic — no Spark job. Feed
+        the ``partition`` values to ``compact(partitions=...)``."""
+        def benefit(fs):
+            delta = sum(f.bytes for f in fs if f.kind == "delta")
+            smalls = self._small_files(fs)
+            if not delta and len(smalls) < self.COMPACT_MIN_SMALL_FILES:
+                return 0
+            return 4 * delta + sum(f.bytes for f in smalls)
+
+        ranked, n = rank_partitions(self.state().files, benefit, io_budget_bytes)
+        return [{"partition": key, "cost_bytes": cost, "benefit": b,
+                 "delta_bytes": sum(f.bytes for f in fs if f.kind == "delta"),
+                 "n_small_files": len(self._small_files(fs))}
+                for key, cost, b, fs in ranked[:n]]
 
     def _maybe_auto_compact(self, commit_delta_bytes: int = 0) -> None:
         """Maintenance trigger after a mutation commit. Kudu runs the
@@ -3430,145 +3438,121 @@ class Table:
 
           - ``inline`` (default): fold before the mutation returns.
           - ``async``: fold in a daemon thread; the mutation returns
-            immediately (at most one maintenance thread per table
-            handle — an in-flight fold skips the trigger, the next
-            write re-arms it).
-          - ``deferred``: never fold from the write path; an explicit
-            ``Engine.run_maintenance()`` sweep drains the backlog
+            immediately.
+          - ``deferred``: never fold from the write path;
+            ``Engine.maintenance_sweep()`` (or the
+            ``Engine.start_maintenance`` daemon) drains the backlog
             (closest to Kudu's MaintenanceManager operating model).
 
-        Maintenance failure never fails the (already durable)
-        mutation."""
+        Inline and async runs hold the table's maintenance mutex — one
+        per table root, shared by every handle and by the sweep — and
+        skip when it is held: a fold already in flight covers this
+        write, and the next write re-arms the trigger. Maintenance
+        failure is logged, never raised: the mutation is already
+        durable."""
+        import logging
+
+        def run(st=None):
+            try:
+                self._auto_compact_once(st, commit_delta_bytes=commit_delta_bytes)
+            except Exception as e:
+                logging.getLogger("kudu_spark.maintenance").warning(
+                    "auto-compaction of %s skipped: %s", self.name, e)
+            finally:
+                self._maint_lock.release()
+
         try:
             st = self.state()
             props = st.props
             if str(props.get("auto_compact", "true")).lower() in ("false", "0", "no"):
                 return
             mode = str(props.get("auto_compact_mode", "inline")).lower()
-            if mode == "deferred":
+            if mode == "deferred" or not self._maint_lock.acquire(blocking=False):
                 return
-            if mode == "async":
-                import threading
-
-                if self._maint_lock.acquire(blocking=False):
-                    def run():
-                        try:
-                            self._auto_compact_once(
-                                commit_delta_bytes=commit_delta_bytes
-                            )
-                        finally:
-                            self._maint_lock.release()
-
-                    try:
-                        self._maint_thread = threading.Thread(
-                            target=run, name=f"kudu-maint-{self.name}", daemon=True
-                        )
-                        self._maint_thread.start()
-                    except BaseException:
-                        # a failed start must not leave the table-wide
-                        # mutex held forever
-                        self._maint_lock.release()
-                        raise
+            if mode != "async":
+                run(st)
                 return
-            self._auto_compact_once(st, commit_delta_bytes=commit_delta_bytes)
+            import threading
+
+            try:
+                self._maint_thread = threading.Thread(
+                    target=run, name=f"kudu-maint-{self.name}", daemon=True
+                )
+                self._maint_thread.start()
+            except BaseException:
+                # a failed start must not leave the table-wide mutex
+                # held forever
+                self._maint_lock.release()
+                raise
         except Exception as e:
-            import logging
-
             logging.getLogger("kudu_spark.maintenance").warning(
                 "auto-compaction of %s skipped: %s", self.name, e
             )
 
     def _auto_compact_once(self, st: TableState | None = None,
                            commit_delta_bytes: int = 0) -> None:
-        """One pass of the auto-compaction policy: partitions whose
-        delta bytes exceed ``auto_compact_min_ratio`` of their total
+        """One pass of the auto-compaction policy, the one both the
+        write-path trigger and ``Engine.maintenance_sweep`` run (each
+        under the table's maintenance mutex). Partitions whose delta
+        bytes reach ``auto_compact_min_ratio`` of their total
         (≈ --tablet_delta_store_major_compact_min_ratio=0.1; lower here
         because our deltas are whole-row redactions, costlier to merge
         than Kudu's columnwise REDOs) are folded into fresh base files,
-        highest delta fraction first, within
-        ``auto_compact_budget_bytes`` of IO per trigger so one pass
-        never rewrites an unbounded amount — over repeated passes the
-        backlog amortizes. Skipped entirely while total delta bytes sit
-        under ``auto_compact_min_delta_bytes`` (merge-on-read is cheap
-        there)."""
-        try:
-            if st is None:
-                st = self.state()
-            props = st.props
-            ratio = float(props.get("auto_compact_min_ratio", self.AUTO_COMPACT_MIN_RATIO))
-            floor = int(props.get("auto_compact_min_delta_bytes",
-                                  self.AUTO_COMPACT_MIN_DELTA_BYTES))
-            budget = int(props.get("auto_compact_budget_bytes",
-                                   self.AUTO_COMPACT_BUDGET_BYTES))
-            # write-proportional: a commit that wrote W delta bytes may
-            # fold up to factor*W — big writes drain their own backlog
-            # instead of leaving dozens of fixed-budget sweeps behind
-            factor = int(props.get("auto_compact_write_factor",
-                                   self.AUTO_COMPACT_WRITE_FACTOR))
-            budget = max(budget, factor * int(commit_delta_bytes))
-            tot: dict = {}
-            dl: dict = {}
-            smalls: dict = {}
-            small_thresh = int(props.get("auto_compact_small_file_bytes", 32 << 20))
-            for f in st.files:
-                key = partition_key(f)
-                tot[key] = tot.get(key, 0) + f.bytes
-                if f.kind == "delta":
-                    dl[key] = dl.get(key, 0) + f.bytes
-                elif f.bytes < small_thresh:
-                    smalls[key] = smalls.get(key, 0) + 1
-            ranked = sorted(
-                (k for k in dl if dl[k] >= ratio * tot[k]),
-                key=lambda k: -(dl[k] / max(tot[k], 1)),
-            )
-            if sum(dl[k] for k in ranked) < floor:
-                ranked = []
-            # small-file bin-packing for append-heavy tables (Kudu's
-            # rowset merge compaction, compaction_policy.h — inserts
-            # make many small DiskRowSets that maintenance merges).
-            # Opt-in (`auto_compact_small_files=true`): a partition
-            # repacks once it holds >= min_small small base files, so
-            # each byte is rewritten at most once per min_small
-            # commits until its file outgrows the threshold — bounded
-            # write amplification, and the pk-bloom sidecar count
-            # (one per live file-commit) stays O(min_small) per
-            # partition instead of O(batches).
-            if str(props.get("auto_compact_small_files", "false")).lower() in (
-                "true", "1", "yes"
-            ):
-                min_small = int(props.get("auto_compact_min_small_files", 8))
-                have = set(ranked)
-                ranked += sorted(
-                    (k for k in smalls if smalls[k] >= min_small and k not in have),
-                    key=lambda k: -smalls[k],
-                )
-            if not ranked:
-                return
-            hot, spent = [], 0
-            for k in ranked:
-                if spent + tot[k] > budget and hot:
-                    break
-                hot.append(k)
-                spent += tot[k]
-            if hot:
-                self.compact(partitions=hot)
-            if props.get("pk_bloom_cols"):
-                # bound presence-probe work for append streams whose
-                # files outgrow small-file packing: consolidate the
-                # INDEX without touching data files
-                self.merge_presence_sidecars()
-        except Exception as e:
-            # the mutation already committed durably; a maintenance
-            # failure must not fail the write — log and let the next
-            # write retry (Kudu maintenance ops likewise log-and-requeue)
-            import logging
+        highest delta fraction first (rank_partitions), within
+        ``auto_compact_budget_bytes`` of IO — or AUTO_COMPACT_WRITE_FACTOR
+        × the triggering commit's delta bytes when larger, so big
+        writes drain their own backlog — so one pass never rewrites an
+        unbounded amount; over repeated passes the backlog amortizes.
+        No fold while those partitions' delta bytes sit under
+        ``auto_compact_min_delta_bytes`` (merge-on-read is cheap
+        there). Raises on failure: the sweep reports it, the write
+        path logs it."""
+        if st is None:
+            st = self.state()
+        props = st.props
+        ratio = float(props.get("auto_compact_min_ratio", self.AUTO_COMPACT_MIN_RATIO))
+        floor = int(props.get("auto_compact_min_delta_bytes",
+                              self.AUTO_COMPACT_MIN_DELTA_BYTES))
+        budget = max(int(props.get("auto_compact_budget_bytes",
+                                   self.AUTO_COMPACT_BUDGET_BYTES)),
+                     self.AUTO_COMPACT_WRITE_FACTOR * int(commit_delta_bytes))
 
-            logging.getLogger("kudu_spark.maintenance").warning(
-                "auto-compaction of %s skipped: %s", self.name, e
-            )
+        def fold(fs):
+            delta = sum(f.bytes for f in fs if f.kind == "delta")
+            return delta if delta >= ratio * sum(f.bytes for f in fs) else 0
 
-    def compact(self, small_file_bytes: int = 32 << 20, min_small_files: int = 4,
-                io_budget_bytes: int | None = None, partitions: list | None = None,
+        ranked, n = rank_partitions(st.files, fold, budget)
+        folding = sum(c[2] for c in ranked) >= floor
+        # small-file bin-packing for append-heavy tables (Kudu's
+        # rowset merge compaction, compaction_policy.h — inserts make
+        # many small DiskRowSets that maintenance merges). Opt-in
+        # (`auto_compact_small_files=true`): bounded write
+        # amplification, and the pk-bloom sidecar count (one per live
+        # file-commit) stays O(AUTO_COMPACT_MIN_SMALL_FILES) per
+        # partition instead of O(batches). Deltas keep compaction_plan's
+        # 4× weight over small-file bytes.
+        if str(props.get("auto_compact_small_files", "false")).lower() in (
+            "true", "1", "yes"
+        ):
+            def benefit(fs):
+                smalls = self._small_files(fs)
+                packed = (sum(f.bytes for f in smalls)
+                          if len(smalls) >= self.AUTO_COMPACT_MIN_SMALL_FILES else 0)
+                return (4 * fold(fs) if folding else 0) + packed
+
+            ranked, n = rank_partitions(st.files, benefit, budget)
+        elif not folding:
+            return
+        if not n:
+            return
+        self.compact(partitions=[c[0] for c in ranked[:n]])
+        if props.get("pk_bloom_cols"):
+            # bound presence-probe work for append streams whose files
+            # outgrow small-file packing: consolidate the INDEX without
+            # touching data files
+            self.merge_presence_sidecars()
+
+    def compact(self, io_budget_bytes: int | None = None, partitions: list | None = None,
                 full: bool = False, _attempts: int = 5) -> int | None:
         """Fold delta files into fresh base files and bin-pack small
         base files (≈ Kudu compaction: tablet/compaction.cc, policy
@@ -3587,7 +3571,7 @@ class Table:
         if full:
             chosen = {partition_key(f) for f in st.files}
         elif partitions is None:
-            plan = self.compaction_plan(small_file_bytes, min_small_files, io_budget_bytes)
+            plan = self.compaction_plan(io_budget_bytes)
             chosen = {c["partition"] for c in plan}
         else:
             chosen = {(tuple(p[0]), p[1]) for p in partitions}
@@ -3611,8 +3595,7 @@ class Table:
         # silently shadowing newer mutations — recompute instead
         return self._commit_revalidated(
             st, "compact", entries,
-            lambda a: self.compact(small_file_bytes, min_small_files,
-                                   io_budget_bytes, partitions, full=full,
+            lambda a: self.compact(io_budget_bytes, partitions, full=full,
                                    _attempts=a),
             removes=[f.path for f in rewrite], _attempts=_attempts,
         )

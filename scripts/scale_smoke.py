@@ -134,7 +134,7 @@ def main() -> None:
     # run until the ratio policy is satisfied, then scans are clean
     t0 = time.perf_counter()
     sweeps = 0
-    while sweeps < 64 and eng.run_maintenance().get("lineitem"):
+    while sweeps < 64 and eng.maintenance_sweep().get("lineitem"):
         sweeps += 1
     maintenance_drain_sec = round(time.perf_counter() - t0, 2)
     drained = stage()

@@ -939,15 +939,28 @@ def test_maintenance_sweep_reports_per_table_errors(engine, spark):
     good = engine.table("swgood")
     good.insert(rows(100, "a"))
     good.upsert(rows(50, "b"))
+    # a table whose compaction policy itself raises (malformed ratio)
+    # while it has a backlog to fold: a failed fold is an error too
+    engine.create_table("swfold", schema, pk=["k"])
+    engine.alter_table("swfold") \
+        .set_property("auto_compact_mode", "deferred") \
+        .set_property("auto_compact_min_ratio", "abc").apply()
+    fold = engine.table("swfold")
+    fold.insert(rows(100, "a"))
+    fold.upsert(rows(50, "b"))
     out = engine.maintenance_sweep()
-    assert set(out.pop("__errors__")) == {"swbad"}
-    assert out == {"swbad": False, "swgood": True}
+    assert set(out.pop("__errors__")) == {"swbad", "swfold"}
+    assert out == {"swbad": False, "swgood": True, "swfold": False}
     # the healthy table's backlog actually drained
     assert not any(f.kind == "delta" for f in engine.table("swgood").state().files)
     # a float-string age is user intent, not an error: parsed leniently
     engine.alter_table("swbad").set_property(
         "history_max_age_sec", "900.0").apply()
-    assert "__errors__" not in engine.maintenance_sweep()
+    engine.alter_table("swfold").set_property(
+        "auto_compact_min_ratio", "0.0001").set_property(
+        "auto_compact_min_delta_bytes", "1").apply()
+    out = engine.maintenance_sweep()
+    assert "__errors__" not in out and out["swfold"] is True
 
 
 def test_maintenance_daemon_counts_table_errors(engine, spark):

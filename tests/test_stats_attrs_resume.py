@@ -211,6 +211,16 @@ def test_cli_loadgen_and_compact(spark, tmp_path, capsys):
     assert cli.main(["--warehouse", wh, "compact", "lg"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert "compacted" in out
+    # maintenance: nothing left to do -> one sweep, no errors, exit 0
+    assert cli.main(["--warehouse", wh, "maintenance"]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out == {"sweeps": 1, "errors": {}}
+    # a table whose pass raises is printed and fails the command
+    Engine(spark, wh).alter_table("lg").set_property(
+        "history_max_age_sec", "soon").apply()
+    assert cli.main(["--warehouse", wh, "maintenance"]) == 1
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["sweeps"] == 1 and set(out["errors"]) == {"lg"}
 
 
 # -- catalog polish: rename / comments / table properties ---------------------

@@ -892,7 +892,7 @@ def test_recover_aborts_on_concurrent_auto_inc_ids(engine, spark):
 
 def test_deferred_maintenance_sweep(engine, spark):
     """auto_compact_mode='deferred': mutations never pay rewrite IO
-    inline; Engine.run_maintenance() drains the backlog (Kudu's
+    inline; Engine.maintenance_sweep() drains the backlog (Kudu's
     MaintenanceManager operating model)."""
     from kudu_spark.meta import read_log
 
@@ -905,12 +905,36 @@ def test_deferred_maintenance_sweep(engine, spark):
     t.upsert(spark.createDataFrame([(k, k + 1, "y") for k in range(400)], ddl))
     ops = [c["op"] for c in read_log(t.root)]
     assert "compact" not in ops, "deferred table compacted inline"
-    swept = engine.run_maintenance()
+    swept = engine.maintenance_sweep()
     assert swept["dm"] is True
     ops = [c["op"] for c in read_log(t.root)]
     assert "compact" in ops
     got = {r.key: r.int_val for r in t.scan().collect()}
     assert len(got) == 500 and got[3] == 4 and got[450] == 450
+
+
+def test_inline_fold_skips_while_maintenance_mutex_held(engine, spark):
+    """An inline fold skips a table whose maintenance mutex is held (a
+    daemon sweep or async fold in flight) instead of folding the same
+    partitions concurrently; the next write after release folds."""
+    from kudu_spark.meta import read_log
+
+    t = engine.create_table("im", SIMPLE, pk=["key"])
+    ddl = "key int, int_val int, string_val string"
+    t.insert(spark.createDataFrame([(k, k, "x") for k in range(500)], ddl))
+    engine.alter_table("im").set_property("auto_compact_min_delta_bytes", 1) \
+        .set_property("auto_compact_min_ratio", 0.0001).apply()
+    assert t._maint_lock.acquire(blocking=False)
+    try:
+        t.upsert(spark.createDataFrame([(k, k + 1, "y") for k in range(400)], ddl))
+        ops = [c["op"] for c in read_log(t.root)]
+        assert "compact" not in ops, "inline fold ran under a held mutex"
+    finally:
+        t._maint_lock.release()
+    t.upsert(spark.createDataFrame([(1, 7, "z")], ddl))
+    assert [c["op"] for c in read_log(t.root)][-1] == "compact"
+    got = {r.key: r.int_val for r in t.scan().collect()}
+    assert len(got) == 500 and got[1] == 7 and got[3] == 4
 
 
 def test_async_maintenance_drains_in_background(engine, spark):

@@ -1046,27 +1046,10 @@ class Engine:
                     rep["size_mismatch"].append(f.path)
             for rel in sorted({f.bloom for f in st.files if f.bloom}):
                 full = os.path.join(root, rel)
-                if rel.endswith(".pidx"):
-                    # read storage directly — a health check must not
-                    # trust the process-level sidecar-meta cache — and
-                    # verify the shard FILES against the meta's byte
-                    # count: a truncated/missing shard would otherwise
-                    # only surface as a loud probe-task failure later
-                    try:
-                        import json as _json
-
-                        smeta = _json.loads(self._env.read_bytes(
-                            os.path.join(full, presence.META_NAME)))
-                        have = sum(
-                            self._env.size(os.path.join(full, n))
-                            for n in self._env.listdir(full)
-                            if n.endswith(".i64")
-                        )
-                        if have != int(smeta.get("bytes", 0)):
-                            rep["bad_sidecars"].append(rel)
-                    except (OSError, ValueError):
-                        rep["bad_sidecars"].append(rel)
-                elif not self._env.exists(full):
+                # presence sidecars audit their shard bytes against the
+                # meta (presence.audit); legacy sidecars must exist
+                if not (presence.audit(full) if rel.endswith(presence.SUFFIX)
+                        else self._env.exists(full)):
                     rep["bad_sidecars"].append(rel)
             # orphans: never referenced by ANY commit (lost-race
             # debris). Seed with the LIVE file set: a hand-pruned log
@@ -1193,6 +1176,26 @@ def _bounds_overlap(lo1, hi1, lo2, hi2) -> bool:
     return starts_below(lo1, hi2) and starts_below(lo2, hi1)
 
 
+def check_property(key: str, value) -> None:
+    """Reject a malformed maintenance property when it is set, as Kudu
+    rejects bad extra-config values at ALTER time. The compaction
+    policy parses these on every fold, so a value it cannot parse
+    would commit and then stop every fold of the table."""
+    try:
+        if key == "auto_compact_min_ratio":
+            ok = 0.0 <= float(value) <= 1.0
+        elif key in ("auto_compact_min_delta_bytes", "auto_compact_budget_bytes"):
+            ok = int(value) >= 0
+        elif key == "auto_compact_mode":
+            ok = str(value).lower() in ("inline", "async", "deferred")
+        else:
+            return
+    except (TypeError, ValueError):
+        ok = False
+    if not ok:
+        raise KuduSparkError(f"illegal value for table property {key}: {value!r}")
+
+
 class Alterer:
     """Accumulates schema/partition changes; ``apply()`` is one atomic
     commit. Type/nullability changes are rejected like Kudu
@@ -1256,7 +1259,9 @@ class Alterer:
     def set_property(self, key: str, value) -> "Alterer":
         """Table-level extra config (AlterTable SET ..., client.h
         KuduTableAlterer::AlterExtraConfig); stored in commit props and
-        folded into TableState.props."""
+        folded into TableState.props. Maintenance properties are
+        checked here (check_property)."""
+        check_property(key, value)
         self._props[key] = value
         return self
 

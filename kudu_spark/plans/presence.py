@@ -17,8 +17,9 @@ and paid for it twice at scale, as measured in VERDICT r7:
      the JVM array limit near 1e9 keys).
 
 This module is the B-tree half, Spark-shaped, and it REPLACES the
-bloom: each base commit persists the sorted ``xxhash64`` of its rows'
-key tuple, sharded by ``hash % nshards`` into bounded files. A probe
+bloom: every commit, base or delta, persists the sorted ``xxhash64``
+of its rows' key tuple, sharded by ``hash % nshards`` into bounded
+files. A probe
 
   - computes the same hash JVM-side (``F.xxhash64`` over write-cast
     columns — identical expression at build and probe time; the
@@ -45,18 +46,26 @@ Shard counts are powers of two, so ``h % ns_small`` is a function of
 repartitioning the probe batch by the LARGEST sidecar's shard count
 co-locates each key with its shard in EVERY sidecar at once.
 
-The sidecar is a directory (``<seq>-<uuid>.pidx/``) holding up to TWO
-shard families — live keys and delete-tombstone keys:
+This module is the one place that knows the sidecar format and the
+rules built on it. ``Table`` only reads the files it hashes, builds
+the probe plan, commits and logs.
 
-  meta.json           {"cols": [...], "types": [...], "seq": Q,
-                       "nshards": S, "rows": N, "bytes": B,
+Format. A sidecar is a directory (``<seq>-<uuid>.pidx/``, see
+``SUFFIX``; any other ``bloom`` path on a FileEntry is a legacy
+sidecar, which probes decline) holding up to TWO shard families —
+live keys and delete-tombstone keys:
+
+  meta.json           {"version": 2, "cols": [...], "types": [...],
+                       "seq": Q, "nshards": S, "rows": N, "bytes": B,
                        "del_nshards": S', "del_rows": N',
                        "mixed": bool, "del_unindexed": bool}
                       — written LAST; its presence marks the sidecar
-                      complete. ``seq`` is the covered commit's
-                      manifest seq: probe answers resolve per key by
-                      the HIGHEST-seq hit (live hit → present, delete
-                      hit → absent), which is how the reference keeps
+                      complete. ``bytes`` is the total size of the
+                      shard files (fsck audits it). ``seq`` is the
+                      covered commit's manifest seq: probe answers
+                      resolve per key by the HIGHEST-seq hit (live hit
+                      → present, delete hit → absent; live wins a tie
+                      at one seq), which is how the reference keeps
                       presence exact through un-compacted deletes —
                       delete deltas are consulted with timestamps
                       (tablet/tablet.cc:116-124, tablet/delta_tracker.cc)
@@ -71,12 +80,33 @@ commit whose delete keys could NOT be indexed — the hashed tuple is
 not the FULL pk: outside it (delete tombstones only carry the PK) or
 a strict prefix of it (sibling rows share a prefix tuple, so one
 row's delete must not subtract it): probes degrade to superset, and
-exactness is declined honestly.
+exactness is declined honestly. Metas of the first format carried a
+``tombstones`` marker and no delete family, and sidecars without
+``seq`` predate seq stamping: probes decline on the first, answer a
+superset when the second sits beside a delete family, and merges
+skip both.
 
 ``cols``/``types`` stamp the hashed tuple (names AND declared types):
 probes decline on any mismatch, so ALTERing ``pk_bloom_cols`` or a
 key column's type can never turn old sidecars into false negatives
 (ADVICE r7, medium).
+
+Entry points ``Table`` calls:
+
+  - ``sidecar_name`` + ``build_commit_index``: one sidecar per commit
+    (``Table._attach_presence_index``);
+  - ``sync_seq``: re-stamp metas to the seqs a commit actually lands
+    at (``Table._commit``);
+  - ``resolve``: the probe plan — shard families, the hashed tuple
+    and exactness, or a decline reason (``Table._presence_lookup``);
+    ``total_bytes``, ``load_all_shards`` and ``present_udf`` run it;
+  - ``summary``: the ``presence_*`` keys of ``Table.statistics()``,
+    exactness being resolve()'s own verdict;
+  - ``merge_window`` + ``merge_indexes``: the size-tiered sidecar
+    merge (``Table.merge_presence_sidecars``);
+  - ``absorb_dying_deletes``: the delete-key hand-off of a partial
+    compaction (``Table.compact``);
+  - ``audit``: fsck's shard-bytes check (``Engine.fsck``).
 
 Scale: shards target ~512k keys (4 MiB); build cost is one pass over
 the commit's rows (small commits sort driver-side, large ones
@@ -91,12 +121,14 @@ shard-wise, never concentrated on the driver or in a plan.
 # inference for present_udf.
 import json
 import os
+import uuid
 
 import numpy as np
 
 TARGET_SHARD_KEYS = 1 << 19  # ~4 MiB of int64 per shard
 SMALL_BUILD_MAX = 2_000_000  # below this, sort driver-side (no shuffle)
 META_NAME = "meta.json"
+SUFFIX = ".pidx"  # sidecar directories end in this; anything else is legacy
 _VERSION = 2  # v2: seq-stamped metas + delete shard family
 
 # per-worker shard cache: (abs dir, shard) -> sorted int64 array,
@@ -109,8 +141,8 @@ _VERSION = 2  # v2: seq-stamped metas + delete shard family
 # spark.python.worker.reuse (default) this persists across tasks, so
 # steady-state probes re-read nothing.
 _SHARD_CACHE: dict[tuple[str, int], np.ndarray] = {}
-_SHARD_CACHE_BYTES = int(os.environ.get("KUDU_SPARK_PIDX_CACHE_BYTES", 512 << 20))
-_SHARD_CACHE_MAX_FDS = int(os.environ.get("KUDU_SPARK_PIDX_CACHE_FDS", 256))
+_SHARD_CACHE_BYTES = 512 << 20
+_SHARD_CACHE_MAX_FDS = 256
 
 
 def shards_for(rows: int) -> int:
@@ -139,25 +171,17 @@ def _write_shard(dir_abs: str, shard: int, arr: np.ndarray,
     return len(data)
 
 
-def _write_family_arrays(dir_abs: str, hv: np.ndarray, ns: int,
-                         prefix: str) -> int:
-    """Driver-side shard write of one family from an in-memory hash
-    array; returns bytes written."""
-    if not len(hv):
-        return 0
-    shard = hv % ns if ns > 1 else np.zeros(len(hv), dtype="int64")
-    total = 0
-    for s in np.unique(shard):
-        total += _write_shard(dir_abs, int(s), np.unique(hv[shard == s]), prefix)
-    return total
-
-
-def _write_family_distributed(hashes_df, ns: int, dir_abs: str,
-                              prefix: str) -> int:
-    """Executor-side shard build of one family: shard-shuffle the
-    hashes, each group task sorts + writes its own shard file to the
-    table root (the same shared-storage write contract as the parquet
-    data files); returns bytes written."""
+def _write_family(dir_abs: str, src, ns: int, prefix: str) -> int:
+    """Write one shard family and return its bytes. ``src`` is either
+    an in-memory int64 hash array (driver-side build: shard, sort and
+    write here) or a DataFrame with an ``h`` BIGINT column
+    (executor-side build: shard-shuffle the hashes and let each group
+    task sort and write its own shard file to the table root, the same
+    shared-storage write contract as the parquet data files)."""
+    if isinstance(src, np.ndarray):
+        shard = src % ns if ns > 1 else np.zeros(len(src), dtype="int64")
+        return sum(_write_shard(dir_abs, int(s), np.unique(src[shard == s]), prefix)
+                   for s in np.unique(shard))
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -168,7 +192,7 @@ def _write_family_distributed(hashes_df, ns: int, dir_abs: str,
         return pd.DataFrame({"s": [s], "b": [n]})
 
     got = (
-        hashes_df.select("h", F.pmod(F.col("h"), F.lit(ns)).alias("s"))
+        src.select("h", F.pmod(F.col("h"), F.lit(ns)).alias("s"))
         .groupBy("s")
         .applyInPandas(write_group, schema="s int, b long")
         .collect()
@@ -176,97 +200,81 @@ def _write_family_distributed(hashes_df, ns: int, dir_abs: str,
     return int(sum(r["b"] for r in got))
 
 
-def build_index(hashes_df, rows: int, dir_abs: str,
-                cols: list[str], types: list[str],
-                seq: int = 0) -> dict | None:
-    """Build a live-only sidecar directory from a single-column
-    (``h`` BIGINT) DataFrame of key hashes. Returns the meta dict, or
-    None on failure (callers log and fall back — a table without
-    sidecars just loses the O(batch) probe, never correctness)."""
+def _write_meta(dir_abs: str, meta: dict) -> dict:
+    """Publish a sidecar's meta.json. It lands last: a crash mid-build
+    leaves no meta and the sidecar reads as absent (probes decline,
+    vacuum collects it)."""
     from kudu_spark.fs import env_for_root
 
-    env = env_for_root(dir_abs)
-    ns = shards_for(rows)
-    env.makedirs(dir_abs)
-    meta = {"version": _VERSION, "cols": list(cols), "types": list(types),
-            "seq": int(seq), "nshards": ns, "rows": int(rows), "bytes": 0}
-    # executor-side builds need a filesystem every executor can write
-    # (the shared-storage contract); driver-local envs (memory://)
-    # build driver-side regardless of size
-    if rows <= SMALL_BUILD_MAX or not env.distributed:
-        hv = hashes_df.toPandas()["h"].to_numpy(dtype="int64")
-        meta["bytes"] = _write_family_arrays(dir_abs, hv, ns, "shard")
-    else:
-        meta["bytes"] = _write_family_distributed(hashes_df, ns, dir_abs, "shard")
-    # meta lands last: a crash mid-build leaves no meta.json and the
-    # sidecar reads as absent (probe declines, vacuum collects it)
-    env.write_bytes(os.path.join(dir_abs, META_NAME), json.dumps(meta).encode())
+    env_for_root(dir_abs).write_bytes(os.path.join(dir_abs, META_NAME),
+                                      json.dumps(meta).encode())
+    _META_CACHE[dir_abs] = meta
     return meta
+
+
+def sidecar_name(seq: int) -> str:
+    """A fresh sidecar directory name for a commit at ``seq``."""
+    return f"{int(seq):012d}-{uuid.uuid4().hex}{SUFFIX}"
 
 
 def build_commit_index(hd_df, total_rows: int, dir_abs: str,
                        cols: list[str], types: list[str], seq: int,
-                       del_indexed: bool = True) -> dict | None:
-    """Build one commit's sidecar from a two-column DataFrame
-    (``h`` BIGINT key hash, ``d`` BOOLEAN is-delete-tombstone): live
-    keys land in the ``shard-*`` family, delete keys in ``del-*``.
-    A probe hitting the delete family at this commit's ``seq`` answers
-    ABSENT unless a higher-seq live hit exists — the subtraction that
-    keeps presence exact through un-compacted DELETEs (reference:
-    delete deltas consulted with timestamps, tablet/tablet.cc:116-124).
+                       del_indexed: bool = True) -> dict:
+    """Build one commit's sidecar and return its meta. ``hd_df`` holds
+    ``h`` BIGINT (the key hash) and, when the commit may hold delete
+    tombstones, ``d`` BOOLEAN (is-delete). Without ``d`` the commit is
+    all-live: nothing reads ``__deleted`` and no count runs. Live keys
+    land in the ``shard-*`` family, delete keys in ``del-*``. A probe
+    hitting the delete family at this commit's ``seq`` answers ABSENT
+    unless a higher-seq live hit exists — the subtraction that keeps
+    presence exact through un-compacted DELETEs (reference: delete
+    deltas consulted with timestamps, tablet/tablet.cc:116-124).
 
-    ``del_indexed=False`` (the hashed tuple reaches outside the PK, so
-    delete tombstones can't be hashed): delete keys are NOT indexed;
+    ``del_indexed=False`` (the hashed tuple is not the full PK, so
+    delete keys can't be subtracted): delete keys are NOT indexed;
     the meta records ``del_unindexed`` and probes degrade honestly to
     superset. A commit with both live and delete rows is marked
-    ``mixed`` (within-commit ordering unknown → live-wins superset)."""
+    ``mixed`` (within-commit ordering unknown → live-wins superset).
+
+    Small commits sort driver-side; above SMALL_BUILD_MAX rows on a
+    filesystem every executor can write, the shards are written by
+    executors (driver-local envs such as memory:// always build
+    driver-side)."""
     from pyspark.sql import functions as F
 
     from kudu_spark.fs import env_for_root
 
     env = env_for_root(dir_abs)
     env.makedirs(dir_abs)
-    meta = {"version": _VERSION, "cols": list(cols), "types": list(types),
-            "seq": int(seq), "nshards": 1, "rows": 0, "bytes": 0}
+    live_only = "d" not in hd_df.columns
     if total_rows <= SMALL_BUILD_MAX or not env.distributed:
         pdf = hd_df.toPandas()
-        d = pdf["d"].to_numpy(dtype=bool)
-        live = pdf["h"].to_numpy(dtype="int64")[~d]
-        dele = pdf["h"].to_numpy(dtype="int64")[d]
-        ns = shards_for(len(live))
-        meta.update(nshards=ns, rows=int(len(live)))
-        total = _write_family_arrays(dir_abs, live, ns, "shard")
-        if len(dele):
-            if del_indexed:
-                ns_d = shards_for(len(dele))
-                total += _write_family_arrays(dir_abs, dele, ns_d, "del")
-                meta.update(del_nshards=ns_d, del_rows=int(len(dele)))
-            else:
-                meta.update(del_unindexed=True, del_rows=int(len(dele)))
-            if len(live):
-                meta["mixed"] = True
-        meta["bytes"] = total
+        h = pdf["h"].to_numpy(dtype="int64")
+        d = np.zeros(len(h), dtype=bool) if live_only else pdf["d"].to_numpy(dtype=bool)
+        live, dele = h[~d], h[d]
+        n_live, n_del = len(live), len(dele)
+    elif live_only:
+        live, dele = hd_df, None
+        n_live, n_del = int(total_rows), 0
     else:
+        live, dele = hd_df.where(~F.col("d")), hd_df.where(F.col("d"))
         counts = {bool(r["d"]): int(r["cnt"]) for r in
                   hd_df.groupBy("d").agg(F.count(F.lit(1)).alias("cnt")).collect()}
         n_live, n_del = counts.get(False, 0), counts.get(True, 0)
-        ns = shards_for(n_live)
-        meta.update(nshards=ns, rows=n_live)
-        total = _write_family_distributed(
-            hd_df.where(~F.col("d")), ns, dir_abs, "shard")
-        if n_del:
-            if del_indexed:
-                ns_d = shards_for(n_del)
-                total += _write_family_distributed(
-                    hd_df.where(F.col("d")), ns_d, dir_abs, "del")
-                meta.update(del_nshards=ns_d, del_rows=n_del)
-            else:
-                meta.update(del_unindexed=True, del_rows=n_del)
-            if n_live:
-                meta["mixed"] = True
-        meta["bytes"] = total
-    env.write_bytes(os.path.join(dir_abs, META_NAME), json.dumps(meta).encode())
-    return meta
+    ns = shards_for(n_live)
+    meta = {"version": _VERSION, "cols": list(cols), "types": list(types),
+            "seq": int(seq), "nshards": ns, "rows": int(n_live),
+            "bytes": _write_family(dir_abs, live, ns, "shard")}
+    if n_del:
+        if del_indexed:
+            ns_d = shards_for(n_del)
+            meta["bytes"] += _write_family(dir_abs, dele, ns_d, "del")
+            meta.update(del_nshards=ns_d, del_rows=int(n_del))
+        else:
+            meta.update(del_unindexed=True, del_rows=int(n_del))
+        if n_live:
+            meta["mixed"] = True
+    return _write_meta(dir_abs, meta)
 
 
 _META_CACHE: dict[str, dict] = {}
@@ -335,20 +343,12 @@ def _load_shard(dir_abs: str, shard: int, prefix: str = "shard") -> np.ndarray:
 
 
 def _norm_specs(specs):
-    """Normalize + order probe specs. Accepts legacy 2-tuples
-    (dir, nshards) = a live family at seq 0, or full 4-tuples
-    (dir, nshards, seq, live: bool). Returns the resolution order:
+    """Probe specs (dir, nshards, seq, live: bool) in resolution order:
     seq DESCENDING (newest commit answers first), live-before-delete
     on seq ties (a key both live and deleted at one seq — a mixed
     commit — reads live: superset-safe, never a false negative)."""
-    full = []
-    for t in specs:
-        if len(t) == 2:
-            full.append((t[0], int(t[1]), 0, True))
-        else:
-            full.append((t[0], int(t[1]), int(t[2]), bool(t[3])))
-    full.sort(key=lambda t: (-t[2], not t[3]))
-    return full
+    return sorted(((t[0], int(t[1]), int(t[2]), bool(t[3])) for t in specs),
+                  key=lambda t: (-t[2], not t[3]))
 
 
 def probe_hashes(specs, hv: np.ndarray) -> np.ndarray:
@@ -408,8 +408,8 @@ def load_all_shards(specs) -> dict:
 
 def present_udf(specs: tuple, preload: dict | None = None):
     """Arrow-batched membership test against the sidecar families in
-    ``specs`` (legacy (dir, nshards) live pairs or full
-    (dir, nshards, seq, live) tuples — see _norm_specs). The closure
+    ``specs`` ((dir, nshards, seq, live) tuples — see _norm_specs,
+    as resolve() returns them). The closure
     carries only paths and ints — the index bytes load executor-side —
     except for driver-local Envs, whose shards ship via ``preload``
     (load_all_shards)."""
@@ -496,44 +496,54 @@ def _replay_shard(s: int, srcs: list, ns_m: int):
     return live, dels
 
 
-def absorb_delete_families(dir_abs: str, src_dirs: list,
-                           unindexed_rows: int = 0) -> dict | None:
-    """Fold the delete families of DYING sidecars into ``dir_abs``'s
-    own delete family — the compaction hand-off that keeps probes
-    exact through PARTIAL compactions: when a compaction folds delete
-    deltas and removes every file referencing their sidecar, the
-    subtraction those delete keys provided would vanish while OLDER
-    commit-wide live sidecars (with files in untouched partitions)
-    still list the deleted keys — a false "present" claimed exact. The
-    new compacted sidecar inherits the delete keys instead (its seq is
-    the newest, so the subtraction keeps applying to every older
-    sidecar; keys re-inserted before the compaction sit in its live
-    family and win the live-first tie).
+def absorb_dying_deletes(root: str, files: list, removed: list,
+                         new_entries: list) -> dict | None:
+    """Fold the delete families of sidecars DYING in a compaction (every
+    file referencing them is in ``removed``) into the sidecar of
+    ``new_entries`` — the hand-off that keeps probes exact through
+    PARTIAL compactions: when a compaction folds delete deltas and
+    removes every file referencing their sidecar, the subtraction
+    those delete keys provided would vanish while OLDER commit-wide
+    live sidecars (with files in untouched partitions) still list the
+    deleted keys — a false "present" claimed exact. The new compacted
+    sidecar inherits the delete keys instead (its seq is the newest,
+    so the subtraction keeps applying to every older sidecar; keys
+    re-inserted before the compaction sit in its live family and win
+    the live-first tie).
 
-    ``unindexed_rows`` > 0 marks the output ``del_unindexed`` (a dying
-    sidecar carried deletes that were never indexed — prefix-tuple
-    tables): the overcount can't be subtracted, so probes degrade
-    honestly to superset instead. Runs driver-side pre-publish (delete
-    families are delta-sized); rewrites the del family and meta in
-    place — the sidecar is unreferenced until its commit lands."""
+    A dying sidecar whose delete keys were never indexed (prefix-tuple
+    tables, legacy markers) can't hand keys over: the new sidecar is
+    marked ``del_unindexed`` and probes degrade honestly to superset.
+    A FULL compaction (no other sidecar survives) hands nothing over —
+    nothing older can overcount — which is also what finally clears an
+    inherited ``del_unindexed``. Runs driver-side before the commit
+    publishes (delete families are delta-sized) and rewrites the del
+    family and meta in place — the sidecar is unreferenced until its
+    commit lands. Returns the new meta, or None when nothing changed."""
     from kudu_spark.fs import env_for_root
 
+    new_rel = next((e.bloom for e in new_entries
+                    if e.bloom and e.bloom.endswith(SUFFIX)), None)
+    removed_paths = {f.path for f in removed}
+    survivors = {f.bloom for f in files if f.bloom and f.path not in removed_paths}
+    if new_rel is None or not survivors:
+        return None
+    retained, unindexed_rows = [], 0
+    for rel in sorted({f.bloom for f in removed if f.bloom} - survivors):
+        meta = read_meta(os.path.join(root, rel)) if rel.endswith(SUFFIX) else None
+        if meta is None:
+            continue  # not a presence index, or unreadable: probes decline on it
+        if meta.get("tombstones") or meta.get("del_unindexed"):
+            unindexed_rows += int(meta.get("del_rows", 0)) or 1
+        elif int(meta.get("del_rows", 0)):
+            retained.append(os.path.join(root, rel))
+    dir_abs = os.path.join(root, new_rel)
     meta = read_meta(dir_abs)
-    if meta is None:
+    if meta is None or not (retained or unindexed_rows):
         return None
     env = env_for_root(dir_abs)
     parts = []
-    own_ns = int(meta.get("del_nshards", 0))
-    for s in range(own_ns):
-        try:
-            parts.append(np.asarray(env.read_array(
-                _shard_path(dir_abs, s, "del"))))
-        except FileNotFoundError:
-            pass
-    for d in src_dirs:
-        m = read_meta(d)
-        if m is None:
-            continue
+    for d, m in [(dir_abs, meta)] + [(d, read_meta(d) or {}) for d in retained]:
         for s in range(int(m.get("del_nshards", 0))):
             try:
                 parts.append(np.asarray(env_for_root(d).read_array(
@@ -552,20 +562,15 @@ def absorb_delete_families(dir_abs: str, src_dirs: list,
     meta["bytes"] = int(meta.get("bytes", 0)) - old_bytes
     if len(dels):
         ns_d = shards_for(len(dels))
-        written = _write_family_arrays(dir_abs, dels, ns_d, "del")
-        meta["del_nshards"] = ns_d
-        meta["del_rows"] = int(len(dels))
-        meta["bytes"] += written
+        meta["bytes"] += _write_family(dir_abs, dels, ns_d, "del")
+        meta.update(del_nshards=ns_d, del_rows=int(len(dels)))
     else:
         meta.pop("del_nshards", None)
         meta.pop("del_rows", None)
     if unindexed_rows:
         meta["del_unindexed"] = True
         meta["del_rows"] = int(meta.get("del_rows", 0)) + int(unindexed_rows)
-    env.write_bytes(os.path.join(dir_abs, META_NAME),
-                    json.dumps(meta).encode())
-    _META_CACHE[dir_abs] = meta
-    return meta
+    return _write_meta(dir_abs, meta)
 
 
 def merge_indexes(src_dirs: list, out_dir: str, spark=None,
@@ -653,8 +658,7 @@ def merge_indexes(src_dirs: list, out_dir: str, spark=None,
     if any(m.get("mixed") for m in metas):
         # a mixed source's within-commit ambiguity survives the merge
         meta["mixed"] = True
-    env.write_bytes(os.path.join(out_dir, META_NAME), json.dumps(meta).encode())
-    return meta
+    return _write_meta(out_dir, meta)
 
 
 def total_bytes(specs) -> int:
@@ -663,3 +667,200 @@ def total_bytes(specs) -> int:
         meta = read_meta(dir_abs)
         out += int(meta.get("bytes", 0)) if meta else 0
     return out
+
+
+# -- what the table asks of its live sidecars ---------------------------------
+#
+# Spark-free: each answer comes from the live FileEntry list (the
+# ``bloom`` field names a file's sidecar, relative to the table root)
+# and the sidecar metas.
+
+# more live sidecars than this and the per-key probe work (one binary
+# search per sidecar) stops being cheap; sidecar merging and
+# compaction keep the count far below it in steady state
+MAX_SIDECARS = 64
+
+
+def resolve(root: str, files: list, schema, cols: list[str] | None = None,
+            prefix_ok: bool = False):
+    """How the live sidecars answer a key probe over ``cols``: returns
+    ``(specs, probe_cols, exact)`` or, when they cannot answer, a str
+    decline reason. ``specs`` are the (dir, nshards, seq, live) shard
+    families to probe (probe_hashes resolves them newest-first);
+    ``probe_cols`` is the hashed tuple the sidecars record — never the
+    CURRENT pk_bloom_cols property, so an ALTER or a type change
+    declines instead of fabricating false negatives. ``cols=None``
+    asks about that tuple itself.
+
+    ``exact`` is False when answers are a superset of the live set:
+    unindexed delete keys, a mixed live+delete commit, seq-less
+    sidecars alongside delete families, a hashed tuple reaching
+    outside the PK on a table with delta commits (an upsert can retire
+    a tuple value an older sidecar still lists), or — with
+    ``prefix_ok`` — a sidecar tuple that is a proper prefix of
+    ``cols``. Superset answers still have NO false negatives."""
+    from kudu_spark.errors import SchemaError
+
+    if not files:
+        return [], list(cols or []), True  # empty table: nothing present
+    if any(not f.bloom for f in files):
+        return "files without sidecars"
+    rels = sorted({f.bloom for f in files})
+    if len(rels) > MAX_SIDECARS:
+        return f"{len(rels)} sidecars exceed cap"
+    specs, hashed = [], None
+    superset = seqless = False
+    for rel in rels:
+        if not rel.endswith(SUFFIX):
+            return f"legacy sidecar format: {rel}"
+        full = os.path.join(root, rel)
+        meta = read_meta(full)
+        if meta is None:
+            return f"unreadable sidecar meta: {rel}"
+        if hashed is None:
+            hashed = (list(meta["cols"]), list(meta["types"]))
+        elif hashed != (list(meta["cols"]), list(meta["types"])):
+            return "sidecars hash different column tuples"
+        if meta.get("tombstones"):
+            # pre-v2 meta-only marker: NOT provably delete-only, so the
+            # live union could read a covered live key as absent
+            return f"legacy tombstone marker {rel}: compact to rebuild"
+        seqless |= meta.get("seq") is None
+        seq = int(meta.get("seq") or 0)
+        if int(meta.get("rows", 0)):
+            specs.append((full, int(meta["nshards"]), seq, True))
+        if int(meta.get("del_rows", 0)) and not meta.get("del_unindexed"):
+            specs.append((full, int(meta["del_nshards"]), seq, False))
+        superset |= bool(meta.get("del_unindexed") or meta.get("mixed"))
+    if seqless and any(not t[3] for t in specs):
+        # delete subtraction needs a total seq order: fall back to the
+        # plain live union
+        specs = [t for t in specs if t[3]]
+        superset = True
+    probe_cols, probe_types = hashed
+    exact = not (superset or (not set(probe_cols) <= set(schema.pk)
+                              and any(f.kind == "delta" for f in files)))
+    if not specs:
+        return [], probe_cols, exact  # pure-delete history: nothing present
+    try:
+        if [schema.col(c).type for c in probe_cols] != probe_types:
+            return "sidecar column types drifted"
+    except SchemaError:
+        return "sidecar column dropped from schema"
+    cols = probe_cols if cols is None else list(cols)
+    if probe_cols == cols:
+        return specs, probe_cols, exact
+    if prefix_ok and cols[: len(probe_cols)] == probe_cols:
+        return specs, probe_cols, False
+    return f"sidecar tuple {probe_cols} does not serve cols {cols}"
+
+
+def summary(root: str, files: list, schema) -> dict:
+    """The presence keys of Table.statistics(): live sidecar count and
+    index bytes, the fraction of live files a sidecar covers (below
+    1.0 the probe is off), and whether the probe answers its own tuple
+    exactly — resolve()'s own verdict, so the two cannot disagree."""
+    rels = sorted({f.bloom for f in files if f.bloom})
+    r = resolve(root, files, schema)
+    return {
+        "presence_sidecars": len(rels),
+        "presence_bytes": sum(
+            int((read_meta(os.path.join(root, rel)) or {}).get("bytes", 0))
+            for rel in rels if rel.endswith(SUFFIX)),
+        "presence_coverage": (sum(1 for f in files if f.bloom) / len(files)
+                              if files else 1.0),
+        "presence_exact": not isinstance(r, str) and r[2],
+    }
+
+
+def merge_window(root: str, files: list, max_live: int):
+    """The sidecars Table.merge_presence_sidecars folds when more than
+    ``max_live`` are live: ``(rels ascending by seq, drop_deletes)``,
+    or None. The window must be CONTIGUOUS in commit seq — no other
+    live sidecar's seq inside it — because merge_indexes REPLAYS
+    live/delete keys in seq order; a window that skipped an
+    interleaved delete commit would revive its deleted keys with a
+    higher attributed seq. Sidecars with unindexed delete keys or no
+    seq cannot be replayed and split the runs. Within that the pick is
+    size-tiered: the cheapest window that restores the cap, extended
+    while the next neighbor is no bigger than what the merge already
+    folds (bounded write amplification, log-many rewrites per key).
+    ``drop_deletes`` is True when the window covers the oldest live
+    sidecar: nothing older is left to subtract from.
+
+    Declines while any live file lacks a sidecar: a bloom-less commit
+    (failed build, or shed by fsck --repair) could sit seq-wise INSIDE
+    the window without being replayed, and its deletes would later
+    read 'present' with exact=True. Probes decline there anyway;
+    compaction restores coverage and re-enables merging."""
+    if any(not (f.bloom and f.bloom.endswith(SUFFIX)) for f in files):
+        return None
+    items = []  # (seq, bytes, rel, mergeable)
+    for rel in dict.fromkeys(f.bloom for f in files):
+        meta = read_meta(os.path.join(root, rel))
+        if meta is None:
+            return None  # unreadable sidecar: probes decline anyway
+        items.append((int(meta.get("seq", -1)), int(meta.get("bytes", 0)), rel,
+                      not (meta.get("tombstones") or meta.get("del_unindexed")
+                           or meta.get("seq") is None)))
+    if len(items) <= max_live:
+        return None
+    items.sort(key=lambda x: x[0])
+    runs: list[list] = [[]]
+    for it in items:
+        if it[3]:
+            runs[-1].append(it)
+        else:
+            runs.append([])
+    need = len(items) - max_live + 1
+    best = None
+    for run in (r for r in runs if len(r) >= 2):
+        length = min(need, len(run))
+        for i0 in range(len(run) - length + 1):
+            b = sum(x[1] for x in run[i0:i0 + length])
+            j = i0 + length
+            while j < len(run) and run[j][1] <= b:
+                b += run[j][1]
+                j += 1
+            key = (-(j - i0), b)  # restore the cap first, then cheap
+            if best is None or key < best[0]:
+                best = (key, run[i0:j])
+    if best is None:
+        return None  # nothing contiguous to merge
+    pick = best[1]
+    return [x[2] for x in pick], pick[0][0] == items[0][0]
+
+
+def sync_seq(root: str, entries: list) -> None:
+    """Re-stamp each sidecar's meta ``seq`` to the max seq of the
+    ``entries`` it covers, before a commit publishes them: a commit
+    retry bumps entry seqs, and a STALE meta seq would misorder the
+    probe's delete subtraction against commits that landed in between.
+    Race-free — nothing references the sidecar until the commit lands.
+    No-op (one cached meta read) when they already agree."""
+    groups: dict[str, int] = {}
+    for e in entries:
+        if e.bloom and e.bloom.endswith(SUFFIX):
+            groups[e.bloom] = max(groups.get(e.bloom, 0), e.seq)
+    for rel, seq in groups.items():
+        d = os.path.join(root, rel)
+        meta = read_meta(d)
+        if meta is not None and int(meta.get("seq", -1)) != seq:
+            _write_meta(d, dict(meta, seq=seq))
+
+
+def audit(dir_abs: str) -> bool:
+    """fsck's sidecar check: the meta reads from storage — not the
+    process cache — and the shard files hold exactly the bytes it
+    records. A truncated or missing shard would otherwise surface only
+    as a loud probe-task failure later."""
+    from kudu_spark.fs import env_for_root
+
+    env = env_for_root(dir_abs)
+    try:
+        meta = json.loads(env.read_bytes(os.path.join(dir_abs, META_NAME)))
+        have = sum(env.size(os.path.join(dir_abs, n))
+                   for n in env.listdir(dir_abs) if n.endswith(".i64"))
+    except (OSError, ValueError):
+        return False
+    return have == int(meta.get("bytes", 0))

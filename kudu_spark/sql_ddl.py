@@ -433,6 +433,10 @@ def _run_create(engine: "Engine", text: str):
                "encoding": c["encoding"], "compression": c["compression"],
                "block_size": c["block_size"]} for c in cols]
     defaults = {c["name"]: c["default"] for c in cols if c["default"] is not None}
+    from kudu_spark.engine import check_property
+
+    for k, v in props.items():
+        check_property(k, v)  # before the table exists: a bad value creates nothing
     t = engine.create_table(
         name, schema, pk=pk,
         hash_partitions=hash_parts or None,

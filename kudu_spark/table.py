@@ -60,7 +60,7 @@ from kudu_spark.meta import (
     replay,
     version_at_timestamp,
 )
-from kudu_spark.plans import keyhash
+from kudu_spark.plans import keyhash, presence
 
 SEQ_COL = "__seq"
 DEL_COL = "__deleted"
@@ -2406,40 +2406,28 @@ class Table:
         without a sidecar disable the probe for every later reader
         (callers fall back to a join against the scan), so the decline
         is logged at warning and surfaced via statistics()."""
-        from kudu_spark.plans import presence
-
         cols = [c.strip() for c in str(st.props.get("pk_bloom_cols", "")).split(",")
                 if c.strip()]
         if not entries or not cols:
             return
         try:
-            types = [st.schema.col(c).type for c in cols]
-            total = sum(e.rows for e in entries)
-            seq = max(e.seq for e in entries)
-            dirname = f"{entries[0].seq:012d}-{uuid.uuid4().hex}.pidx"
-            rel = os.path.join(DATA_DIR, dirname)
+            rel = os.path.join(DATA_DIR, presence.sidecar_name(entries[0].seq))
             read = self.spark.read.parquet(
                 *[self._data_path(e.path) for e in entries])
-            h = F.xxhash64(*[F.col(c) for c in cols]).alias("h")
+            hd = [F.xxhash64(*[F.col(c) for c in cols]).alias("h")]
             if tombstones:
-                hd = read.select(
-                    h, F.coalesce(F.col(DEL_COL), F.lit(False)).alias("d"))
-                # delete keys are only subtractable when the hashed
-                # tuple is the FULL pk (set-equal; order is free): a
-                # strict PK-prefix tuple is shared by sibling rows, so
-                # deleting one row must NOT subtract the tuple — those
-                # commits record del_unindexed and probe as supersets
-                meta = presence.build_commit_index(
-                    hd, total, os.path.join(self.root, rel), cols, types,
-                    seq, del_indexed=set(cols) == set(st.schema.pk),
-                )
-            else:
-                meta = presence.build_index(
-                    read.select(h), total, os.path.join(self.root, rel),
-                    cols, types, seq,
-                )
-            if meta is None:
-                raise KuduSparkError("presence.build_index returned None")
+                hd.append(F.coalesce(F.col(DEL_COL), F.lit(False)).alias("d"))
+            # delete keys are only subtractable when the hashed tuple is
+            # the FULL pk (set-equal; order is free): a strict PK-prefix
+            # tuple is shared by sibling rows, so deleting one row must
+            # NOT subtract the tuple
+            presence.build_commit_index(
+                read.select(*hd), sum(e.rows for e in entries),
+                os.path.join(self.root, rel), cols,
+                [st.schema.col(c).type for c in cols],
+                max(e.seq for e in entries),
+                del_indexed=set(cols) == set(st.schema.pk),
+            )
             for e in entries:
                 e.bloom = rel
         except Exception as ex:
@@ -2455,11 +2443,6 @@ class Table:
                 entries[0].seq, ex,
             )
 
-    # more live presence sidecars than this and the per-key probe work
-    # (one binary search per sidecar) stops being cheap; sidecar
-    # merging + compaction keep the count far below it in steady state
-    PK_BLOOM_MAX_EXPRS = 64
-
     # live sidecars above this trigger a size-tiered merge (metadata +
     # sidecar IO only — data files are NOT rewritten), so probe cost
     # stays O(1) sidecars even for append streams whose data files are
@@ -2471,92 +2454,25 @@ class Table:
     def merge_presence_sidecars(self, max_live: int | None = None,
                                 _attempts: int = 3) -> int | None:
         """Consolidate presence-index sidecars when more than
-        ``max_live`` are live (prop ``pidx_merge_max_live``, default
-        PIDX_MERGE_MAX_LIVE). Kudu bounds per-key probe work by
-        merging rowsets (compaction_policy.h); data-file rewrites are
-        expensive, but the INDEX alone can consolidate cheaply — one
-        commit re-points the covered files at the merged sidecar
-        (seq preserved: restamp would reorder merge-on-read).
-
-        The merge window must be CONTIGUOUS in commit seq — no other
-        live sidecar's seq inside it — because the merge REPLAYS
-        live/delete keys in seq order (presence.merge_indexes); a
-        window that skipped an interleaved delete commit would revive
-        its deleted keys with a higher attributed seq. Within that
-        constraint the pick stays size-tiered: the cheapest window
-        that restores the cap, extended while the next neighbor is no
-        bigger than what the merge already folds (bounded write
-        amplification, log-many rewrites per key). Returns the new
-        version, or None if nothing merged."""
-        from kudu_spark.plans import presence
-
+        ``max_live`` (default PIDX_MERGE_MAX_LIVE) are live. Kudu
+        bounds per-key probe work by merging rowsets
+        (compaction_policy.h); data-file rewrites are expensive, but
+        the INDEX alone can consolidate cheaply — one commit re-points
+        the covered files at the merged sidecar (seq preserved:
+        restamp would reorder merge-on-read). presence.merge_window
+        picks the seq-contiguous, size-tiered window and
+        presence.merge_indexes replays it. Returns the new version, or
+        None if nothing merged."""
         st = self.state()
-        maxc = int(st.props.get("pidx_merge_max_live", self.PIDX_MERGE_MAX_LIVE)
-                   if max_live is None else max_live)
-        groups: dict[str, list[FileEntry]] = {}
-        for f in st.files:
-            if f.bloom and f.bloom.endswith(".pidx"):
-                groups.setdefault(f.bloom, []).append(f)
-        if groups and any(
-            not (f.bloom and f.bloom.endswith(".pidx")) for f in st.files
-        ):
-            # incomplete sidecar coverage: a bloom-less commit (failed
-            # presence build, or shed by fsck --repair) could sit
-            # seq-wise INSIDE any merge window without being replayed —
-            # if it held deletes, the merged sidecar (stamped with the
-            # window's max seq) would later answer those keys 'present'
-            # with exact=True. Probes already decline while coverage
-            # < 1.0, so declining the merge costs nothing; compaction
-            # restores coverage and re-enables merging.
+        window = presence.merge_window(
+            self.root, st.files,
+            self.PIDX_MERGE_MAX_LIVE if max_live is None else max_live)
+        if window is None:
             return None
-        items = []  # (seq, bytes, rel, ents, mergeable), ascending seq
-        for rel, ents in groups.items():
-            meta = presence.read_meta(os.path.join(self.root, rel))
-            if meta is None:
-                return None  # unreadable sidecar: probes decline anyway
-            mergeable = not (meta.get("tombstones") or meta.get("del_unindexed")
-                             or meta.get("seq") is None)
-            items.append((int(meta.get("seq", -1)), int(meta.get("bytes", 0)),
-                          rel, ents, mergeable))
-        if len(items) <= maxc:
-            return None
-        items.sort(key=lambda x: x[0])
-        runs: list[list] = []
-        cur: list = []
-        for it in items:
-            if it[4]:
-                cur.append(it)
-            else:
-                if len(cur) >= 2:
-                    runs.append(cur)
-                cur = []
-        if len(cur) >= 2:
-            runs.append(cur)
-        if not runs:
-            return None  # nothing contiguous to merge
-        need = len(items) - maxc + 1
-        best = None
-        for run in runs:
-            length = min(need, len(run))
-            for i0 in range(len(run) - length + 1):
-                w = run[i0:i0 + length]
-                b = sum(x[1] for x in w)
-                j = i0 + length
-                while j < len(run) and run[j][1] <= b:
-                    b += run[j][1]
-                    j += 1
-                w = run[i0:j]
-                key = (-len(w), b)  # restore the cap first, then cheap
-                if best is None or key < best[0]:
-                    best = (key, w)
-        pick = best[1]
-        # the window covering the globally-oldest sidecar has nothing
-        # older left to subtract from: drop the merged delete family
-        drop_deletes = pick[0][0] == items[0][0]
-        new_dir = f"{seq_for(st.version + 1):012d}-{uuid.uuid4().hex}.pidx"
-        new_rel = os.path.join(DATA_DIR, new_dir)
+        rels, drop_deletes = window
+        new_rel = os.path.join(DATA_DIR, presence.sidecar_name(seq_for(st.version + 1)))
         meta = presence.merge_indexes(
-            [os.path.join(self.root, x[2]) for x in pick],  # ascending seq
+            [os.path.join(self.root, rel) for rel in rels],  # ascending seq
             os.path.join(self.root, new_rel),
             spark=self.spark,  # big merges gather shards executor-side
             drop_deletes=drop_deletes,
@@ -2564,11 +2480,12 @@ class Table:
         if meta is None:
             return None
         entries = []
-        for *_x, ents, _m in pick:
-            for e in ents:
-                ne = FileEntry.from_json(e.to_json())
-                ne.bloom = new_rel
-                entries.append(ne)
+        for rel in rels:
+            for e in st.files:
+                if e.bloom == rel:
+                    ne = FileEntry.from_json(e.to_json())
+                    ne.bloom = new_rel
+                    entries.append(ne)
         try:
             # seq preserved (restamp_seq=False): this commit changes no
             # row content, only which sidecar the files point at
@@ -2609,117 +2526,23 @@ class Table:
     def _presence_lookup(self, keys_df: DataFrame, cols: list[str],
                          st: TableState | None, prefix_ok: bool):
         """Shared machinery of present_key_probe/present_key_check.
-        Returns (matches_df, exact) or None when coverage is
-        incomplete. Since r10 the probe resolves per key by HIGHEST
-        commit seq across the sidecar families — a live hit answers
-        present, a delete-family hit answers absent — so the answer
-        stays EXACT through un-compacted DELETE deltas (the reference
-        consults delete deltas with timestamps the same way,
-        tablet/tablet.cc:116-124, tablet/delta_tracker.cc). ``exact``
-        is True when the sidecar tuple equals ``cols`` and no superset
-        source exists (unindexed delete keys, a mixed live+delete
-        commit, seq-less legacy sidecars, or — for non-PK tuples —
-        delta commits that can retire an old tuple value). Superset
-        answers still have NO false negatives, which is the
-        load-bearing half of the contract (novel keys stay zero-IO
-        provably absent)."""
-        from kudu_spark.plans import presence
-
+        Returns (matches_df, exact), or None when the sidecars cannot
+        answer (each reason is logged once per table). presence.resolve
+        decides which sidecar families answer and whether exactly —
+        per key by HIGHEST commit seq, a live hit present and a
+        delete-family hit absent, as the reference consults delete
+        deltas with timestamps (tablet/tablet.cc:116-124,
+        tablet/delta_tracker.cc); this method hashes the probe batch,
+        shard-aligns it and runs the probe UDF."""
         if st is None:
             st = self.state()
-        if not st.files:
-            return keys_df.limit(0), True  # empty table: nothing present
-        if any(not f.bloom for f in st.files):
-            self._presence_decline("files without sidecars")
+        r = presence.resolve(self.root, st.files, st.schema, cols, prefix_ok)
+        if isinstance(r, str):
+            self._presence_decline(r)
             return None
-        paths = sorted({f.bloom for f in st.files})
-        if len(paths) > self.PK_BLOOM_MAX_EXPRS:
-            self._presence_decline(f"{len(paths)} sidecars exceed cap")
-            return None
-        specs = []  # (dir, nshards, seq, live) — resolved newest-first
-        probe_cols = probe_types = None
-        superset = False  # answers remain a superset of the live set
-        seqless = False
-        for rel in paths:
-            if not rel.endswith(".pidx"):
-                self._presence_decline(f"legacy sidecar format: {rel}")
-                return None
-            meta = presence.read_meta(os.path.join(self.root, rel))
-            if meta is None:
-                self._presence_decline(f"unreadable sidecar meta: {rel}")
-                return None
-            mcols, mtypes = list(meta["cols"]), list(meta["types"])
-            if probe_cols is None:
-                probe_cols, probe_types = mcols, mtypes
-            elif (probe_cols, probe_types) != (mcols, mtypes):
-                # pk_bloom_cols was altered with old sidecars still
-                # live: hashing one tuple against another's index
-                # would fabricate false negatives (ADVICE r7, medium)
-                self._presence_decline("sidecars hash different column tuples")
-                return None
-            if meta.get("tombstones"):
-                # pre-v2 meta-only marker: NOT provably delete-only —
-                # answering over the remaining live union could read a
-                # covered live key as provably absent (ADVICE r9,
-                # medium). Decline; compaction rebuilds v2 sidecars.
-                self._presence_decline(
-                    f"legacy tombstone marker {rel}: compact to rebuild")
-                return None
-            full = os.path.join(self.root, rel)
-            seq = meta.get("seq")
-            if seq is None:
-                seqless = True
-                seq = 0
-            if int(meta.get("rows", 0)):
-                specs.append((full, int(meta["nshards"]), int(seq), True))
-            if int(meta.get("del_rows", 0)) and not meta.get("del_unindexed"):
-                specs.append(
-                    (full, int(meta["del_nshards"]), int(seq), False))
-            if meta.get("del_unindexed") or meta.get("mixed"):
-                # unindexed delete keys overcount the union; a mixed
-                # commit's within-commit order is unknown (live-wins) —
-                # both degrade honestly to superset, never false
-                # negatives
-                superset = True
-        if seqless and any(not live for *_x, live in specs):
-            # delete subtraction needs a total seq order; without one
-            # (pre-seq sidecars still live) fall back to the plain
-            # union — superset answers, no false negatives
-            specs = [t for t in specs if t[3]]
-            superset = True
-        # when the hashed tuple reaches outside the PK, an upsert/
-        # update delta can retire a tuple value whose old copy still
-        # sits in an older sidecar — superset semantics
-        mutated_tuple = (
-            not set(probe_cols) <= set(st.schema.pk)
-            and any(f.kind == "delta" for f in st.files)
-        )
-        inexact = superset or mutated_tuple
+        specs, probe_cols, exact = r
         if not specs:
-            # sidecars exist but none carries a live key (pure-delete
-            # history): nothing is present — exact empty answer unless
-            # a superset source said otherwise
-            return keys_df.limit(0), not inexact
-        # the sidecar's recorded tuple is authoritative — never the
-        # CURRENT pk_bloom_cols property (ADVICE r7): a mismatched
-        # name, order, or declared type declines instead of probing
-        try:
-            declared = [self._presence_type(st, c) for c in probe_cols]
-        except SchemaError:
-            self._presence_decline("sidecar column dropped from schema")
-            return None
-        if declared != probe_types:
-            self._presence_decline("sidecar column types drifted")
-            return None
-        if probe_cols == list(cols):
-            exact = not inexact
-        elif prefix_ok and list(cols)[: len(probe_cols)] == probe_cols:
-            exact = False  # prefix probe: superset semantics
-        else:
-            self._presence_decline(
-                f"sidecar tuple {probe_cols} does not serve cols {list(cols)}"
-            )
-            return None
+            return keys_df.limit(0), exact  # nothing present
         h = F.xxhash64(*[
             _write_cast(F.col(c), st.schema.col(c).type) for c in probe_cols
         ])
@@ -2747,10 +2570,6 @@ class Table:
         pred = presence.present_udf(tuple(specs), preload)(F.col("__pidx_h"))
         return out.where(pred).drop("__pidx_h"), exact
 
-    @staticmethod
-    def _presence_type(st: TableState, name: str) -> str:
-        return st.schema.col(name).type
-
     def present_key_probe(self, keys_df: DataFrame, cols: list[str],
                           st: TableState | None = None) -> DataFrame | None:
         """Rows of ``keys_df`` whose ``cols`` tuple MIGHT be present in
@@ -2773,7 +2592,7 @@ class Table:
         Returns None — caller falls back to a join against the scan —
         when coverage is incomplete: sidecar tuple serves neither
         ``cols`` nor a prefix, any live file lacks a sidecar, types
-        drifted, or the sidecar count exceeds PK_BLOOM_MAX_EXPRS."""
+        drifted, or the sidecar count exceeds presence.MAX_SIDECARS."""
         r = self._presence_lookup(keys_df, cols, st, prefix_ok=True)
         return None if r is None else r[0]
 
@@ -2808,14 +2627,10 @@ class Table:
                 for e in entries:
                     e.seq = seq_for(version, e.seq & ((1 << SEQ_SHIFT) - 1))
                 # keep presence-sidecar metas stamped with the seqs
-                # actually being committed: a retry bumps entry seqs,
-                # and a STALE meta seq would misorder the probe's
-                # delete subtraction against commits that landed in
-                # between (a concurrent DELETE ordering above a staged
-                # txn INSERT = a false negative). Rewriting BEFORE the
-                # publish is race-free — nothing references the
-                # sidecar until this commit lands.
-                self._sync_sidecar_seq(entries)
+                # actually being committed (a STALE meta seq would
+                # order a concurrent DELETE above a staged txn INSERT:
+                # a false negative)
+                presence.sync_seq(self.root, entries)
             # removes first: a commit may remove and re-add the same path
             # (range-id remap), and replay applies actions in order
             actions = [{"type": "remove", "path": rp} for rp in removes or []]
@@ -2839,29 +2654,6 @@ class Table:
             except ConcurrentCommitError:
                 version = self.state().version + 1
         raise ConcurrentCommitError(f"could not commit to {self.name} after {retries} retries")
-
-    def _sync_sidecar_seq(self, entries: list[FileEntry]) -> None:
-        """Re-stamp each attached presence sidecar's meta ``seq`` to
-        the max seq of the entries it covers (no-op when they already
-        agree — the common, no-retry case reads only the cached meta)."""
-        import json as _json
-
-        from kudu_spark.plans import presence
-
-        groups: dict[str, int] = {}
-        for e in entries:
-            if e.bloom and e.bloom.endswith(".pidx"):
-                groups[e.bloom] = max(groups.get(e.bloom, 0), e.seq)
-        for rel, seq in groups.items():
-            d = os.path.join(self.root, rel)
-            meta = presence.read_meta(d)
-            if meta is None or int(meta.get("seq", -1)) == seq:
-                continue
-            meta = dict(meta, seq=seq)
-            self._env.write_bytes(
-                os.path.join(d, presence.META_NAME),
-                _json.dumps(meta).encode())
-            presence._META_CACHE[d] = meta
 
     # -- PK existence probe -------------------------------------------------------
 
@@ -3588,7 +3380,7 @@ class Table:
         # (files in untouched partitions) still list the deleted keys:
         # hand the dying delete families to the NEW sidecar so the
         # subtraction — and probe exactness — survives
-        self._absorb_dying_deletes(st, rewrite, entries)
+        presence.absorb_dying_deletes(self.root, st.files, rewrite, entries)
         # revalidate on conflict: a blind seq-restamp would rank this
         # rewrite ABOVE any delta a concurrent writer committed in the
         # meantime (its merged rows carry the retried, higher seq),
@@ -3599,47 +3391,6 @@ class Table:
                                    _attempts=a),
             removes=[f.path for f in rewrite], _attempts=_attempts,
         )
-
-    def _absorb_dying_deletes(self, st: TableState, removed: list[FileEntry],
-                              new_entries: list[FileEntry]) -> None:
-        """See compact(): fold the delete families of sidecars DYING in
-        this commit (every referencing file removed) into the new
-        entries' sidecar (presence.absorb_delete_families). Dying
-        sidecars whose delete keys were never indexed (prefix-tuple
-        tables, legacy markers) can't hand keys over — the new sidecar
-        inherits their ``del_unindexed`` so probes stay honest
-        supersets. No-op for tables without presence sidecars."""
-        from kudu_spark.plans import presence
-
-        new_rel = next((e.bloom for e in new_entries
-                        if e.bloom and e.bloom.endswith(".pidx")), None)
-        if new_rel is None:
-            return
-        removed_paths = {f.path for f in removed}
-        survivors_by_bloom: dict[str, int] = {}
-        for f in st.files:
-            if f.bloom and f.path not in removed_paths:
-                survivors_by_bloom[f.bloom] = 1
-        if not survivors_by_bloom:
-            # FULL compaction: the new sidecar is the only one left —
-            # nothing older can overcount, so nothing to hand over
-            # (this is also what finally clears an inherited
-            # del_unindexed flag on prefix-tuple tables)
-            return
-        retained, unindexed_rows = [], 0
-        for rel in {f.bloom for f in removed if f.bloom}:
-            if rel in survivors_by_bloom or not rel.endswith(".pidx"):
-                continue  # sidecar survives (or isn't a presence index)
-            meta = presence.read_meta(os.path.join(self.root, rel))
-            if meta is None:
-                continue  # unreadable: probes decline on it today anyway
-            if meta.get("tombstones") or meta.get("del_unindexed"):
-                unindexed_rows += int(meta.get("del_rows", 0)) or 1
-            elif int(meta.get("del_rows", 0)):
-                retained.append(os.path.join(self.root, rel))
-        if retained or unindexed_rows:
-            presence.absorb_delete_families(
-                os.path.join(self.root, new_rel), retained, unindexed_rows)
 
     # files referenced only by manifests older than this stay on disk
     # through a default vacuum (≈ Kudu's ancient history mark,
@@ -3927,50 +3678,9 @@ class Table:
             # GC / --tablet_history_max_age_sec)
             out["ancient_history_mark"] = ahm
         # presence-sidecar health: a user must be able to SEE when the
-        # O(batch) key probe is off (VERDICT r7 task #7). coverage = 1.0
-        # means every live file carries a sidecar and probes engage;
-        # anything less and present_key_probe declines.
+        # O(batch) key probe is off or answers only a superset
         if st.props.get("pk_bloom_cols"):
-            from kudu_spark.plans import presence
-
-            covered = [f for f in st.files if f.bloom]
-            sidecars = sorted({f.bloom for f in covered})
-            metas = {
-                rel: presence.read_meta(os.path.join(self.root, rel)) or {}
-                for rel in sidecars if rel.endswith(".pidx")
-            }
-            out["presence_sidecars"] = len(sidecars)
-            out["presence_bytes"] = sum(
-                int(m.get("bytes", 0)) for m in metas.values())
-            out["presence_coverage"] = (
-                (len(covered) / len(st.files)) if st.files else 1.0
-            )
-            # exact = probes answer membership exactly — the SAME
-            # conditions _presence_lookup enforces: full coverage, no
-            # superset source (legacy markers, unindexed delete keys,
-            # mixed live+delete commits, seq-less sidecars alongside
-            # delete families), and for hashed tuples reaching outside
-            # the PK no delta commits (an upsert/update can retire a
-            # tuple value an older sidecar still lists). Indexed
-            # DELETE deltas no longer break exactness: probes subtract
-            # them by commit seq (r10).
-            probe_cols = next(
-                (list(m["cols"]) for m in metas.values() if m.get("cols")), [])
-            mutated_tuple = (
-                bool(probe_cols)
-                and not set(probe_cols) <= set(st.schema.pk)
-                and any(f.kind == "delta" for f in st.files)
-            )
-            has_dels = any(int(m.get("del_rows", 0)) for m in metas.values())
-            seqless = any(m.get("seq") is None for m in metas.values())
-            out["presence_exact"] = (
-                out["presence_coverage"] == 1.0
-                and not any(
-                    m.get("tombstones") or m.get("del_unindexed")
-                    or m.get("mixed") for m in metas.values())
-                and not (has_dels and seqless)
-                and not mutated_tuple
-            )
+            out.update(presence.summary(self.root, st.files, st.schema))
         # vector index health: per trained cell column, the frozen
         # model's identity, the stale-stamped row fraction (the
         # convergence backlog hybrid serving is absorbing) and the

@@ -940,11 +940,15 @@ def test_maintenance_sweep_reports_per_table_errors(engine, spark):
     good.insert(rows(100, "a"))
     good.upsert(rows(50, "b"))
     # a table whose compaction policy itself raises (malformed ratio)
-    # while it has a backlog to fold: a failed fold is an error too
+    # while it has a backlog to fold: a failed fold is an error too.
+    # ALTER now rejects the value, so it is committed raw, as a log
+    # written before that check could hold it.
     engine.create_table("swfold", schema, pk=["k"])
     engine.alter_table("swfold") \
-        .set_property("auto_compact_mode", "deferred") \
-        .set_property("auto_compact_min_ratio", "abc").apply()
+        .set_property("auto_compact_mode", "deferred").apply()
+    fold = engine.table("swfold")
+    fold._commit(fold.state(), "alter", [],
+                 props={"auto_compact_min_ratio": "abc"})
     fold = engine.table("swfold")
     fold.insert(rows(100, "a"))
     fold.upsert(rows(50, "b"))
@@ -961,6 +965,37 @@ def test_maintenance_sweep_reports_per_table_errors(engine, spark):
         "auto_compact_min_delta_bytes", "1").apply()
     out = engine.maintenance_sweep()
     assert "__errors__" not in out and out["swfold"] is True
+
+
+@pytest.mark.parametrize("key, bad, good", [
+    ("auto_compact_min_ratio", ["abc", "-0.1", "1.5", "nan"], ["0", "1", "0.05"]),
+    ("auto_compact_min_delta_bytes", ["abc", "-1", "1.5"], ["0", "1048576"]),
+    ("auto_compact_budget_bytes", ["1e9", "-5"], ["0", "268435456"]),
+    ("auto_compact_mode", ["sometimes", ""], ["inline", "async", "deferred"]),
+])
+def test_set_property_rejects_malformed_maintenance_values(engine, key, bad, good):
+    """Maintenance properties are checked when they are set, as Kudu
+    checks extra-config values at ALTER time: a malformed value fails
+    the ALTER (Python or SQL) or the CREATE and commits nothing, where
+    it used to commit and then stop every fold of the table."""
+    engine.create_table("mp", SIMPLE, pk=["key"])
+    v0 = engine.table("mp").version
+    for v in bad:
+        with pytest.raises(KuduSparkError, match=key):
+            engine.alter_table("mp").set_property(key, v).apply()
+        with pytest.raises(KuduSparkError, match=key):
+            engine.sql(f"ALTER TABLE mp SET TBLPROPERTIES ('{key}' = '{v}')")
+        with pytest.raises(KuduSparkError, match=key):
+            engine.sql("CREATE TABLE mq (k INT, PRIMARY KEY (k)) "
+                       f"TBLPROPERTIES ('{key}' = '{v}')")
+        assert "mq" not in engine.list_tables()
+    assert engine.table("mp").version == v0
+    assert key not in engine.table("mp").state().props
+    for v in good:
+        engine.alter_table("mp").set_property(key, v).apply()
+        assert engine.table("mp").state().props[key] == v
+    engine.sql(f"ALTER TABLE mp SET TBLPROPERTIES ('{key}' = '{good[0]}')")
+    assert engine.table("mp").state().props[key] == good[0]
 
 
 def test_maintenance_daemon_counts_table_errors(engine, spark):

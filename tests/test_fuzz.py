@@ -13,6 +13,7 @@ import pytest
 
 from kudu_spark.engine import Engine
 from kudu_spark.errors import DuplicateKeyError, RowNotFoundError
+from kudu_spark.table import Table
 
 # nightly lane: every test here replays hundreds of randomized ops
 # against the in-memory model — exhaustive by design (~12 min total),
@@ -30,7 +31,8 @@ def df_of(spark, rows, cols="key int, int_val int, string_val string"):
 @pytest.mark.parametrize("seed,presence,memroot",
                          [(7, False, False), (42, True, False),
                           (99, True, True)])
-def test_fuzz_mutations_match_model(spark, tmp_path, seed, presence, memroot):
+def test_fuzz_mutations_match_model(spark, tmp_path, monkeypatch, seed, presence,
+                                    memroot):
     """``presence=True`` runs the same op mix with pk_bloom_cols on,
     so the presence-index insert short circuit, the delta sidecars
     (live + tombstone markers, superset probes), the compaction
@@ -51,8 +53,9 @@ def test_fuzz_mutations_match_model(spark, tmp_path, seed, presence, memroot):
         "fuzz", SIMPLE, pk=["key"], hash_partitions=[{"columns": ["key"], "buckets": 2}]
     )
     if presence:
-        eng.alter_table("fuzz").set_property("pk_bloom_cols", "key") \
-            .set_property("pidx_merge_max_live", "3").apply()
+        # merge sidecars early so the fuzz drives merges, not just builds
+        monkeypatch.setattr(Table, "PIDX_MERGE_MAX_LIVE", 3)
+        eng.alter_table("fuzz").set_property("pk_bloom_cols", "key").apply()
         t = eng.table("fuzz")
     model: dict[int, tuple] = {}
     snapshots: list[tuple[int, dict]] = []  # (version, model copy)

@@ -48,13 +48,13 @@ def test_shards_for_power_of_two():
 def test_build_and_probe_roundtrip(spark, tmp_path):
     df = spark.range(10_000).select(F.xxhash64("id").alias("h"))
     d = str(tmp_path / "x.pidx")
-    meta = presence.build_index(df, 10_000, d, ["id"], ["bigint"])
+    meta = presence.build_commit_index(df, 10_000, d, ["id"], ["bigint"], 0)
     assert meta is not None and meta["rows"] == 10_000
     assert presence.read_meta(d)["cols"] == ["id"]
     # every build key probes present; disjoint keys probe absent
     probe = spark.range(20_000).select(
         "id", F.xxhash64("id").alias("h"),
-        presence.present_udf(((d, meta["nshards"]),))(F.xxhash64("id")).alias("p"))
+        presence.present_udf(((d, meta["nshards"], 0, True),))(F.xxhash64("id")).alias("p"))
     got = {r.id: r.p for r in probe.collect()}
     assert all(got[i] for i in range(10_000))
     assert not any(got[i] for i in range(10_000, 20_000))
@@ -66,11 +66,11 @@ def test_build_sharded_matches_small(spark, tmp_path):
     n = 50_000
     df = spark.range(n).select(F.xxhash64("id").alias("h"))
     d1, d2 = str(tmp_path / "a.pidx"), str(tmp_path / "b.pidx")
-    m1 = presence.build_index(df, n, d1, ["id"], ["bigint"])
+    m1 = presence.build_commit_index(df, n, d1, ["id"], ["bigint"], 0)
     old = presence.SMALL_BUILD_MAX
     try:
         presence.SMALL_BUILD_MAX = 0  # force the executor-side path
-        m2 = presence.build_index(df, n, d2, ["id"], ["bigint"])
+        m2 = presence.build_commit_index(df, n, d2, ["id"], ["bigint"], 0)
     finally:
         presence.SMALL_BUILD_MAX = old
     assert m1["nshards"] == m2["nshards"] and m1["bytes"] == m2["bytes"]
@@ -88,8 +88,8 @@ def test_probe_multi_sidecar_and_empty_shards(spark, tmp_path):
         df = spark.range(i * 100_000, i * 100_000 + n).select(
             F.xxhash64("id").alias("h"))
         d = str(tmp_path / f"s{i}.pidx")
-        m = presence.build_index(df, n, d, ["id"], ["bigint"])
-        specs.append((d, m["nshards"]))
+        m = presence.build_commit_index(df, n, d, ["id"], ["bigint"], 0)
+        specs.append((d, m["nshards"], 0, True))
     probe = spark.range(0, 200_000, 50).select(
         "id", presence.present_udf(tuple(specs))(F.xxhash64("id")).alias("p"))
     got = {r.id: r.p for r in probe.collect()}
@@ -376,6 +376,87 @@ def test_statistics_surface_presence_health(engine, spark, monkeypatch):
     assert r.presence_coverage < 1.0
 
 
+def _stats_drift_alter_tuple(engine, t, spark, monkeypatch):
+    engine.alter_table("sx").set_property("pk_bloom_cols", "id,v").apply()
+    engine.table("sx").insert(spark.createDataFrame(
+        [(100, "new")], "id bigint, v string"))
+
+
+def _stats_drift_cap(engine, t, spark, monkeypatch):
+    monkeypatch.setattr(presence, "MAX_SIDECARS", 2)
+
+
+def _stats_drift_unreadable_meta(engine, t, spark, monkeypatch):
+    rel = sorted({f.bloom for f in t.state().files})[0]
+    os.remove(os.path.join(t.root, rel, presence.META_NAME))
+    presence._META_CACHE.clear()
+
+
+def _stats_drift_legacy_sidecar(engine, t, spark, monkeypatch):
+    st = t.state()
+    victim = sorted({f.bloom for f in st.files})[0]
+    entries = []
+    for f in st.files:
+        if f.bloom == victim:
+            e = type(f).from_json(f.to_json())
+            e.bloom = victim[: -len(".pidx")] + ".bloom"
+            entries.append(e)
+    t._commit(st, "pidx_merge", entries, removes=[e.path for e in entries],
+              restamp_seq=False)
+
+
+def _stats_drift_dropped_column(engine, t, spark, monkeypatch):
+    engine.alter_table("sx").drop_column("v").apply()
+
+
+def _stats_drift_type(engine, t, spark, monkeypatch):
+    import dataclasses
+
+    st = t.state()
+    cols = [dataclasses.replace(c, type="string") if c.name == "v2" else c
+            for c in st.schema.columns]
+    t._commit(st, "alter", [], schema=dataclasses.replace(
+        st.schema, columns=cols, version=st.schema.version + 1))
+
+
+@pytest.mark.parametrize("drift, bloom_cols", [
+    (_stats_drift_alter_tuple, "id"),
+    (_stats_drift_cap, "id"),
+    (_stats_drift_unreadable_meta, "id"),
+    (_stats_drift_legacy_sidecar, "id"),
+    (_stats_drift_dropped_column, "id,v"),
+    (_stats_drift_type, "id,v2"),
+], ids=["altered_tuple", "cap", "unreadable_meta", "legacy_sidecar",
+        "dropped_column", "type_drift"])
+def test_statistics_presence_exact_agrees_with_probe(engine, spark, monkeypatch,
+                                                     drift, bloom_cols):
+    """statistics()['presence_exact'] says whether present_key_check
+    answers over the sidecar tuple — for every way the probe can
+    decline, not just the coverage and superset flags."""
+    engine.create_table(
+        "sx", [("id", "bigint", False), ("v", "string", True),
+               ("v2", "int", True)], pk=["id"],
+        hash_partitions=[{"columns": ["id"], "buckets": 2}],
+    )
+    engine.alter_table("sx").set_property("pk_bloom_cols", bloom_cols) \
+        .set_property("auto_compact", "false").apply()
+    for i in range(3):
+        engine.table("sx").insert(spark.createDataFrame(
+            [(i, f"v{i}", i)], "id bigint, v string, v2 int"))
+    t = engine.table("sx")
+    cols = bloom_cols.split(",")
+    keys = t.scan().select(*cols)
+    rows, schema = keys.collect(), keys.schema
+    assert t.statistics()["presence_exact"] is True
+    assert t.present_key_check(keys, cols) is not None
+    drift(engine, t, spark, monkeypatch)
+    t = engine.table("sx")
+    got = t.present_key_check(spark.createDataFrame(rows, schema), cols)
+    assert got is None
+    assert t.statistics()["presence_exact"] == (got is not None)
+    presence._META_CACHE.clear()
+
+
 def test_vacuum_collects_orphan_pidx(engine, spark):
     t = make_table(engine, n=100)
     # deltas across every bucket make all partitions compactable;
@@ -525,7 +606,7 @@ _hashes = hst.lists(
 def _np_sidecar(dir_abs: str, hv: np.ndarray, ns: int, seq: int = 0,
                 dels: np.ndarray | None = None, ns_d: int = 1) -> None:
     """Sidecar directory written straight from numpy (the same format
-    build_index/build_commit_index produce — asserted equal in
+    build_commit_index produces — asserted equal in
     test_build_sharded_matches_small for the Spark builders)."""
     import json
 
@@ -597,7 +678,7 @@ def test_merge_indexes_fuzz_vs_set_union(srcs, tiny_shards):
         assert meta["bytes"] == total_bytes
         # the probe agrees with the model through the merged sidecar
         probe = np.array(sorted(model) + [10 ** 17 + 7, -(10 ** 17)], dtype="int64")
-        present = presence.probe_hashes(((out, ns_m),), probe)
+        present = presence.probe_hashes(((out, ns_m, 0, True),), probe)
         for h, p in zip(probe.tolist(), present.tolist()):
             assert p == (h in model)
     finally:
@@ -620,7 +701,7 @@ def test_merge_distributed_matches_driver(spark, tmp_path, monkeypatch):
         df = spark.range(i * 30_000, i * 30_000 + n).select(
             F.xxhash64("id").alias("h"))
         d = str(tmp_path / f"m{i}.pidx")
-        presence.build_index(df, n, d, ["id"], ["bigint"])
+        presence.build_commit_index(df, n, d, ["id"], ["bigint"], 0)
         dirs.append(d)
     monkeypatch.setattr(presence, "TARGET_SHARD_KEYS", 4096)  # ns_m > 1
     d_drv = str(tmp_path / "drv.pidx")

@@ -15,6 +15,7 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from kudu_spark import vector
 from kudu_spark.errors import KuduSparkError, SchemaError, TableExistsError, TableNotFoundError
 from kudu_spark.meta import (
     ColumnSpec,
@@ -900,8 +901,7 @@ class Engine:
                             f"history_max_age_sec={st.props.get('history_max_age_sec')!r}"
                             " is not a number of seconds"
                         )
-                retrain_frac = st.props.get("ivf_retrain_stale_frac")
-                if not compact_on and age is None and retrain_frac is None:
+                if not compact_on and age is None and not vector.retrain_enabled(st):
                     out[name] = False
                     continue
                 if not t._maint_lock.acquire(blocking=False):

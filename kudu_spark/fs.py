@@ -843,7 +843,12 @@ def bind_spark(env, spark) -> None:
     (data files scanned in place) — one probe per scheme. Without a
     probe, FsspecEnv falls back to the driver-local mirror, which is
     correct but not the 100 TB path; Engine/Table bind at construction
-    so real deployments always get the direct answer."""
+    so real deployments always get the direct answer. Binding also
+    lets the session's Python workers import this package
+    (session.share_package)."""
+    from kudu_spark.session import share_package
+
+    share_package(spark)
     if getattr(env, "spark_native", None) is not None:
         return
     try:

@@ -141,7 +141,7 @@ def probe_cells_py(qv_rows, cents, n_probes, null_scores_probe_tail=False):
     row_number over (c DESC, centroid_id ASC), NaN greatest like
     Spark's double ordering. ``null_scores_probe_tail`` mirrors the
     two callers' historical NULL handling: False drops NULL-score
-    pairs before ranking (Table._ann_serve probed nothing for a
+    pairs before ranking (vector._serve probes nothing for a
     zero-norm query); True ranks them NULLS LAST with the same id
     tie-break (ivf_index_topk lets a zero-norm query probe the
     lowest-id cells). Returns [(query_id, cell)] in input order of
@@ -198,7 +198,7 @@ def cosine_with_norms(a, b, na, nb):
 
 def assign_cells_expr(column: str, cents: list, threshold: int = 32):
     """argmax-cosine cell id for every row — the assignment kernel
-    shared by engine cell stamping (table._cell_expr) and k-means
+    shared by engine cell stamping (vector.derive) and k-means
     training. Tie-break = FIRST position of the max score (lowest
     centroid id); NULL and zero-norm vectors yield NULL cells in BOTH
     implementations.

@@ -72,3 +72,18 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # static confs can't change post-start; keep going
     return spark
+
+
+def share_package(spark: SparkSession) -> None:
+    """Let the session's Python workers import ``kudu_spark``. The
+    engine's pandas UDFs (the presence probe, arrow cell assignment)
+    import it inside the worker, which sees only the driver's
+    PYTHONPATH, its working directory and installed packages — not a
+    ``sys.path`` entry the driver added itself. The package's parent
+    directory joins the PYTHONPATH Spark hands its Python workers;
+    UDFs built after this call carry it."""
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if parent not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [parent])

@@ -30,6 +30,7 @@ from __future__ import annotations
 import json
 import os
 
+from kudu_spark import vector
 from kudu_spark.fs import env_for_root
 from kudu_spark.streaming.sink import apply_changes
 
@@ -89,11 +90,7 @@ def backup(table, backup_root: str, incremental: bool | None = None) -> dict:
     # enough to embed in the window metadata, so it stays atomic with
     # the schema/props it belongs to (and a retrain between windows is
     # restored as-of the window being replayed).
-    artifacts = {}
-    for col in getattr(table, "_vector_cell_cols")(st):
-        art = table._ivf_artifact(col)
-        if art is not None:
-            artifacts[f"_ivf_{col}.json"] = art
+    artifacts = vector.artifacts(table, st)
     if artifacts:
         meta["artifacts"] = artifacts
     env_for_root(backup_root).write_bytes(
@@ -216,9 +213,7 @@ def restore(engine, backup_root: str, table_name: str,
             alt.apply()
             dst = engine.table(dst.name)
             applied_props = wprops
-        for name, art in (wmeta.get("artifacts") or {}).items():
-            dst._env.write_bytes(os.path.join(dst.root, name),
-                                 json.dumps(art).encode())
+        vector.publish_artifacts(dst, wmeta.get("artifacts") or {})
         df = spark.read.parquet(os.path.join(path, "rows"))
         if AUTO_INC_COL in df.columns:
             df = df.drop(AUTO_INC_COL)

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 
+from kudu_spark import vector
 from kudu_spark.plans.predicates import parse_predicates
 
 
@@ -107,8 +108,6 @@ def copy_table(engine, src_name: str, dst_name: str, dst_engine=None,
     # bulk load (mirrors restore(): without them the copy silently
     # loses its presence-probe config, compaction policy, and the
     # vector-cell centroid model its writes should derive from)
-    import os
-
     props = {k: str(v) for k, v in (st.props or {}).items()
              if k != "auto_inc_next"}
     if props:
@@ -117,11 +116,7 @@ def copy_table(engine, src_name: str, dst_name: str, dst_engine=None,
             alt = alt.set_property(k, v)
         alt.apply()
         dst = dst_engine.table(dst_name)
-    for col in src._vector_cell_cols(st):
-        art = src._ivf_artifact(col)
-        if art is not None:
-            dst._env.write_bytes(os.path.join(dst.root, f"_ivf_{col}.json"),
-                                 json.dumps(art).encode())
+    vector.publish_artifacts(dst, vector.artifacts(src, st))
     filters = parse_predicates(predicates) if predicates else None
     df = src.scan(filters=filters)
     if AUTO_INC_COL in sch.pk:

@@ -139,10 +139,11 @@ def _semantic_collisions(docs_t, batch: DataFrame, column: str,
 
     Requires a trained cell model on the docs table; train on a seed
     corpus before enabling the arm."""
+    from kudu_spark import vector
     from kudu_spark.errors import KuduSparkError
-    from kudu_spark.table import IVFC_PREFIX
+    from kudu_spark.operators.similarity import assign_cells_expr
 
-    art = docs_t._ivf_artifact(column)
+    art = vector.artifact(docs_t, column)
     if art is None:
         raise KuduSparkError(
             f"semantic dedup needs a trained cell model on "
@@ -151,8 +152,7 @@ def _semantic_collisions(docs_t, batch: DataFrame, column: str,
         "doc_id", F.col(column).alias("__bv")
     ).where(F.col("__bv").isNotNull())
     if n_probes <= 1:
-        bv = bq.withColumn(
-            "__cell", docs_t._cell_expr("__bv", art["centroids"]))
+        bv = bq.withColumn("__cell", assign_cells_expr("__bv", art["centroids"]))
     else:
         from kudu_spark.operators.similarity import cosine_expr
 
@@ -179,16 +179,16 @@ def _semantic_collisions(docs_t, batch: DataFrame, column: str,
     if not cells:
         return batch.select("doc_id").limit(0)
     st = docs_t.state()
-    if column in docs_t._vector_quantize_cols(st):
+    if column in vector.quantize_cols(st):
         return _semantic_collisions_q8(docs_t, st, art, bv, column,
                                        threshold, cells)
     # norms once per row on both sides (cosine_with_norms): the batch
     # x candidate comparison folds only the dot per pair
     from kudu_spark.operators.similarity import cosine_with_norms, norm_expr
 
-    cand = docs_t.scan_cells(column, cells, _art=art).select(
+    cand = vector.scan_cells(docs_t, column, cells, art=art).select(
         F.col(column).alias("__cv"),
-        F.col(IVFC_PREFIX + column).alias("__cell"),
+        F.col(vector.IVFC_PREFIX + column).alias("__cell"),
         norm_expr(column).alias("__cn"),
     )
     return (
@@ -218,19 +218,19 @@ def _semantic_collisions_q8(docs_t, st, art: dict, bv: DataFrame,
     Candidates with c8 >= threshold + margin are definite collisions;
     c8 < threshold - margin definite non-collisions; only the thin
     boundary band refetches exact vectors by PK (bounded IN-list, the
-    _ann_serve shortlist shape) for the exact re-check. Zero-norm
+    vector._serve shortlist shape) for the exact re-check. Zero-norm
     codes (margin undefined) ride the re-check, reproducing the fp
     path's NaN-rejects verbatim."""
+    from kudu_spark import vector
     from kudu_spark.operators.similarity import cosine_expr, dot_expr, norm_expr
-    from kudu_spark.table import IVFC_PREFIX, Q8_PREFIX
 
-    cn, qn = IVFC_PREFIX + column, Q8_PREFIX + column
+    cn, qn = vector.IVFC_PREFIX + column, vector.Q8_PREFIX + column
     pk0 = st.schema.pk[0]
     # candidate-side norms/margins once per ROW (the margin was already
     # per-row; the cosine's norm product now is too — per-pair work is
     # the dot fold alone, values bit-identical)
-    cand8 = docs_t._snapshot_cells_q8(st, art, column, cells).where(
-        F.col(cn).isin([int(c) for c in cells])).select(
+    cand8 = vector.snapshot(docs_t, st, column, (vector.IVFC_PREFIX, vector.Q8_PREFIX),
+                            art, cells).select(
         F.col(pk0).alias("__pk"),
         F.col(qn).alias("__cv8"),
         F.col(cn).alias("__cell"),
@@ -259,7 +259,7 @@ def _semantic_collisions_q8(docs_t, st, art: dict, bv: DataFrame,
             | ((F.col("__c8") >= threshold - F.col("__m"))
                & (F.col("__c8") < threshold + F.col("__m"))))
         # bounded collect: the band is ~2*margin wide (~3% of cosine
-        # range at 64 dims) — the _ann_serve shortlist shape
+        # range at 64 dims) — the vector._serve shortlist shape
         ids = sorted({r["__pk"] for r in
                       border.select("__pk").distinct().collect()})
         if ids:

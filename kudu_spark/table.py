@@ -37,11 +37,11 @@ import os
 import re
 import time as _time
 import uuid
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kudu_spark import vector
 from kudu_spark.errors import (
     ConcurrentCommitError,
     DuplicateKeyError,
@@ -68,23 +68,6 @@ RESERVED = {SEQ_COL, DEL_COL}
 
 # `cluster_by = zorder(a, b, ...)` — multi-dimension clustering
 _ZORDER_RE = re.compile(r"^\s*zorder\s*\(([^)]*)\)\s*$", re.I)
-# stored int8 quantization of vector columns (table prop
-# vector_quantize_cols): per column <name>, files carry
-# __q8_<name> (array<tinyint>) + __q8s_<name> (float, 127/max|v|)
-Q8_PREFIX = "__q8_"
-Q8S_PREFIX = "__q8s_"
-# stored IVF cell assignment of vector columns (table prop
-# vector_cell_cols, trained centroid artifact _ivf_<col>.json): per
-# column <name>, files written after training carry __ivfc_<name>
-# (int, argmax-cosine cell against the FROZEN centroids), so ANN
-# serving prunes to probed cells through the ordinary snapshot
-# machinery — updates and deletes stay exact for free
-IVFC_PREFIX = "__ivfc_"
-# past this many centroids, stored-cell assignment switches from a
-# per-centroid cosine expression array to an Arrow-batched numpy gemm
-# (see Table._cell_expr) — higher-order-function cosines are
-# interpreted, so the expression form stops scaling around here
-ARROW_CELL_ASSIGN_THRESHOLD = 32
 AUTO_INC_COL = "auto_incrementing_id"  # hidden PK suffix, common.proto:173
 AUTO_INC_STRIDE = 1 << 40  # id space reserved per insert commit
 
@@ -1029,753 +1012,52 @@ class Table:
     def to_df(self, version: int | None = None) -> DataFrame:
         return self.scan(version=version)
 
-    def _vector_quantize_cols(self, st: TableState) -> list[str]:
-        return [c.strip()
-                for c in str(st.props.get("vector_quantize_cols", "")).split(",")
-                if c.strip()]
-
-    def _augment_state(self, st: TableState, extras: list[tuple[str, str]]):
-        """A shallow TableState copy whose schemas (current AND every
-        historical version) carry ``extras`` as ordinary nullable
-        columns with fixed synthetic ids (>= 1e6, far above real column
-        ids), so the whole snapshot machinery — schema-versioned reads,
-        merge windows, anti joins — projects stored physical columns
-        (e.g. __q8_*) without special cases. Files lacking the column
-        read as NULL via the explicit read schema."""
-
-        def aug(sch):
-            cols = list(sch.columns) + [
-                ColumnSpec(id=1_000_000 + i, name=n, type=t, nullable=True)
-                for i, (n, t) in enumerate(extras)
-            ]
-            return dataclasses.replace(sch, columns=cols)
-
-        return dataclasses.replace(
-            st,
-            schema=aug(st.schema),
-            schemas_by_version={v: aug(s)
-                                for v, s in st.schemas_by_version.items()},
-        )
+    # -- vector sidecolumns (kudu_spark/vector.py) --------------------------------
 
     def scan_quantized(self, column: str, filters: list | None = None,
                        version: int | None = None) -> DataFrame:
-        """Snapshot scan of a vector column's STORED int8 quantization
-        (table prop ``vector_quantize_cols``; maintained by every
-        write and compaction rewrite in _write_files): returns
-        (pk..., __q8_<column>, __q8s_<column>) with full merge-on-read
-        semantics. When every live file carries the stored pair (the
-        steady state — compaction converges older files), the plan
-        never touches the full-precision column: ~4x fewer bytes per
-        ANN/dedup scan. Files predating the property are routed PER
-        FILE through on-the-fly quantization (identical codes — same
-        rounding, same per-vector scale) while stored files keep the
-        int8-only read, so a backlog of unconverged files costs only
-        its own fraction of fp bytes, never the whole scan's."""
-        st = self.state(version)
-        if column not in self._vector_quantize_cols(st):
-            raise KuduSparkError(
-                f"column {column!r} is not in vector_quantize_cols "
-                f"({st.props.get('vector_quantize_cols', '')!r})")
-        qn, sn = Q8_PREFIX + column, Q8S_PREFIX + column
-        pk = list(st.schema.pk)
-        st2 = self._augment_state(
-            st, [(qn, "array<tinyint>"), (sn, "float")])
-        if all(f.vq and column in f.vq for f in st.files):
-            return self._snapshot_df(st2, filters).select(*pk, qn, sn)
-        qe, se = self._quantize_exprs(column)
+        """(pk..., __q8_<column>, __q8s_<column>): see vector.scan_quantized."""
+        return vector.scan_quantized(self, column, filters, version)
 
-        def per_file(f):
-            if f.vq and column in f.vq:
-                return ("q8", None)
-            return ("fp", lambda d: d.withColumn(qn, qe).withColumn(sn, se))
-
-        return self._snapshot_df(
-            st2, filters, per_file=per_file,
-            per_file_tag=("q8", column),
-        ).select(*pk, qn, sn)
-
-    def _quantize_exprs(self, column: str):
-        """On-the-fly (q8_codes, scale) expressions over a full-precision
-        vector column — byte-identical to what the write path stores
-        (same floor(x+0.5) rounding, same 127/max|v| per-vector scale),
-        so hybrid reads mixing stored and derived codes are exact."""
-        from kudu_spark.operators.similarity import quantize_expr
-
-        mx = F.aggregate(
-            F.transform(F.col(column), lambda x: F.abs(x.cast("double"))),
-            F.lit(0.0), lambda acc, x: F.greatest(acc, x))
-        scale = F.when(mx > 0, F.lit(127.0) / mx).otherwise(F.lit(0.0))
-        return (quantize_expr(F.col(column), scale).cast("array<tinyint>"),
-                scale.cast("float"))
-
-    # -- stored IVF cells on engine tables (ANN through the snapshot) -------------
-
-    def _vector_cell_cols(self, st: TableState) -> list[str]:
-        return [c.strip()
-                for c in str(st.props.get("vector_cell_cols", "")).split(",")
-                if c.strip()]
-
-    def _ivf_artifact(self, column: str) -> dict | None:
-        """The frozen centroid model for ``column``, or None before
-        training. Tiny (n_cells x dims doubles) — read per plan."""
-        try:
-            raw = self._env.read_bytes(
-                os.path.join(self.root, f"_ivf_{column}.json"))
-            return json.loads(raw)
-        except Exception:
-            return None
-
-    def _cell_expr(self, column: str, cents: list[list[float]]):
-        """argmax-cosine cell id: the FIRST position of the max score —
-        identical tie-break (lowest centroid id) to the operator
-        family's rank window. NULL vectors (tombstones) yield NULL
-        cells.
-
-        Two implementations by model size: up to
-        ARROW_CELL_ASSIGN_THRESHOLD centroids, a per-centroid cosine
-        expression array (JVM-side, no Python); past it, an
-        Arrow-batched pandas UDF computing the argmax as one numpy
-        gemm — higher-order-function cosines are NOT whole-stage
-        compiled (~10 us/pair interpreted, measured in
-        scripts/semantic_scale.py), so a single giant expression over
-        hundreds of centroids is the wrong shape at sqrt(N) model
-        sizes. np.argmax takes the first maximum, matching the
-        expression's tie-break; float64 summation order differs
-        (numpy gemm vs left-to-right fold), so exact-tie vectors could
-        in principle land differently across the threshold — harmless
-        for an approximate cell index (every row still has exactly one
-        cell) and pinned empirically in tests on the test corpus.
-
-        Shared with the operator family — body in
-        similarity.assign_cells_expr (kmeans assignment runs the
-        identical kernel, so engine stamping and operator training
-        agree by construction)."""
-        from kudu_spark.operators.similarity import assign_cells_expr
-
-        return assign_cells_expr(column, cents,
-                                 threshold=ARROW_CELL_ASSIGN_THRESHOLD)
-
-    def train_vector_cells(self, column: str, n_cells: int = 8,
-                           n_iters: int = 3,
+    def train_vector_cells(self, column: str, n_cells: int = 8, n_iters: int = 3,
                            sample_rows: int | None = None) -> None:
-        """Train the k-means cell model for ``column`` over the
-        current snapshot and freeze it as a table artifact
-        (_ivf_<col>.json) + the ``vector_cell_cols`` property: every
-        LATER write (ingest batch, upsert, compaction rewrite) derives
-        the stored __ivfc_<col> assignment from the frozen centroids —
-        O(batch), no retraining, Kudu's compaction contract applied to
-        an index. Retrain by calling again (new artifact, next
-        compaction converges old files). Deterministic: init = the
-        embeddings of the ``n_cells`` smallest PKs, integer-sum Lloyd
-        updates (operators/similarity.py kmeans_centroids).
+        """Freeze a k-means cell model for ``column``: see vector.train."""
+        vector.train(self, column, n_cells, n_iters, sample_rows)
 
-        ``sample_rows`` trains on a DETERMINISTIC hash-sample of about
-        that many rows instead of the full snapshot — the standard
-        k-means-at-scale move (centroid quality needs a representative
-        sample, not every vector), and the lever that keeps training
-        tractable at the sqrt(N) model sizes big corpora want
-        (training cost ~ rows x n_cells per iteration; measured in
-        scripts/semantic_scale.py). The sample is
-        xxhash64(pk) % m == 0, so retraining over the same snapshot
-        reproduces the same centroids."""
-        from kudu_spark.operators.similarity import kmeans_centroids
-
-        st = self.state()
-        if len(st.schema.pk) != 1:
-            raise KuduSparkError(
-                "train_vector_cells requires a single-column PK "
-                "(the deterministic k-means init orders by it)")
-        st.schema.col(column)  # raises SchemaError on unknown column
-        emb = self.scan(columns=[st.schema.pk[0], column]).select(
-            F.col(st.schema.pk[0]).alias("vec_id"),
-            F.col(column).alias("embedding"),
-        ).where(F.col("embedding").isNotNull())
-        sampled = None
-        if sample_rows is not None:
-            if sample_rows < n_cells:
-                raise KuduSparkError(
-                    f"sample_rows={sample_rows} < n_cells={n_cells}")
-            total = emb.count()
-            m = max(1, total // max(sample_rows, 1))
-            if m > 1:
-                cand = emb.where(F.xxhash64(F.col("vec_id")) % m == 0)
-                # the hash-sample is probabilistic: near sample_rows ~
-                # n_cells the realized sample can undershoot n_cells,
-                # which would silently train fewer centroids than the
-                # artifact records — fall back to unsampled training
-                # (the guard is one cheap count on the sampled frame)
-                if cand.count() >= n_cells:
-                    emb = cand
-                    sampled = m
-        cents = kmeans_centroids(emb, k=n_cells, n_iters=n_iters)
-        payload = json.dumps({"n_cells": n_cells, "n_iters": n_iters,
-                              "model_id": uuid.uuid4().hex,
-                              "sample_mod": sampled,
-                              # version whose snapshot trained this
-                              # model: files committed later hold rows
-                              # the model never saw (vector_cell_drift)
-                              "trained_version": st.version,
-                              "centroids": cents}).encode()
-        self._env.write_bytes(
-            os.path.join(self.root, f"_ivf_{column}.json"), payload)
-        cols = set(self._vector_cell_cols(st)) | {column}
-        self._commit(st, "alter", [],
-                     props={"vector_cell_cols": ",".join(sorted(cols))})
-
-    def scan_cells(self, column: str, cells: list[int],
-                   filters: list | None = None,
-                   version: int | None = None, _art: dict | None = None) -> DataFrame:
-        """Snapshot scan restricted to the given IVF cells of
-        ``column`` — the candidate fetch of ANN serving, with FULL
-        merge-on-read semantics (an upserted vector is scored at its
-        new value, a deleted one never returns). When every live file
-        carries assignments from the CURRENT model (manifest ivfm
-        stamp — the steady state; mutations keep it, compaction
-        converges older files), the stored column serves the scan and
-        row groups prune. Files predating training OR stamped by a
-        superseded model (a retrain) are routed PER FILE through
-        on-the-fly assignment from the current centroids while
-        current-stamped files keep the stored column and their cellr
-        file pruning — one merge-on-read snapshot, so mid-convergence
-        serves degrade only by the stale fraction, never to a full
-        table scan (≈ Kudu serving each rowset by its own store state,
-        tablet/delta_tracker.cc). Rows with a NULL vector belong to no
-        cell in either mode."""
-        st = self.state(version)
-        if column not in self._vector_cell_cols(st):
-            raise KuduSparkError(
-                f"column {column!r} has no trained cell model "
-                f"(vector_cell_cols={st.props.get('vector_cell_cols', '')!r})")
-        # ``_art`` threads the caller's already-read model through so
-        # ann_topk's probes and candidates are served by ONE consistent
-        # model even if a retrain publishes between the two steps
-        art = _art if _art is not None else self._ivf_artifact(column)
-        if art is None:
-            raise KuduSparkError(
-                f"column {column!r} has no trained cell model; call "
-                "train_vector_cells first")
-        cn = IVFC_PREFIX + column
-        cur = art.get("model_id", "")
-
-        def stamped(f):
-            return bool(f.ivfm and f.ivfm.get(column) == cur)
-
-        st2 = self._augment_state(st, [(cn, "int")])
-        sub = self._prune_cell_files(st2, column, cells, stamped=stamped)
-        if all(stamped(f) for f in st.files):
-            df = self._snapshot_df(sub, filters)
-        else:
-            # HYBRID routing (per file, one snapshot): current-stamped
-            # files serve their stored assignment (pruned above); stale
-            # files recompute from the current centroids at scan time.
-            # coalesce is NOT enough here — a stale file may physically
-            # carry __ivfc values from a superseded model, so its group
-            # OVERRIDES the column. Happens before the merge window, so
-            # a fresh delta shadowing a stale base (and vice versa)
-            # resolves exactly; mid-convergence a serve pays the
-            # on-the-fly cost only for the not-yet-rewritten files
-            # instead of the whole table (VERDICT r13 #1).
-            expr = self._cell_expr(column, art["centroids"])
-
-            def per_file(f):
-                if stamped(f):
-                    return ("cur", None)
-                return ("stale", lambda d: d.withColumn(cn, expr))
-
-            df = self._snapshot_df(sub, filters, per_file=per_file,
-                                   per_file_tag=("ivfc", column, cur))
-        return df.where(F.col(cn).isin([int(c) for c in cells]))
-
-    def _prune_cell_files(self, st: TableState, column: str,
-                          cells: list, stamped=None) -> TableState:
-        """Manifest-level FILE pruning from the flush-time cell ranges
-        (FileEntry.cellr): a cell-clustered corpus opens
-        ~n_probes/n_cells of its base files per serve, before any
-        footer IO. Only BASE files prune — a pruned base row is either
-        outside the probed cells (the post-merge filter would drop it)
-        or outranked by a delta row that moved it (last-write-wins);
-        delta/delete files always participate so the merge window
-        stays exact. ``stamped`` (per-file predicate) restricts pruning
-        to files whose assignments come from the CURRENT model: a stale
-        file's cellr describes a superseded cell space, so it must
-        survive the prune and be re-assigned by the hybrid read."""
-        cset = {int(c) for c in cells}
-
-        def _keep(f):
-            if f.kind != "base":
-                return True
-            if stamped is not None and not stamped(f):
-                return True
-            rng = (f.cellr or {}).get(column)
-            return rng is None or any(rng[0] <= c <= rng[1] for c in cset)
-
-        return dataclasses.replace(st, files=[f for f in st.files if _keep(f)])
-
-    def _snapshot_cells_q8(self, st: TableState, art: dict, column: str,
-                           cells: list) -> DataFrame:
-        """Hybrid int8 candidate snapshot shared by the quantized ANN
-        serve and the ingest semantic-dedup arm: merge-on-read frame
-        carrying __ivfc_<col> and __q8_<col>, cellr-pruned to ``cells``
-        (current-stamped base files only). Converged files serve both
-        sidecolumns from storage — the fp column never leaves parquet;
-        files missing the model stamp or the q8 pair derive the column
-        on the fly PER FILE (byte-identical codes), so a convergence
-        backlog costs only its own fraction of fp reads."""
-        cn, qn = IVFC_PREFIX + column, Q8_PREFIX + column
-        cur = art.get("model_id", "")
-
-        def stamped(f):
-            return bool(f.ivfm and f.ivfm.get(column) == cur)
-
-        st2 = self._augment_state(
-            st, [(cn, "int"), (qn, "array<tinyint>")])
-        sub = self._prune_cell_files(st2, column, cells, stamped=stamped)
-        if all(stamped(f) and f.vq and column in f.vq for f in st.files):
-            return self._snapshot_df(sub)
-        cell_e = self._cell_expr(column, art["centroids"])
-        qe, _se = self._quantize_exprs(column)
-
-        def per_file(f):
-            s = stamped(f)
-            v = bool(f.vq and column in f.vq)
-            if s and v:
-                return ("rv", None)
-
-            def xf(d, s=s, v=v):
-                if not s:
-                    d = d.withColumn(cn, cell_e)
-                if not v:
-                    d = d.withColumn(qn, qe)
-                return d
-
-            return ((s, v), xf)
-
-        return self._snapshot_df(
-            sub, per_file=per_file, per_file_tag=("annq8", column, cur))
+    def scan_cells(self, column: str, cells: list[int], filters: list | None = None,
+                   version: int | None = None) -> DataFrame:
+        """Snapshot rows in the given IVF cells: see vector.scan_cells."""
+        return vector.scan_cells(self, column, cells, filters, version)
 
     def ann_topk(self, column: str, query_keys: list, k: int = 5,
                  n_probes: int = 2, version: int | None = None,
                  quantized: bool = False, refine: int = 4) -> DataFrame:
-        """ANN top-k over the table's stored IVF cells: probe cells
-        come from the tiny frozen centroid model, candidates from a
-        cell-restricted snapshot scan (scan_cells), ranking from the
-        exact cosine — row-compatible with the operator family's
-        ivf_kmeans_topk on identical data. Returns
-        (query_id, neighbor_id, rank, cosine) keyed by the PK.
-
-        ``quantized=True`` composes the table's TWO stored vector
-        sidecolumns into IVF+int8-refine serving (the IVF-PQ-style
-        production shape): the candidate pass reads ONLY
-        (pk, __ivfc, __q8) — ~4x fewer vector bytes on top of the cell
-        pruning, the fp column never leaves parquet — scores an
-        approximate cosine from the int8 codes (cosine is per-vector
-        scale-invariant, so no dequantization and no __q8s read), keeps
-        the top ``k * refine`` per query, then re-ranks ONLY that
-        shortlist against the exact vectors fetched by PK (a bounded
-        |queries| x k x refine IN-list scan). Requires the column in
-        BOTH vector_cell_cols (trained) and vector_quantize_cols; files
-        not yet carrying the stored pair (or stamped by a superseded
-        model) derive codes/cells on the fly PER FILE inside the same
-        snapshot — byte-identical codes, so only the unconverged
-        fraction pays fp reads, mirroring scan_quantized. The final
-        ranking is exact-cosine over the shortlist, so recall is the
-        int8 shortlist's recall — refine trades candidate bytes for it.
-
-        ``version`` time-travels the DATA; the centroid model is
-        always the table's current artifact (models are not
-        versioned — like Kudu, where an index rebuild serves all
-        reads). Stale stamps on old files then simply route through
-        the on-the-fly fallback, so the answer stays exact for the
-        requested snapshot under the current model."""
-        st = self.state(version)
-        art = self._ivf_artifact(column)
-        if art is None:
-            raise KuduSparkError(
-                f"column {column!r} has no trained cell model; call "
-                "train_vector_cells first")
-        pk0 = st.schema.pk[0]
-        # bounded collect (|query_keys| rows, PK-pruned scan): the
-        # serve core computes probe cells on the driver, so the query
-        # vectors come to the driver once — replacing the old probe
-        # crossJoin job's collect, not adding one
-        qv_rows = [
-            (r[0], r[1]) for r in self.scan(
-                columns=[pk0, column], version=version,
-                filters=[(pk0, "in", list(query_keys))],
-            ).select(pk0, column).collect()
-        ]
-        return self._ann_serve(st, art, column, qv_rows,
-                               st.schema.col(pk0).type,
-                               k, n_probes, version, quantized, refine,
-                               exclude_self=True)
+        """ANN top-k of table rows by PK: see vector.ann_topk."""
+        return vector.ann_topk(self, column, query_keys, k, n_probes, version,
+                               quantized, refine)
 
     def ann_topk_vectors(self, column: str, queries: list, k: int = 5,
                          n_probes: int = 2, version: int | None = None,
                          quantized: bool = False, refine: int = 4) -> DataFrame:
-        """ANN top-k for EXTERNAL query vectors — the production serve
-        shape: queries are arbitrary embeddings (a user's query, a new
-        batch to be matched), not rows of the table. ``queries`` is a
-        list of (query_id, vector) pairs; the ids are result LABELS,
-        not PKs, so no self-exclusion applies and collisions with
-        table keys are irrelevant. Everything else matches ann_topk:
-        probe cells from the frozen centroid model, cell-restricted
-        merge-on-read candidates (cellr file pruning included), and
-        the optional int8-refine candidate pass (``quantized=True``)."""
-        st = self.state(version)
-        art = self._ivf_artifact(column)
-        if art is None:
-            raise KuduSparkError(
-                f"column {column!r} has no trained cell model; call "
-                "train_vector_cells first")
-        pairs = [(int(i), [float(x) for x in v]) for i, v in queries
-                 if v is not None]
-        if len({i for i, _ in pairs}) != len(pairs):
-            # a repeated label would double-score every candidate and
-            # let row_number hand the same neighbor consecutive ranks
-            raise KuduSparkError("ann_topk_vectors: duplicate query ids")
-        return self._ann_serve(st, art, column, pairs, "bigint", k,
-                               n_probes, version, quantized, refine,
-                               exclude_self=False)
+        """ANN top-k of external vectors: see vector.ann_topk_vectors."""
+        return vector.ann_topk_vectors(self, column, queries, k, n_probes, version,
+                                       quantized, refine)
 
-    def _ann_serve(self, st: TableState, art: dict, column: str,
-                   qv_rows: list, qid_type: str, k: int, n_probes: int,
-                   version: int | None, quantized: bool, refine: int,
-                   exclude_self: bool) -> DataFrame:
-        """Shared serve core of ann_topk / ann_topk_vectors: probe the
-        frozen centroids with the (query_id, vector) rows, fetch
-        candidates from the probed cells through the snapshot, score,
-        and rank — with the optional int8 candidate pass. ``qv_rows``
-        must be bounded (serve-request sized): probes are computed on
-        the driver and the query frame is broadcast.
+    def vector_cell_staleness(self, column: str, st: TableState | None = None) -> float:
+        """Row fraction with stale cell stamps: see vector.staleness."""
+        return vector.staleness(self, column, st)
 
-        r15 (guide §1.2): probe-cell selection runs as DRIVER MATH
-        (probe_cells_py — bit-identical fold, see its contract)
-        instead of a crossJoin + row_number Spark job at DataFrame
-        construction time, and the query/probe frames are literal
-        (inline) frames instead of spark.createDataFrame — the
-        pickled-RDD local frames spun Python workers on every
-        downstream reference (~300-450 ms per job, measured r15,
-        dominating the serve's construction). The query vectors are
-        float32-rounded FIRST (struct.pack '<f', IEEE round-to-
-        nearest — the same conversion the replaced array<float>
-        createDataFrame applied) so norms/scores match the old
-        stored-column arithmetic bit-for-bit. An array<double> column
-        keeps the query at full precision and casts the literal to
-        array<double>."""
-        import struct as _struct
-
-        from kudu_spark.operators.similarity import (
-            cosine_with_norms,
-            norm_expr,
-            norm_py,
-            probe_cells_py,
-        )
-
-        def _f32(x):
-            return _struct.unpack("<f", _struct.pack("<f", float(x)))[0]
-
-        cents = art["centroids"]
-        pk0 = st.schema.pk[0]
-        nb_type = st.schema.col(pk0).type
-        out_schema = (f"query_id {qid_type}, neighbor_id {nb_type}, "
-                      "rank int, cosine double")
-        double = re.sub(r"\s+", "", st.schema.col(column).type.lower()) == "array<double>"
-        vec_type, conv = ("array<double>", float) if double else ("array<float>", _f32)
-        rows = [
-            (q, None if v is None
-             else [None if x is None else conv(x) for x in v])
-            for q, v in qv_rows
-        ]
-        # NULL vectors never probed and never scored (the old frame
-        # dropped them with isNotNull before the crossJoin)
-        rows = [(q, v) for q, v in rows if v is not None]
-        probe_rows = probe_cells_py(rows, cents, n_probes)
-        if not probe_rows:
-            return self.spark.createDataFrame([], out_schema)
-        probe_cells = sorted({c for _, c in probe_rows})
-        probes_df = F.broadcast(_inline_frame(self.spark, [
-            F.struct(F.lit(q).cast(qid_type).alias("query_id"),
-                     F.lit(int(c)).cast("int").alias("cell"))
-            for q, c in probe_rows]))
-        # query norms once per query row (guide §1.2): every scoring
-        # stage below folds only the dot per (query, candidate) pair —
-        # norm_py is bit-identical to the norm_expr fold (a vector
-        # with a NULL element folds to a NULL norm, exactly like SQL)
-        qv = F.broadcast(_inline_frame(self.spark, [
-            F.struct(
-                F.lit(q).cast(qid_type).alias("query_id"),
-                F.lit(v).cast(vec_type).alias("qv"),
-                (F.lit(norm_py(v)) if all(x is not None for x in v)
-                 else F.lit(None)).cast("double").alias("__qn"))
-            for q, v in rows]))
-        cn = IVFC_PREFIX + column
-        # scan_cells excludes NULL-vector rows and transparently falls
-        # back to on-the-fly assignment for stale/pre-training files,
-        # so a plain equi-join on the probed cell is exact — and every
-        # (query, neighbor) pair is unique by construction (one cell
-        # per snapshot row, unique (query, cell) probes), so no dedup
-        # stage is needed. ``_art`` pins the model read above: a
-        # concurrent retrain cannot serve probes and candidates from
-        # different centroid sets.
-        w2 = Window.partitionBy("query_id").orderBy(
-            F.desc("c"), F.asc("neighbor_id"))
-        qn = Q8_PREFIX + column
-        cur = art.get("model_id", "")
-        if quantized and column not in self._vector_quantize_cols(st):
-            raise KuduSparkError(
-                f"ann_topk(quantized=True) needs column {column!r} in "
-                f"vector_quantize_cols "
-                f"({st.props.get('vector_quantize_cols', '')!r})")
-        if quantized:
-            # int8 candidate pass: (pk, cell, q8) only — the fp column
-            # stays in parquet for every converged file. Same cellr
-            # file pruning as scan_cells; per-file hybrid for files
-            # missing either stamp (_snapshot_cells_q8) — the derived
-            # codes are byte-identical to stored ones, so the shortlist
-            # (and hence the exact re-rank) matches the converged
-            # table's.
-            snap8 = self._snapshot_cells_q8(st, art, column, probe_cells)
-            cand8 = snap8.where(
-                F.col(cn).isin([int(c) for c in probe_cells])).select(
-                F.col(pk0).alias("neighbor_id"),
-                F.col(qn).alias("cv8"),
-                F.col(cn).alias("cell"),
-            ).where(F.col("cv8").isNotNull()).withColumn(
-                "__cn8", norm_expr("cv8"))
-            # all-zero q8 codes (tiny vectors rounding to zero) have
-            # zero norm: NULL cosine sorts last instead of failing the
-            # job under ANSI division. Norms are per-row projections,
-            # so each pair folds only the dot.
-            approx = (
-                cand8.join(probes_df, "cell")
-                .where(F.col("neighbor_id") != F.col("query_id")
-                       if exclude_self else F.lit(True))
-                .join(F.broadcast(qv), "query_id")
-                .select("query_id", "neighbor_id",
-                        cosine_with_norms("qv", "cv8", "__qn", "__cn8").alias("c"))
-            )
-            short = (
-                approx.withColumn("rank", F.row_number().over(w2))
-                .where(F.col("rank") <= max(int(k) * max(int(refine), 1), k))
-                .select("query_id", "neighbor_id")
-            )
-            # bounded collect: |queries| x k x refine shortlist ids
-            ids = sorted({r["neighbor_id"] for r in
-                          short.select("neighbor_id").distinct().collect()})
-            if not ids:
-                return short.select(
-                    "query_id", "neighbor_id",
-                    F.lit(1).alias("rank"),
-                    F.lit(0.0).alias("cosine")).limit(0)
-            exact = self.scan(
-                columns=[pk0, column], version=version,
-                filters=[(pk0, "in", ids)],
-            ).select(F.col(pk0).alias("neighbor_id"),
-                     F.col(column).alias("cv"),
-                     norm_expr(column).alias("__cn"))
-            scored = (
-                F.broadcast(short).join(exact, "neighbor_id")
-                .join(F.broadcast(qv), "query_id")
-                .select("query_id", "neighbor_id",
-                        cosine_with_norms("qv", "cv", "__qn", "__cn").alias("c"))
-            )
-        else:
-            cand = self.scan_cells(column, probe_cells, version=version,
-                                   _art=art).select(
-                F.col(pk0).alias("neighbor_id"),
-                F.col(column).alias("cv"),
-                F.col(cn).alias("cell"),
-                norm_expr(column).alias("__cn"),
-            )
-            scored = (
-                cand.join(probes_df, "cell")
-                .where(F.col("neighbor_id") != F.col("query_id")
-                       if exclude_self else F.lit(True))
-                .join(F.broadcast(qv), "query_id")
-                .select("query_id", "neighbor_id",
-                        cosine_with_norms("qv", "cv", "__qn", "__cn").alias("c"))
-            )
-        return (
-            # NULL cosine = a zero-norm side (query or candidate):
-            # such a pair is "no match", never a ranked neighbor —
-            # without the filter row_number would still hand NULL-c
-            # rows the top ranks of a zero-norm query
-            scored.where(F.col("c").isNotNull())
-            .withColumn("rank", F.row_number().over(w2))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("c", 6).alias("cosine"))
-        )
-
-    def vector_cell_staleness(self, column: str,
-                              st: "TableState | None" = None) -> float:
-        """Fraction of the table's rows living in files whose ``ivfm``
-        stamp is missing or from a superseded model — the rows
-        scan_cells must serve through the on-the-fly fallback (full
-        scan, no pruning). O(metadata): manifest row counts + stamps,
-        zero data IO. Row counts include delta rows (tombstones too),
-        so the fraction is an upper-bound approximation of the live
-        share — the right bias for a maintenance trigger."""
-        st = st or self.state()
-        art = self._ivf_artifact(column)
-        total = sum(f.rows for f in st.files)
-        if art is None or total == 0:
-            return 0.0
-        cur = art.get("model_id", "")
-        stale = sum(f.rows for f in st.files
-                    if not (f.ivfm and f.ivfm.get(column) == cur))
-        return stale / total
-
-    def vector_cell_drift(self, column: str,
-                          st: "TableState | None" = None) -> float:
-        """Fraction of the table's rows committed AFTER the current
-        cell model's training snapshot — rows the frozen centroids
-        never saw. This, not stamp staleness, is the retrain signal:
-        post-training writes are stamped by the current model (so
-        staleness misses them entirely), while stale STAMPS only mean
-        the convergence rewrite hasn't reached a file yet — retraining
-        on those rows is pure waste, the model already trained on
-        them. Measured from the COMMIT LOG (mutation commits after
-        trained_version; compaction commits are content-neutral and
-        MUST not count, or every convergence rewrite would read as
-        drift and re-trigger its own retrain forever). O(commits since
-        training), zero data IO. Artifacts predating the
-        trained_version field read as drift 1.0 (one catch-up retrain,
-        then stamped)."""
-        st = st or self.state()
-        art = self._ivf_artifact(column)
-        total = sum(f.rows for f in st.files)
-        if art is None or total == 0:
-            return 0.0
-        tv = art.get("trained_version")
-        if tv is None:
-            return 1.0
-        if int(tv) >= st.version:
-            return 0.0
-        # bound the log walk: past this many commits since training the
-        # walk would dominate the sweep (one metadata GET per commit on
-        # an object store) — and a model that old under that much churn
-        # should retrain anyway, so saturate instead of reading history
-        if st.version - int(tv) > 8192:
-            return 1.0
-        from kudu_spark.meta import read_log
-
-        mutation_ops = {"insert", "upsert", "update", "delete", "txn"}
-        new = 0
-        for c in read_log(self.root, st.version, min_version=int(tv)):
-            if c.get("op") not in mutation_ops:
-                continue
-            new += sum(a["file"]["rows"] for a in c.get("actions", [])
-                       if a["type"] == "add")
-        return min(1.0, new / total)
-
-    # default IO budget of one convergence step (prop
-    # ivf_converge_budget_bytes): sized like the auto-compaction
-    # budget — a sweep rewrites at most this much, the backlog
-    # amortizes across sweeps while hybrid serving keeps every
-    # already-rewritten file pruning
-    IVF_CONVERGE_BUDGET_BYTES = 256 << 20
+    def vector_cell_drift(self, column: str, st: TableState | None = None) -> float:
+        """Row fraction the cell model never saw: see vector.drift."""
+        return vector.drift(self, column, st)
 
     def converge_vector_cells(self, io_budget_bytes: int | None = None) -> dict:
-        """ONE budgeted convergence step for stale cell-model stamps
-        (and missing q8 pairs on quantized columns): rank partitions
-        holding stale-stamped bytes by stale-bytes-per-rewrite-byte
-        with the shared compaction policy (rank_partitions) and compact
-        the best set that fits the budget. Repeated sweeps drain the
-        backlog; per-file hybrid serving (scan_cells/_ann_serve) keeps
-        every already-converged file pruning meanwhile, so a retrain
-        never costs a full-table rewrite or a zero-pruning window
-        (VERDICT r13 #1). Returns {"partitions": n_compacted,
-        "spent_bytes": ..., "stale_partitions_left": ...}."""
-        st = self.state()
-        budget = (int(io_budget_bytes) if io_budget_bytes is not None
-                  else int(st.props.get("ivf_converge_budget_bytes",
-                                        self.IVF_CONVERGE_BUDGET_BYTES)))
-        cur: dict[str, str] = {}
-        for c in self._vector_cell_cols(st):
-            art = self._ivf_artifact(c)
-            if art is not None:
-                cur[c] = art.get("model_id", "")
-        vq_cols = set(self._vector_quantize_cols(st))
-
-        def stale_file(f):
-            if any(not (f.ivfm and f.ivfm.get(c) == m)
-                   for c, m in cur.items()):
-                return True
-            return any(not (f.vq and c in f.vq) for c in vq_cols)
-
-        if not cur and not vq_cols:
-            return {"partitions": 0, "spent_bytes": 0,
-                    "stale_partitions_left": 0}
-        ranked, n = rank_partitions(
-            st.files, lambda fs: sum(f.bytes for f in fs if stale_file(f)), budget)
-        if n:
-            self.compact(partitions=[c[0] for c in ranked[:n]])
-        return {"partitions": n, "spent_bytes": sum(c[1] for c in ranked[:n]),
-                "stale_partitions_left": len(ranked) - n}
+        """One budgeted convergence step: see vector.converge."""
+        return vector.converge(self, io_budget_bytes)
 
     def maybe_retrain_vector_cells(self) -> dict:
-        """Maintenance-path care of IVF cell models, in two independent
-        budgeted motions (both gated on the ``ivf_retrain_stale_frac``
-        table property — float in (0, 1]; unset = feature off):
-
-        1. RETRAIN when ``vector_cell_drift`` (rows committed after the
-           model's training snapshot) crosses the threshold: mint new
-           centroids from the CURRENT snapshot with the frozen
-           artifact's n_cells/n_iters/sampling. Drift — not stamp
-           staleness — is the trigger, so a convergence still in
-           progress (high staleness, zero drift) can never re-trigger
-           training and restart itself: the thrash a staleness trigger
-           plus partial convergence would loop on forever.
-        2. CONVERGE one ``converge_vector_cells`` budget step whenever
-           any stamp is stale — after a retrain (everything restamps
-           over successive sweeps), after a manual CLI train-cells,
-           or for files predating training. Hybrid serving covers the
-           window in between.
-
-        Returns {column: retrained} plus "__converge__" with the
-        step's stats when one ran."""
-        st = self.state()
-        out: dict = {}
-        raw = st.props.get("ivf_retrain_stale_frac")
-        if raw is None:
-            return out
-        # validate BEFORE any work: a malformed value must surface as
-        # this table's maintenance error, not silently disable the
-        # feature every sweep (same contract as history_max_age_sec)
-        try:
-            frac = float(str(raw).strip())
-        except ValueError:
-            frac = -1.0
-        if not (0.0 < frac <= 1.0):
-            raise KuduSparkError(
-                f"ivf_retrain_stale_frac={raw!r} must be a float in (0, 1]")
-        cols = [c for c in self._vector_cell_cols(st)
-                if self._ivf_artifact(c) is not None]
-        if not cols:
-            return out
-        for col in cols:
-            if self.vector_cell_drift(col, st) < frac:
-                out[col] = False
-                continue
-            art = self._ivf_artifact(col)
-            sample = None
-            if art.get("sample_mod"):
-                # preserve the original training's sampling rate: the
-                # retrain targets roughly the same sample size at the
-                # current row count
-                sample = max(int(art.get("n_cells", 8)),
-                             sum(f.rows for f in st.files)
-                             // int(art["sample_mod"]))
-            self.train_vector_cells(col, n_cells=int(art.get("n_cells", 8)),
-                                    n_iters=int(art.get("n_iters", 3)),
-                                    sample_rows=sample)
-            st = self.state()
-            out[col] = True
-        conv = self.converge_vector_cells()  # O(metadata) when converged
-        if conv["partitions"] or conv["stale_partitions_left"]:
-            out["__converge__"] = conv
-        return out
+        """Maintenance care of cell models: see vector.maybe_retrain."""
+        return vector.maybe_retrain(self)
 
     # -- diff scan ---------------------------------------------------------------
 
@@ -2046,40 +1328,8 @@ class Table:
             out = out.withColumn(DEL_COL, F.lit(False))
         for n, e in zip(pnames, pexprs):
             out = out.withColumn(n, e)
-        # vector_quantize_cols: maintain the STORED int8 columns at
-        # every write (ingest, upsert, compaction rewrite alike) — one
-        # codegen transform per vector column, so scan_quantized reads
-        # ~4x fewer bytes without a derive step. Deletes carry NULL
-        # vectors -> NULL q8, harmless (tombstones are never scored).
-        vq_written = []
-        for vc in self._vector_quantize_cols(st):
-            if vc in out.columns:
-                from kudu_spark.operators.similarity import quantize_expr
-
-                mx = F.aggregate(
-                    F.transform(F.col(vc), lambda x: F.abs(x.cast("double"))),
-                    F.lit(0.0), lambda acc, x: F.greatest(acc, x))
-                scale = F.when(mx > 0, F.lit(127.0) / mx).otherwise(F.lit(0.0))
-                out = out.withColumn(
-                    Q8_PREFIX + vc,
-                    quantize_expr(F.col(vc), scale).cast("array<tinyint>"),
-                ).withColumn(Q8S_PREFIX + vc, scale.cast("float"))
-                vq_written.append(vc)
-        # vector_cell_cols: derive the stored IVF cell assignment from
-        # the FROZEN centroid artifact at every write — O(batch), one
-        # codegen argmax per vector column, no retraining (the index
-        # maintenance contract of train_vector_cells). The manifest
-        # entry is stamped with the artifact's model_id so a later
-        # RETRAIN can tell these assignments are stale.
-        ivfm_written: dict = {}
-        for vc in self._vector_cell_cols(st):
-            if vc in out.columns:
-                art = self._ivf_artifact(vc)
-                if art:
-                    out = out.withColumn(
-                        IVFC_PREFIX + vc,
-                        self._cell_expr(vc, art["centroids"]))
-                    ivfm_written[vc] = art.get("model_id", "")
+        # vector sidecolumns (stored q8 codes, IVF cells) of this batch
+        out, vector_stamp = vector.derive(self, st, out)
         # staging location: in-root when Spark can write the scheme
         # directly (local, hdfs://, s3a://, ... — executors write to
         # shared storage, nothing moves through the driver); a local
@@ -2141,7 +1391,7 @@ class Table:
                 # written without the derived column (no artifact yet)
                 # silently demotes to the remaining keys — layout is a
                 # performance property, never a write error.
-                if c.startswith(IVFC_PREFIX):
+                if c.startswith(vector.IVFC_PREFIX):
                     if c in out.columns:
                         cluster.append(c)
                     continue
@@ -2325,25 +1575,6 @@ class Table:
                     dmark = "L" if all_live else ("D" if all_del else None)
                 if dmark != "L":
                     has_tombstones = True
-            # stored-cell ranges from the same footers (no extra job):
-            # [min, max] of each __ivfc_<col> lets scan_cells prune
-            # whole BASE files from the manifest — the file-level
-            # complement of the clustered layout's row-group pruning
-            cellr: dict = {}
-            for vc in ivfm_written:
-                ci = sch_names.get(IVFC_PREFIX + vc)
-                if ci is None:
-                    continue
-                mns, mxs = [], []
-                for rg in range(md.num_row_groups):
-                    stat = md.row_group(rg).column(ci).statistics
-                    if stat is None or not stat.has_min_max or stat.min is None:
-                        mns = []
-                        break
-                    mns.append(int(stat.min))
-                    mxs.append(int(stat.max))
-                if mns:
-                    cellr[vc] = [min(mns), max(mxs)]
             if senv is self._env:
                 self._env.replace(fsrc, dst)  # same-store atomic move
             else:
@@ -2361,9 +1592,7 @@ class Table:
                     min_pk=mn,
                     max_pk=mx,
                     dmark=dmark,
-                    vq=vq_written or None,
-                    ivfm=ivfm_written or None,
-                    cellr=cellr or None,
+                    **vector_stamp(md),
                 )
             )
         senv.rmtree(staging)
@@ -3592,7 +2821,6 @@ class Table:
         republish a schema computed from the stale snapshot and undo a
         concurrent alter (same discipline as Alterer.apply)."""
         from kudu_spark.engine import _spark_type_to_ddl
-        from kudu_spark.meta import ColumnSpec
 
         st = self.state()
         extra = [
@@ -3681,29 +2909,7 @@ class Table:
         # O(batch) key probe is off or answers only a superset
         if st.props.get("pk_bloom_cols"):
             out.update(presence.summary(self.root, st.files, st.schema))
-        # vector index health: per trained cell column, the frozen
-        # model's identity, the stale-stamped row fraction (the
-        # convergence backlog hybrid serving is absorbing) and the
-        # drift fraction (rows the model never trained on — the
-        # auto-retrain trigger, ivf_retrain_stale_frac). O(metadata)
-        # like everything above.
-        vcols = self._vector_cell_cols(st)
-        if vcols:
-            models = {}
-            for c in vcols:
-                art = self._ivf_artifact(c)
-                if art is None:
-                    continue
-                models[c] = {
-                    "model_id": art.get("model_id", ""),
-                    "n_cells": int(art.get("n_cells", 0)),
-                    "stale_fraction": round(
-                        self.vector_cell_staleness(c, st), 4),
-                    "drift_fraction": round(
-                        self.vector_cell_drift(c, st), 4),
-                }
-            if models:
-                out["vector_cell_models"] = models
+        out.update(vector.summary(self, st))
         return out
 
     def _live_rows(self, st: TableState) -> int:

@@ -52,6 +52,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from kudu_spark import vector
     from kudu_spark.engine import Engine
     from kudu_spark.session import get_spark
 
@@ -99,7 +100,7 @@ def main() -> None:
     # probes (recomputed here from the frozen model, like ann_topk).
     from kudu_spark.operators.similarity import cosine_expr
 
-    art = t._ivf_artifact("embedding")
+    art = vector.artifact(t, "embedding")
     cent_df = F.broadcast(spark.createDataFrame(
         [(i, c) for i, c in enumerate(art["centroids"])],
         "centroid_id int, centv array<double>"))

@@ -4,6 +4,7 @@ Reproduces bench.py's mutate-then-delete shape at sf0.01 and asserts
 the snapshot plan over a (live-delta + pure-delete-delta) table has no
 global row_number window, then times q6 in both states.
 """
+import os
 import sys
 import tempfile
 import time
@@ -11,7 +12,7 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from kudu_spark.engine import Engine  # noqa: E402
 from kudu_spark.queries import load  # noqa: E402
 

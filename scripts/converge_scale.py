@@ -59,6 +59,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from kudu_spark import vector
     from kudu_spark.engine import Engine
     from kudu_spark.session import get_spark
 
@@ -112,13 +113,13 @@ def main() -> None:
     # 100% stale stamps, rows must not change at any point
     t.train_vector_cells("embedding", n_cells=args.cells, n_iters=2)
     t = eng.table("vecs")
-    cur = t._ivf_artifact("embedding")["model_id"]
+    cur = vector.artifact(t, "embedding")["model_id"]
 
     def fp_bytes_exposed():
         st = t.state()
         return sum(f.bytes for f in st.files
-                   if not (f.ivfm and f.ivfm.get("embedding") == cur
-                           and f.vq and "embedding" in f.vq))
+                   if not (vector.current(f, vector.IVFC_PREFIX, "embedding", cur)
+                           and vector.current(f, vector.Q8_PREFIX, "embedding")))
 
     total_bytes = sum(f.bytes for f in t.state().files)
     budget = max(1, total_bytes // max(args.steps, 1))

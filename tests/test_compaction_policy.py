@@ -8,6 +8,7 @@ Every expected pick below matches what the policy picked before the
 three walks were merged into rank_partitions, except the three cases
 marked CHANGED, which say what the old walk picked instead."""
 
+from kudu_spark import vector
 from kudu_spark.meta import FileEntry, TableState
 from kudu_spark.table import Table
 
@@ -43,16 +44,6 @@ class PolicyTable(Table):
 
     def merge_presence_sidecars(self, *args, **kwargs):
         return None
-
-    # one vector column whose current cell model is "m2"
-    def _vector_cell_cols(self, st):
-        return ["v"]
-
-    def _ivf_artifact(self, column):
-        return {"model_id": "m2"}
-
-    def _vector_quantize_cols(self, st):
-        return []
 
 
 def auto_picks(files, props=None, commit_delta_bytes=0):
@@ -142,17 +133,20 @@ def test_explicit_budget_walk_stops_at_first_misfit():
     assert [c["partition"] for c in t.compaction_plan(io_budget_bytes=60 * MiB)] == [key(0)]
 
 
-def test_converge_ranks_by_stale_bytes():
+def test_converge_ranks_by_stale_bytes(monkeypatch):
+    # one vector column whose current cell model is "m2"
+    monkeypatch.setattr(vector, "artifact", lambda t, column: {"model_id": "m2"})
+    props = {"vector_cell_cols": "v"}
     cur, old = {"v": "m2"}, {"v": "m1"}
     files = [fe(0, 2, ivfm=cur), fe(0, 8, ivfm=old),    # 80% stale
              fe(1, 8, ivfm=cur), fe(1, 2, ivfm=old),    # 20% stale
              fe(2, 10, ivfm=cur),                       # converged
              fe(3, 5, ivfm=old), fe(3, 5, ivfm=cur)]    # 50% stale
-    t = PolicyTable(files)
+    t = PolicyTable(files, props)
     assert t.converge_vector_cells(io_budget_bytes=25 * MiB) == {
         "partitions": 2, "spent_bytes": 20 * MiB, "stale_partitions_left": 1}
     assert t.compacted == [[key(0), key(3)]]
-    t = PolicyTable(files)
+    t = PolicyTable(files, props)
     assert t.converge_vector_cells(io_budget_bytes=1) == {
         "partitions": 1, "spent_bytes": 10 * MiB, "stale_partitions_left": 2}
     assert t.compacted == [[key(0)]]

@@ -1022,3 +1022,40 @@ def test_maintenance_daemon_counts_table_errors(engine, spark):
         stats = engine.stop_maintenance()
     assert stats["sweeps"] >= 2
     assert stats["errors"] >= 2  # one per sweep, every sweep
+
+
+def test_python_workers_import_the_package_without_pythonpath(tmp_path):
+    """A driver that put the package on ``sys.path`` itself (no
+    PYTHONPATH, no install, working directory outside the checkout)
+    still runs the engine's Python UDFs: binding a session hands the
+    package's directory to the Python workers. The presence probe of a
+    ``pk_bloom_cols`` table runs the ``present`` pandas UDF on the
+    second insert's duplicate-key check."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    checkout = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {checkout!r})
+        from pyspark.sql import SparkSession
+        spark = (SparkSession.builder.master("local[1]")
+                 .config("spark.ui.enabled", "false")
+                 .config("spark.sql.shuffle.partitions", "2").getOrCreate())
+        from kudu_spark.engine import Engine
+        eng = Engine(spark, {str(tmp_path / "wh")!r})
+        eng.create_table("t", [("id", "bigint", False), ("v", "string", True)],
+                         pk=["id"])
+        eng.alter_table("t").set_property("pk_bloom_cols", "id").apply()
+        rows = "id bigint, v string"
+        eng.table("t").insert(spark.createDataFrame([(1, "a"), (2, "b")], rows))
+        eng.table("t").insert(spark.createDataFrame([(3, "c")], rows))
+        print("IDS", sorted(r.id for r in eng.table("t").scan().collect()))
+        spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run([sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert "IDS [1, 2, 3]" in out.stdout, out.stderr[-4000:]

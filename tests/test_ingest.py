@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from kudu_spark import vector
 from kudu_spark.engine import Engine
 from kudu_spark.streaming.ingest import (
     create_corpus_tables,
@@ -224,7 +225,7 @@ def test_ingest_semantic_dedup_via_stored_cells(spark, tmp_path):
 
     from kudu_spark.queries import load
     from kudu_spark.streaming.ingest import _semantic_collisions
-    from kudu_spark.table import IVFC_PREFIX
+    from kudu_spark.vector import IVFC_PREFIX
 
     emb = load(spark, "/root/testdata/sf0.001", "embeddings")
 
@@ -276,7 +277,7 @@ def test_ingest_semantic_dedup_via_stored_cells(spark, tmp_path):
     tb = eng_b.table("corpus")
     tb.compact(full=True)
     st_b = tb.state()
-    art = tb._ivf_artifact("embedding")
+    art = vector.artifact(tb, "embedding")
     assert all(f.ivfm and f.ivfm.get("embedding") == art["model_id"]
                for f in st_b.files)  # stored path genuinely taken
     rb = ingest_batch(eng_b, batch, embedding_col="embedding",
@@ -392,7 +393,7 @@ def test_ingest_semantic_dedup_quantize_aware(spark, tmp_path):
     from kudu_spark.queries import load
     from kudu_spark.streaming.ingest import (_semantic_collisions,
                                              ingest_corpus_stream)
-    from kudu_spark.table import IVFC_PREFIX
+    from kudu_spark.vector import IVFC_PREFIX
 
     emb = load(spark, "/root/testdata/sf0.001", "embeddings")
 
@@ -450,8 +451,9 @@ def test_ingest_semantic_dedup_quantize_aware(spark, tmp_path):
     # (b) candidate ReadSchema: the int8 pass never reads the fp
     # column — only __ivfc + __q8 (plus pk) leave parquet
     t = eng_q8.table("corpus")
-    art = t._ivf_artifact("embedding")
-    snap = t._snapshot_cells_q8(t.state(), art, "embedding", [0, 1])
+    art = vector.artifact(t, "embedding")
+    snap = vector.snapshot(t, t.state(), "embedding",
+                           (vector.IVFC_PREFIX, vector.Q8_PREFIX), art, [0, 1])
     cand = snap.select("doc_id", "__q8_embedding", "__ivfc_embedding")
     plan = cand._sc._jvm.PythonSQLUtils.explainString(
         cand._jdf.queryExecution(), "formatted")

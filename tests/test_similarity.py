@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from kudu_spark import vector
 from kudu_spark.operators import similarity as SIM
 from kudu_spark.queries import load
 
@@ -456,7 +457,7 @@ def test_engine_ann_cells_retrain_and_null_vectors(spark, tmp_path):
     # RETRAIN with different params: every stored assignment is stale
     t.train_vector_cells("embedding", n_cells=8, n_iters=3)
     t = eng.table("vr")
-    art = t._ivf_artifact("embedding")
+    art = vector.artifact(t, "embedding")
     assert art["n_cells"] == 8 and art.get("model_id")
     st = t.state()
     assert not all(f.ivfm and f.ivfm.get("embedding") == art["model_id"]
@@ -516,19 +517,19 @@ def test_maintenance_auto_retrains_stale_cell_model(spark, tmp_path):
     eng, t = build(tmp_path / "auto", grown=False)
     assert t.vector_cell_staleness("embedding") == 1.0  # pre-training files
     assert t.vector_cell_drift("embedding") == 0.0      # ...already trained on
-    art0 = t._ivf_artifact("embedding")
+    art0 = vector.artifact(t, "embedding")
 
     # no opt-in property: the sweep must not touch the model or stamps
     out = eng.maintenance_sweep()
     assert "__errors__" not in out
-    assert eng.table("vc")._ivf_artifact("embedding")["model_id"] == art0["model_id"]
+    assert vector.artifact(eng.table("vc"), "embedding")["model_id"] == art0["model_id"]
 
     # CONVERGE motion: restamp without retraining
     eng.alter_table("vc").set_property("ivf_retrain_stale_frac", "0.5").apply()
     out = eng.maintenance_sweep()
     assert "__errors__" not in out and out["vc"] is True
     t = eng.table("vc")
-    assert t._ivf_artifact("embedding")["model_id"] == art0["model_id"]
+    assert vector.artifact(t, "embedding")["model_id"] == art0["model_id"]
     st = t.state()
     assert st.files and all(
         f.ivfm and f.ivfm.get("embedding") == art0["model_id"] for f in st.files)
@@ -541,7 +542,7 @@ def test_maintenance_auto_retrains_stale_cell_model(spark, tmp_path):
     out = eng.maintenance_sweep()
     assert "__errors__" not in out and out["vc"] is True
     t = eng.table("vc")
-    art1 = t._ivf_artifact("embedding")
+    art1 = vector.artifact(t, "embedding")
     assert art1["model_id"] != art0["model_id"]
     st = t.state()
     assert st.files and all(
@@ -551,7 +552,7 @@ def test_maintenance_auto_retrains_stale_cell_model(spark, tmp_path):
 
     # stability: an immediately following sweep must not retrain again
     eng.maintenance_sweep()
-    assert eng.table("vc")._ivf_artifact("embedding")["model_id"] == art1["model_id"]
+    assert vector.artifact(eng.table("vc"), "embedding")["model_id"] == art1["model_id"]
 
     # row-identity vs the manual path (train on the grown corpus +
     # convergence compaction) — deterministic training makes the two
@@ -611,9 +612,9 @@ def test_scan_cells_manifest_file_pruning(spark, tmp_path):
 
     # ground truth: on-the-fly assignment over the FULL snapshot,
     # filtered post-merge (the semantics pruning must preserve)
-    art = t._ivf_artifact("embedding")
+    art = vector.artifact(t, "embedding")
     full = t.scan().withColumn(
-        "__c", t._cell_expr("embedding", art["centroids"]))
+        "__c", SIM.assign_cells_expr("embedding", art["centroids"]))
     want = sorted(r.vec_id for r in full.where(F.col("__c") == 0).collect())
     got = sorted(r.vec_id for r in probed.select("vec_id").collect())
     assert got == want and want
@@ -801,8 +802,8 @@ def test_ann_topk_external_vectors(spark, tmp_path):
     assert gq[900010] == (10, 1.0) and gq[900020] == (20, 1.0)
 
 
-def test_arrow_cell_assignment_and_sampled_training(spark, tmp_path, monkeypatch):
-    """Past ARROW_CELL_ASSIGN_THRESHOLD centroids, stored-cell
+def test_arrow_cell_assignment_and_sampled_training(spark, tmp_path):
+    """Past assign_cells_expr's threshold (32) centroids, stored-cell
     assignment switches to an Arrow/numpy gemm (higher-order-function
     cosines are interpreted and stop scaling — measured in
     scripts/semantic_scale.py). The two implementations must agree on
@@ -810,7 +811,6 @@ def test_arrow_cell_assignment_and_sampled_training(spark, tmp_path, monkeypatch
     serve correctly end-to-end, and sampled training
     (train_vector_cells(sample_rows=...)) must produce a valid,
     deterministic model recorded in the artifact."""
-    import kudu_spark.table as tbl
     from kudu_spark.engine import Engine
 
     eng = Engine(spark, str(tmp_path / "wh"))
@@ -825,18 +825,17 @@ def test_arrow_cell_assignment_and_sampled_training(spark, tmp_path, monkeypatch
     # oracle-parity arithmetic), assignment arrow-based
     t.train_vector_cells("embedding", n_cells=40, n_iters=2)
     t = eng.table("big")
-    art = t._ivf_artifact("embedding")
+    art = vector.artifact(t, "embedding")
     assert len(art["centroids"]) == 40
 
     src = emb.select("vec_id", "embedding")
     arrow = {r.vec_id: r.c for r in src.select(
-        "vec_id", t._cell_expr("embedding", art["centroids"]).alias("c")
+        "vec_id", SIM.assign_cells_expr("embedding", art["centroids"]).alias("c")
     ).collect()}
-    with monkeypatch.context() as mp:
-        mp.setattr(tbl, "ARROW_CELL_ASSIGN_THRESHOLD", 10_000)
-        expr = {r.vec_id: r.c for r in src.select(
-            "vec_id", t._cell_expr("embedding", art["centroids"]).alias("c")
-        ).collect()}
+    expr = {r.vec_id: r.c for r in src.select(
+        "vec_id", SIM.assign_cells_expr("embedding", art["centroids"],
+                                        threshold=10_000).alias("c")
+    ).collect()}
     assert arrow == expr  # identical assignment incl. tie-break
 
     # end-to-end through the arrow write path: compaction stamps the
@@ -856,11 +855,11 @@ def test_arrow_cell_assignment_and_sampled_training(spark, tmp_path, monkeypatch
     # model still serves; same sample -> same centroids on retrain
     t.train_vector_cells("embedding", n_cells=8, n_iters=2,
                          sample_rows=200)
-    a1 = eng.table("big")._ivf_artifact("embedding")
+    a1 = vector.artifact(eng.table("big"), "embedding")
     assert a1["sample_mod"] == 2 and len(a1["centroids"]) == 8
     t.train_vector_cells("embedding", n_cells=8, n_iters=2,
                          sample_rows=200)
-    a2 = eng.table("big")._ivf_artifact("embedding")
+    a2 = vector.artifact(eng.table("big"), "embedding")
     assert a2["centroids"] == a1["centroids"]
     assert eng.table("big").ann_topk(
         "embedding", [10], k=3, n_probes=2).count() == 3
@@ -870,7 +869,7 @@ def test_arrow_cell_assignment_and_sampled_training(spark, tmp_path, monkeypatch
 
 
 @pytest.mark.slow  # nightly lane (pytest.ini): exhaustive/stress
-def test_budgeted_convergence_and_hybrid_serving(spark, tmp_path):
+def test_budgeted_convergence_and_hybrid_serving(spark, tmp_path, monkeypatch):
     """VERDICT r13 #1: a retrain (or post-training backlog) converges
     through the BUDGETED compaction knapsack across sweeps — never one
     full-table rewrite — while per-file hybrid serving keeps the
@@ -923,11 +922,11 @@ def test_budgeted_convergence_and_hybrid_serving(spark, tmp_path):
     # drift 0 (files predate training) -> the sweep must only CONVERGE;
     # budget 1 byte -> the knapsack takes exactly its mandatory first
     # partition per sweep
+    monkeypatch.setattr(vector, "CONVERGE_BUDGET_BYTES", 1)
     eng.alter_table("hc") \
-        .set_property("ivf_retrain_stale_frac", "0.9") \
-        .set_property("ivf_converge_budget_bytes", "1").apply()
+        .set_property("ivf_retrain_stale_frac", "0.9").apply()
     t = eng.table("hc")
-    mid = t._ivf_artifact("embedding")["model_id"]
+    mid = vector.artifact(t, "embedding")["model_id"]
 
     def stamped_parts():
         st = eng.table("hc").state()
@@ -946,7 +945,7 @@ def test_budgeted_convergence_and_hybrid_serving(spark, tmp_path):
         assert "__errors__" not in out and out["hc"] is True
         t = eng.table("hc")
         # model never re-minted mid-convergence (drift stays 0)
-        assert t._ivf_artifact("embedding")["model_id"] == mid
+        assert vector.artifact(t, "embedding")["model_id"] == mid
         done, total = stamped_parts()
         assert done == sweep and total == 4  # (ii) one partition/sweep
         # (iii) exact rows at every intermediate state, both serve modes

@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from kudu_spark import vector
 from kudu_spark.engine import Engine
 from kudu_spark.sources import (
     avro_schema,
@@ -231,7 +232,7 @@ def test_backup_restores_vector_cell_model(engine, spark, tmp_path):
     backup(t, broot, incremental=True)
 
     dst = restore(engine, broot, "vcb", new_name="vcb2")
-    assert dst._ivf_artifact("embedding") is not None
+    assert vector.artifact(dst, "embedding") is not None
     src_rows = sorted(tuple(r) for r in
                       engine.table("vcb").ann_topk(
                           "embedding", [10, 20], k=5, n_probes=2).collect())
@@ -273,7 +274,7 @@ def test_copy_table_carries_props_and_model(engine, spark):
 
     dst = copy_table(engine, "vcc", "vcc2")
     assert dst.state().props.get("vector_cell_cols") == "embedding"
-    assert dst._ivf_artifact("embedding") is not None
+    assert vector.artifact(dst, "embedding") is not None
     src_rows = sorted(tuple(r) for r in
                       t.ann_topk("embedding", [10, 20], k=5).collect())
     dst_rows = sorted(tuple(r) for r in
@@ -306,7 +307,7 @@ def test_restore_applies_later_window_props(engine, spark, tmp_path):
 
     dst = restore(engine, broot, "vlp", new_name="vlp2")
     assert dst.state().props.get("vector_cell_cols") == "embedding"
-    assert dst._ivf_artifact("embedding") is not None
+    assert vector.artifact(dst, "embedding") is not None
     src_rows = sorted(tuple(r) for r in
                       engine.table("vlp").ann_topk(
                           "embedding", [10, 20], k=5).collect())

@@ -27,7 +27,7 @@ from kudu_spark.meta import (
     append_commit,
     replay,
 )
-from kudu_spark.table import AUTO_INC_COL, RESERVED, Table
+from kudu_spark.table import AUTO_INC_COL, RESERVED, Table, locate
 
 
 def _spark_type_to_ddl(dt: T.DataType) -> str:
@@ -1136,26 +1136,12 @@ class Engine:
     def locate_row(self, name: str, pk_values: dict) -> dict:
         """Partition-function evaluation for a row (≈ `kudu table
         locate_row`, tools/tool_action_table.cc:1380-1431), on the
-        driver (plans/keyhash.py). Raises KuduSparkError for a key
+        driver (``table.locate``). Raises KuduSparkError for a key
         value the driver cannot coerce to its column type exactly."""
-        t = self.table(name)
-        st = t.state()
-        rid = None
-        rs = st.partition_spec.range_spec
-        if rs.enabled:
-            rid = rs.range_id_of([pk_values[c] for c in rs.cols])
-            if rid < 0:
-                raise KuduSparkError("row does not fall in any range partition")
-        # per-range custom hash schemas change the bucket modulus
-        hash_b = [
-            t._bucket_of(
-                i,
-                {c: pk_values[c] for c in dim.columns},
-                st.partition_spec.buckets_for(rid, i),
-            )
-            for i, dim in enumerate(st.partition_spec.hash_dims)
-        ]
-        return {"hash": hash_b, "range": rid}
+        loc = locate(self.table(name).state(), pk_values)
+        if loc["range"] == -1:
+            raise KuduSparkError("row does not fall in any range partition")
+        return loc
 
 
 def _bounds_overlap(lo1, hi1, lo2, hi2) -> bool:

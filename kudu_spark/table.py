@@ -258,6 +258,91 @@ def partition_key(f: "FileEntry"):
     return (tuple(f.partition.get("hash", [])), f.partition.get("range"))
 
 
+def bucket_hashes(st: TableState, dim_idx: int, rows) -> list[int]:
+    """Spark's ``xxhash64(write_cast(cols), lit(seed))`` of each value
+    tuple in ``rows`` (in hash dimension ``dim_idx``'s column order),
+    computed on the driver by plans/keyhash.py bit for bit; ``%
+    st.partition_spec.buckets_for(range_id, dim_idx)`` is the write
+    path's bucket (the writer and the presence build hash in the JVM;
+    tests/test_keyhash.py keeps the two identical). Raises
+    LiteralNotHashable (a KuduSparkError) for a literal the driver
+    cannot coerce exactly."""
+    dim = st.partition_spec.hash_dims[dim_idx]
+    rows = list(rows)
+    cols = [keyhash.column(st.schema.col(c).type, [r[j] for r in rows])
+            for j, c in enumerate(dim.columns)]
+    return [keyhash.xxhash64(r, dim.seed) for r in zip(*cols)]
+
+
+def locate(st: TableState, values: dict) -> dict:
+    """The partition that holds a row with key ``values`` (column ->
+    value, covering every partition column) at ``st``: ``{"hash":
+    [bucket per hash dimension], "range": range id}``, the range id
+    None on tables without range partitioning and -1 (with no
+    buckets) when no range covers the row. This is the write path's
+    partition function on the driver, Kudu's client-side
+    ``KuduPartitioner`` (client.h:3494-3548): ``Engine.locate_row``
+    and the key probe (``Table._live_keys``) route through it, and
+    ``Table._prune`` prunes buckets with the same ``bucket_hashes``.
+    Raises LiteralNotHashable, or TypeError when a value does not
+    compare with the range bounds."""
+    ps = st.partition_spec
+    rs = ps.range_spec
+    rid = rs.range_id_of([values[c] for c in rs.cols]) if rs.enabled else None
+    if rid == -1:
+        return {"hash": [], "range": -1}
+    return {"hash": [bucket_hashes(st, i, [[values[c] for c in dim.columns]])[0]
+                     % ps.buckets_for(rid, i)
+                     for i, dim in enumerate(ps.hash_dims)],
+            "range": rid}
+
+
+def _bound_norm(type_str: str):
+    """Comparable form of a PK value, or of a manifest footer bound, of
+    column type ``type_str``. DECIMAL bounds are stored as JSON
+    strings whose lexicographic order differs from numeric order
+    ("100" < "20"), so both sides decode to Decimal; dates/timestamps
+    (isoformat) and bytes (hex) stay strings, whose order IS the value
+    order. NaN maps to None, "unknown": a float column's footer
+    records NaN as its max, and no bound can exclude a NaN key."""
+    if type_str.strip().lower().startswith("decimal"):
+        import decimal
+
+        return lambda v: None if v is None else decimal.Decimal(str(v))
+
+    def norm(v):
+        v = _jsonable(v)
+        return None if isinstance(v, float) and v != v else v
+
+    return norm
+
+
+def _within(lo, v, hi) -> bool:
+    """Can a file with normalized footer bounds ``[lo, hi]`` hold the
+    normalized value ``v``? Anything unknown (None) or incomparable
+    answers yes."""
+    if lo is None or v is None or hi is None:
+        return True
+    try:
+        return lo <= v <= hi
+    except TypeError:
+        return True
+
+
+def _file_bounds(f: "FileEntry", i: int, norm) -> tuple:
+    """(lo, hi) footer bounds of ``f`` on PK column ``i``, normalized
+    by ``norm`` (its ``_bound_norm``); None when unknown."""
+    def at(vals):
+        return None if vals is None or i >= len(vals) else norm(vals[i])
+
+    return at(f.min_pk), at(f.max_pk)
+
+
+# a NaN key column in ``Table._collect_keys``' dedup: Spark's grouping
+# treats NaN as equal to NaN, Python's == does not
+_NAN = object()
+
+
 def rank_partitions(files: list, benefit, budget: int | None = None) -> tuple[list, int]:
     """THE compaction policy (≈ the budgeted knapsack of
     tablet/compaction_policy.h:74-129), shared by explicit compaction,
@@ -425,21 +510,6 @@ class Table:
             exprs.append(range_expr.cast("int"))
         return names, exprs
 
-    def _bucket_of(self, dim_idx: int, values: dict, buckets: int | None = None) -> int:
-        """Planner-side hash bucket for a fully-bound hash dimension,
-        computed on the driver by plans/keyhash.py — the write path's
-        ``pmod(xxhash64(write_cast(cols), lit(seed)), buckets)`` bit
-        for bit (the writer and the presence build still hash in the
-        JVM; tests/test_keyhash.py keeps the two identical).
-        ``buckets`` overrides the dimension default (per-range custom
-        hash schemas). Raises LiteralNotHashable (a KuduSparkError)
-        for a literal the driver cannot coerce exactly."""
-        st = self.state()
-        dim = st.partition_spec.hash_dims[dim_idx]
-        n = dim.buckets if buckets is None else int(buckets)
-        row = [keyhash.column(st.schema.col(c).type, [values[c]])[0] for c in dim.columns]
-        return keyhash.xxhash64(row, dim.seed) % n
-
     # -- pruning ---------------------------------------------------------------
 
     def _prune(self, st: TableState, filters: list[Predicate] | None) -> list[FileEntry]:
@@ -470,11 +540,9 @@ class Table:
             if n_combos > 8192:
                 continue  # cap planner work; the scan-side filter still applies
             try:
-                cols = [keyhash.column(st.schema.col(c).type, ch)
-                        for c, ch in zip(dim.columns, choices)]
+                h = bucket_hashes(st, i, itertools.product(*choices))
             except keyhash.LiteralNotHashable:
                 continue  # no exact bucket; the scan-side filter still applies
-            h = [keyhash.xxhash64(row, dim.seed) for row in itertools.product(*cols)]
 
             def modulus(f, i=i):
                 return ps.buckets_for(f.partition.get("range"), i)
@@ -489,53 +557,26 @@ class Table:
                 files = [f for f in files if f.partition.get("range") in keep_ids]
         # PK min/max pruning: every PK column's footer bounds prune
         # independently (file skipped only when its recorded bounds
-        # exclude the predicate)
+        # exclude the predicate; see _bound_norm)
         pk_pos = {c: i for i, c in enumerate(st.schema.pk)}
         for col, op, val in filters:
             i = pk_pos.get(col)
-            if i is None:
+            if i is None or op not in ("=", "in", "<", "<=", ">", ">="):
                 continue
-            # DECIMAL bounds are stored as JSON strings whose
-            # lexicographic order differs from numeric order ("100" <
-            # "20"); decode both sides back to Decimal so the compare
-            # is numeric. Dates/timestamps (isoformat) and bytes (hex)
-            # stay strings — those encodings ARE order-preserving.
-            if st.schema.col(col).type.strip().lower().startswith("decimal"):
-                import decimal
-
-                dec = decimal.Decimal
-
-                def norm(v, dec=dec):
-                    return None if v is None else dec(str(v))
-            else:
-                norm = _jsonable
-            if op != "in":
-                val = norm(val)
-
-            def lo(f, i=i, norm=norm):
-                return None if f.min_pk is None or i >= len(f.min_pk) else norm(f.min_pk[i])
-
-            def hi(f, i=i, norm=norm):
-                return None if f.max_pk is None or i >= len(f.max_pk) else norm(f.max_pk[i])
-
-            if op == "=":
-                files = [
-                    f for f in files
-                    if lo(f) is None or hi(f) is None or (lo(f) <= val <= hi(f))
-                ]
+            norm = _bound_norm(st.schema.col(col).type)
+            vs = [norm(v) for v in val] if op == "in" else [norm(val)]
+            if not vs:
+                return []  # IN () matches nothing
+            if op in ("=", "in"):
+                def fits(lo, hi, vs=vs):
+                    return any(_within(lo, v, hi) for v in vs)
             elif op in ("<", "<="):
-                files = [f for f in files if lo(f) is None or lo(f) <= val]
-            elif op in (">", ">="):
-                files = [f for f in files if hi(f) is None or hi(f) >= val]
-            elif op == "in":
-                vs = [norm(v) for v in val]
-                if not vs:
-                    return []
-                files = [
-                    f for f in files
-                    if lo(f) is None or hi(f) is None
-                    or any(lo(f) <= v <= hi(f) for v in vs)
-                ]
+                def fits(lo, hi, v=vs[0]):
+                    return _within(lo, v, v)  # lo <= v
+            else:
+                def fits(lo, hi, v=vs[0]):
+                    return _within(v, v, hi)  # v <= hi
+            files = [f for f in files if fits(*_file_bounds(f, i, norm))]
         return files
 
     def _live_range_ids(self, st, filters, rs) -> set | None:
@@ -1886,8 +1927,9 @@ class Table:
 
     # -- PK existence probe -------------------------------------------------------
 
-    # point-mutation batches up to this many distinct leading-PK values
-    # probe with an IN-list instead of a min/max range
+    # key batches up to this many rows are collected and probed on the
+    # driver (_live_keys); larger ones probe in Spark, per PK column
+    # with an IN-list of up to this many distinct values
     PROBE_KEYS_MAX = 8192
 
     def _snapshot_overlapping(self, st: TableState, batch: DataFrame) -> DataFrame:
@@ -1896,7 +1938,10 @@ class Table:
         + key-bounds probe (tablet/tablet.cc:116-124,591,
         cfile/bloomfile.cc). Safe for any batch-vs-current join: every
         batch key satisfies the restriction, so no candidate match is
-        lost.
+        lost. It serves the batch joins that need more than key
+        existence (``update``, upserts of immutable columns, SQL DML,
+        ingest) and key probes of batches over PROBE_KEYS_MAX; smaller
+        key batches are routed per key on the driver (``_live_keys``).
 
         The probe restricts on EVERY primary-key column, not just the
         leading one (Kudu probes the full encoded key against
@@ -1947,18 +1992,176 @@ class Table:
     def _existing_pks(self, st: TableState, batch: DataFrame) -> DataFrame:
         return self._snapshot_overlapping(st, batch).select(*st.schema.pk)
 
-    def _present_keys(self, st: TableState, df: DataFrame) -> DataFrame:
-        """Rows of ``df`` whose primary key is live at ``st`` — the one
-        key-existence probe of the write paths (INSERT's duplicate
-        check, a session's per-row split, a transaction's re-probe at
-        publish and at recovery). When live files carry presence
-        sidecars they answer first: no false negatives, so a key they
-        rule out is absent with zero data IO (Kudu's per-rowset
-        presence check before the B-tree seek, tablet/tablet.cc:116-124).
-        Positives — every row, on a table without the index — are
-        verified against the data as ``df ⋉ _existing_pks``."""
+    def _collect_keys(self, st: TableState, df: DataFrame) -> list[tuple] | None:
+        """The distinct primary keys of ``df`` (its PK columns already in
+        the table's types) as tuples in hand, or None when ``df`` holds
+        more than PROBE_KEYS_MAX rows. One Spark job, which runs ``df``
+        once. Keys dedup on the driver as Spark's grouping compares
+        them: NaN equals NaN and -0.0 equals 0.0 (as in Python); arrow
+        keeps timestamps as instants and binary as bytes."""
+        pk = st.schema.pk
+        got = df.select(*pk).limit(self.PROBE_KEYS_MAX + 1).toArrow()
+        if got.num_rows > self.PROBE_KEYS_MAX:
+            return None
+        seen, out = set(), []
+        for key in zip(*[got.column(c).to_pylist() for c in pk]):
+            ident = tuple(_NAN if isinstance(v, float) and v != v else v for v in key)
+            if ident not in seen:
+                seen.add(ident)
+                out.append(key)
+        return out
+
+    def _key_frame(self, st: TableState, keys: list[tuple],
+                   index: list[int] | None = None) -> DataFrame:
+        """PK tuples ``keys`` as an arrow-backed frame in the table's
+        types, plus ``__i`` from ``index`` when given: a LocalRelation,
+        so no Python worker serves a job over it, and values keep
+        their identity (timestamps as instants, a naive one read in
+        local time as PySpark reads it; NaN, -0.0 and bytes as they
+        are)."""
+        import datetime
+
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import _parse_datatype_string
+
+        pk = st.schema.pk
+        ddl = ", ".join(f"`{c}` {st.schema.col(c).type}" for c in pk)
+        # char/varchar cannot appear in a frame's schema (Schema.frame_ddl)
+        ddl = re.sub(r"(?:var)?char\s*\(\s*\d+\s*\)", "string", ddl)
+        schema = to_arrow_schema(_parse_datatype_string(ddl))
+        cols = []
+        for j, field in enumerate(schema):
+            vals = [k[j] for k in keys]
+            if pa.types.is_timestamp(field.type):
+                vals = [v.astimezone(datetime.timezone.utc)
+                        if isinstance(v, datetime.datetime) else v for v in vals]
+            cols.append(pa.array(vals, field.type))
+        names = list(pk)
+        if index is not None:
+            cols.append(pa.array(index, pa.int64()))
+            names.append("__i")
+        return self.spark.createDataFrame(pa.Table.from_arrays(cols, names=names))
+
+    def _live_keys(self, st: TableState, keys: list[tuple]) -> list[bool]:
+        """Which PK tuples in ``keys`` are live at ``st``, answered by
+        index: the key probe for batches already in hand (at most
+        PROBE_KEYS_MAX keys), planned on the driver the way Kudu's
+        client routes each operation to its tablet before any RPC
+        (KuduPartitioner, client.h:3494-3548).
+
+        1. Route each key to its partition (``locate``). A key in no
+           live range or bucket is absent, with no IO. A key the driver
+           cannot route exactly keeps every partition.
+        2. Keep that partition's files whose footer bounds on every PK
+           column can hold the key (``_bound_norm``).
+        3. On ``pk_bloom_cols`` tables, the presence sidecars rule keys
+           out (no false negatives): probed on the driver when the
+           families fit PRESENCE_PARTITION_BYTES, by the probe UDF
+           otherwise.
+        4. Verify the rest in one join of their key frame
+           (``_key_frame``) against the snapshot of only their files,
+           matched by ``__i`` so NaN, -0.0, binary and timestamp keys
+           stay exact.
+
+        Every file that holds a key is among that key's files, so the
+        restricted snapshot answers each remaining key exactly. NULL
+        keys are absent."""
+        pk = st.schema.pk
+        out = [False] * len(keys)
+        norms = [_bound_norm(st.schema.col(c).type) for c in pk]
+        parts: dict = {}
+        for f in st.files:
+            parts.setdefault(partition_key(f), []).append(f)
+        bounds = {f.path: [_file_bounds(f, i, n) for i, n in enumerate(norms)]
+                  for f in st.files}
+        cand: dict[int, list[FileEntry]] = {}
+        for i, key in enumerate(keys):
+            if any(v is None for v in key):
+                continue
+            try:
+                loc = locate(st, dict(zip(pk, key)))
+                fs = parts.get((tuple(loc["hash"]), loc["range"]), [])
+            except (keyhash.LiteralNotHashable, TypeError):
+                fs = st.files  # no exact route: every partition
+            kv = [n(v) for n, v in zip(norms, key)]
+            fs = [f for f in fs
+                  if all(_within(lo, v, hi) for (lo, hi), v in zip(bounds[f.path], kv))]
+            if fs:
+                cand[i] = fs
+        if cand and any(f.bloom for f in st.files):
+            cand = self._presence_filter(st, keys, cand)
+        if not cand:
+            return out
+        paths = {f.path for fs in cand.values() for f in fs}
+        sub = dataclasses.replace(st, files=[f for f in st.files if f.path in paths])
+        kdf = self._key_frame(st, [keys[i] for i in cand], list(cand))
+        hits = (self._snapshot_df(sub).select(*pk)
+                .join(F.broadcast(kdf), on=pk).select("__i").collect())
+        for r in hits:
+            out[r[0]] = True
+        return out
+
+    def _presence_filter(self, st: TableState, keys: list[tuple], cand: dict) -> dict:
+        """``cand`` (key index -> candidate files) less the keys the
+        presence sidecars prove absent; unchanged when the sidecars
+        decline. Sidecar families that fit PRESENCE_PARTITION_BYTES are
+        probed on the driver: each key is hashed as the build hashes it
+        (plans/keyhash.py) and binary-searched (presence.probe_hashes).
+        Larger families run the probe UDF over the key frame."""
+        pk = st.schema.pk
+        r = presence.resolve(self.root, st.files, st.schema, pk, prefix_ok=True)
+        if isinstance(r, str):
+            self._presence_decline(r)
+            return cand
+        specs, probe_cols, _exact = r
+        if not specs:
+            return {}  # nothing present
+        if presence.total_bytes(specs) > self.PRESENCE_PARTITION_BYTES:
+            kdf = self._key_frame(st, [keys[i] for i in cand], list(cand))
+            probed, _ = self._presence_lookup(kdf, pk, st, prefix_ok=True)
+            keep = {row[0] for row in probed.select("__i").collect()}
+            return {i: fs for i, fs in cand.items() if i in keep}
+        import numpy as np
+
+        pos = [pk.index(c) for c in probe_cols]
+        types = [st.schema.col(c).type for c in probe_cols]
+        idx, hv = [], []
+        for i in cand:
+            try:
+                hv.append(keyhash.xxhash64(
+                    [keyhash.column(t, [keys[i][p]])[0] for t, p in zip(types, pos)]))
+            except keyhash.LiteralNotHashable:
+                continue  # stays a candidate; the join verifies it
+            idx.append(i)
+        hit = presence.probe_hashes(specs, np.array(hv, dtype="int64"))
+        absent = {i for i, h in zip(idx, hit) if not h}
+        return {i: fs for i, fs in cand.items() if i not in absent}
+
+    def _live_frame(self, st: TableState, keys: list[tuple]) -> DataFrame:
+        """The live ones of PK tuples ``keys``, as a key frame."""
+        live = self._live_keys(st, keys)
+        return self._key_frame(st, [k for k, ok in zip(keys, live) if ok])
+
+    def _present_keys(self, st: TableState, df: DataFrame, n: int) -> DataFrame:
+        """Rows of ``df``, a frame of ``n`` rows of primary keys in the
+        table's types, whose key is live at ``st`` — the key-existence
+        probe of INSERT's duplicate check, a transaction's re-probe at
+        publish and at recovery, and a large session run. Up to
+        PROBE_KEYS_MAX rows, the keys are collected once and answered
+        by ``_live_keys``; the result is then a frame of the live keys'
+        PK columns alone. Past it, the probe runs in Spark: live files
+        with presence sidecars answer first, with no false negatives,
+        so a key they rule out is absent with zero data IO (Kudu's
+        per-rowset presence check before the B-tree seek,
+        tablet/tablet.cc:116-124). Positives — every row, on a table
+        without the index — are verified as ``df ⋉ _existing_pks``."""
         if not st.files:
             return df.limit(0)
+        if n <= self.PROBE_KEYS_MAX:
+            keys = self._collect_keys(st, df)
+            if keys is not None:
+                return self._live_frame(st, keys)
         src = df
         if any(f.bloom for f in st.files):
             cand = self.present_key_probe(df, st.schema.pk, st)
@@ -2035,14 +2238,21 @@ class Table:
         )
 
     @staticmethod
-    def _tombstones(st: TableState, df: DataFrame) -> DataFrame:
+    def _cast_keys(st: TableState, df: DataFrame) -> DataFrame:
+        """The primary-key columns of ``df`` cast to the table's types."""
+        return df.select(*[F.col(c).cast(st.schema.col(c).type).alias(c)
+                           for c in st.schema.pk])
+
+    @staticmethod
+    def _tombstones(st: TableState, df: DataFrame, distinct: bool = False) -> DataFrame:
         """DELETE delta rows, one per distinct primary key of ``df``:
         the key cast to the table's types, NULL non-key cells and
-        ``__deleted`` set."""
+        ``__deleted`` set. ``distinct`` says the keys of ``df`` already
+        are."""
         pk = st.schema.pk
-        keys = df.select(
-            *[F.col(c).cast(st.schema.col(c).type).alias(c) for c in pk]
-        ).dropDuplicates(pk)
+        keys = Table._cast_keys(st, df)
+        if not distinct:
+            keys = keys.dropDuplicates(pk)
         return keys.select(
             *pk,
             *[F.lit(None).cast(st.schema.col(c).type).alias(c)
@@ -2110,9 +2320,10 @@ class Table:
         The batch streams straight into its staged files, computed once
         and never persisted; the row checks ride the write job as
         observed metrics. The row count comes from the parquet footers,
-        and the duplicate-PK checks read only the staged key columns:
-        one count_distinct for in-batch duplicates, one
-        ``_present_keys`` probe for keys already in the table. A
+        and the duplicate-PK checks read only the staged key columns.
+        Up to PROBE_KEYS_MAX rows they are collected once, counted
+        distinct on the driver and probed by ``_live_keys``; larger
+        batches run one count_distinct and one ``_present_keys``. A
         violation discards the staged files and raises; INSERT_IGNORE
         with duplicates or collisions rewrites the survivors from the
         staged files, so the caller's batch plan still runs once."""
@@ -2145,11 +2356,16 @@ class Table:
         if AUTO_INC_COL in pk or not n:
             return entries, props  # non-unique PK: fresh ids never collide
         staged_keys = staged.select(*pk)
-        nd = staged_keys.agg(F.count_distinct(*[F.col(c) for c in pk])).collect()[0][0]
+        keys = self._collect_keys(st, staged_keys) if n <= self.PROBE_KEYS_MAX else None
+        if keys is None:
+            nd = staged_keys.agg(F.count_distinct(*[F.col(c) for c in pk])).collect()[0][0]
+        else:
+            nd = len(keys)
         if n != nd and mode == "error":
             self._discard(entries)
             raise DuplicateKeyError(f"batch contains {n - nd} duplicate primary key(s)")
-        present = self._present_keys(st, staged_keys)
+        present = (self._present_keys(st, staged_keys, n) if keys is None
+                   else self._live_frame(st, keys))
         hit = present.limit(1).collect()
         if hit and mode == "error":
             self._discard(entries)
@@ -2385,8 +2601,22 @@ class Table:
                       seq: int) -> list[FileEntry]:
         """Check DELETE keys against ``st`` — an absent key errors, or
         is dropped under DELETE_IGNORE — and write their tombstones at
-        ``seq`` without publishing them."""
+        ``seq`` without publishing them. Up to PROBE_KEYS_MAX keys, the
+        keys are collected once (the caller's frame runs once), probed
+        by ``_live_keys`` and written from the keys in hand."""
         pk = st.schema.pk
+        keys = self._collect_keys(st, self._cast_keys(st, df))
+        if keys is not None:
+            live = self._live_keys(st, keys)
+            if mode == "error" and not all(live):
+                miss = keys[live.index(False)]
+                raise RowNotFoundError(f"DELETE of absent key: {dict(zip(pk, miss))}")
+            keys = [k for k, ok in zip(keys, live) if ok]
+            if not keys:
+                return []
+            return self._write_files(
+                self._tombstones(st, self._key_frame(st, keys), distinct=True),
+                st, seq, "delta")
         rows = self._tombstones(st, df)
         current_pks = self._existing_pks(st, rows)
         if mode == "error":

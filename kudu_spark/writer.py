@@ -351,16 +351,20 @@ class Session:
 
     def _present_key_set(self, st, keys: list[tuple]) -> set[tuple]:
         """Which of ``keys`` (PK tuples, apply-order) exist in the
-        table right now: one ``Table._present_keys`` probe per run.
+        table right now: one ``Table._live_keys`` probe per run, or one
+        ``Table._present_keys`` probe past ``PROBE_KEYS_MAX`` keys.
         Matching is by row index, so caller-supplied values never need
         normalizing against Spark's types."""
         if not st.files or not keys:
             return set()
+        if len(keys) <= self.table.PROBE_KEYS_MAX:
+            live = self.table._live_keys(st, keys)
+            return {k for k, ok in zip(keys, live) if ok}
         ddl = ", ".join(f"`{c}` {st.schema.col(c).type}" for c in st.schema.pk)
         kdf = self.table.spark.createDataFrame(
             [k + (i,) for i, k in enumerate(keys)], ddl + ", __i bigint"
         )
-        hit = self.table._present_keys(st, kdf).select("__i").collect()
+        hit = self.table._present_keys(st, kdf, len(keys)).select("__i").collect()
         return {keys[r["__i"]] for r in hit}
 
     def _cols_for(self, st, op: str, rows: list[dict]) -> list[str]:
@@ -535,7 +539,8 @@ def _publish_conflict(table: Table, st, base_entries, ids) -> Exception | None:
             "auto-increment ids reserved concurrently during transaction")
     if AUTO_INC_COL in st.schema.pk:
         return None  # ids reserved from an unmoved counter never collide
-    hit = table._present_keys(st, _staged_keys(table, st, base_entries)).limit(1).collect()
+    hit = table._present_keys(st, _staged_keys(table, st, base_entries),
+                              sum(e.rows for e in base_entries)).limit(1).collect()
     if hit:
         return DuplicateKeyError(
             f"key inserted concurrently during transaction: {hit[0].asDict()}")

@@ -1,0 +1,148 @@
+"""Spark jobs per write operation, counted with statusTracker job groups.
+
+Runs each op once on a fresh local table, on a plain table and on one
+with the ``pk_bloom_cols`` presence index, and prints one row per op:
+
+- the 2-bucket (k bigint, v int, s string) table: insert into empty,
+  insert of new keys, a duplicate insert (rejected), a 4-row
+  ``Session`` upsert, a 5-key ``Table.delete`` and a transaction
+  (insert + upsert + delete);
+- an olap-shaped table, a composite (orderkey, linenumber) key hashed
+  into 8 buckets, 60,000 rows plus one upsert delta: a 600-key
+  ``Table.delete`` from a Python-built key frame, as the olap_churn
+  benchmark issues it, and a 10,000-key delete (past
+  ``Table.PROBE_KEYS_MAX``, the Spark-side probe).
+
+Auto-compaction is off, so no fold lands inside a counted op. Jobs run
+by other threads are not counted.
+
+    python scripts/op_jobs.py [--cpus 4]
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import sys
+import tempfile
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import functions as F  # noqa: E402
+
+from kudu_spark.engine import Engine  # noqa: E402
+from kudu_spark.errors import DuplicateKeyError  # noqa: E402
+from kudu_spark.session import get_spark  # noqa: E402
+from kudu_spark.writer import Session, Transaction  # noqa: E402
+
+_seq = [0]
+
+
+def jobs(spark, fn, expect=None) -> int:
+    """Spark jobs ``fn()`` ran in this thread; ``expect`` is an
+    exception type the op must raise."""
+    sc = spark.sparkContext
+    _seq[0] += 1
+    group = f"op-jobs-{_seq[0]}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    except Exception as e:  # noqa: BLE001
+        if expect is None or not isinstance(e, expect):
+            raise
+    else:
+        if expect is not None:
+            raise AssertionError(f"expected {expect.__name__}")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def small_ops(spark, eng, name: str, bloom: bool) -> dict:
+    t = eng.create_table(name, [("k", "bigint", False), ("v", "int", True),
+                                ("s", "string", True)], pk=["k"],
+                         hash_partitions=[{"columns": ["k"], "buckets": 2}])
+    alter = eng.alter_table(name).set_property("auto_compact", "false")
+    if bloom:
+        alter = alter.set_property("pk_bloom_cols", "k")
+    alter.apply()
+    t = eng.table(name)
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), F.col("id").cast("int").alias("v"),
+            F.concat(F.lit("s"), F.col("id")).alias("s"))
+
+    out = {"insert into empty": jobs(spark, lambda: t.insert(rows(0, 100))),
+           "insert new keys": jobs(spark, lambda: t.insert(rows(100, 200))),
+           "duplicate insert": jobs(spark, lambda: t.insert(rows(150, 160)),
+                                    expect=DuplicateKeyError)}
+
+    def session_upsert():
+        s = Session(t)
+        for k in (5, 6, 500, 501):
+            s.upsert({"k": k, "v": -k, "s": "u"})
+        s.flush()
+
+    out["4-row Session upsert"] = jobs(spark, session_upsert)
+    keys = spark.createDataFrame([(k,) for k in (1, 2, 3, 104, 199)], "k bigint")
+    out["Table.delete, 5 keys"] = jobs(spark, lambda: t.delete(keys))
+
+    def txn():
+        x = Transaction(t)
+        x.insert(rows(1000, 1010))
+        x.upsert(rows(10, 12))
+        x.delete(spark.createDataFrame([(20,), (21,)], "k bigint"))
+        x.commit()
+
+    out["txn insert+upsert+delete"] = jobs(spark, txn)
+    return out
+
+
+def olap_ops(spark, eng, name: str, bloom: bool) -> dict:
+    ddl = "orderkey bigint, linenumber int"
+    t = eng.create_table(name, [("orderkey", "bigint", False), ("linenumber", "int", False),
+                                ("qty", "double", True)], pk=["orderkey", "linenumber"],
+                         hash_partitions=[{"columns": ["orderkey"], "buckets": 8}])
+    alter = eng.alter_table(name).set_property("auto_compact", "false")
+    if bloom:
+        alter = alter.set_property("pk_bloom_cols", "orderkey,linenumber")
+    alter.apply()
+    t = eng.table(name)
+    t.insert(spark.range(60_000).select(
+        (F.col("id") / 4).cast("bigint").alias("orderkey"),
+        (F.col("id") % 4).cast("int").alias("linenumber"),
+        F.col("id").cast("double").alias("qty")))
+    t.upsert(spark.range(0, 60_000, 97).select(
+        (F.col("id") / 4).cast("bigint").alias("orderkey"),
+        (F.col("id") % 4).cast("int").alias("linenumber"),
+        F.lit(-1.0).alias("qty")))
+    t = eng.table(name)
+    doomed = [(i // 4, i % 4) for i in range(0, 60_000, 100)]  # 600 keys
+    out = {"olap delete, 600 keys": jobs(
+        spark, lambda: t.delete(spark.createDataFrame(doomed, ddl)))}
+    many = [(i // 4, i % 4) for i in range(1, 60_000, 6)]  # 10,000 keys
+    out["olap delete, 10,000 keys"] = jobs(
+        spark, lambda: t.delete(spark.createDataFrame(many, ddl)))
+    return out
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--cpus", default="4")
+    args = ap.parse_args()
+    spark = get_spark(app_name="op-jobs", cpus=args.cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    with tempfile.TemporaryDirectory(prefix="op-jobs-") as wh:
+        eng = Engine(spark, wh)
+        plain = {**small_ops(spark, eng, "plain", False), **olap_ops(spark, eng, "olap", False)}
+        bloom = {**small_ops(spark, eng, "bloom", True), **olap_ops(spark, eng, "olap_b", True)}
+    width = max(len(k) for k in plain)
+    print(f"{'op':<{width}}  plain  pk_bloom_cols")
+    for op in plain:
+        print(f"{op:<{width}}  {plain[op]:>5}  {bloom[op]:>13}")
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kudu_spark.engine import Engine
+from kudu_spark.table import locate
 
 SCHEMA = [("k", "bigint", False), ("v", "int", True), ("s", "string", True)]
 
@@ -80,7 +81,7 @@ def test_planner_prunes_inlist(table):
     buckets = {tuple(f.partition["hash"]) for f in pruned}
     assert len(buckets) <= len(vals)
     # the kept buckets are exactly the write-path buckets of the values
-    expect = {(table._bucket_of(0, {"k": v}),) for v in vals}
+    expect = {tuple(locate(st, {"k": v})["hash"]) for v in vals}
     assert buckets <= expect
     # empty IN list prunes everything
     assert table._prune(st, [("k", "in", [])]) == []
@@ -385,8 +386,8 @@ def test_hash_prune_coerces_string_literals(engine, spark):
     pruned = t._prune(st, [("d", "=", "2020-01-05")])  # string literal
     assert 0 < len(pruned) < len(t._prune(st, None))
     # same bucket as the typed value — and the scan finds the row
-    assert t._bucket_of(0, {"d": "2020-01-05"}) == t._bucket_of(
-        0, {"d": datetime.date(2020, 1, 5)}
+    assert locate(st, {"d": "2020-01-05"}) == locate(
+        st, {"d": datetime.date(2020, 1, 5)}
     )
     assert t.scan(filters=[("d", "=", "2020-01-05")]).collect()[0].v == 4
     # decimal hash-PK with a string literal
@@ -397,7 +398,8 @@ def test_hash_prune_coerces_string_literals(engine, spark):
     t2.insert(spark.createDataFrame(
         [(Decimal(i), i) for i in range(20)], "k decimal(12,2), v int"
     ))
-    assert t2._bucket_of(0, {"k": "7.00"}) == t2._bucket_of(0, {"k": Decimal("7")})
+    st2 = t2.state()
+    assert locate(st2, {"k": "7.00"}) == locate(st2, {"k": Decimal("7")})
     assert t2.scan(filters=[("k", "=", Decimal(7))]).collect()[0].v == 7
 
 

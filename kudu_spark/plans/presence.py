@@ -217,13 +217,15 @@ def sidecar_name(seq: int) -> str:
     return f"{int(seq):012d}-{uuid.uuid4().hex}{SUFFIX}"
 
 
-def build_commit_index(hd_df, total_rows: int, dir_abs: str,
+def build_commit_index(hd, total_rows: int, dir_abs: str,
                        cols: list[str], types: list[str], seq: int,
                        del_indexed: bool = True) -> dict:
-    """Build one commit's sidecar and return its meta. ``hd_df`` holds
-    ``h`` BIGINT (the key hash) and, when the commit may hold delete
-    tombstones, ``d`` BOOLEAN (is-delete). Without ``d`` the commit is
-    all-live: nothing reads ``__deleted`` and no count runs. Live keys
+    """Build one commit's sidecar and return its meta. ``hd`` is a
+    frame holding ``h`` BIGINT (the key hash) and, when the commit may
+    hold delete tombstones, ``d`` BOOLEAN (is-delete), or the same as a
+    pair of numpy arrays ``(h, d)`` hashed on the driver, ``d`` None
+    for all-live. Without ``d`` the commit is all-live: nothing reads
+    ``__deleted`` and no count runs. Live keys
     land in the ``shard-*`` family, delete keys in ``del-*``. A probe
     hitting the delete family at this commit's ``seq`` answers ABSENT
     unless a higher-seq live hit exists — the subtraction that keeps
@@ -236,30 +238,34 @@ def build_commit_index(hd_df, total_rows: int, dir_abs: str,
     superset. A commit with both live and delete rows is marked
     ``mixed`` (within-commit ordering unknown → live-wins superset).
 
-    Small commits sort driver-side; above SMALL_BUILD_MAX rows on a
-    filesystem every executor can write, the shards are written by
-    executors (driver-local envs such as memory:// always build
-    driver-side)."""
+    Hashes in hand and small commits sort driver-side; above
+    SMALL_BUILD_MAX rows on a filesystem every executor can write, the
+    shards are written by executors (driver-local envs such as
+    memory:// always build driver-side)."""
     from pyspark.sql import functions as F
 
     from kudu_spark.fs import env_for_root
 
     env = env_for_root(dir_abs)
     env.makedirs(dir_abs)
-    live_only = "d" not in hd_df.columns
-    if total_rows <= SMALL_BUILD_MAX or not env.distributed:
-        pdf = hd_df.toPandas()
-        h = pdf["h"].to_numpy(dtype="int64")
-        d = np.zeros(len(h), dtype=bool) if live_only else pdf["d"].to_numpy(dtype=bool)
+    if isinstance(hd, tuple) or total_rows <= SMALL_BUILD_MAX or not env.distributed:
+        if isinstance(hd, tuple):
+            h, d = hd
+        else:
+            pdf = hd.toPandas()
+            h = pdf["h"].to_numpy(dtype="int64")
+            d = pdf["d"].to_numpy(dtype=bool) if "d" in hd.columns else None
+        if d is None:
+            d = np.zeros(len(h), dtype=bool)
         live, dele = h[~d], h[d]
         n_live, n_del = len(live), len(dele)
-    elif live_only:
-        live, dele = hd_df, None
+    elif "d" not in hd.columns:
+        live, dele = hd, None
         n_live, n_del = int(total_rows), 0
     else:
-        live, dele = hd_df.where(~F.col("d")), hd_df.where(F.col("d"))
+        live, dele = hd.where(~F.col("d")), hd.where(F.col("d"))
         counts = {bool(r["d"]): int(r["cnt"]) for r in
-                  hd_df.groupBy("d").agg(F.count(F.lit(1)).alias("cnt")).collect()}
+                  hd.groupBy("d").agg(F.count(F.lit(1)).alias("cnt")).collect()}
         n_live, n_del = counts.get(False, 0), counts.get(True, 0)
     ns = shards_for(n_live)
     meta = {"version": _VERSION, "cols": list(cols), "types": list(types),

@@ -297,6 +297,10 @@ def locate(st: TableState, values: dict) -> dict:
             "range": rid}
 
 
+def _is_nan(v) -> bool:
+    return isinstance(v, float) and v != v
+
+
 def _bound_norm(type_str: str):
     """Comparable form of a PK value, or of a manifest footer bound, of
     column type ``type_str``. DECIMAL bounds are stored as JSON
@@ -312,7 +316,7 @@ def _bound_norm(type_str: str):
 
     def norm(v):
         v = _jsonable(v)
-        return None if isinstance(v, float) and v != v else v
+        return None if _is_nan(v) else v
 
     return norm
 
@@ -336,6 +340,89 @@ def _file_bounds(f: "FileEntry", i: int, norm) -> tuple:
         return None if vals is None or i >= len(vals) else norm(vals[i])
 
     return at(f.min_pk), at(f.max_pk)
+
+
+@dataclasses.dataclass
+class WriteLayout:
+    """``Table._layout``'s plan for one batch: the staging partition
+    columns (``__b<i>`` per hash dimension, ``__r`` for the range),
+    the within-file sort order, the z-order dimensions (None for a
+    linear layout), the cluster columns and the parquet row-group
+    bytes (None: the writer's default)."""
+
+    pnames: list
+    sort_cols: list
+    zcols: list | None
+    cluster: list
+    block: int | None
+
+
+_VARCHAR_RE = re.compile(r"varchar\s*\(\s*(\d+)\s*\)")
+_ARRAY_RE = re.compile(r"array\s*<\s*(.+?)\s*>")
+
+
+def _driver_type(type_str: str):
+    """``(pyspark type, pyarrow type)`` of a column type that pyarrow
+    writes with the column descriptor Spark's writer gives it
+    (physical type, logical type and levels) — the integer types,
+    boolean, string, VARCHAR(n), binary, date and arrays of those
+    but VARCHAR — or None (see ``Table._driver_writable``)."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    t = type_str.strip().lower()
+    m = _ARRAY_RE.fullmatch(t)
+    if m:
+        inner = None if _VARCHAR_RE.fullmatch(m.group(1)) else _driver_type(m.group(1))
+        return None if inner is None else (T.ArrayType(inner[0]), pa.list_(inner[1]))
+    if _VARCHAR_RE.fullmatch(t):
+        t = "string"
+    kinds = {
+        "tinyint": (T.ByteType, pa.int8), "byte": (T.ByteType, pa.int8),
+        "smallint": (T.ShortType, pa.int16), "short": (T.ShortType, pa.int16),
+        "int": (T.IntegerType, pa.int32), "integer": (T.IntegerType, pa.int32),
+        "bigint": (T.LongType, pa.int64), "long": (T.LongType, pa.int64),
+        "boolean": (T.BooleanType, pa.bool_), "string": (T.StringType, pa.string),
+        "binary": (T.BinaryType, pa.binary), "date": (T.DateType, pa.date32),
+    }
+    k = kinds.get(t)
+    return None if k is None else (k[0](), k[1]())
+
+
+def _driver_value(type_str: str):
+    """value -> what the write cast stores, for a value of a
+    ``_driver_type`` column that passed createDataFrame's type check:
+    VARCHAR(n) truncates to n characters (``_write_cast``), a datetime
+    in a date column keeps its date, binary is bytes."""
+    t = type_str.strip().lower()
+    m = _ARRAY_RE.fullmatch(t)
+    if m:
+        el = _driver_value(m.group(1))
+        return lambda v: None if v is None else [el(x) for x in v]
+    m = _VARCHAR_RE.fullmatch(t)
+    if m:
+        n = int(m.group(1))
+        return lambda v: None if v is None else v[:n]
+    if t == "date":
+        import datetime
+
+        return lambda v: v.date() if isinstance(v, datetime.datetime) else v
+    if t == "binary":
+        return lambda v: None if v is None else bytes(v)
+    return lambda v: v
+
+
+def _spark_row_metadata(fields: list) -> dict:
+    """The parquet footer key-value metadata Spark's writer sets for a
+    file of columns ``fields`` ((name, pyspark type, nullable)
+    triples): its row schema and the Spark version."""
+    import pyspark
+    from pyspark.sql.types import StructField, StructType
+
+    row = StructType([StructField(n, t, nl) for n, t, nl in fields])
+    return {"org.apache.spark.version": pyspark.__version__,
+            "org.apache.spark.sql.parquet.row.metadata":
+                json.dumps(row.jsonValue(), separators=(",", ":"))}
 
 
 # a NaN key column in ``Table._collect_keys``' dedup: Spark's grouping
@@ -470,12 +557,14 @@ class Table:
             expr = expr | eq
         return expr
 
-    def _partition_exprs(self, st: TableState):
-        """(names, exprs) of staging partition columns for a write.
-        With per-range custom hash schemas (partition.h:512-517) the
-        bucket modulus switches on the row's range id. The range
-        component may span multiple PK columns (compound range keys,
-        partition.h:273) — bounds compare lexicographically."""
+    def _partition_exprs(self, st: TableState) -> list:
+        """Spark expressions of a write's staging partition columns, in
+        ``WriteLayout.pnames``' order (``__b<i>`` per hash dimension,
+        then ``__r``). With per-range custom hash schemas
+        (partition.h:512-517) the bucket modulus switches on the row's
+        range id. The range component may span multiple PK columns
+        (compound range keys, partition.h:273) — bounds compare
+        lexicographically."""
         ps = st.partition_spec
         rs = ps.range_spec
         range_expr = None
@@ -490,7 +579,7 @@ class Table:
                 if hi is not None:
                     cond = cond & self._lex_bound_expr(st, rcols, hi, "lt")
                 range_expr = F.when(cond, F.lit(rid)).otherwise(range_expr)
-        names, exprs = [], []
+        exprs = []
         for i, dim in enumerate(ps.hash_dims):
             cols = [F.col(c) for c in dim.columns] + [F.lit(dim.seed)]
             h = F.xxhash64(*cols)
@@ -503,12 +592,10 @@ class Table:
                 b = F.pmod(h, buckets)
             else:
                 b = F.pmod(h, F.lit(dim.buckets))
-            names.append(f"__b{i}")
             exprs.append(b.cast("int"))
         if rs.enabled:
-            names.append("__r")
             exprs.append(range_expr.cast("int"))
-        return names, exprs
+        return exprs
 
     # -- pruning ---------------------------------------------------------------
 
@@ -933,14 +1020,19 @@ class Table:
             df_dirty = self._cached_frame(ck, merge_dirty)
         elif deltas:
             df_dirty = merge_dirty()
+        if filters:
+            if df_clean is not None:
+                df_clean = df_clean.where(self._filters_to_column(st, filters))
+            if df_dirty is not None:
+                # a resident frame's batch stats never record NaN
+                df_dirty = df_dirty.where(self._filters_to_column(
+                    st, filters, nan_safe=df_dirty.is_cached))
         parts = [d for d in (df_clean, df_dirty) if d is not None]
         if not parts:
             # empty table: zero-row frame with the right schema
             ddl = st.schema.frame_ddl() + f", {SEQ_COL} bigint, {DEL_COL} boolean"
             parts = [self.spark.createDataFrame([], ddl)]
         df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        if filters:
-            df = df.where(self._filters_to_column(st, filters))
         if include_deleted:
             df = df.withColumn("_is_deleted", F.col(DEL_COL))
         return df.drop(SEQ_COL, DEL_COL)
@@ -951,12 +1043,23 @@ class Table:
     # roughly 2-4x this
     DIRTY_CACHE_MAX_BYTES = 256 << 20
 
-    def _filters_to_column(self, st: TableState, filters: list[Predicate]):
+    def _filters_to_column(self, st: TableState, filters: list[Predicate],
+                           nan_safe: bool = False):
+        """``filters`` as one Column. ``nan_safe`` is for a filter over
+        a resident (``persist``ed) frame: Spark prunes its cached
+        batches by min/max stats that never record NaN, although Spark
+        orders NaN above every value, so on float and double columns
+        ``= NaN`` becomes ``isnan``, and ``>``, ``>=`` and an IN-list
+        holding NaN gain ``OR isnan``, which batch stats cannot decide
+        (parquet footers do record NaN: scans of files keep the plain
+        form and its pushdown)."""
         expr = F.lit(True)
         for col, op, val in filters:
             c = F.col(col)
+            nan = nan_safe and op in ("=", ">", ">=", "in") and (
+                st.schema.col(col).type.strip().lower() in ("float", "double", "real"))
             if op == "=":
-                expr = expr & (c == val)
+                expr = expr & (F.isnan(c) if nan and _is_nan(val) else c == val)
             elif op == "!=":
                 expr = expr & (c != val)
             elif op == "<":
@@ -964,11 +1067,14 @@ class Table:
             elif op == "<=":
                 expr = expr & (c <= val)
             elif op == ">":
-                expr = expr & (c > val)
+                # nothing sorts above NaN: `> NaN` stays empty
+                expr = expr & ((c > val) | F.isnan(c) if nan and not _is_nan(val)
+                               else c > val)
             elif op == ">=":
-                expr = expr & (c >= val)
+                expr = expr & ((c >= val) | F.isnan(c) if nan else c >= val)
             elif op == "in":
-                expr = expr & c.isin(*val)
+                expr = expr & (c.isin(*val) | F.isnan(c) if nan and any(map(_is_nan, val))
+                               else c.isin(*val))
             elif op == "not_null":
                 expr = expr & c.isNotNull()
             elif op == "is_null":
@@ -1348,80 +1454,42 @@ class Table:
                 z = z.bitwiseOR(F.shiftleft(bit, i * n + j))
         return df.withColumn("__zv", z)
 
-    def _write_files(
-        self, df: DataFrame, st: TableState, seq: int, kind: str,
-        size_hint_bytes: int | None = None,
-    ) -> list[FileEntry]:
-        """Partition-route and write one batch as parquet, returning
-        manifest entries with PK stats from the parquet footers.
+    def _layout(self, st: TableState, columns) -> WriteLayout:
+        """The layout plan of a batch with columns ``columns``: staging
+        partition columns, within-file sort order and row-group bytes.
+        Both write steps lay files out by it.
 
-        ``size_hint_bytes`` (compaction only — the caller knows the
-        rewritten input bytes) lets clustered UNPARTITIONED tables be
-        range-repartitioned on their cluster keys into
-        ~``cluster_file_bytes``-sized files, so each output file covers
-        a contiguous cluster-key slice and the manifest's per-file
-        bounds (min_pk, cellr) prune whole files — the OPTIMIZE-style
-        global layout, paid once per compaction, never on the ingest
-        hot path."""
-        pnames, pexprs = self._partition_exprs(st)
-        out = df.withColumn(SEQ_COL, F.lit(seq).cast("bigint"))
-        if DEL_COL not in out.columns:
-            out = out.withColumn(DEL_COL, F.lit(False))
-        for n, e in zip(pnames, pexprs):
-            out = out.withColumn(n, e)
-        # vector sidecolumns (stored q8 codes, IVF cells) of this batch
-        out, vector_stamp = vector.derive(self, st, out)
-        # staging location: in-root when Spark can write the scheme
-        # directly (local, hdfs://, s3a://, ... — executors write to
-        # shared storage, nothing moves through the driver); a local
-        # temp dir + driver-side upload only for fsspec-only schemes
-        # (memory:// — dev/test)
-        if self._env.spark_native:
-            staging = os.path.join(
-                self.root, DATA_DIR, f"_staging-{seq}-{uuid.uuid4().hex}")
-            senv = self._env
-        else:
-            import tempfile
-
-            from kudu_spark import fs as _fs
-
-            staging = tempfile.mkdtemp(prefix="pyskudu-stage-")
-            senv = _fs.env_for_root(staging)
-        # co-locate each partition in one task, PK-sorted within files so
-        # parquet row-group stats give tight PK bounds (≈ Kudu's
-        # PK-sorted DiskRowSets + B-tree index, cfile/index_btree.cc).
-        # A `cluster_by` table property re-orders files by analytic
-        # columns instead (PK demoted to minor sort key): footer stats
-        # turn tight on the cluster columns — selective scans prune row
-        # groups like the date-clustered parquet they compete with —
-        # while PK point probes keep their exactness through the
-        # per-file PK bloom filters (footer PK bounds merely widen, so
-        # file pruning gets conservative, never wrong). The knob Kudu
-        # lacks (its DiskRowSets are always PK-ordered); equivalent to
-        # a clustering-columns/ZORDER-lite declaration.
+        Each partition lands in one file, PK-sorted so parquet
+        row-group stats give tight PK bounds (≈ Kudu's PK-sorted
+        DiskRowSets + B-tree index, cfile/index_btree.cc). A
+        ``cluster_by`` table property re-orders files by analytic
+        columns instead (PK demoted to minor sort key): footer stats
+        turn tight on the cluster columns — selective scans prune row
+        groups like the date-clustered parquet they compete with —
+        while PK point probes keep their exactness through the per-file
+        PK bloom filters (footer PK bounds merely widen, so file pruning
+        gets conservative, never wrong). The knob Kudu lacks (its
+        DiskRowSets are always PK-ordered); equivalent to a
+        clustering-columns/ZORDER-lite declaration."""
+        ps = st.partition_spec
+        pnames = [f"__b{i}" for i in range(len(ps.hash_dims))]
+        if ps.range_spec.enabled:
+            pnames.append("__r")
         pk_cols = list(st.schema.pk)
-        zdrop: list[str] = []
         zm = _ZORDER_RE.match(str(st.props.get("cluster_by", "")))
         if zm:
             # `cluster_by = zorder(a, b, ...)`: multi-dimension
-            # clustering — rows sort by an interleaved-bit key so
-            # footer min/max stay selective on EVERY listed dimension,
-            # not just the sort prefix (linear cluster_by's limit).
-            # Same contract as linear clustering: PK demoted to minor
-            # sort key, exactness preserved via the per-file PK blooms.
+            # clustering — rows sort by an interleaved-bit key so footer
+            # min/max stay selective on EVERY listed dimension, not just
+            # the sort prefix (linear cluster_by's limit). Same contract
+            # as linear clustering: PK demoted to minor sort key,
+            # exactness preserved via the per-file PK blooms.
             zcols = [c.strip() for c in zm.group(1).split(",") if c.strip()]
             for c in zcols:
                 st.schema.col(c)
-            # the z-value range pass (agg min/max inside _with_zvalue)
-            # executes the batch plan once and the parquet write below
-            # executes it again: persist so an expensive upstream
-            # (join, shuffle, another table's scan) is evaluated once,
-            # not twice per write (ADVICE r11)
-            out = zpersist = out.persist()
-            out = self._with_zvalue(out, st, zcols)
-            cluster, sort_cols, zdrop = zcols, ["__zv"], ["__zv"]
-            sort_cols += [c for c in pk_cols]
+            cluster, sort_cols = zcols, ["__zv", *pk_cols]
         else:
+            zcols = None
             declared = [c.strip() for c in str(st.props.get("cluster_by", "")).split(",")
                         if c.strip()]
             cluster = []
@@ -1433,15 +1501,73 @@ class Table:
                 # silently demotes to the remaining keys — layout is a
                 # performance property, never a write error.
                 if c.startswith(vector.IVFC_PREFIX):
-                    if c in out.columns:
+                    if c in columns:
                         cluster.append(c)
                     continue
                 st.schema.col(c)  # raises SchemaError on an unknown column
                 cluster.append(c)
             sort_cols = cluster + [c for c in pk_cols if c not in cluster]
-        if pnames:
-            out = out.repartition(*pnames).sortWithinPartitions(*pnames, *sort_cols)
-        elif (cluster or zdrop) and kind == "base" and size_hint_bytes:
+        # row-group size: clustering is only as good as the pruning
+        # granularity — a 600k-row file is 1-2 default (128 MB) row
+        # groups and footer stats can't skip anything, so cluster_by
+        # tables default to 16 MB row groups (~Kudu's much finer cfile
+        # blocks); `parquet_block_bytes` overrides either way
+        block = st.props.get("parquet_block_bytes")
+        if block is None and cluster:
+            block = 16 << 20
+        return WriteLayout(pnames, sort_cols, zcols, cluster,
+                           None if block is None else int(block))
+
+    def _write_files(
+        self, df: DataFrame, st: TableState, seq: int, kind: str,
+        size_hint_bytes: int | None = None,
+    ) -> list[FileEntry]:
+        """Partition-route and write one batch as parquet with Spark,
+        returning manifest entries with PK stats from the parquet
+        footers: the Spark write step, then ``_publish_files``.
+        ``_driver_write`` is the other write step, for delta batches
+        the driver holds.
+
+        ``size_hint_bytes`` (compaction only — the caller knows the
+        rewritten input bytes) lets clustered UNPARTITIONED tables be
+        range-repartitioned on their cluster keys into
+        ~``cluster_file_bytes``-sized files, so each output file covers
+        a contiguous cluster-key slice and the manifest's per-file
+        bounds (min_pk, cellr) prune whole files — the OPTIMIZE-style
+        global layout, paid once per compaction, never on the ingest
+        hot path."""
+        out = df.withColumn(SEQ_COL, F.lit(seq).cast("bigint"))
+        if DEL_COL not in out.columns:
+            out = out.withColumn(DEL_COL, F.lit(False))
+        # vector sidecolumns (stored q8 codes, IVF cells) of this batch
+        out, vector_stamp = vector.derive(self, st, out)
+        lay = self._layout(st, out.columns)
+        for n, e in zip(lay.pnames, self._partition_exprs(st)):
+            out = out.withColumn(n, e)
+        # staging location: in-root when Spark can write the scheme
+        # directly (local, hdfs://, s3a://, ... — executors write to
+        # shared storage, nothing moves through the driver); a local
+        # temp dir + driver-side upload only for fsspec-only schemes
+        # (memory:// — dev/test)
+        if self._env.spark_native:
+            staging = os.path.join(
+                self.root, DATA_DIR, f"_staging-{seq}-{uuid.uuid4().hex}")
+            senv = self._env
+        else:
+            staging, senv = self._local_staging()
+        zpersist = None
+        if lay.zcols is not None:
+            # the z-value range pass (agg min/max inside _with_zvalue)
+            # executes the batch plan once and the parquet write below
+            # executes it again: persist so an expensive upstream
+            # (join, shuffle, another table's scan) is evaluated once,
+            # not twice per write (ADVICE r11)
+            out = zpersist = out.persist()
+            out = self._with_zvalue(out, st, lay.zcols)
+        if lay.pnames:
+            out = out.repartition(*lay.pnames).sortWithinPartitions(
+                *lay.pnames, *lay.sort_cols)
+        elif lay.cluster and kind == "base" and size_hint_bytes:
             # compaction of a clustered unpartitioned table: range-
             # repartition on the cluster sort key so files cover
             # CONTIGUOUS key slices — manifest bounds (cellr, min_pk)
@@ -1452,32 +1578,25 @@ class Table:
             target = int(st.props.get("cluster_file_bytes", 64 << 20))
             nparts = max(1, min(4096, -(-size_hint_bytes // max(target, 1))))
             out = out.repartitionByRange(
-                nparts, *sort_cols).sortWithinPartitions(*sort_cols)
+                nparts, *lay.sort_cols).sortWithinPartitions(*lay.sort_cols)
         else:
-            out = out.sortWithinPartitions(*sort_cols)
-        if zdrop:
+            out = out.sortWithinPartitions(*lay.sort_cols)
+        if zpersist is not None:
             # projection after the sort: order within partitions is
             # preserved, the z-key never lands in the files
-            out = out.drop(*zdrop)
+            out = out.drop("__zv")
         writer = out.write.option("maxRecordsPerFile", 10_000_000)
-        # row-group size: clustering is only as good as the pruning
-        # granularity — a 600k-row file is 1-2 default (128 MB) row
-        # groups and footer stats can't skip anything, so cluster_by
-        # tables default to 16 MB row groups (~Kudu's much finer cfile
-        # blocks); `parquet_block_bytes` overrides either way
-        block = st.props.get("parquet_block_bytes")
-        if block is None and cluster:
-            block = 16 << 20
-        if block is not None:
-            writer = writer.option("parquet.block.size", int(block))
-        # PK bloom filters in every data file: the write-path existence
-        # probe (_snapshot_overlapping) and point-lookup scans skip row
-        # groups whose bloom rejects the key — Kudu's per-rowset bloom
-        # (tablet/tablet.cc:116-124, cfile/bloomfile.cc)
-        # adaptive sizing: the bloom is sized by the observed NDV
-        # instead of the 1 MB-per-row-group default (parquet-mr 1.16)
+        if lay.block is not None:
+            writer = writer.option("parquet.block.size", lay.block)
+        # PK bloom filters in every Spark-written data file: the
+        # write-path existence probe (_snapshot_overlapping) and
+        # point-lookup scans skip row groups whose bloom rejects the key
+        # — Kudu's per-rowset bloom (tablet/tablet.cc:116-124,
+        # cfile/bloomfile.cc). Adaptive sizing: the bloom is sized by
+        # the observed NDV instead of the 1 MB-per-row-group default
+        # (parquet-mr 1.16)
         writer = writer.option("parquet.bloom.filter.adaptive.enabled", "true")
-        for c in pk_cols:
+        for c in st.schema.pk:
             writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
         # per-column storage attributes (ColumnSchemaPB,
         # common.proto:134-170; cfile/type_encodings.cc:129-233) mapped
@@ -1514,12 +1633,12 @@ class Table:
             writer = writer.option("compression", codecs[0])
         if blocks:
             writer = writer.option("parquet.page.size", str(min(blocks)))
-        if pnames:
-            writer = writer.partitionBy(*pnames)
+        if lay.pnames:
+            writer = writer.partitionBy(*lay.pnames)
         try:
             writer.mode("overwrite").parquet(staging)
         finally:
-            if zdrop:
+            if zpersist is not None:
                 zpersist.unpersist()
 
         import pyarrow.parquet as pq
@@ -1556,7 +1675,35 @@ class Table:
                     )
             raise KuduSparkError(
                 f"row does not fall in any range partition: {samples[0]}")
+        return self._publish_files(st, seq, kind, staged, senv, staging,
+                                   stamp=vector_stamp)
 
+    @staticmethod
+    def _local_staging() -> tuple:
+        """A fresh driver-local staging directory and its Env."""
+        import tempfile
+
+        from kudu_spark import fs as _fs
+
+        staging = tempfile.mkdtemp(prefix="pyskudu-stage-")
+        return staging, _fs.env_for_root(staging)
+
+    def _publish_files(self, st: TableState, seq: int, kind: str, staged: list,
+                       senv, staging: str, stamp=None,
+                       hashes: tuple | None = None) -> list[FileEntry]:
+        """The step both write steps share: read each staged file's
+        footer for its manifest entry (row count, per-PK-column
+        min/max, the ``dmark`` tombstone mark and ``stamp(footer)``'s
+        vector stamps), move it into the data directory under a fresh
+        name and build the commit's presence sidecar on
+        ``pk_bloom_cols`` tables. ``staged`` holds (path, partition
+        values) pairs under ``staging``, which is removed. ``hashes``
+        is the driver write step's ``(key hashes, is-delete flags or
+        None)`` for the sidecar; without it the sidecar build reads the
+        published files in Spark."""
+        import pyarrow.parquet as pq
+
+        pk_cols = st.schema.pk
         entries: list[FileEntry] = []
         has_tombstones = False
         for fsrc, pvals in staged:
@@ -1633,7 +1780,7 @@ class Table:
                     min_pk=mn,
                     max_pk=mx,
                     dmark=dmark,
-                    **vector_stamp(md),
+                    **(stamp(md) if stamp is not None else {}),
                 )
             )
         senv.rmtree(staging)
@@ -1642,11 +1789,218 @@ class Table:
         # (Kudu's per-rowset presence covers deltas too,
         # tablet/tablet.cc:116-124)
         if st.props.get("pk_bloom_cols"):
-            self._attach_presence_index(st, entries, tombstones=has_tombstones)
+            given = {} if hashes is None else {"hashes": hashes}
+            self._attach_presence_index(st, entries, tombstones=has_tombstones, **given)
         return entries
 
+    def _driver_writable(self, st: TableState, cols: list[str]) -> bool:
+        """Whether ``_driver_write`` can write a batch setting columns
+        ``cols`` of ``st`` with exactly the files, footers and routing
+        the Spark write step gives it. It declines:
+
+        - decimal columns: Spark writes INT32/INT64 for precision <= 18,
+          pyarrow a FIXED_LEN_BYTE_ARRAY;
+        - timestamp columns: Spark writes INT96, pyarrow INT64 micros;
+        - float and double columns (arrays of them too): the schema
+          matches, but Spark's footer records a NaN as the max and
+          pyarrow's drops it, so row-group pruning would lose NaN rows;
+        - any other type outside ``_driver_type`` (maps, structs, char);
+        - a batch setting an immutable column (its write joins the
+          current rows), per-column storage attributes (Spark writer
+          options), vector sidecolumns, z-order clustering (a batch
+          aggregate) and the auto-incrementing column;
+        - range bounds or hashed columns whose values the driver
+          cannot route exactly as the write's partition expressions
+          do, and ``pk_bloom_cols`` it cannot hash as the sidecar build
+          does (plans/keyhash.py)."""
+        sch = st.schema
+        if AUTO_INC_COL in sch.names or _ZORDER_RE.match(str(st.props.get("cluster_by", ""))):
+            return False
+        if vector.quantize_cols(st) or vector.cell_cols(st):
+            return False
+        if any(c.encoding or c.compression or c.block_size or _driver_type(c.type) is None
+               for c in sch.columns):
+            return False
+        if any(sch.col(c).immutable for c in cols):
+            return False
+        types = {c.name: c.type for c in sch.columns}
+        declared = [c.strip() for c in str(st.props.get("cluster_by", "")).split(",")
+                    if c.strip()]
+        if any(c not in types or types[c].strip().lower().startswith("array")
+               for c in declared):
+            return False  # only scalar columns sort on the driver
+        hashed = [c for d in st.partition_spec.hash_dims for c in d.columns]
+        hashed += [c.strip() for c in str(st.props.get("pk_bloom_cols", "")).split(",")
+                   if c.strip()]
+        try:
+            for c in hashed:
+                keyhash.column(types[c], [])
+        except (keyhash.LiteralNotHashable, KeyError):
+            return False
+        rs = st.partition_spec.range_spec
+        if rs.enabled:
+            from pyspark.sql.types import _make_type_verifier
+
+            checks = [_make_type_verifier(_driver_type(types[c])[0]) for c in rs.cols]
+            for bounds in rs.ranges:
+                for b in bounds:
+                    if b is None:
+                        continue
+                    vals = list(b) if isinstance(b, (list, tuple)) else [b]
+                    try:
+                        for chk, v in zip(checks, vals):
+                            chk(v)
+                    except (TypeError, ValueError):
+                        return False  # the write casts this bound
+        return True
+
+    def _driver_write(self, st: TableState, seq: int, cols: list[str],
+                      rows: list[tuple], deleted: bool = False) -> list[FileEntry] | None:
+        """The driver write step: write a delta batch the driver holds
+        — ``rows``, value tuples over columns ``cols`` in apply order —
+        as the Spark write step would, with no Spark job. None when
+        the batch is over PROBE_KEYS_MAX rows or ``_driver_writable``
+        declines it; the caller then takes the Spark write step.
+        ``deleted`` writes the rows as DELETE tombstones (``cols`` is
+        the primary key).
+
+        Kudu's client routes each row to its tablet itself
+        (KuduPartitioner, client.h:3494-3548), so a small session flush
+        costs one RPC per tablet; this writes one file per partition:
+
+        1. Check each value's Python type as ``createDataFrame`` does
+           (the same exception classes), fill absent columns with
+           their defaults and truncate VARCHAR(n) values.
+        2. Validate with ``_raise_row_violations``, fed from the arrow
+           null counts (upserts; tombstones carry NULL non-key cells).
+        3. Route each row (``locate``'s hash and range functions); a
+           row in no range raises as the Spark step does.
+        4. Keep the last write per key in apply order, sort each
+           partition in the layout plan's order, and write it with
+           pyarrow, carrying Spark's row-metadata footer key. The files
+           have no PK bloom: pyarrow cannot write one.
+        5. Publish through ``_publish_files``, the presence sidecar
+           built from key hashes computed here (plans/keyhash.py)."""
+        if not rows or len(rows) > self.PROBE_KEYS_MAX or not self._driver_writable(st, cols):
+            return None
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import (
+            ArrayType,
+            BooleanType,
+            LongType,
+            StructField,
+            StructType,
+            _make_type_verifier,
+        )
+
+        from kudu_spark import fs as _fs
+
+        sch = st.schema
+        names, pk = sch.names, sch.pk
+        at = {n: j for j, n in enumerate(names)}
+        kinds = [_driver_type(c.type) for c in sch.columns]
+        verify = _make_type_verifier(
+            StructType([StructField(c, kinds[at[c]][0]) for c in cols]))
+        for r in rows:
+            verify(r)
+        # each row in table column order, as the write cast makes it
+        pos = {c: i for i, c in enumerate(cols)}
+        fill = {}
+        for c, (stype, _) in zip(sch.columns, kinds):
+            if c.name in pos or deleted:
+                continue
+            try:
+                _make_type_verifier(stype)(c.default)
+            except (TypeError, ValueError):
+                return None  # the write casts this default
+            if c.default is not None and isinstance(stype, ArrayType):
+                return None  # a literal array's elements are not nullable
+            fill[c.name] = c.default
+        fixes = [_driver_value(c.type) for c in sch.columns]
+        full = [tuple(fix(r[pos[n]] if n in pos else fill.get(n))
+                      for n, fix in zip(names, fixes)) for r in rows]
+        batch = pa.Table.from_arrays(
+            [pa.array([r[j] for r in full], k[1]) for j, k in enumerate(kinds)], names=names)
+
+        def count_nulls(cs):
+            if not cs:
+                return 0
+            return pc.sum(functools.reduce(pc.or_, [pc.is_null(batch[c]) for c in cs])).as_py()
+
+        nulls = count_nulls(pk)
+        if nulls:
+            self._raise_row_violations({"nulls": nulls})
+        last: dict = {}
+        for r in full:
+            last[tuple(r[at[c]] for c in pk)] = r  # the last write per key wins
+        keep = list(last.values())
+        # the partition values Spark's write gives each row
+        ps = st.partition_spec
+        rs = ps.range_spec
+        try:
+            rids = ([rs.range_id_of([r[at[c]] for c in rs.cols]) for r in keep]
+                    if rs.enabled else [None] * len(keep))
+            hashed = [bucket_hashes(st, i, [[r[at[c]] for c in dim.columns] for r in keep])
+                      for i, dim in enumerate(ps.hash_dims)]
+        except (keyhash.LiteralNotHashable, TypeError):
+            return None
+        if -1 in rids:
+            raise KuduSparkError("row does not fall in any range partition: "
+                                 f"{dict(zip(names, keep[rids.index(-1)]))}")
+        if not deleted:
+            self._raise_row_violations({"nn": count_nulls(
+                [c for c in names if c not in pk and not sch.col(c).nullable])})
+        parts: dict = {}
+        for j, (r, rid) in enumerate(zip(keep, rids)):
+            pv = tuple(h[j] % ps.buckets_for(rid, i) for i, h in enumerate(hashed))
+            parts.setdefault(pv + ((rid,) if rs.enabled else ()), []).append(r)
+        lay = self._layout(st, names)
+        order = [at[c] for c in lay.sort_cols]
+        # the columns as the Spark step's frame has them: a column the
+        # batch leaves to a non-NULL default is a literal, which Spark
+        # writes as a required column, and so are __seq and __deleted
+        # (tombstone frames carry __deleted before __seq is added)
+        fields = [(n, k[0], k[1], fill.get(n) is None) for n, k in zip(names, kinds)]
+        marks = [(SEQ_COL, LongType(), pa.int64(), False),
+                 (DEL_COL, BooleanType(), pa.bool_(), False)]
+        fields += marks[::-1] if deleted else marks
+        file_schema = pa.schema(
+            [pa.field(n, atype, nullable=nl) for n, _, atype, nl in fields],
+            metadata=_spark_row_metadata([(n, t, nl) for n, t, _, nl in fields]))
+        consts = {SEQ_COL: seq, DEL_COL: deleted}
+        if isinstance(self._env, _fs.LocalEnv):
+            # in-root staging: publishing is a same-store rename
+            staging = os.path.join(self.root, DATA_DIR, f"_staging-{seq}-{uuid.uuid4().hex}")
+            senv = self._env
+            senv.makedirs(staging)
+        else:
+            staging, senv = self._local_staging()
+        staged = []
+        for pv, prow in parts.items():
+            prow.sort(key=lambda r: tuple((r[i] is not None, r[i]) for i in order))
+            arrays = [pa.array([consts[n]] * len(prow), atype) if n in consts
+                      else pa.array([r[at[n]] for r in prow], atype)
+                      for n, _, atype, _ in fields]
+            path = os.path.join(staging, f"part-{len(staged):05d}.snappy.parquet")
+            # pyarrow writes schema metadata only beside its own
+            # ARROW:schema key, which Spark's reader ignores
+            pq.write_table(pa.Table.from_arrays(arrays, schema=file_schema),
+                           _fs.strip_file_scheme(path), compression="snappy")
+            staged.append((path, dict(zip(lay.pnames, pv))))
+        hashes = None
+        hcols = [c.strip() for c in str(st.props.get("pk_bloom_cols", "")).split(",")
+                 if c.strip()]
+        if hcols:
+            enc = [keyhash.column(sch.col(c).type, [r[at[c]] for r in keep]) for c in hcols]
+            h = np.array([keyhash.xxhash64(row) for row in zip(*enc)], dtype="int64")
+            hashes = (h, np.ones(len(h), dtype=bool) if deleted else None)
+        return self._publish_files(st, seq, "delta", staged, senv, staging, hashes=hashes)
+
     def _attach_presence_index(self, st: TableState, entries: list[FileEntry],
-                               tombstones: bool = False) -> None:
+                               tombstones: bool = False, hashes: tuple | None = None) -> None:
         """Presence-index sidecar for EVERY commit of tables with the
         ``pk_bloom_cols`` property — base and delta alike, so mutating
         tables keep their O(batch) key probe (the write-path analogue
@@ -1675,24 +2029,29 @@ class Table:
         count, not history. Failure is non-fatal but LOUD: files
         without a sidecar disable the probe for every later reader
         (callers fall back to a join against the scan), so the decline
-        is logged at warning and surfaced via statistics()."""
+        is logged at warning and surfaced via statistics().
+        ``hashes`` — ``(key hashes, is-delete flags or None)`` of the
+        driver write step, hashed on the driver by plans/keyhash.py —
+        replaces reading the files back in Spark."""
         cols = [c.strip() for c in str(st.props.get("pk_bloom_cols", "")).split(",")
                 if c.strip()]
         if not entries or not cols:
             return
         try:
             rel = os.path.join(DATA_DIR, presence.sidecar_name(entries[0].seq))
-            read = self.spark.read.parquet(
-                *[self._data_path(e.path) for e in entries])
-            hd = [F.xxhash64(*[F.col(c) for c in cols]).alias("h")]
-            if tombstones:
-                hd.append(F.coalesce(F.col(DEL_COL), F.lit(False)).alias("d"))
+            hd = hashes
+            if hd is None:
+                hd = [F.xxhash64(*[F.col(c) for c in cols]).alias("h")]
+                if tombstones:
+                    hd.append(F.coalesce(F.col(DEL_COL), F.lit(False)).alias("d"))
+                hd = self.spark.read.parquet(
+                    *[self._data_path(e.path) for e in entries]).select(*hd)
             # delete keys are only subtractable when the hashed tuple is
             # the FULL pk (set-equal; order is free): a strict PK-prefix
             # tuple is shared by sibling rows, so deleting one row must
             # NOT subtract the tuple
             presence.build_commit_index(
-                read.select(*hd), sum(e.rows for e in entries),
+                hd, sum(e.rows for e in entries),
                 os.path.join(self.root, rel), cols,
                 [st.schema.col(c).type for c in cols],
                 max(e.seq for e in entries),
@@ -2005,7 +2364,7 @@ class Table:
             return None
         seen, out = set(), []
         for key in zip(*[got.column(c).to_pylist() for c in pk]):
-            ident = tuple(_NAN if isinstance(v, float) and v != v else v for v in key)
+            ident = tuple(_NAN if _is_nan(v) else v for v in key)
             if ident not in seen:
                 seen.add(ident)
                 out.append(key)
@@ -2059,14 +2418,16 @@ class Table:
            out (no false negatives): probed on the driver when the
            families fit PRESENCE_PARTITION_BYTES, by the probe UDF
            otherwise.
-        4. Verify the rest in one join of their key frame
-           (``_key_frame``) against the snapshot of only their files,
-           matched by ``__i`` so NaN, -0.0, binary and timestamp keys
-           stay exact.
+        4. Verify the rest in one job: every version of their keys in
+           their files — key, manifest seq and tombstone mark — joined
+           with their key frame (``_key_frame``) and matched by ``__i``,
+           so NaN, -0.0, binary and timestamp keys stay exact. On the
+           driver the newest version of each key wins, merge-on-read's
+           rule (tablet/delta_applier.h), and a tombstone hides it.
 
         Every file that holds a key is among that key's files, so the
-        restricted snapshot answers each remaining key exactly. NULL
-        keys are absent."""
+        versions read answer each remaining key exactly. NULL keys are
+        absent."""
         pk = st.schema.pk
         out = [False] * len(keys)
         norms = [_bound_norm(st.schema.col(c).type) for c in pk]
@@ -2094,12 +2455,16 @@ class Table:
         if not cand:
             return out
         paths = {f.path for fs in cand.values() for f in fs}
-        sub = dataclasses.replace(st, files=[f for f in st.files if f.path in paths])
         kdf = self._key_frame(st, [keys[i] for i in cand], list(cand))
-        hits = (self._snapshot_df(sub).select(*pk)
-                .join(F.broadcast(kdf), on=pk).select("__i").collect())
-        for r in hits:
-            out[r[0]] = True
+        versions = (self._read_files(st, [f for f in st.files if f.path in paths])
+                    .select(*pk, SEQ_COL, DEL_COL).join(F.broadcast(kdf), on=pk)
+                    .select("__i", SEQ_COL, DEL_COL).collect())
+        newest: dict = {}
+        for i, seq, dead in versions:
+            if i not in newest or seq > newest[i][0]:
+                newest[i] = (seq, dead)
+        for i, (_seq, dead) in newest.items():
+            out[i] = not dead
         return out
 
     def _presence_filter(self, st: TableState, keys: list[tuple], cand: dict) -> dict:
@@ -2413,6 +2778,25 @@ class Table:
         self._maybe_auto_compact(sum(e.bytes for e in entries))
         return v
 
+    def _upsert_rows(self, cols: list[str], rows: list[tuple], _attempts: int = 5) -> int | None:
+        """UPSERT of value tuples ``rows`` over columns ``cols`` held on
+        the driver in apply order (a ``Session`` run): the last write
+        per key wins, written by ``_driver_write`` with no Spark job.
+        Returns the commit version, or None when the driver write step
+        declines the batch; the caller then upserts it as a frame."""
+        st = self.state()
+        entries = self._driver_write(st, seq_for(st.version + 1), cols, rows)
+        if entries is None:
+            return None
+        v = self._commit_revalidated(
+            st, "upsert", entries,
+            lambda a: self._upsert_rows(cols, rows, _attempts=a),
+            _attempts=_attempts,
+        )
+        if v is not None:
+            self._maybe_auto_compact(sum(e.bytes for e in entries))
+        return v
+
     def _stage_upsert(self, st: TableState, df: DataFrame, mode: str,
                       seq: int) -> list[FileEntry]:
         """Validate an UPSERT batch against ``st`` and write its delta
@@ -2603,7 +2987,8 @@ class Table:
         is dropped under DELETE_IGNORE — and write their tombstones at
         ``seq`` without publishing them. Up to PROBE_KEYS_MAX keys, the
         keys are collected once (the caller's frame runs once), probed
-        by ``_live_keys`` and written from the keys in hand."""
+        by ``_live_keys`` and written from the keys in hand, by
+        ``_driver_write`` unless it declines."""
         pk = st.schema.pk
         keys = self._collect_keys(st, self._cast_keys(st, df))
         if keys is not None:
@@ -2614,6 +2999,9 @@ class Table:
             keys = [k for k, ok in zip(keys, live) if ok]
             if not keys:
                 return []
+            entries = self._driver_write(st, seq, pk, keys, deleted=True)
+            if entries is not None:
+                return entries
             return self._write_files(
                 self._tombstones(st, self._key_frame(st, keys), distinct=True),
                 st, seq, "delta")
@@ -2655,19 +3043,33 @@ class Table:
     # perf-improvement score as writes land (tablet/maintenance_manager.h).
     AUTO_COMPACT_WRITE_FACTOR = 16
 
+    # what one delta file costs merge-on-read at the least — a relation
+    # group and a file open — in bytes: the fold policy charges each
+    # delta file max(its bytes, this). Spark-written delta files carry
+    # a PK bloom and already weigh more (a 4-row one is ~66 KB); a
+    # driver-written one has no bloom and weighs ~1 KB, so counting
+    # its file bytes alone would stop folds of hot tiny deltas.
+    DELTA_FILE_COST = 64 << 10
+
     def _small_files(self, fs: list[FileEntry]) -> list[FileEntry]:
         return [f for f in fs if f.kind == "base" and f.bytes < self.SMALL_FILE_BYTES]
+
+    def _delta_cost(self, fs: list[FileEntry]) -> int:
+        """The merge-on-read cost of the delta files among ``fs`` that
+        the fold policy weighs (see DELTA_FILE_COST)."""
+        return sum(max(f.bytes, self.DELTA_FILE_COST) for f in fs if f.kind == "delta")
 
     def compaction_plan(self, io_budget_bytes: int | None = None) -> list[dict]:
         """Explicit compaction plan: every partition with delta files
         or at least COMPACT_MIN_SMALL_FILES small base files, scored by
-        benefit (delta bytes to fold — weighted 4×, since deltas tax
-        every scan — plus small-file bytes to bin-pack) per unit of
+        benefit (delta cost to fold, ``_delta_cost`` — weighted 4×,
+        since deltas tax every scan — plus small-file bytes to
+        bin-pack) per unit of
         rewrite IO, best first, cut to ``io_budget_bytes`` by
         rank_partitions. Pure manifest arithmetic — no Spark job. Feed
         the ``partition`` values to ``compact(partitions=...)``."""
         def benefit(fs):
-            delta = sum(f.bytes for f in fs if f.kind == "delta")
+            delta = self._delta_cost(fs)
             smalls = self._small_files(fs)
             if not delta and len(smalls) < self.COMPACT_MIN_SMALL_FILES:
                 return 0
@@ -2745,7 +3147,9 @@ class Table:
         """One pass of the auto-compaction policy, the one both the
         write-path trigger and ``Engine.maintenance_sweep`` run (each
         under the table's maintenance mutex). Partitions whose delta
-        bytes reach ``auto_compact_min_ratio`` of their total
+        cost (``_delta_cost``: each delta file's bytes, at least
+        DELTA_FILE_COST) reaches ``auto_compact_min_ratio`` of their
+        total bytes
         (≈ --tablet_delta_store_major_compact_min_ratio=0.1; lower here
         because our deltas are whole-row redactions, costlier to merge
         than Kudu's columnwise REDOs) are folded into fresh base files,
@@ -2754,7 +3158,7 @@ class Table:
         × the triggering commit's delta bytes when larger, so big
         writes drain their own backlog — so one pass never rewrites an
         unbounded amount; over repeated passes the backlog amortizes.
-        No fold while those partitions' delta bytes sit under
+        No fold while those partitions' delta cost sits under
         ``auto_compact_min_delta_bytes`` (merge-on-read is cheap
         there). Raises on failure: the sweep reports it, the write
         path logs it."""
@@ -2769,7 +3173,7 @@ class Table:
                      self.AUTO_COMPACT_WRITE_FACTOR * int(commit_delta_bytes))
 
         def fold(fs):
-            delta = sum(f.bytes for f in fs if f.kind == "delta")
+            delta = self._delta_cost(fs)
             return delta if delta >= ratio * sum(f.bytes for f in fs) else 0
 
         ranked, n = rank_partitions(st.files, fold, budget)

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import dataclasses
 import os
+import re
 from enum import Enum
 
 from pyspark.sql import functions as F
@@ -246,12 +247,26 @@ class Session:
         return versions
 
     def _run_op(self, st, op: str, rows: list[dict], versions: list[int]) -> None:
-        spark = self.table.spark
+        """Run one same-op run as a table op. An upsert run is written
+        from the rows in hand when the driver write step takes it
+        (``Table._upsert_rows``); every other run becomes a frame with
+        an apply-order ``__row_idx``."""
         method = getattr(self.table, op)
         cols = self._cols_for(st, op, rows)
-        data = [tuple(r.get(c) for c in cols) + (i,) for i, r in enumerate(rows)]
-        ddl = ", ".join(f"`{c}` {st.schema.col(c).type}" for c in cols)
-        df = spark.createDataFrame(data, ddl + ", __row_idx bigint")
+        data = [tuple(r.get(c) for c in cols) for r in rows]
+        if op.startswith("upsert"):
+            # no immutable column is set (the driver step declines
+            # those), so UPSERT_IGNORE writes as UPSERT does
+            v = self.table._upsert_rows(cols, data)
+            if v is not None:
+                versions.append(v)
+                return
+        # char/varchar cannot appear in a frame's schema; the table op's
+        # write cast enforces the declared length
+        ddl = re.sub(r"(?:var)?char\s*\(\s*\d+\s*\)", "string", ", ".join(
+            f"`{c}` {st.schema.col(c).type}" for c in cols))
+        df = self.table.spark.createDataFrame(
+            [r + (i,) for i, r in enumerate(data)], ddl + ", __row_idx bigint")
         if op.startswith("insert"):
             # _split_failed already dropped in-run duplicate keys; upsert
             # and update keep the apply order so the last mention wins

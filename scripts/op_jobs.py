@@ -7,6 +7,8 @@ with the ``pk_bloom_cols`` presence index, and prints one row per op:
   insert of new keys, a duplicate insert (rejected), a 4-row
   ``Session`` upsert, a 5-key ``Table.delete`` and a transaction
   (insert + upsert + delete);
+- a 4-row ``Session`` upsert on the same table with a decimal(12,2)
+  column, which the driver write step declines (Spark's writer);
 - an olap-shaped table, a composite (orderkey, linenumber) key hashed
   into 8 buckets, 60,000 rows plus one upsert delta: a 600-key
   ``Table.delete`` from a Python-built key frame, as the olap_churn
@@ -25,6 +27,7 @@ import argparse
 import os
 import sys
 import tempfile
+from decimal import Decimal
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -96,6 +99,24 @@ def small_ops(spark, eng, name: str, bloom: bool) -> dict:
         x.commit()
 
     out["txn insert+upsert+delete"] = jobs(spark, txn)
+
+    dec = eng.create_table(f"{name}_dec", [("k", "bigint", False), ("v", "int", True),
+                                           ("p", "decimal(12,2)", True)], pk=["k"],
+                           hash_partitions=[{"columns": ["k"], "buckets": 2}])
+    alter = eng.alter_table(f"{name}_dec").set_property("auto_compact", "false")
+    if bloom:
+        alter = alter.set_property("pk_bloom_cols", "k")
+    alter.apply()
+    dec = eng.table(f"{name}_dec")
+    dec.insert(rows(0, 100).select("k", "v", F.lit(1.5).cast("decimal(12,2)").alias("p")))
+
+    def decimal_upsert():
+        s = Session(dec)
+        for k in (5, 6, 500, 501):
+            s.upsert({"k": k, "v": -k, "p": Decimal("2.25")})
+        s.flush()
+
+    out["4-row Session upsert, decimal"] = jobs(spark, decimal_upsert)
     return out
 
 

@@ -32,11 +32,8 @@ def _ddl(t) -> str:
         "varchar(10)", "string")
 
 
-def check(t, keys: list[tuple], spark_side_exact: bool = True) -> list[bool]:
-    """_live_keys(keys) against the Spark-side probe and the truth.
-    ``spark_side_exact=False`` skips comparing the Spark-side probe to
-    the truth: on a dirty table its IN-list filter loses NaN keys once
-    the merged-dirty frame is cached."""
+def check(t, keys: list[tuple]) -> list[bool]:
+    """_live_keys(keys) against the Spark-side probe and the truth."""
     spark = t.spark
     st = t.state()
     pk = st.schema.pk
@@ -50,8 +47,7 @@ def check(t, keys: list[tuple], spark_side_exact: bool = True) -> list[bool]:
     got = t._live_keys(st, keys)
     spark_side = answer(kdf.join(t._existing_pks(st, kdf), on=pk, how="left_semi"))
     truth = answer(kdf.join(t.to_df().select(*pk), on=pk, how="left_semi"))
-    if spark_side_exact:
-        assert spark_side == truth, [k for k, a, b in zip(keys, spark_side, truth) if a != b]
+    assert spark_side == truth, [k for k, a, b in zip(keys, spark_side, truth) if a != b]
     assert got == truth, [k for k, a, b in zip(keys, got, truth) if a != b]
     return got
 
@@ -67,23 +63,23 @@ def make(engine, name, cols, pk, rows, bloom=None, **part):
     return engine.table(name)
 
 
-def churn(engine, t, upsert_rows, delete_keys, reinsert_rows, probe, exact=True):
+def churn(engine, t, upsert_rows, delete_keys, reinsert_rows, probe):
     """Check ``probe`` on the clean table, then after an upsert delta,
     a delete delta and a reinsert of deleted keys."""
     spark, name, ddl = engine.spark, t.name, _ddl(t)
-    check(t, probe, exact)
+    check(t, probe)
     t.upsert(spark.createDataFrame(upsert_rows, ddl + ", v int"))
     t = engine.table(name)
     assert any(f.kind == "delta" for f in t.state().files)
-    check(t, probe, exact)
+    check(t, probe)
     t.delete(spark.createDataFrame(delete_keys, ddl))
     t = engine.table(name)
-    got = check(t, probe, exact)
+    got = check(t, probe)
     for k in delete_keys:
         assert not got[probe.index(k)]
     t.insert(spark.createDataFrame(reinsert_rows, ddl + ", v int"))
     t = engine.table(name)
-    got = check(t, probe, exact)
+    got = check(t, probe)
     for r in reinsert_rows:
         assert got[probe.index(r[:-1])]
     return t
@@ -101,7 +97,7 @@ def test_float_keys_nan_and_signed_zero(engine):
     probe += [(None, 0.0), (1.5, None), (NAN, NAN), (0.0, -0.0)]  # NULLs, duplicates
     churn(engine, t, [(1.5, 0.0, 100), (9.0, 8.0, 101)],
           [(NAN, NAN), (-7.0, 0.0), (2.25, 3.5)],
-          [(NAN, NAN, 102)], probe, exact=False)
+          [(NAN, NAN, 102)], probe)
 
 
 def test_decimal_keys_and_a_declining_sidecar(engine):
@@ -176,8 +172,8 @@ def test_integer_composite_key_dead_buckets_and_ranges(engine, spark, monkeypatc
     outside = [(500, 0, 0, True), (-5, 20, 2, False)]
     assert len(dead) == 5
     calls = []
-    orig = tbl.Table._snapshot_df
-    monkeypatch.setattr(tbl.Table, "_snapshot_df",
+    orig = tbl.Table._read_files
+    monkeypatch.setattr(tbl.Table, "_read_files",
                         lambda self, *a, **kw: calls.append(1) or orig(self, *a, **kw))
     assert t._live_keys(st, dead + outside) == [False] * 7
     assert calls == []

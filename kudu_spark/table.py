@@ -282,7 +282,7 @@ def locate(st: TableState, values: dict) -> dict:
     buckets) when no range covers the row. This is the write path's
     partition function on the driver, Kudu's client-side
     ``KuduPartitioner`` (client.h:3494-3548): ``Engine.locate_row``
-    and the key probe (``Table._live_keys``) route through it, and
+    and the keyed lookup (``Table._live_rows``) route through it, and
     ``Table._prune`` prunes buckets with the same ``bucket_hashes``.
     Raises LiteralNotHashable, or TypeError when a value does not
     compare with the range bounds."""
@@ -299,6 +299,15 @@ def locate(st: TableState, values: dict) -> dict:
 
 def _is_nan(v) -> bool:
     return isinstance(v, float) and v != v
+
+
+def _is_zero(v) -> bool:
+    return isinstance(v, (int, float)) and not isinstance(v, bool) and v == 0
+
+
+def _both_zeros(c):
+    """``c`` is -0.0 or 0.0, as a range: see ``Table._filters_to_column``."""
+    return (c >= -0.0) & (c <= 0.0)
 
 
 def _bound_norm(type_str: str):
@@ -389,6 +398,49 @@ def _driver_type(type_str: str):
     return None if k is None else (k[0](), k[1]())
 
 
+_READ_RE = re.compile(
+    r"tinyint|byte|smallint|short|int|integer|bigint|long|boolean|float|real|double"
+    r"|string|varchar\s*\(\s*\d+\s*\)|binary|date|decimal\s*(\(\s*\d+\s*(,\s*\d+\s*)?\))?")
+
+
+def _driver_readable(type_str: str) -> bool:
+    """Whether pyarrow reads a column of type ``type_str`` from Spark's
+    files as the value Spark's reader gives: the numeric types,
+    boolean, string, VARCHAR(n), binary, date and arrays of those. Not
+    a timestamp (INT96 on disk), map, struct or CHAR(n) (padded on
+    read)."""
+    t = type_str.strip().lower()
+    m = _ARRAY_RE.fullmatch(t)
+    return _driver_readable(m.group(1)) if m else bool(_READ_RE.fullmatch(t))
+
+
+def _key_literal(type_str: str, v):
+    """A scan's ``=`` or IN literal ``v`` on a PK column of type
+    ``type_str``, as the stored value it can equal; raises KeyError
+    when its Python type is not the column's own, where Spark would
+    cast one side and a Python comparison does not. None (NULL)
+    passes and matches nothing."""
+    import datetime
+    import decimal
+
+    if v is None:
+        return None
+    t = type_str.strip().lower()
+    if _VARCHAR_RE.fullmatch(t):
+        t = "string"
+    if t.startswith("decimal"):
+        want = (int, decimal.Decimal)
+    elif t in ("tinyint", "byte", "smallint", "short", "int", "integer", "bigint", "long"):
+        want = (int,)
+    else:
+        want = {"boolean": (bool,), "float": (float,), "real": (float,), "double": (float,),
+                "string": (str,), "binary": (bytes, bytearray),
+                "date": (datetime.date,)}.get(t, ())
+    if type(v) not in want:
+        raise KeyError(type_str)
+    return bytes(v) if isinstance(v, bytearray) else v
+
+
 def _driver_value(type_str: str):
     """value -> what the write cast stores, for a value of a
     ``_driver_type`` column that passed createDataFrame's type check:
@@ -425,9 +477,35 @@ def _spark_row_metadata(fields: list) -> dict:
                 json.dumps(row.jsonValue(), separators=(",", ":"))}
 
 
-# a NaN key column in ``Table._collect_keys``' dedup: Spark's grouping
-# treats NaN as equal to NaN, Python's == does not
+# a NaN key column in ``_key_ident``: Spark's grouping treats NaN as
+# equal to NaN, Python's == does not
 _NAN = object()
+
+
+def _key_ident(key: tuple) -> tuple:
+    """A PK tuple's identity as Spark compares keys: NaN equals NaN and
+    -0.0 equals 0.0 (as in Python)."""
+    return tuple(_NAN if _is_nan(v) else v for v in key)
+
+
+@functools.lru_cache(maxsize=256)
+def _ddl_arrow_schema(ddl: str):
+    """The arrow schema of a frame DDL (parsed in the JVM, so cached)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    return to_arrow_schema(_parse_datatype_string(ddl))
+
+
+def _distinct_keys(keys) -> list[tuple]:
+    """``keys`` without repeats by ``_key_ident``, in first-seen order."""
+    seen, out = set(), []
+    for key in keys:
+        ident = _key_ident(key)
+        if ident not in seen:
+            seen.add(ident)
+            out.append(key)
+    return out
 
 
 def rank_partitions(files: list, benefit, budget: int | None = None) -> tuple[list, int]:
@@ -1052,14 +1130,22 @@ class Table:
         ``= NaN`` becomes ``isnan``, and ``>``, ``>=`` and an IN-list
         holding NaN gain ``OR isnan``, which batch stats cannot decide
         (parquet footers do record NaN: scans of files keep the plain
-        form and its pushdown)."""
+        form and its pushdown).
+
+        On float and double columns, ``=`` and IN on a zero match both
+        zeros as Spark compares them, written as ``c BETWEEN -0.0 AND
+        0.0``: an equality or IN-list pushed into a parquet scan lets
+        footer statistics of -0.0 rule out ``= 0.0`` (on Spark 4.1 even
+        ``IN (0.0, -0.0)`` misses a -0.0 row), a range does not."""
+        types = {c.name: c.type.strip().lower() for c in st.schema.columns}
         expr = F.lit(True)
         for col, op, val in filters:
             c = F.col(col)
-            nan = nan_safe and op in ("=", ">", ">=", "in") and (
-                st.schema.col(col).type.strip().lower() in ("float", "double", "real"))
+            floating = types.get(col) in ("float", "double", "real")
+            nan = nan_safe and op in ("=", ">", ">=", "in") and floating
             if op == "=":
-                expr = expr & (F.isnan(c) if nan and _is_nan(val) else c == val)
+                expr = expr & (F.isnan(c) if nan and _is_nan(val)
+                               else _both_zeros(c) if floating and _is_zero(val) else c == val)
             elif op == "!=":
                 expr = expr & (c != val)
             elif op == "<":
@@ -1073,8 +1159,11 @@ class Table:
             elif op == ">=":
                 expr = expr & ((c >= val) | F.isnan(c) if nan else c >= val)
             elif op == "in":
-                expr = expr & (c.isin(*val) | F.isnan(c) if nan and any(map(_is_nan, val))
-                               else c.isin(*val))
+                zeros = floating and any(map(_is_zero, val))
+                e = c.isin(*[v for v in val if not (zeros and _is_zero(v))])
+                if zeros:
+                    e = e | _both_zeros(c)
+                expr = expr & (e | F.isnan(c) if nan and any(map(_is_nan, val)) else e)
             elif op == "not_null":
                 expr = expr & c.isNotNull()
             elif op == "is_null":
@@ -1129,6 +1218,14 @@ class Table:
         last_primary_key): re-run with the last key you saw and no row
         is duplicated or lost.
 
+        A point read — ``filters`` binding every PK column with ``=`` or
+        IN-lists of at most PROBE_KEYS_MAX combinations, without
+        ``include_deleted`` or ``start_after_pk`` — is answered on the
+        driver (``_keyed_scan``, Kudu's keyed lookup); the other
+        filters, ``columns``, ``ordered`` and ``limit`` apply to its
+        local frame. Everything else, and a keyed read the driver
+        declines, plans merge-on-read (``_snapshot_df``).
+
         ``read_mode`` mirrors ReadMode (common.proto:268).
         READ_YOUR_WRITES coincides with READ_LATEST here by
         construction: a mutation returns only after its commit is
@@ -1140,12 +1237,15 @@ class Table:
         if read_mode == "READ_AT_SNAPSHOT" and version is None and timestamp_ms is None:
             raise KuduSparkError("READ_AT_SNAPSHOT requires version or timestamp_ms")
         st = self.state(version, timestamp_ms)
-        eff = list(filters or [])
-        if start_after_pk:
-            # pruning-only bound: every row after the tuple has
-            # pk0 >= tuple[0]; the exact predicate is applied below
-            eff.append((st.schema.pk[0], ">=", start_after_pk[0]))
-        df = self._snapshot_df(st, eff or None, include_deleted=include_deleted)
+        df = (None if include_deleted or start_after_pk
+              else self._keyed_scan(st, list(filters or []), columns))
+        if df is None:
+            eff = list(filters or [])
+            if start_after_pk:
+                # pruning-only bound: every row after the tuple has
+                # pk0 >= tuple[0]; the exact predicate is applied below
+                eff.append((st.schema.pk[0], ">=", start_after_pk[0]))
+            df = self._snapshot_df(st, eff or None, include_deleted=include_deleted)
         if start_after_pk:
             df = df.where(self._pk_after_expr(st, start_after_pk))
         if ordered:
@@ -1155,6 +1255,31 @@ class Table:
         if limit is not None:
             df = df.limit(limit)
         return df
+
+    def _keyed_scan(self, st: TableState, filters: list[Predicate],
+                    columns: list[str] | None) -> DataFrame | None:
+        """``scan``'s rows when ``filters`` bind the whole primary key
+        (``_point_keys``): the keys' live rows, read on the driver by
+        ``_live_rows`` with the projected and filtered columns, as an
+        arrow-backed LocalRelation typed as ``_key_frame`` types one,
+        with the filters that bound no key applied over it (the rows
+        hold the bound keys by construction). Such a point read runs no
+        Spark job. None when the filters bind no key set, or the driver
+        read declines; ``scan`` then plans ``_snapshot_df``."""
+        bound = self._point_keys(st, filters)
+        if bound is None:
+            return None
+        keys, rest = bound
+        names = st.schema.names
+        want = set(names if columns is None else columns) | {f[0] for f in filters}
+        if not want <= set(names):
+            return None
+        cols = [c for c in names if c in want]
+        rows = self._live_rows(st, keys, cols)
+        if rows is None:
+            return None
+        df = self.spark.createDataFrame(rows.select(cols))
+        return df.where(self._filters_to_column(st, rest)) if rest else df
 
     def to_df(self, version: int | None = None) -> DataFrame:
         return self.scan(version=version)
@@ -2286,9 +2411,10 @@ class Table:
 
     # -- PK existence probe -------------------------------------------------------
 
-    # key batches up to this many rows are collected and probed on the
-    # driver (_live_keys); larger ones probe in Spark, per PK column
-    # with an IN-list of up to this many distinct values
+    # key batches up to this many rows are collected and answered on
+    # the driver (_live_rows), and so are scans binding up to this many
+    # keys; larger batches probe in Spark (_snapshot_overlapping), per
+    # PK column with an IN-list of up to this many distinct values
     PROBE_KEYS_MAX = 8192
 
     def _snapshot_overlapping(self, st: TableState, batch: DataFrame) -> DataFrame:
@@ -2300,7 +2426,7 @@ class Table:
         lost. It serves the batch joins that need more than key
         existence (``update``, upserts of immutable columns, SQL DML,
         ingest) and key probes of batches over PROBE_KEYS_MAX; smaller
-        key batches are routed per key on the driver (``_live_keys``).
+        key batches are answered per key on the driver (``_live_rows``).
 
         The probe restricts on EVERY primary-key column, not just the
         leading one (Kudu probes the full encoded key against
@@ -2308,7 +2434,11 @@ class Table:
         key like (tenant, id) with low-cardinality tenant, a
         leading-column-only restriction degenerates to nearly the whole
         table, while the id IN-list prunes to the files actually
-        holding those ids. Per column: ≤ PROBE_KEYS_MAX distinct values
+        holding those ids. The IN-lists cost one job per column and
+        serve small scattered batches, which ``update`` and SQL DML
+        still send here: a 2-key update on a 1M-row, 80-file table took
+        1.0-1.3 s with them and 2.8-2.9 s with each column's min/max
+        range alone. Per column: ≤ PROBE_KEYS_MAX distinct values
         probe with an IN-list (_prune drops hash buckets and files
         whose footer bounds contain none of the values; surviving
         parquet scans skip row groups via the PK bloom filters
@@ -2356,41 +2486,58 @@ class Table:
         the table's types) as tuples in hand, or None when ``df`` holds
         more than PROBE_KEYS_MAX rows. One Spark job, which runs ``df``
         once. Keys dedup on the driver as Spark's grouping compares
-        them: NaN equals NaN and -0.0 equals 0.0 (as in Python); arrow
-        keeps timestamps as instants and binary as bytes."""
+        them (``_key_ident``); arrow keeps timestamps as instants and
+        binary as bytes."""
         pk = st.schema.pk
         got = df.select(*pk).limit(self.PROBE_KEYS_MAX + 1).toArrow()
         if got.num_rows > self.PROBE_KEYS_MAX:
             return None
-        seen, out = set(), []
-        for key in zip(*[got.column(c).to_pylist() for c in pk]):
-            ident = tuple(_NAN if _is_nan(v) else v for v in key)
-            if ident not in seen:
-                seen.add(ident)
-                out.append(key)
-        return out
+        return _distinct_keys(zip(*[got.column(c).to_pylist() for c in pk]))
 
-    def _key_frame(self, st: TableState, keys: list[tuple],
-                   index: list[int] | None = None) -> DataFrame:
-        """PK tuples ``keys`` as an arrow-backed frame in the table's
-        types, plus ``__i`` from ``index`` when given: a LocalRelation,
-        so no Python worker serves a job over it, and values keep
-        their identity (timestamps as instants, a naive one read in
-        local time as PySpark reads it; NaN, -0.0 and bytes as they
-        are)."""
+    def _point_keys(self, st: TableState, filters: list[Predicate]) -> tuple | None:
+        """``(keys, rest)`` when ``filters`` bind every PK column with
+        ``=`` or an IN-list (a column's first such filter) to at most
+        PROBE_KEYS_MAX combinations of literals of the columns' own
+        Python types (``_key_literal``): the distinct PK tuples they
+        bind, and the filters other than the binding ones. Else None."""
+        import itertools
+
+        pk = st.schema.pk
+        bound: dict = {}
+        rest = []
+        for col, op, val in filters:
+            if col in pk and col not in bound and op in ("=", "in"):
+                bound[col] = [val] if op == "=" else list(val)
+            else:
+                rest.append((col, op, val))
+        if (len(bound) < len(pk)
+                or functools.reduce(operator.mul, map(len, bound.values())) > self.PROBE_KEYS_MAX):
+            return None
+        try:
+            choices = [[_key_literal(st.schema.col(c).type, v) for v in bound[c]] for c in pk]
+        except KeyError:
+            return None
+        return _distinct_keys(itertools.product(*choices)), rest
+
+    @staticmethod
+    def _arrow_schema(st: TableState, cols: list[str]):
+        """The arrow schema of columns ``cols`` of ``st`` in the types a
+        frame of them has (CHAR/VARCHAR as string, ``Schema.frame_ddl``)."""
+        ddl = ", ".join(f"`{c}` {st.schema.col(c).type}" for c in cols)
+        return _ddl_arrow_schema(re.sub(r"(?:var)?char\s*\(\s*\d+\s*\)", "string", ddl))
+
+    def _key_arrow(self, st: TableState, keys: list[tuple], index: list[int] | None = None):
+        """PK tuples ``keys`` as an arrow table in the table's types, plus
+        ``__i`` from ``index`` when given. Values keep their identity:
+        timestamps as instants (a naive one read in local time, as
+        PySpark reads it), NaN, -0.0 and bytes as they are."""
         import datetime
 
         import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import _parse_datatype_string
 
         pk = st.schema.pk
-        ddl = ", ".join(f"`{c}` {st.schema.col(c).type}" for c in pk)
-        # char/varchar cannot appear in a frame's schema (Schema.frame_ddl)
-        ddl = re.sub(r"(?:var)?char\s*\(\s*\d+\s*\)", "string", ddl)
-        schema = to_arrow_schema(_parse_datatype_string(ddl))
         cols = []
-        for j, field in enumerate(schema):
+        for j, field in enumerate(self._arrow_schema(st, pk)):
             vals = [k[j] for k in keys]
             if pa.types.is_timestamp(field.type):
                 vals = [v.astimezone(datetime.timezone.utc)
@@ -2400,14 +2547,33 @@ class Table:
         if index is not None:
             cols.append(pa.array(index, pa.int64()))
             names.append("__i")
-        return self.spark.createDataFrame(pa.Table.from_arrays(cols, names=names))
+        return pa.Table.from_arrays(cols, names=names)
+
+    def _key_frame(self, st: TableState, keys: list[tuple],
+                   index: list[int] | None = None) -> DataFrame:
+        """``_key_arrow`` as a frame: a LocalRelation, so no Python worker
+        serves a job over it."""
+        return self.spark.createDataFrame(self._key_arrow(st, keys, index))
 
     def _live_keys(self, st: TableState, keys: list[tuple]) -> list[bool]:
         """Which PK tuples in ``keys`` are live at ``st``, answered by
-        index: the key probe for batches already in hand (at most
-        PROBE_KEYS_MAX keys), planned on the driver the way Kudu's
-        client routes each operation to its tablet before any RPC
-        (KuduPartitioner, client.h:3494-3548).
+        index: ``_live_rows`` with no columns."""
+        live = set(self._live_rows(st, keys, []).column("__i").to_pylist())
+        return [i in live for i in range(len(keys))]
+
+    def _live_rows(self, st: TableState, keys: list[tuple], cols: list[str]):
+        """The live rows of PK tuples ``keys`` (at most PROBE_KEYS_MAX) at
+        ``st``: Kudu's keyed lookup per rowset, newest delta first
+        (tablet/tablet.cc:836, tablet/delta_applier.h:52), planned and
+        answered on the driver the way Kudu's client routes each
+        operation to its tablet before any RPC (KuduPartitioner,
+        client.h:3494-3548). Returns an arrow table of the PK columns,
+        then ``cols``, in the types a frame of them has
+        (``_arrow_schema``), and ``__i``, the row's index in ``keys``;
+        None when step 4 declines and ``cols`` is not empty. Serves
+        ``Table.scan`` on a bound key and the key probe (``_live_keys``:
+        DELETE's small path, INSERT's duplicate check, the transaction
+        re-probe and ``Session``).
 
         1. Route each key to its partition (``locate``). A key in no
            live range or bucket is absent, with no IO. A key the driver
@@ -2418,18 +2584,40 @@ class Table:
            out (no false negatives): probed on the driver when the
            families fit PRESENCE_PARTITION_BYTES, by the probe UDF
            otherwise.
-        4. Verify the rest in one job: every version of their keys in
-           their files — key, manifest seq and tombstone mark — joined
-           with their key frame (``_key_frame``) and matched by ``__i``,
-           so NaN, -0.0, binary and timestamp keys stay exact. On the
-           driver the newest version of each key wins, merge-on-read's
-           rule (tablet/delta_applier.h), and a tombstone hides it.
+        4. Read the remaining keys' versions on the driver with pyarrow
+           (``_read_rows``): the PK and tombstone columns of the row
+           groups whose PK statistics can hold a key, then ``cols`` of
+           the rows that win. Keys compare as Spark compares them (NaN
+           equals NaN, -0.0 equals 0.0); the newest manifest seq of
+           each key wins, merge-on-read's rule, and a tombstone hides
+           it. Columns map to a file's schema version by column id, so
+           renames hold, and a column added since takes its default.
 
-        Every file that holds a key is among that key's files, so the
-        versions read answer each remaining key exactly. NULL keys are
+        Step 4 declines (see ``_read_rows``) a store other than
+        ``LocalEnv``, candidate files over PRESENCE_PARTITION_BYTES, a
+        column pyarrow does not read as Spark does (a timestamp is INT96
+        on disk), a column whose type changed since a file's schema
+        version, and tables with vector sidecolumns. A declined probe
+        verifies in one Spark job instead: the candidate files' key,
+        manifest seq and tombstone columns broadcast-joined with the
+        keys' frame (``_key_frame``, matched by ``__i``), the newest
+        version winning on the driver. A declined scan takes
+        ``_snapshot_df``.
+
+        Every file that holds a key is among that key's candidates, so
+        the versions read answer each key exactly. NULL keys are
         absent."""
+        cand = self._key_candidates(st, keys)
+        rows = self._read_rows(st, keys, cand, cols)
+        if rows is None and not cols:
+            live = self._verify_keys(st, keys, cand)
+            rows = self._key_arrow(st, [keys[i] for i in live], live)
+        return rows
+
+    def _key_candidates(self, st: TableState, keys: list[tuple]) -> dict:
+        """Steps 1-3 of ``_live_rows``: key index -> the files that can
+        hold the key, for the keys that may be present."""
         pk = st.schema.pk
-        out = [False] * len(keys)
         norms = [_bound_norm(st.schema.col(c).type) for c in pk]
         parts: dict = {}
         for f in st.files:
@@ -2452,8 +2640,140 @@ class Table:
                 cand[i] = fs
         if cand and any(f.bloom for f in st.files):
             cand = self._presence_filter(st, keys, cand)
+        return cand
+
+    def _read_rows(self, st: TableState, keys: list[tuple], cand: dict, cols: list[str]):
+        """Step 4 of ``_live_rows`` on the driver, or None when it
+        declines, for exactness or cost:
+
+        - a store other than ``LocalEnv``: pyarrow would read the files
+          through the driver's Env instead of from the shared path;
+        - candidate files over PRESENCE_PARTITION_BYTES in all, the
+          bound that already keeps the driver's presence probe small;
+        - a PK or projected column outside ``_driver_readable``: a
+          timestamp is INT96 on disk, a map or struct is not a key
+          type here, CHAR(n) pads on Spark's read;
+        - a column whose type changed since a candidate file's schema
+          version (Spark's read casts it), or an added column whose
+          default arrow cannot hold as the column's type;
+        - tables with vector sidecolumns, whose files Spark's read
+          serves per file (``vector.route``)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from kudu_spark import fs as _fs
+
+        sch = st.schema
+        pk = sch.pk
+        names = pk + [c for c in cols if c not in pk]
+        files = {f.path: f for fs in cand.values() for f in fs}
+        if (not isinstance(self._env, _fs.LocalEnv)
+                or vector.quantize_cols(st) or vector.cell_cols(st)
+                or not all(_driver_readable(sch.col(c).type) for c in names)
+                or sum(f.bytes for f in files.values()) > self.PRESENCE_PARTITION_BYTES):
+            return None
+        schema = self._arrow_schema(st, names).append(pa.field("__i", pa.int64()))
+        types = [sch.col(c).type for c in pk]
+        norms = [_bound_norm(ty) for ty in types]
+        sift = next((j for j, ty in enumerate(types)
+                     if ty.strip().lower() not in ("float", "double", "real")), None)
+        ident = {i: _key_ident(keys[i]) for i in cand}
+        wanted: dict = {}
+        for i, fs in cand.items():
+            for f in fs:
+                wanted.setdefault(f.path, []).append(i)
+
+        def local(path):
+            return _fs.strip_file_scheme(os.path.join(self.root, path))
+
+        newest: dict = {}  # key index -> (seq, path, row, tombstone)
+        reads: dict = {}  # path -> (row groups, stored names, PK + tombstone table)
+        for path, idxs in wanted.items():
+            f = files[path]
+            old = {c.id: c for c in st.schemas_by_version.get(f.schema_version, sch).columns}
+            stored = []
+            for n in names:
+                c = old.get(sch.col(n).id)
+                if c is not None and c.type != sch.col(n).type:
+                    return None
+                stored.append(None if c is None else c.name)
+            keyv = [[norm(v) for norm, v in zip(norms, keys[i])] for i in idxs]
+            with pq.ParquetFile(local(path)) as pf:
+                md = pf.metadata
+                at = {md.schema.column(j).path: j for j in range(md.num_columns)}
+                if DEL_COL not in at or any(s not in at for s in stored[:len(pk)]):
+                    return None
+                groups = []
+                for g in range(md.num_row_groups):
+                    rg = md.row_group(g)
+                    bounds = []
+                    for name, ty, norm in zip(stored, types, norms):
+                        stat = rg.column(at[name]).statistics
+                        lo, hi = (_stat_bounds(stat, ty) if stat is not None and stat.has_min_max
+                                  else (None, None))
+                        bounds.append((norm(lo), norm(hi)))
+                    if any(all(_within(lo, v, hi) for (lo, hi), v in zip(bounds, kv))
+                           for kv in keyv):
+                        groups.append(g)
+                if not groups:
+                    continue
+                t = pf.read_row_groups(groups, columns=stored[:len(pk)] + [DEL_COL])
+            sub, picked = t, range(t.num_rows)
+            if sift is not None:
+                # arrow finds the rows whose first non-float key column
+                # holds a wanted value; only those reach Python
+                try:
+                    want = pa.array(list({keys[i][sift] for i in idxs}), t.column(sift).type)
+                    found = pc.indices_nonzero(pc.is_in(t.column(sift), value_set=want))
+                    sub, picked = t.take(found), found.to_pylist()
+                except (pa.ArrowException, TypeError, ValueError, OverflowError):
+                    pass  # a value arrow cannot hold as the column's type
+            pos = {_key_ident(k): r for r, k in zip(picked, zip(
+                *[sub.column(j).to_pylist() for j in range(len(pk))]))}
+            for i in idxs:
+                r = pos.get(ident[i])
+                if r is not None and (i not in newest or f.seq > newest[i][0]):
+                    newest[i] = (f.seq, path, r, t.column(len(pk))[r].as_py())
+            reads[path] = (groups, stored, t)
+        hits: dict = {}
+        for i, (_seq, path, r, dead) in sorted(newest.items()):
+            if not dead:
+                hits.setdefault(path, []).append((i, r))
+        out = []
+        try:
+            for path, ir in hits.items():
+                groups, stored, t = reads[path]
+                rows = pa.array([r for _, r in ir], pa.int64())
+                rest = [s for s in stored[len(pk):] if s is not None]
+                if rest:
+                    with pq.ParquetFile(local(path)) as pf:
+                        more = pf.read_row_groups(groups, columns=rest).take(rows)
+                arrays = []
+                for j, (n, s) in enumerate(zip(names, stored)):
+                    typ = schema.field(n).type
+                    if j < len(pk):
+                        arrays.append(t.column(j).take(rows).cast(typ))
+                    elif s is None:
+                        arrays.append(pa.array([sch.col(n).default] * len(ir), typ))
+                    else:
+                        arrays.append(more.column(s).cast(typ))
+                arrays.append(pa.array([i for i, _ in ir], pa.int64()))
+                out.append(pa.Table.from_arrays(arrays, schema=schema))
+        except (pa.ArrowException, TypeError, ValueError):
+            return None  # a default or stored type arrow cannot hold as the column's
+        return pa.concat_tables(out).sort_by("__i") if out else schema.empty_table()
+
+    def _verify_keys(self, st: TableState, keys: list[tuple], cand: dict) -> list[int]:
+        """The live ones of the candidate keys ``cand`` in one Spark job,
+        in index order: every version of them in their files — key,
+        manifest seq and tombstone mark — joined with their key frame
+        and matched by ``__i``, so NaN, -0.0, binary and timestamp keys
+        stay exact; on the driver the newest version of each key wins
+        and a tombstone hides it."""
         if not cand:
-            return out
+            return []
+        pk = st.schema.pk
         paths = {f.path for fs in cand.values() for f in fs}
         kdf = self._key_frame(st, [keys[i] for i in cand], list(cand))
         versions = (self._read_files(st, [f for f in st.files if f.path in paths])
@@ -2463,9 +2783,7 @@ class Table:
         for i, seq, dead in versions:
             if i not in newest or seq > newest[i][0]:
                 newest[i] = (seq, dead)
-        for i, (_seq, dead) in newest.items():
-            out[i] = not dead
-        return out
+        return sorted(i for i, (_seq, dead) in newest.items() if not dead)
 
     def _presence_filter(self, st: TableState, keys: list[tuple], cand: dict) -> dict:
         """``cand`` (key index -> candidate files) less the keys the
@@ -2505,8 +2823,7 @@ class Table:
 
     def _live_frame(self, st: TableState, keys: list[tuple]) -> DataFrame:
         """The live ones of PK tuples ``keys``, as a key frame."""
-        live = self._live_keys(st, keys)
-        return self._key_frame(st, [k for k, ok in zip(keys, live) if ok])
+        return self.spark.createDataFrame(self._live_rows(st, keys, []).select(st.schema.pk))
 
     def _present_keys(self, st: TableState, df: DataFrame, n: int) -> DataFrame:
         """Rows of ``df``, a frame of ``n`` rows of primary keys in the
@@ -3522,7 +3839,7 @@ class Table:
         out = {
             "on_disk_size": sum(f.bytes for f in st.files),
             "on_disk_rows": sum(f.rows for f in st.files),
-            "live_row_count": self._live_rows(st),
+            "live_row_count": self._live_row_count(st),
             "num_files": len(st.files),
             "version": st.version,
         }
@@ -3546,7 +3863,7 @@ class Table:
         out.update(vector.summary(self, st))
         return out
 
-    def _live_rows(self, st: TableState) -> int:
+    def _live_row_count(self, st: TableState) -> int:
         if not any(f.kind == "delta" for f in st.files):
             return sum(f.rows for f in st.files)
         from kudu_spark.meta import read_log

@@ -4,8 +4,10 @@ Runs each op once on a fresh local table, on a plain table and on one
 with the ``pk_bloom_cols`` presence index, and prints one row per op:
 
 - the 2-bucket (k bigint, v int, s string) table: insert into empty,
-  insert of new keys, a duplicate insert (rejected), a 4-row
-  ``Session`` upsert, a 5-key ``Table.delete`` and a transaction
+  insert of new keys, a point read (``scan`` on one key, then
+  collect) on the clean table, a duplicate insert (rejected), a 4-row
+  ``Session`` upsert, a point read and a 5-key IN-list read on the
+  now dirty table, a 5-key ``Table.delete`` and a transaction
   (insert + upsert + delete);
 - a 4-row ``Session`` upsert on the same table with a decimal(12,2)
   column, which the driver write step declines (Spark's writer);
@@ -61,6 +63,11 @@ def jobs(spark, fn, expect=None) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def point_read(t, filters) -> list:
+    """``Table.scan`` on a bound key, then collect: both are counted."""
+    return t.scan(filters=filters).collect()
+
+
 def small_ops(spark, eng, name: str, bloom: bool) -> dict:
     t = eng.create_table(name, [("k", "bigint", False), ("v", "int", True),
                                 ("s", "string", True)], pk=["k"],
@@ -78,6 +85,7 @@ def small_ops(spark, eng, name: str, bloom: bool) -> dict:
 
     out = {"insert into empty": jobs(spark, lambda: t.insert(rows(0, 100))),
            "insert new keys": jobs(spark, lambda: t.insert(rows(100, 200))),
+           "point read, clean": jobs(spark, lambda: point_read(t, [("k", "=", 42)])),
            "duplicate insert": jobs(spark, lambda: t.insert(rows(150, 160)),
                                     expect=DuplicateKeyError)}
 
@@ -88,6 +96,9 @@ def small_ops(spark, eng, name: str, bloom: bool) -> dict:
         s.flush()
 
     out["4-row Session upsert"] = jobs(spark, session_upsert)
+    out["point read, dirty"] = jobs(spark, lambda: point_read(t, [("k", "=", 5)]))
+    out["5-key IN-list read"] = jobs(
+        spark, lambda: point_read(t, [("k", "in", [5, 6, 7, 500, 999])]))
     keys = spark.createDataFrame([(k,) for k in (1, 2, 3, 104, 199)], "k bigint")
     out["Table.delete, 5 keys"] = jobs(spark, lambda: t.delete(keys))
 

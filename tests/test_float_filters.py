@@ -102,10 +102,36 @@ def test_float_filters_match_the_model_on_every_scan(engine, spark, col_type):
             assert got == want_key, (col_type, "key", filt)
 
 
-@pytest.mark.xfail(strict=True, reason="the parquet scan of a Spark-written file "
-                   "misses a -0.0 key under `= 0.0` / `IN (0.0)` (filter pushdown)")
-def test_negative_zero_key_matches_a_zero_literal(engine, spark):
-    t = engine.create_table("negzero", [("p", "double", False), ("k", "int", True)],
-                            pk=["p"])
-    t.insert(spark.createDataFrame([(-0.0, 1), (2.5, 2)], "p double, k int"))
-    assert [r.k for r in t.scan(filters=[("p", "=", 0.0)]).collect()] == [1]
+@pytest.mark.parametrize("col_type", ["double", "float"])
+def test_negative_zero_key_matches_a_zero_literal(engine, spark, monkeypatch, col_type):
+    """-0.0 equals 0.0 on both read arms, clean and dirty: a keyed
+    ``p = 0.0`` (answered on the driver), and scans whose filter reaches
+    the parquet scan: a non-key ``d = 0.0`` and a PK IN-list over
+    PROBE_KEYS_MAX."""
+    import kudu_spark.table as tbl
+
+    name = f"negzero_{col_type}"
+    t = engine.create_table(name, [("p", col_type, False), ("d", col_type, True),
+                                   ("k", "int", True)], pk=["p"])
+    engine.alter_table(name).set_property("auto_compact", "false").apply()
+    t = engine.table(name)
+    ddl = f"p {col_type}, d {col_type}, k int"
+    t.insert(spark.createDataFrame([(-0.0, -0.0, 1), (2.5, 0.0, 2), (3.5, 1.0, 3)], ddl))
+
+    def ks(filters):
+        return sorted(r.k for r in engine.table(name).scan(filters=filters).collect())
+
+    for _ in ("clean", "dirty"):
+        st = engine.table(name).state()
+        assert engine.table(name)._keyed_scan(st, [("p", "=", 0.0)], None) is not None
+        assert ks([("p", "=", 0.0)]) == ks([("p", "=", -0.0)]) == [1]
+        assert ks([("p", "in", [0.0, 2.5])]) == [1, 2]
+        assert ks([("d", "=", 0.0)]) == ks([("d", "=", -0.0)]) == [1, 2]
+        assert ks([("d", "in", [0.0, 1.0])]) == [1, 2, 3]
+        assert ks([("d", "in", [-0.0, 0.0])]) == [1, 2]
+        monkeypatch.setattr(tbl.Table, "PROBE_KEYS_MAX", 1)
+        assert engine.table(name)._keyed_scan(st, [("p", "in", [0.0, 3.5])], None) is None
+        assert ks([("p", "in", [0.0, 3.5])]) == [1, 3]
+        assert ks([("p", "in", [-0.0, 0.0])]) == [1]
+        monkeypatch.undo()
+        engine.table(name).upsert(spark.createDataFrame([(3.5, 1.0, 3)], ddl))

@@ -146,6 +146,13 @@ _DEC_CTX = decimal.Context(prec=100, rounding=decimal.ROUND_HALF_UP,
                            traps=[decimal.InvalidOperation])
 
 
+def decimal_ps(type_str: str) -> tuple[int, int] | None:
+    """(precision, scale) of a decimal column type, or None for any
+    other type; Spark's bare ``decimal`` is decimal(10,0)."""
+    m = _DEC_RE.fullmatch(type_str.strip().lower())
+    return None if m is None else (int(m.group(1) or 10), int(m.group(2) or 0))
+
+
 def _date_days(v, type_str: str) -> int:
     if isinstance(v, str) and _DATE_RE.fullmatch(v):
         try:
@@ -235,10 +242,9 @@ def _encoder(type_str: str):
         return lambda v: struct.pack("<i", _date_days(v, type_str))
     if t == "timestamp":
         return lambda v: struct.pack("<q", _timestamp_micros(v, type_str))
-    m = _DEC_RE.fullmatch(t)
-    if m:
-        p = int(m.group(1) or 10)
-        s = int(m.group(2) or 0)
+    ps = decimal_ps(t)
+    if ps:
+        p, s = ps
         if p <= 18:
             return lambda v: struct.pack("<q", _decimal_unscaled(v, p, s, type_str))
         return lambda v: _to_byte_array(_decimal_unscaled(v, p, s, type_str))

@@ -98,22 +98,20 @@ def _write_cast(expr, type_str: str):
 
 def _stat_bounds(stat, type_str: str):
     """(min, max) of a parquet column-chunk statistics object. Decimal
-    columns need special handling: pyarrow cannot cast their stats to
-    logical values (Spark stores decimal as INT32/INT64/FLBA), so
-    decode the raw scaled-integer representation with the column's
-    declared scale. Returns (None, None) when undecodable."""
-    import re
-
+    columns need special handling: pyarrow decodes the statistics of a
+    FIXED_LEN_BYTE_ARRAY decimal but not of an INT32/INT64 one (Spark
+    writes those for precision <= 18), so decode the raw
+    scaled-integer representation with the column's declared scale.
+    Returns (None, None) when undecodable."""
     try:
         return stat.min, stat.max
     except Exception:
-        m = re.fullmatch(r"decimal\s*(?:\(\s*\d+\s*,\s*(\d+)\s*\))?",
-                         type_str.strip(), re.I)
-        if not m:
+        ps = keyhash.decimal_ps(type_str)
+        if not ps:
             return None, None
         import decimal
 
-        scale = int(m.group(1) or 0)
+        scale = ps[1]
 
         def dec(raw):
             if isinstance(raw, bytes):  # FLBA: big-endian two's-complement
@@ -368,22 +366,37 @@ class WriteLayout:
 
 _VARCHAR_RE = re.compile(r"varchar\s*\(\s*(\d+)\s*\)")
 _ARRAY_RE = re.compile(r"array\s*<\s*(.+?)\s*>")
+_FLOAT_RE = re.compile(r"(?:array\s*<\s*)?(?:float|real|double)\s*>?")
 
 
 def _driver_type(type_str: str):
     """``(pyspark type, pyarrow type)`` of a column type that pyarrow
-    writes with the column descriptor Spark's writer gives it
-    (physical type, logical type and levels) — the integer types,
-    boolean, string, VARCHAR(n), binary, date and arrays of those
-    but VARCHAR — or None (see ``Table._driver_writable``)."""
+    writes with the logical type, levels and values Spark's writer
+    gives it — the integer types, boolean, float, double, string,
+    VARCHAR(n), binary, date, decimal(p,s) and arrays of those but
+    VARCHAR and decimal — or None (see ``Table._driver_writable``).
+
+    pyarrow 16.1 writes every decimal as FIXED_LEN_BYTE_ARRAY, where
+    Spark's writer puts INT32 (p <= 9) or INT64 (p <= 18); for
+    p > 18 both write the same FLBA. The logical type, the values and
+    the footer's row schema agree, so the two kinds of file mix in one
+    column: Spark's vectorized and parquet-mr readers both read either,
+    its decimal filter pushdown builds its predicates per file from that
+    file's own schema, ``_stat_bounds`` decodes either statistics
+    encoding and pyarrow reads either as decimal128."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
     t = type_str.strip().lower()
     m = _ARRAY_RE.fullmatch(t)
     if m:
-        inner = None if _VARCHAR_RE.fullmatch(m.group(1)) else _driver_type(m.group(1))
+        el = m.group(1)
+        inner = (None if _VARCHAR_RE.fullmatch(el) or keyhash.decimal_ps(el)
+                 else _driver_type(el))
         return None if inner is None else (T.ArrayType(inner[0]), pa.list_(inner[1]))
+    ps = keyhash.decimal_ps(t)
+    if ps:
+        return T.DecimalType(*ps), pa.decimal128(*ps)
     if _VARCHAR_RE.fullmatch(t):
         t = "string"
     kinds = {
@@ -393,6 +406,8 @@ def _driver_type(type_str: str):
         "bigint": (T.LongType, pa.int64), "long": (T.LongType, pa.int64),
         "boolean": (T.BooleanType, pa.bool_), "string": (T.StringType, pa.string),
         "binary": (T.BinaryType, pa.binary), "date": (T.DateType, pa.date32),
+        "float": (T.FloatType, pa.float32), "real": (T.FloatType, pa.float32),
+        "double": (T.DoubleType, pa.float64),
     }
     k = kinds.get(t)
     return None if k is None else (k[0](), k[1]())
@@ -445,7 +460,11 @@ def _driver_value(type_str: str):
     """value -> what the write cast stores, for a value of a
     ``_driver_type`` column that passed createDataFrame's type check:
     VARCHAR(n) truncates to n characters (``_write_cast``), a datetime
-    in a date column keeps its date, binary is bytes."""
+    in a date column keeps its date, binary is bytes, a decimal takes
+    the column's scale. A Decimal that column would round (more than
+    ``s`` fraction digits that are not zeros), overflow (more than
+    ``p - s`` integer digits) or cannot hold (NaN, infinity) raises
+    ``decimal.DecimalException``: Spark's conversion decides it."""
     t = type_str.strip().lower()
     m = _ARRAY_RE.fullmatch(t)
     if m:
@@ -455,6 +474,21 @@ def _driver_value(type_str: str):
     if m:
         n = int(m.group(1))
         return lambda v: None if v is None else v[:n]
+    ps = keyhash.decimal_ps(t)
+    if ps:
+        import decimal
+
+        p, s = ps
+        exact = decimal.Context(prec=p, traps=[decimal.Inexact, decimal.InvalidOperation])
+        unit = decimal.Decimal(1).scaleb(-s)
+
+        def scaled(v):
+            if v is None:
+                return None
+            if not v.is_finite():
+                raise decimal.InvalidOperation(v)
+            return v.quantize(unit, context=exact)
+        return scaled
     if t == "date":
         import datetime
 
@@ -1918,18 +1952,25 @@ class Table:
             self._attach_presence_index(st, entries, tombstones=has_tombstones, **given)
         return entries
 
-    def _driver_writable(self, st: TableState, cols: list[str]) -> bool:
+    def _driver_writable(self, st: TableState, cols: list[str], deleted: bool = False) -> bool:
         """Whether ``_driver_write`` can write a batch setting columns
-        ``cols`` of ``st`` with exactly the files, footers and routing
-        the Spark write step gives it. It declines:
+        ``cols`` of ``st`` (DELETE tombstones when ``deleted``) with the
+        files, footers and routing the Spark write step gives it. A
+        decimal column of precision <= 18 is the one physical
+        difference: FIXED_LEN_BYTE_ARRAY where Spark writes INT32/INT64,
+        with the same logical type, values and statistics, which every
+        reader of the table reads alike (``_driver_type``). Decimal
+        values the column would round, overflow or cannot hold are
+        declined one by one, in ``_driver_write``. It declines:
 
-        - decimal columns: Spark writes INT32/INT64 for precision <= 18,
-          pyarrow a FIXED_LEN_BYTE_ARRAY;
         - timestamp columns: Spark writes INT96, pyarrow INT64 micros;
-        - float and double columns (arrays of them too): the schema
-          matches, but Spark's footer records a NaN as the max and
-          pyarrow's drops it, so row-group pruning would lose NaN rows;
-        - any other type outside ``_driver_type`` (maps, structs, char);
+        - float and double columns (arrays of them too) in an upsert,
+          or in the PK of a tombstone: the schema matches, but Spark's
+          footer records a NaN as the max and pyarrow's drops it, so
+          row-group pruning would lose NaN rows (a tombstone's non-key
+          cells are all NULL and hold no NaN);
+        - arrays of decimals and any other type outside
+          ``_driver_type`` (maps, structs, char);
         - a batch setting an immutable column (its write joins the
           current rows), per-column storage attributes (Spark writer
           options), vector sidecolumns, z-order clustering (a batch
@@ -1945,6 +1986,9 @@ class Table:
             return False
         if any(c.encoding or c.compression or c.block_size or _driver_type(c.type) is None
                for c in sch.columns):
+            return False
+        if any(_FLOAT_RE.fullmatch(c.type.strip().lower())
+               and not (deleted and c.name not in sch.pk) for c in sch.columns):
             return False
         if any(sch.col(c).immutable for c in cols):
             return False
@@ -1995,7 +2039,9 @@ class Table:
 
         1. Check each value's Python type as ``createDataFrame`` does
            (the same exception classes), fill absent columns with
-           their defaults and truncate VARCHAR(n) values.
+           their defaults, truncate VARCHAR(n) values and scale
+           decimals; a decimal that would round or overflow declines
+           the batch (``_driver_value``).
         2. Validate with ``_raise_row_violations``, fed from the arrow
            null counts (upserts; tombstones carry NULL non-key cells).
         3. Route each row (``locate``'s hash and range functions); a
@@ -2006,8 +2052,11 @@ class Table:
            have no PK bloom: pyarrow cannot write one.
         5. Publish through ``_publish_files``, the presence sidecar
            built from key hashes computed here (plans/keyhash.py)."""
-        if not rows or len(rows) > self.PROBE_KEYS_MAX or not self._driver_writable(st, cols):
+        if (not rows or len(rows) > self.PROBE_KEYS_MAX
+                or not self._driver_writable(st, cols, deleted)):
             return None
+        import decimal
+
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -2015,6 +2064,7 @@ class Table:
         from pyspark.sql.types import (
             ArrayType,
             BooleanType,
+            DecimalType,
             LongType,
             StructField,
             StructType,
@@ -2037,16 +2087,22 @@ class Table:
         for c, (stype, _) in zip(sch.columns, kinds):
             if c.name in pos or deleted:
                 continue
+            dflt = c.default
+            if isinstance(stype, DecimalType) and type(dflt) is int:
+                dflt = decimal.Decimal(dflt)  # the cast of an int literal is exact
             try:
-                _make_type_verifier(stype)(c.default)
+                _make_type_verifier(stype)(dflt)
             except (TypeError, ValueError):
                 return None  # the write casts this default
-            if c.default is not None and isinstance(stype, ArrayType):
+            if dflt is not None and isinstance(stype, ArrayType):
                 return None  # a literal array's elements are not nullable
-            fill[c.name] = c.default
+            fill[c.name] = dflt
         fixes = [_driver_value(c.type) for c in sch.columns]
-        full = [tuple(fix(r[pos[n]] if n in pos else fill.get(n))
-                      for n, fix in zip(names, fixes)) for r in rows]
+        try:
+            full = [tuple(fix(r[pos[n]] if n in pos else fill.get(n))
+                          for n, fix in zip(names, fixes)) for r in rows]
+        except decimal.DecimalException:
+            return None  # Spark's conversion rounds or rejects this decimal
         batch = pa.Table.from_arrays(
             [pa.array([r[j] for r in full], k[1]) for j, k in enumerate(kinds)], names=names)
 

@@ -10,11 +10,13 @@ with the ``pk_bloom_cols`` presence index, and prints one row per op:
   now dirty table, a 5-key ``Table.delete`` and a transaction
   (insert + upsert + delete);
 - a 4-row ``Session`` upsert on the same table with a decimal(12,2)
-  column, which the driver write step declines (Spark's writer);
-- an olap-shaped table, a composite (orderkey, linenumber) key hashed
-  into 8 buckets, 60,000 rows plus one upsert delta: a 600-key
-  ``Table.delete`` from a Python-built key frame, as the olap_churn
-  benchmark issues it, and a 10,000-key delete (past
+  column;
+- an olap-shaped table with olap_churn's ``lineitem`` column types (a
+  composite (orderkey, linenumber) key hashed into 8 buckets,
+  decimal(12,2) money columns, a date and a string), 60,000 rows plus
+  one upsert delta: a 3,000-row ``Session`` upsert (some new keys), a
+  600-key ``Table.delete`` from a Python-built key frame, as the
+  olap_churn benchmark issues both, and a 10,000-key delete (past
   ``Table.PROBE_KEYS_MAX``, the Spark-side probe).
 
 Auto-compaction is off, so no fold lands inside a counted op. Jobs run
@@ -133,26 +135,43 @@ def small_ops(spark, eng, name: str, bloom: bool) -> dict:
 
 def olap_ops(spark, eng, name: str, bloom: bool) -> dict:
     ddl = "orderkey bigint, linenumber int"
+    money = ("quantity", "extendedprice", "discount", "tax")
     t = eng.create_table(name, [("orderkey", "bigint", False), ("linenumber", "int", False),
-                                ("qty", "double", True)], pk=["orderkey", "linenumber"],
+                                *[(c, "decimal(12,2)", True) for c in money],
+                                ("shipdate", "date", True), ("comment", "string", True)],
+                         pk=["orderkey", "linenumber"],
                          hash_partitions=[{"columns": ["orderkey"], "buckets": 8}])
     alter = eng.alter_table(name).set_property("auto_compact", "false")
     if bloom:
         alter = alter.set_property("pk_bloom_cols", "orderkey,linenumber")
     alter.apply()
     t = eng.table(name)
-    t.insert(spark.range(60_000).select(
-        (F.col("id") / 4).cast("bigint").alias("orderkey"),
-        (F.col("id") % 4).cast("int").alias("linenumber"),
-        F.col("id").cast("double").alias("qty")))
-    t.upsert(spark.range(0, 60_000, 97).select(
-        (F.col("id") / 4).cast("bigint").alias("orderkey"),
-        (F.col("id") % 4).cast("int").alias("linenumber"),
-        F.lit(-1.0).alias("qty")))
+
+    def rows(ids, salt):
+        return ids.select(
+            (F.col("id") / 4).cast("bigint").alias("orderkey"),
+            (F.col("id") % 4).cast("int").alias("linenumber"),
+            *[(F.col("id") % (50 + i) + salt).cast("decimal(12,2)").alias(c)
+              for i, c in enumerate(money)],
+            F.date_add(F.lit("1992-01-02").cast("date"),
+                       (F.col("id") % 2_500).cast("int")).alias("shipdate"),
+            F.concat(F.lit("c"), F.col("id")).alias("comment"))
+
+    t.insert(rows(spark.range(60_000), 0))
+    t.upsert(rows(spark.range(0, 60_000, 97), 1))
     t = eng.table(name)
+    up = [r.asDict() for r in rows(spark.range(0, 66_000, 22), 2).collect()]  # 3,000 rows
+
+    def session_upsert():
+        s = Session(t)
+        for r in up:
+            s.upsert(r)
+        s.flush()
+
+    out = {"3,000-row Session upsert, olap": jobs(spark, session_upsert)}
     doomed = [(i // 4, i % 4) for i in range(0, 60_000, 100)]  # 600 keys
-    out = {"olap delete, 600 keys": jobs(
-        spark, lambda: t.delete(spark.createDataFrame(doomed, ddl)))}
+    out["olap delete, 600 keys"] = jobs(
+        spark, lambda: t.delete(spark.createDataFrame(doomed, ddl)))
     many = [(i // 4, i % 4) for i in range(1, 60_000, 6)]  # 10,000 keys
     out["olap delete, 10,000 keys"] = jobs(
         spark, lambda: t.delete(spark.createDataFrame(many, ddl)))

@@ -16,11 +16,13 @@ from __future__ import annotations
 
 import datetime
 import os
+import re
 from decimal import Decimal
 
 import pyarrow.parquet as pq
 import pytest
 
+import kudu_spark.table as tbl
 from kudu_spark.engine import Engine
 from kudu_spark.plans import presence
 from kudu_spark.table import Table
@@ -68,8 +70,23 @@ def files_of(t, version):
 
 def descriptors(path):
     sch = pq.ParquetFile(path).schema
-    return [(c.path, c.physical_type, str(c.logical_type), c.max_definition_level,
+    return [(c.path, c.physical_type, c.length, str(c.logical_type), c.max_definition_level,
              c.max_repetition_level) for c in sch]
+
+
+def same_descriptors(drv_path, spk_path):
+    """The column descriptors agree but for the one documented
+    difference: a decimal of precision <= 18 is FIXED_LEN_BYTE_ARRAY in
+    a driver-written file, INT32/INT64 in a Spark-written one. Wider
+    decimals agree in full."""
+    a, b = descriptors(drv_path), descriptors(spk_path)
+    assert [d[0] for d in a] == [d[0] for d in b]
+    for x, y in zip(a, b):
+        m = re.match(r"Decimal\(precision=(\d+)", x[3])
+        if m and int(m.group(1)) <= 18:
+            assert x[1] == "FIXED_LEN_BYTE_ARRAY" and y[1] in ("INT32", "INT64"), (x, y)
+            x, y = x[:1] + x[3:], y[:1] + y[3:]
+        assert x == y
 
 
 def footer_meta(path):
@@ -91,7 +108,7 @@ def agree(drv, spk, probe):
         [(f.partition, f.rows, f.min_pk, f.max_pk, f.dmark, f.kind) for f in fb]
     for a, b in zip(fa, fb):
         pa_, pb = os.path.join(drv.root, a.path), os.path.join(spk.root, b.path)
-        assert descriptors(pa_) == descriptors(pb)
+        same_descriptors(pa_, pb)
         assert footer_meta(pa_) == footer_meta(pb)
         assert pq.read_table(pa_).to_pylist() == pq.read_table(pb).to_pylist()
         assert bool(a.bloom) == bool(b.bloom)
@@ -183,8 +200,9 @@ def test_composite_key_range_and_hash_partitions(engine, spark):
 
 
 @pytest.mark.parametrize("schema,props,create,row", [
-    ([("k", "int", False), ("d", "decimal(12,2)", True)], {}, {}, {}),
+    ([("k", "int", False), ("a", "array<decimal(12,2)>", True)], {}, {}, {}),
     ([("k", "int", False), ("ts", "timestamp", True)], {}, {}, {}),
+    # float and double cells in an upsert; a tombstone's are all NULL
     ([("k", "int", False), ("f", "float", True)], {}, {}, {}),
     ([("k", "int", False), ("d", "double", True)], {}, {}, {}),
     ([("k", "int", False), ("a", "array<double>", True)], {}, {}, {}),
@@ -203,6 +221,8 @@ def test_declined_batches_reach_the_spark_writer(engine, spark, monkeypatch, sch
         alter = alter.set_property(k, v)
     alter.apply()
     t = engine.table(name)
+    floating = any(isinstance(c, tuple) and c[1] in ("float", "double", "array<double>")
+                   for c in schema)
     calls = []
     real = Table._write_files
     monkeypatch.setattr(Table, "_write_files",
@@ -218,7 +238,8 @@ def test_declined_batches_reach_the_spark_writer(engine, spark, monkeypatch, sch
     upsert(t, [{"k": 1, **row}, {"k": 2, **row}])
     assert len(calls) == 1 and t.count() == 2
     t.delete(spark.createDataFrame([(1,)], "k int"))
-    assert len(calls) == (1 if row else 2) and t.count() == 1
+    driver_tombstones = bool(row) or floating
+    assert len(calls) == 2 - driver_tombstones and t.count() == 1
 
 
 def _jobs(spark, fn, group):
@@ -263,11 +284,269 @@ def test_session_upsert_runs_no_spark_job(engine, spark, bloom):
         == [(5, -5), (7, 7), (500, -500)]
 
 
-def test_decimal_table_upsert_runs_the_spark_writer(engine, spark):
-    t = engine.create_table("nojob_dec", [("k", "bigint", False), ("p", "decimal(12,2)", True)],
-                            pk=["k"], hash_partitions=[{"columns": ["k"], "buckets": 2}])
+def test_decimal_session_upsert_and_delete_run_no_spark_write_job(engine, spark):
+    t = engine.create_table("nojob_dec", [("k", "bigint", False), ("n", "int", False),
+                                          ("p", "decimal(12,2)", True),
+                                          ("q", "decimal(25,4)", True)],
+                            pk=["k", "n"], hash_partitions=[{"columns": ["k"], "buckets": 4}])
     engine.alter_table("nojob_dec").set_property("auto_compact", "false").apply()
     t = engine.table("nojob_dec")
-    rows = [{"k": k, "p": Decimal("1.25")} for k in (1, 2, 3, 4)]
-    assert _jobs(spark, lambda: upsert(t, rows), "nojob-dec") > 0
-    assert t.count() == 4
+    t.insert(spark.range(2_400).selectExpr(
+        "id DIV 4 AS k", "CAST(id % 4 AS int) AS n", "CAST(id / 100 AS decimal(12,2)) AS p",
+        "CAST(id AS decimal(25,4)) AS q"))
+    rows = [{"k": k, "n": 0, "p": Decimal("1.25"), "q": Decimal("-7.5")}
+            for k in (1, 2, 3, 4000)]
+    assert _jobs(spark, lambda: upsert(t, rows), "nojob-dec") == 0
+    # 600 keys from a Python-built frame, as olap_churn deletes them:
+    # collecting the caller's frame is the one job
+    doomed = spark.createDataFrame([(i // 4, i % 4) for i in range(0, 2_400, 4)][:600],
+                                   "k bigint, n int")
+    assert _jobs(spark, lambda: t.delete(doomed), "nojob-dec-del") == 1
+    assert t.count() == 2_400 + 1 - 600
+    assert t.scan(filters=[("k", "=", 4000), ("n", "=", 0)]).collect()[0].q == Decimal("-7.5000")
+
+
+def dec_row(k):
+    return {"k": Decimal(k).scaleb(-2) + Decimal("1000.00"), "d5": Decimal(k % 999).scaleb(-2),
+            "d12": Decimal(k * 12345).scaleb(-2), "d25": Decimal(k * 10 ** 12 + 7).scaleb(-4),
+            "s": f"s{k}"}
+
+
+def test_decimal_columns_write_as_spark_does(engine, spark):
+    schema = [("k", "decimal(12,2)", False), ("d5", "decimal(5,2)", True),
+              ("d12", "decimal(12,2)", True), ("d25", "decimal(25,4)", True),
+              ("dflt", "decimal(12,2)", False), ("s", "string", True)]
+    drv, spk = twins(engine, "decimals", schema, ["k"], {"pk_bloom_cols": "k"},
+                     hash_partitions=[{"columns": ["k"], "buckets": 3}],
+                     defaults={"dflt": 7})
+    base = [tuple(dec_row(k).values())[:4] + (Decimal("1.00"), "base") for k in range(30)]
+    for t in (drv, spk):
+        t.insert(spark.createDataFrame(
+            base, "k decimal(12,2), d5 decimal(5,2), d12 decimal(12,2), d25 decimal(25,4), "
+                  "dflt decimal(12,2), s string"))
+    probe = [(Decimal(k).scaleb(-2) + Decimal("1000.00"),) for k in range(-2, 45)]
+    calls = []
+    real = drv._write_files
+    drv._write_files = lambda *a, **k: calls.append(1) or real(*a, **k)
+    # full rows (the default column absent), NULL cells, new keys, an
+    # in-batch duplicate, values with fewer fraction digits than the
+    # scale, trailing zeros past it, a negative zero and the extremes
+    batch = [dec_row(k) for k in (3, 5, 31, 32)]
+    batch += [{"k": Decimal("1004.00"), "d5": None, "d12": Decimal("-0.00")},
+              {**dec_row(33), "d5": Decimal("999.99"), "d12": Decimal("-99999999.99"),
+               "d25": Decimal("-" + "9" * 21 + ".9999")},
+              {"k": Decimal("1004.00"), "d25": Decimal("1.5000000"), "d12": Decimal("1E+3")}]
+    for t in (drv, spk):
+        upsert(t, batch)
+    agree(drv, spk, probe)
+    for t in (drv, spk):
+        upsert(t, [{"k": Decimal("1006.0"), "s": "only the key"}, dec_row(40)])
+    agree(drv, spk, probe)
+    for t in (drv, spk):
+        upsert(t, [{**dec_row(k), "dflt": Decimal(k).scaleb(-1)} for k in (8, 41)])
+    agree(drv, spk, probe)
+    # tombstones, written from the keys the small DELETE path holds
+    keys = spark.createDataFrame([(Decimal(k).scaleb(-2) + Decimal("1000.00"),)
+                                  for k in (4, 31, 7)], "k decimal(12,2)")
+    for t in (drv, spk):
+        t.delete(keys)
+    agree(drv, spk, probe)
+    assert not calls  # every batch took the driver step
+    errors(drv, spk, {"k": None, "d5": Decimal("1.00")})  # NULL key
+    errors(drv, spk, {"k": Decimal("1050.00"), "dflt": None})  # NULL non-nullable cell
+    errors(drv, spk, {"k": Decimal("1051.00"), "d5": 1.5})  # a float, not a Decimal
+    errors(drv, spk, {"k": 1052, "d5": Decimal("1.00")})  # an int key
+    agree(drv, spk, probe)
+
+
+def outcome(t, row):
+    """What a one-row upsert did: the stored row, or the exception
+    class it raised."""
+    try:
+        upsert(t, [row])
+    except Exception as e:  # noqa: BLE001
+        return type(e)
+    return sorted(map(repr, t.scan().collect()))
+
+
+@pytest.mark.parametrize("cell", [
+    {"d5": Decimal("1.005")},  # rounds at scale 2
+    {"d5": Decimal("-2.499999")},
+    {"d5": Decimal("1000.00")},  # overflows decimal(5,2)
+    {"d25": Decimal("1E+21")},  # overflows decimal(25,4)
+    {"d12": Decimal("NaN")},
+    {"d12": Decimal("-Infinity")},
+])
+def test_decimals_the_cast_would_change_reach_the_spark_writer(engine, spark, cell):
+    name = f"dec_cast_{len(engine.list_tables())}"
+    schema = [("k", "int", False), ("d5", "decimal(5,2)", True),
+              ("d12", "decimal(12,2)", True), ("d25", "decimal(25,4)", True)]
+    drv, spk = twins(engine, name, schema, ["k"],
+                     hash_partitions=[{"columns": ["k"], "buckets": 2}])
+    calls = []
+    real = drv._write_files
+    drv._write_files = lambda *a, **k: calls.append(1) or real(*a, **k)
+    row = {"k": 1, **cell}
+    assert outcome(drv, row) == outcome(spk, row)
+    assert calls == [1]  # the driver step declined the batch
+    assert drv.version == spk.version
+
+
+def test_tombstones_on_float_and_double_tables(engine, spark):
+    schema = [("k", "int", False), ("d", "double", True), ("f", "float", True),
+              ("a", "array<double>", True)]
+    drv, spk = twins(engine, "floats", schema, ["k"], {"pk_bloom_cols": "k"},
+                     hash_partitions=[{"columns": ["k"], "buckets": 2}])
+    nan = float("nan")
+    for t in (drv, spk):
+        t.insert(spark.createDataFrame(
+            [(k, nan if k % 3 == 0 else k / 2, -0.0, [nan, 1.0]) for k in range(12)],
+            "k int, d double, f float, a array<double>"))
+        upsert(t, [{"k": 3, "d": nan}, {"k": 20, "d": 1.5}])  # upserts: Spark's writer
+    probe = [(k,) for k in range(-1, 25)]
+    calls = []
+    real = drv._write_files
+    drv._write_files = lambda *a, **k: calls.append(1) or real(*a, **k)
+    for t in (drv, spk):
+        t.delete(spark.createDataFrame([(k,) for k in (3, 4, 20)], "k int"))
+    assert not calls  # the tombstones took the driver step
+    agree(drv, spk, probe)
+    assert drv.count() == 10
+    # NaN sorts above every value
+    assert sorted(r.k for r in drv.scan(filters=[("d", ">=", 1.0)]).collect()) == \
+        [0, 2, 5, 6, 7, 8, 9, 10, 11]
+    # a double key: its tombstones carry the key, which may be NaN
+    t = engine.create_table("floats_pk", [("k", "double", False), ("v", "int", True)], pk=["k"])
+    engine.alter_table("floats_pk").set_property("auto_compact", "false").apply()
+    t = engine.table("floats_pk")
+    t.insert(spark.createDataFrame([(1.5, 1), (nan, 2)], "k double, v int"))
+    calls.clear()
+    t._write_files = lambda *a, **k: calls.append(1) or Table._write_files(t, *a, **k)
+    t.delete(spark.createDataFrame([(nan,)], "k double"))
+    assert calls == [1] and t.count() == 1
+
+
+@pytest.mark.parametrize("ptype,spark_physical", [
+    ("decimal(5,2)", "INT32"), ("decimal(12,2)", "INT64"), ("decimal(25,4)", "FIXED_LEN_BYTE_ARRAY"),
+])
+def test_stat_bounds_decode_every_decimal_encoding(engine, spark, ptype, spark_physical):
+    name = f"dec_pk_{ptype.split('(')[1].split(',')[0]}"
+    drv, spk = twins(engine, name, [("k", ptype, False), ("v", "int", True)], ["k"])
+    keys = [Decimal("-3.50"), Decimal("0.01"), Decimal("12.5"), Decimal("-0.00"),
+            Decimal("999.99")]
+    for t in (drv, spk):
+        upsert(t, [{"k": k, "v": 1} for k in keys])
+    fa, fb = files_of(drv, drv.version), files_of(spk, spk.version)
+    assert len(fa) == len(fb) == 1
+    got = []
+    for t, f in ((drv, fa[0]), (spk, fb[0])):
+        md = pq.ParquetFile(os.path.join(t.root, f.path)).metadata
+        col = md.row_group(0).column(0)
+        assert col.path_in_schema == "k"
+        got.append((col.physical_type, tbl._stat_bounds(col.statistics, ptype)))
+    assert got[0][0] == "FIXED_LEN_BYTE_ARRAY" and got[1][0] == spark_physical
+    assert got[0][1] == got[1][1] == (Decimal("-3.50"), Decimal("999.99"))
+    lo, hi = got[0][1]
+    assert (fa[0].min_pk, fa[0].max_pk) == (fb[0].min_pk, fb[0].max_pk) == ([str(lo)], [str(hi)])
+
+
+def test_decimal_scans_over_mixed_files_match_a_model(engine, spark):
+    """Decimal predicates over driver-written (FLBA), Spark-written
+    (INT32/INT64) and compacted files of one table, with Spark's
+    vectorized reader on and off, against a dict model."""
+    name = "dec_scan"
+    engine.create_table(name, [("k", "int", False), ("dk", "decimal(12,2)", False),
+                               ("d5", "decimal(5,2)", True), ("d25", "decimal(25,4)", True)],
+                        pk=["k", "dk"], hash_partitions=[{"columns": ["k"], "buckets": 2}])
+    engine.alter_table(name).set_property("auto_compact", "false").apply()
+    t = engine.table(name)
+    model: dict = {}
+
+    def row(k, salt):
+        return {"k": k, "dk": Decimal(k % 7 * 150 + salt).scaleb(-2),
+                "d5": None if (k + salt) % 5 == 0 else Decimal((k * 37 + salt) % 2000 - 1000)
+                .scaleb(-1).quantize(Decimal("0.01")),
+                "d25": Decimal(k * 10 ** 15 - salt).scaleb(-4)}
+
+    def driver_upsert(rows):
+        upsert(t, rows)
+        model.update({(r["k"], r["dk"]): r for r in rows})
+
+    def spark_upsert(rows):
+        cols = ["k", "dk", "d5", "d25"]
+        t.upsert(spark.createDataFrame([tuple(r[c] for c in cols) for r in rows],
+                                       "k int, dk decimal(12,2), d5 decimal(5,2), "
+                                       "d25 decimal(25,4)"))
+        model.update({(r["k"], r["dk"]): r for r in rows})
+
+    spark_upsert([row(k, 0) for k in range(40)])
+    driver_upsert([row(k, 0) | {"d5": Decimal("-9.99")} for k in range(0, 40, 3)])
+    t.compact()
+    assert all(f.kind == "base" for f in t.state().files)
+    spark_upsert([row(k, 3) for k in range(30, 50)])
+    driver_upsert([row(k, 0) | {"d25": Decimal("0.0001")} for k in range(5, 60, 4)])
+    gone = [(k, row(k, 0)["dk"]) for k in (5, 9, 12)]
+    t.delete(spark.createDataFrame(gone, "k int, dk decimal(12,2)"))
+    for key in gone:
+        model.pop(key, None)
+    physical = {(f.kind, pq.ParquetFile(os.path.join(t.root, f.path)).schema.column(1)
+                 .physical_type) for f in t.state().files}
+    assert physical == {("base", "INT64"), ("delta", "INT64"),
+                        ("delta", "FIXED_LEN_BYTE_ARRAY")}
+
+    cases = [
+        ([("d5", "<", Decimal("-5.00"))], lambda r: r["d5"] is not None and r["d5"] < -5),
+        ([("dk", ">=", Decimal("3.00")), ("dk", "<=", Decimal("6.01"))],
+         lambda r: Decimal(3) <= r["dk"] <= Decimal("6.01")),
+        ([("d5", "=", Decimal("-9.99"))], lambda r: r["d5"] == Decimal("-9.99")),
+        ([("d25", "in", [Decimal("0.0001"), Decimal(10 ** 11).scaleb(-4) * 31])],
+         lambda r: r["d25"] in (Decimal("0.0001"), Decimal(10 ** 11).scaleb(-4) * 31)),
+        ([("dk", "=", Decimal("4.53"))], lambda r: r["dk"] == Decimal("4.53")),
+    ]
+    sql = [("d5 BETWEEN -50.0 AND 20.5",
+            lambda r: r["d5"] is not None and Decimal("-50") <= r["d5"] <= Decimal("20.5")),
+           ("dk IN (0.00, 1.50, 6.03)", lambda r: r["dk"] in (0, Decimal("1.5"), Decimal("6.03")))]
+
+    def check(cols=("k", "dk", "d5", "d25")):
+        for vec in ("true", "false"):
+            spark.conf.set("spark.sql.parquet.enableVectorizedReader", vec)
+            try:
+                for filters, keep in cases:
+                    tbl._evict_key_frames(t.root)
+                    got = sorted(tuple(r) for r in t.scan(columns=list(cols),
+                                                          filters=filters).collect())
+                    want = sorted(tuple(r[c] for c in cols) for r in model.values() if keep(r))
+                    assert got == want, (vec, filters)
+                for where, keep in sql:
+                    tbl._evict_key_frames(t.root)
+                    got = sorted(tuple(r) for r in engine.sql(
+                        f"SELECT {', '.join(cols)} FROM {name} WHERE {where}").collect())
+                    want = sorted(tuple(r[c] for c in cols) for r in model.values() if keep(r))
+                    assert got == want, (vec, where)
+            finally:
+                spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+
+    check()
+    # an added decimal column with a default and a renamed one: old
+    # files miss the first and hold the second under its old name
+    engine.alter_table(name).add_column("dn", "decimal(12,2)", nullable=False, default=3) \
+        .rename_column("d5", "d5r").apply()
+    t = engine.table(name)
+    for r in model.values():
+        r["dn"] = Decimal("3.00")
+        r["d5r"] = r.pop("d5")
+    fresh = [row(k, 9) for k in range(55, 62)]
+    for r in fresh:
+        r["d5r"] = r.pop("d5")
+    driver_upsert(fresh)
+    for r in fresh:
+        r["dn"] = Decimal("3.00")  # the default fills the absent cell
+    driver_upsert([{**model[(1, row(1, 0)["dk"])], "dn": Decimal("-1.5")}])
+    cases = [([("d5r" if c == "d5" else c, op, v) for c, op, v in f],
+              lambda r, keep=keep: keep({**r, "d5": r["d5r"]})) for f, keep in cases]
+    cases.append(([("dn", "<", Decimal("3.00"))], lambda r: r["dn"] < 3))
+    cases.append(([("dn", "=", Decimal("3"))], lambda r: r["dn"] == 3))
+    sql = [("d5r BETWEEN -50.0 AND 20.5", lambda r: r["d5r"] is not None
+            and Decimal("-50") <= r["d5r"] <= Decimal("20.5")),
+           ("dn IN (3, -1.5)", lambda r: r["dn"] in (3, Decimal("-1.5")))]
+    check(("k", "dk", "d5r", "d25", "dn"))

@@ -7,6 +7,8 @@ is a silent 100x slowdown, not a wrong answer."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -425,15 +427,16 @@ def test_composite_key_probe_restricts_all_pk_columns(engine, spark):
     # scattered probe: ids from the first and last commit only
     batch = spark.createDataFrame([(1, 5, 0), (1, 4997, 0)], "tenant int, id bigint, v int")
     probed = t._snapshot_overlapping(st, batch)
-    # count files feeding the probe plan: every kept file's id bounds
-    # must contain a probed id (leading-only restriction would keep all)
-    kept = t._prune(st, [("tenant", "in", [1]), ("id", "in", [5, 4997])])
+    # the files feeding the probe's own plan: each one's id bounds hold
+    # a probed id (a leading-column-only or min/max restriction keeps
+    # every file)
+    read = {os.path.basename(p) for p in probed.inputFiles()}
+    kept = [f for f in st.files if os.path.basename(f.path) in read]
     id_pos = st.schema.pk.index("id")
-    assert all(
-        f.min_pk[id_pos] <= v <= f.max_pk[id_pos]
-        for f in kept for v in [5, 4997] if f.min_pk[id_pos] <= v <= f.max_pk[id_pos]
-    )
-    assert len(kept) < n_files / 2, "probe must not read files outside the id bounds"
+    assert kept and all(any(f.min_pk[id_pos] <= v <= f.max_pk[id_pos] for v in (5, 4997))
+                        for f in kept)
+    assert len(probed.inputFiles()) < n_files / 2, \
+        "probe must not read files outside the id bounds"
     # correctness: the probe still finds real duplicates
     from kudu_spark.errors import DuplicateKeyError
 

@@ -40,6 +40,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from kudu_spark import vector
 from kudu_spark.errors import (
@@ -245,6 +246,75 @@ def _inline_frame(spark: SparkSession, structs: list) -> DataFrame:
     named+typed fields."""
     return spark.range(1).select(
         F.inline(F.array(*structs)))
+
+
+class _HeldRows(ClassicDataFrame):
+    """A keyed read's frame: the rows ``_live_rows`` found, held on the
+    driver as an arrow table, as Kudu's client holds a point lookup's
+    ``KuduScanBatch`` (client.h:2736-3242) and re-plans nothing.
+
+    ``collect()`` and ``toArrow()`` answer from the held table and make
+    no JVM call (``toArrow`` reads one conf). Every other use (``where``,
+    ``select``, joins, ``schema``, ``count``, ``explain``, views,
+    ``cache``, ``inputFiles``, ``toPandas``, ...) reads ``_jdf``, which
+    builds on first use the frame a keyed read returned before,
+    ``spark.createDataFrame(rows)``, so those uses are unchanged.
+
+    The two actions return what that frame returns. Its schema is
+    ``from_arrow_schema`` of the table, as createDataFrame derives it.
+    ``collect()`` maps the table to Rows with PySpark's own arrow→Row
+    conversion (Spark Connect's collect), binary as bytes or bytearray
+    by ``spark.sql.execution.pyspark.binaryAsBytes`` as the JVM collect
+    does; ``toArrow()`` casts to the arrow schema the JVM toArrow casts
+    to. The held columns are ``_driver_readable``: numbers, boolean,
+    strings, binary, dates and arrays of those, no timestamp, map or
+    struct, whose conversions differ (tests/test_held_rows.py)."""
+
+    def __new__(cls, spark: SparkSession, rows):
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, rows):
+        self._session = spark
+        self._sc = spark._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self._held = rows
+
+    @functools.cached_property
+    def _jdf(self):
+        return self._session.createDataFrame(self._held)._jdf
+
+    def _held_schema(self):
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        return from_arrow_schema(self._held.schema)
+
+    def collect(self) -> list:
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+        from pyspark.sql.types import ArrayType, BinaryType
+
+        def binary(t):
+            return binary(t.elementType) if isinstance(t, ArrayType) else isinstance(t, BinaryType)
+
+        schema = self._held_schema()
+        as_bytes = (not any(binary(f.dataType) for f in schema.fields)
+                    or self._session.conf.get("spark.sql.execution.pyspark.binaryAsBytes",
+                                              "true").lower() == "true")
+        return ArrowTableToRowsConversion.convert(self._held, schema, binary_as_bytes=as_bytes)
+
+    def toArrow(self):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return self._held.cast(to_arrow_schema(
+            self._held_schema(), error_on_duplicated_field_names_in_struct=True,
+            prefers_large_types=self._session._jconf.arrowUseLargeVarTypes()))
+
+
+def _held_frame(spark: SparkSession, rows) -> DataFrame:
+    """Arrow table ``rows`` as a ``_HeldRows`` frame; under Spark
+    Connect, whose frames are not classic ones, as
+    ``spark.createDataFrame(rows)``."""
+    return _HeldRows(spark, rows) if isinstance(spark, SparkSession) else spark.createDataFrame(rows)
 
 
 def partition_key(f: "FileEntry"):
@@ -1255,9 +1325,12 @@ class Table:
         A point read — ``filters`` binding every PK column with ``=`` or
         IN-lists of at most PROBE_KEYS_MAX combinations, without
         ``include_deleted`` or ``start_after_pk`` — is answered on the
-        driver (``_keyed_scan``, Kudu's keyed lookup); the other
-        filters, ``columns``, ``ordered`` and ``limit`` apply to its
-        local frame. Everything else, and a keyed read the driver
+        driver (``_keyed_scan``, Kudu's keyed lookup). With no other
+        filter, no ``ordered`` and no ``limit`` its frame holds the rows
+        found, projected to ``columns``, and ``collect()`` or
+        ``toArrow()`` on it makes no JVM call (``_HeldRows``); other
+        filters, ``ordered`` and ``limit`` apply to the JVM frame of
+        those rows. Everything else, and a keyed read the driver
         declines, plans merge-on-read (``_snapshot_df``).
 
         ``read_mode`` mirrors ReadMode (common.proto:268).
@@ -1272,7 +1345,7 @@ class Table:
             raise KuduSparkError("READ_AT_SNAPSHOT requires version or timestamp_ms")
         st = self.state(version, timestamp_ms)
         df = (None if include_deleted or start_after_pk
-              else self._keyed_scan(st, list(filters or []), columns))
+              else self._keyed_scan(st, list(filters or []), columns, ordered))
         if df is None:
             eff = list(filters or [])
             if start_after_pk:
@@ -1280,26 +1353,29 @@ class Table:
                 # pk0 >= tuple[0]; the exact predicate is applied below
                 eff.append((st.schema.pk[0], ">=", start_after_pk[0]))
             df = self._snapshot_df(st, eff or None, include_deleted=include_deleted)
-        if start_after_pk:
-            df = df.where(self._pk_after_expr(st, start_after_pk))
-        if ordered:
-            df = df.orderBy(*st.schema.pk)
-        if columns is not None:
-            df = df.select(*columns)
+            if start_after_pk:
+                df = df.where(self._pk_after_expr(st, start_after_pk))
+            if ordered:
+                df = df.orderBy(*st.schema.pk)
+            if columns is not None:
+                df = df.select(*columns)
         if limit is not None:
             df = df.limit(limit)
         return df
 
     def _keyed_scan(self, st: TableState, filters: list[Predicate],
-                    columns: list[str] | None) -> DataFrame | None:
+                    columns: list[str] | None, ordered: bool = False) -> DataFrame | None:
         """``scan``'s rows when ``filters`` bind the whole primary key
-        (``_point_keys``): the keys' live rows, read on the driver by
-        ``_live_rows`` with the projected and filtered columns, as an
-        arrow-backed LocalRelation typed as ``_key_frame`` types one,
-        with the filters that bound no key applied over it (the rows
-        hold the bound keys by construction). Such a point read runs no
-        Spark job. None when the filters bind no key set, or the driver
-        read declines; ``scan`` then plans ``_snapshot_df``."""
+        (``_point_keys``), projected to ``columns`` and in PK order if
+        ``ordered``: the keys' live rows, read on the driver by
+        ``_live_rows`` with the projected and filtered columns and held
+        in a ``_HeldRows`` frame, with the filters that bound no key
+        applied over it (the rows hold the bound keys by construction).
+        Without such filters or ``ordered`` the held table is projected
+        to ``columns`` itself, so no JVM frame is built; else the rest
+        runs on its JVM frame. Such a point read runs no Spark job. None
+        when the filters bind no key set, or the driver read declines;
+        ``scan`` then plans ``_snapshot_df``."""
         bound = self._point_keys(st, filters)
         if bound is None:
             return None
@@ -1312,8 +1388,14 @@ class Table:
         rows = self._live_rows(st, keys, cols)
         if rows is None:
             return None
-        df = self.spark.createDataFrame(rows.select(cols))
-        return df.where(self._filters_to_column(st, rest)) if rest else df
+        if not rest and not ordered:
+            return _held_frame(self.spark, rows.select(cols if columns is None else columns))
+        df = _held_frame(self.spark, rows.select(cols))
+        if rest:
+            df = df.where(self._filters_to_column(st, rest))
+        if ordered:
+            df = df.orderBy(*st.schema.pk)
+        return df if columns is None else df.select(*columns)
 
     def to_df(self, version: int | None = None) -> DataFrame:
         return self.scan(version=version)
@@ -1971,8 +2053,9 @@ class Table:
           cells are all NULL and hold no NaN);
         - arrays of decimals and any other type outside
           ``_driver_type`` (maps, structs, char);
-        - a batch setting an immutable column (its write joins the
-          current rows), per-column storage attributes (Spark writer
+        - an upsert to a table with an immutable column, set or not (its
+          write joins the current rows, whose immutable cells stay), a
+          tombstone setting one, per-column storage attributes (Spark writer
           options), vector sidecolumns, z-order clustering (a batch
           aggregate) and the auto-incrementing column;
         - range bounds or hashed columns whose values the driver
@@ -1990,7 +2073,7 @@ class Table:
         if any(_FLOAT_RE.fullmatch(c.type.strip().lower())
                and not (deleted and c.name not in sch.pk) for c in sch.columns):
             return False
-        if any(sch.col(c).immutable for c in cols):
+        if any(c.immutable and (c.name in cols or not deleted) for c in sch.columns):
             return False
         types = {c.name: c.type for c in sch.columns}
         declared = [c.strip() for c in str(st.props.get("cluster_by", "")).split(",")
@@ -3204,7 +3287,9 @@ class Table:
             *(["__row_idx"] if "__row_idx" in df.columns else []),
         )
         checks = self._row_checks(st, st.schema.names)
-        imm = [c.name for c in st.schema.columns if c.immutable and c.name in df.columns]
+        # an existing row keeps its immutable cells, set or not: a set
+        # one may not change them, an unset one leaves them alone
+        imm = [c.name for c in st.schema.columns if c.immutable]
         obs = val_src = None
         if imm:
             self._raise_row_violations(batch.agg(*checks).collect()[0].asDict())
@@ -3219,15 +3304,16 @@ class Table:
                 *pk, *[F.col(c).alias(f"__old_{c}") for c in imm]
             ).withColumn("__exists", F.lit(True))
             joined = batch.join(existing, on=pk, how="left")
-            if mode == "error":
+            set_imm = [c for c in imm if c in df.columns]
+            if mode == "error" and set_imm:
                 violation = functools.reduce(
                     operator.or_,
-                    [~F.col(f"__old_{c}").eqNullSafe(F.col(c)) for c in imm],
+                    [~F.col(f"__old_{c}").eqNullSafe(F.col(c)) for c in set_imm],
                 ) & F.col("__exists").isNotNull()
                 bad = joined.where(violation).limit(1).collect()
                 if bad:
                     raise ImmutableColumnError(
-                        f"UPSERT would modify immutable column(s) {imm}: {bad[0].asDict()}"
+                        f"UPSERT would modify immutable column(s) {set_imm}: {bad[0].asDict()}"
                     )
             # existing rows keep their immutable values (even if NULL)
             batch = joined.select(

@@ -207,16 +207,20 @@ class Session:
             return []
         buf, self._buf = self._buf, []
         versions = []
-        # group consecutive same-op runs to preserve inter-op ordering
-        runs: list[tuple[str, list[dict]]] = []
+        # group consecutive same-op runs to preserve inter-op ordering;
+        # a run's rows set the same columns, so a row leaving a column
+        # unset gets what it gets alone (the default, or the stored
+        # value on update), not the NULL a union of columns would give
+        runs: list[tuple[str, frozenset | None, list[dict]]] = []
         for op, row in buf:
-            if runs and runs[-1][0] == op:
-                runs[-1][1].append(row)
+            cols = None if op.startswith("delete") else frozenset(row)
+            if runs and runs[-1][:2] == (op, cols):
+                runs[-1][2].append(row)
             else:
-                runs.append((op, [row]))
+                runs.append((op, cols, [row]))
         sync = self.flush_mode == FlushMode.AUTO_FLUSH_SYNC
         n_failed = 0
-        for op, rows in runs:
+        for op, _, rows in runs:
             # fresh state per run: a prior run in this flush may have
             # inserted the key a later update targets
             st = self.table.state()

@@ -1,4 +1,5 @@
-"""Spark jobs per write operation, counted with statusTracker job groups.
+"""Spark jobs per operation, counted with statusTracker job groups, and
+the commands the driver sent the JVM over py4j meanwhile.
 
 Runs each op once on a fresh local table, on a plain table and on one
 with the ``pk_bloom_cols`` presence index, and prints one row per op:
@@ -20,7 +21,10 @@ with the ``pk_bloom_cols`` presence index, and prints one row per op:
   ``Table.PROBE_KEYS_MAX``, the Spark-side probe).
 
 Auto-compaction is off, so no fold lands inside a counted op. Jobs run
-by other threads are not counted.
+by other threads are not counted. py4j commands are counted at the
+gateway client's ``send_command`` while the op runs, in the op's thread
+(the job group's own set-up calls are not, nor py4j's own thread
+releasing the JVM objects of earlier ops).
 
     python scripts/op_jobs.py [--cpus 4]
 """
@@ -31,6 +35,7 @@ import argparse
 import os
 import sys
 import tempfile
+import threading
 from decimal import Decimal
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -45,13 +50,22 @@ from kudu_spark.writer import Session, Transaction  # noqa: E402
 _seq = [0]
 
 
-def jobs(spark, fn, expect=None) -> int:
-    """Spark jobs ``fn()`` ran in this thread; ``expect`` is an
-    exception type the op must raise."""
+def jobs(spark, fn, expect=None) -> tuple[int, int]:
+    """(Spark jobs ``fn()`` ran in this thread, py4j commands it sent);
+    ``expect`` is an exception type the op must raise."""
     sc = spark.sparkContext
+    client = sc._gateway._gateway_client
+    real = client.send_command
+    calls, me = [0], threading.get_ident()
+
+    def counted(*a, **k):
+        calls[0] += threading.get_ident() == me
+        return real(*a, **k)
+
     _seq[0] += 1
     group = f"op-jobs-{_seq[0]}"
     sc.setJobGroup(group, group)
+    client.send_command = counted
     try:
         fn()
     except Exception as e:  # noqa: BLE001
@@ -61,8 +75,9 @@ def jobs(spark, fn, expect=None) -> int:
         if expect is not None:
             raise AssertionError(f"expected {expect.__name__}")
     finally:
+        del client.send_command
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return len(sc.statusTracker().getJobIdsForGroup(group)), calls[0]
 
 
 def point_read(t, filters) -> list:
@@ -189,9 +204,11 @@ def main() -> None:
         plain = {**small_ops(spark, eng, "plain", False), **olap_ops(spark, eng, "olap", False)}
         bloom = {**small_ops(spark, eng, "bloom", True), **olap_ops(spark, eng, "olap_b", True)}
     width = max(len(k) for k in plain)
-    print(f"{'op':<{width}}  plain  pk_bloom_cols")
+    print(f"{'':<{width}}  Spark jobs            py4j calls")
+    print(f"{'op':<{width}}  plain  pk_bloom_cols  plain  pk_bloom_cols")
     for op in plain:
-        print(f"{op:<{width}}  {plain[op]:>5}  {bloom[op]:>13}")
+        (pj, pc), (bj, bc) = plain[op], bloom[op]
+        print(f"{op:<{width}}  {pj:>5}  {bj:>13}  {pc:>5}  {bc:>13}")
     spark.stop()
 
 

@@ -15,6 +15,7 @@ from kudu_spark.errors import (
     ImmutableColumnError,
     RowNotFoundError,
 )
+from kudu_spark.writer import Session
 
 SIMPLE = [("key", "int", False), ("int_val", "int", False), ("string_val", "string", True)]
 SCHEMA = [("k", "bigint", False), ("v", "double", True), ("s", "string", True)]
@@ -102,6 +103,23 @@ def test_immutable_columns(engine, spark):
     # upsert of a NEW row may set immutable columns freely
     t.upsert(spark.createDataFrame([(2, 20, "fresh")], "key int, int_val int, string_val string"))
     assert snap(t)[2] == (20, "fresh")
+
+
+@pytest.mark.parametrize("via", ["table", "session"])
+def test_upsert_leaving_an_immutable_column_unset_keeps_it(engine, spark, via):
+    """An UPSERT that leaves an immutable column unset keeps an existing
+    row's cell (it sets nothing to change) and gives a new row the
+    column's default; the Session run takes the same Spark write."""
+    t = engine.create_table("imm_unset", SIMPLE, pk=["key"], immutable_cols=["string_val"],
+                            defaults={"string_val": "dflt"})
+    t.insert(rows(spark, [(1, 10)]))
+    if via == "table":
+        t.upsert(spark.createDataFrame([(1, 11), (2, 20)], "key int, int_val int"))
+    else:
+        with Session(t) as s:
+            s.upsert({"key": 1, "int_val": 11})
+            s.upsert({"key": 2, "int_val": 20})
+    assert snap(t) == {1: (11, "s1"), 2: (20, "dflt")}
 
 
 def test_snapshot_reads_span_mutations(t, spark):

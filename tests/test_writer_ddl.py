@@ -326,6 +326,42 @@ def test_session_update_last_mention_wins(t):
     assert {k: v[0] for k, v in snap(t).items()} == {k: 2000 + k for k in range(5)}
 
 
+@pytest.mark.parametrize("nullable", [True, False], ids=["nullable", "not_null"])
+def test_session_run_fills_each_rows_unset_cells_as_alone(engine, nullable):
+    """A row that leaves a defaulted column unset gets what a flush
+    holding it alone gives (Kudu fills a default per row), also when
+    another row of its run sets that column: an insert or upsert writes
+    the default, an update keeps the stored value. Twin tables: one flush
+    of every op against one flush per op. A run whose rows set the same
+    columns stays one commit."""
+    cols = [("k", "int", False), ("v", "int", True), ("dflt", "int", nullable)]
+    ops = [("upsert", {"k": 1, "v": 1, "dflt": 3}),
+           ("upsert", {"k": 2, "v": 2}),
+           ("upsert", {"k": 1, "v": 9}),
+           ("insert", {"k": 4, "v": 4}),
+           ("insert", {"k": 5, "v": 5, "dflt": 8}),
+           ("update", {"k": 2, "dflt": 5}),
+           ("update", {"k": 4, "v": 40})]
+    one = engine.create_table("one_flush", cols, pk=["k"], defaults={"dflt": 7})
+    alone = engine.create_table("per_op", cols, pk=["k"], defaults={"dflt": 7})
+    s = Session(one)
+    for op, row in ops:
+        s.apply(op, row)
+    s.flush()
+    for op, row in ops:
+        with Session(alone) as s:
+            s.apply(op, row)
+
+    def rows(t):
+        return {r.k: (r.v, r.dflt) for r in t.scan().collect()}
+
+    assert rows(one) == rows(alone) == {1: (9, 7), 2: (2, 5), 4: (40, 7), 5: (5, 8)}
+    s = Session(one)
+    for k in (6, 7, 8):
+        s.upsert({"k": k, "v": k})
+    assert len(s.flush()) == 1
+
+
 def test_plain_table_writes_record_no_presence_decline(t, spark):
     """A table without pk_bloom_cols has no presence index to ask, so
     its key probes never log a declined presence lookup."""
